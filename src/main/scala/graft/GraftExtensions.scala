@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProduct, EuclideanDistance, MinHashSig, ShingleSet, SimHashAgg}
+import graft.functions.{CurateGate, DotProduct, EuclideanDistance, MinHashSig, ShingleSet, SimHashAgg}
 import graft.plans.TopKJoinStrategy
 
 /** Engine extensions registered through the public
@@ -56,6 +56,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 3, "graft_minhash takes exactly 3 arguments")
         MinHashSig(children.head, children(1), children(2))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("graft_curate_gate"),
+      new ExpressionInfo(classOf[CurateGate].getName, "graft_curate_gate"),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.length == 1,
+          "graft_curate_gate takes exactly 1 argument")
+        CurateGate(children.head)
       }))
     ext.injectPlannerStrategy(_ => TopKJoinStrategy)
     // optimizer rule: the portable HOF dot-product pattern on float

@@ -97,14 +97,10 @@ object Centrality {
     var frames = Vector(sources.map(s => (s, s, 0, 1.0))
       .toDF("s", "node", "dist", "sigma").localCheckpoint())
     // per-level row counts ride each level's checkpoint materialization
-    // as observed metrics (string-form observe — see Community.observed
-    // for why not an Observation handle): they replace the former
-    // limit(1).count() emptiness job AND size-gate the backward pass's
-    // delta-side broadcast hints
+    // as observed metrics ([[graft.core.Observed]]): they replace the
+    // former limit(1).count() emptiness job AND size-gate the backward
+    // pass's delta-side broadcast hints
     var counts = Vector(sources.size.toLong)
-    def observedN(df: DataFrame): Long =
-      Option(df.queryExecution.observedMetrics("n").getAs[Any](0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
     var frontier = frames.head
     var seen = frontier.select(col("s"), col("node").as("dst"))
       .localCheckpoint()
@@ -112,19 +108,17 @@ object Centrality {
     var more = frontier.limit(1).count() > 0
     while (more) {
       level += 1
-      val nextObs = frontier
+      val (next, n) = graft.core.Observed.checkpointCounted(frontier
         .join(e, frontier("node") === e("src"))
         .select(col("s"), col("dst"), col("sigma"))
         .join(seen, Seq("s", "dst"), "left_anti")
         .groupBy("s", "dst")
         .agg(sum("sigma").as("sigma"))
         .select(col("s"), col("dst").as("node"), lit(level).as("dist"),
-          col("sigma"))
-        .observe("n", count(lit(1)))
-      val next = nextObs.localCheckpoint()
-      if (observedN(nextObs) > 0) {
+          col("sigma")))
+      if (n > 0) {
         frames :+= next
-        counts :+= observedN(nextObs)
+        counts :+= n
         frontier = next
         seen = seen
           .unionByName(next.select(col("s"), col("node").as("dst")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Hints
+import graft.core.{Hints, Observed}
 
 /** Community detection (SURVEY §2.C C11 Louvain, C21 WCE) — closed-source
   * kernels in the reference (`LouvainRunner.scala:92-99`,
@@ -20,39 +20,26 @@ import graft.core.Hints
   */
 object Community {
 
-  /** Read one observed metric off an ALREADY-EXECUTED plan. Uses the
-    * string form of `Dataset.observe` (a bare CollectMetrics node read
-    * back through `queryExecution.observedMetrics`), NOT an
-    * `Observation` handle: instantiating Observation materializes the
-    * session's `observationManager` lazy val, which is not
-    * java-serializable — and MLlib model closures (the ml_*_rule
-    * queries) serialize the whole SparkSession via their training
-    * summaries, so one Observation anywhere in the suite would break
-    * every later model.transform (probed: NotSerializableException:
-    * ObservationManager). */
-  private def observed(df: DataFrame, metric: String,
-      field: String): Option[Any] =
-    Option(df.queryExecution.observedMetrics(metric).getAs[Any](field))
-
   /** Louvain. `edges` directed pairs are treated as the undirected
     * multigraph (pass both directions for an undirected graph). Returns
-    * (node, community). */
+    * (node, community); an edge-free graph has no nodes and returns an
+    * empty frame (its total weight 2m is zero, so no move is scored). */
   def louvain(spark: SparkSession, edges: DataFrame, passes: Int = 4,
       levels: Int = 2): DataFrame = {
     // symmetric view: every undirected edge contributes both directions
     // (per-pass partitioning is handled inside localMoves)
-    val sym = edges.select(col("src"), col("dst"), col("weight"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-      .groupBy("src", "dst").agg(sum("weight").as("w"))
-      .localCheckpoint()
+    val (sym, nSym) = Observed.checkpointCounted(
+      edges.select(col("src"), col("dst"), col("weight"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst"),
+          col("weight")))
+        .groupBy("src", "dst").agg(sum("weight").as("w")))
 
     // level loop: local moves, then coarsen; carry vid → community map
     var mapping = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("community"))
     var e = sym
     var lvl = 0
-    var moving = true
+    var moving = nSym > 0
     while (lvl < levels && moving) {
       val (comm, moved, v) = localMoves(e, passes)
       moving = moved > 0
@@ -120,8 +107,7 @@ object Community {
       .select(col("node"), col("node").as("comm"), col("deg"))
       .observe("louvain_v", count(lit(1)).as("v"))
     var comm = commObs.localCheckpoint()
-    val v = observed(commObs, "louvain_v", "v")
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val v = Observed.long(commObs, "louvain_v", "v")
     var totalMoves = 0L
     var zeroStreak = 0
     var pass = 0
@@ -167,11 +153,10 @@ object Community {
           max(col("comm")).as("comm"), max(col("deg")).as("deg"))
         .select(col("node"), col("sel.cand").as("cand"), col("comm"),
           col("deg"))
-        .observe("louvain_moved", sum(when(gate &&
-          col("cand") =!= col("comm"), 1L).otherwise(0L)).as("moved"))
+        .observe("louvain_moved",
+          count(when(gate && col("cand") =!= col("comm"), 1L)).as("moved"))
       val best = bestObs.localCheckpoint()
-      val moved = observed(bestObs, "louvain_moved", "moved")
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      val moved = Observed.long(bestObs, "louvain_moved", "moved")
       totalMoves += moved
       // the gate alternates parity, so only TWO consecutive still passes
       // prove both halves are settled

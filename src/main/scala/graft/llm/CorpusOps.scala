@@ -949,7 +949,15 @@ object CorpusOps {
     * time, and a saturated filter silently drops the whole corpus. */
   def bloomDecontaminateAgainst(trainDocs: DataFrame, evalDocs: DataFrame,
       n: Int = 3, maxOverlap: Double = 0.5,
-      mBits: Int = 0, numHashes: Int = 4): DataFrame = {
+      mBits: Int = 0, numHashes: Int = 4): DataFrame =
+    bloomScreen(trainDocs, evalDocs, n, maxOverlap, mBits, numHashes)
+      .orderBy("doc_id")
+
+  /** [[bloomDecontaminateAgainst]] without the presentation sort, for
+    * callers that materialize the screened set (the curation chain). */
+  private[llm] def bloomScreen(trainDocs: DataFrame, evalDocs: DataFrame,
+      n: Int, maxOverlap: Double, mBits: Int,
+      numHashes: Int): DataFrame = {
     val (bitmap, m) = bloomBuild(evalDocs, n, mBits, numHashes)
     val bm = typedlit(bitmap.toSeq)
     // probe: per-row, codegen'd — k unrolled literal-array lookups
@@ -963,7 +971,6 @@ object CorpusOps {
         TextOps.r4(col("n_maybe").cast("double") / col("n_ngrams"))
           .as("overlap_ub"))
       .withColumn("dropped", col("overlap_ub") >= maxOverlap)
-      .orderBy("doc_id")
   }
 
   /** Duplicate-family size histogram: how many near-dup groups
@@ -1052,13 +1059,12 @@ object CorpusOps {
       s"need mBits = 0 (adaptive) or 64 <= mBits <= 2^26, got $mBits")
     require(numHashes > 0 && numHashes <= 16,
       s"need 0 < numHashes <= 16, got $numHashes")
-    val grams = Dedup.withShingleSets(evalDocs, n)
-      .select(explode(col("shingle_set")).as("g")).distinct()
-      .localCheckpoint()
+    val (grams, nGrams) = graft.core.Observed.checkpointCounted(
+      Dedup.withShingleSets(evalDocs, n)
+        .select(explode(col("shingle_set")).as("g")).distinct())
     val m =
       if (mBits > 0) mBits
       else {
-        val nGrams = grams.count()
         var mm = 1 << 16
         while (mm < (1 << 26) && mm < 10L * nGrams) mm <<= 1
         mm

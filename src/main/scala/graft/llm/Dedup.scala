@@ -16,11 +16,15 @@ import org.apache.spark.sql.functions._
   * Signature math is deliberately NOT nested higher-order-function
   * lambdas: a lambda body is re-evaluated per invocation, so e.g. a
   * 32-seed minhash over an inlined shingle expression recomputes shingle
-  * construction 32× per row (measured 0.17 s/row). Instead signatures use
-  * the distributed formulation — explode shingles/tokens, then one hash
-  * aggregation with N min/sum columns. Partial (map-side) aggregation
-  * reduces each group to N longs before the shuffle, so the exchange
-  * carries O(docs × N), not O(shingles).
+  * construction 32× per row (measured 0.17 s/row). In a session carrying
+  * GraftExtensions, shingle sets and signatures come from compiled
+  * per-row kernels ([[graft.functions.ShingleSet]],
+  * [[graft.functions.MinHashSig]]): one method call per document, no
+  * explode, no aggregate, no shuffle. An unextended session uses the
+  * distributed formulation instead — explode shingles/tokens, then one
+  * hash aggregation with N min/sum columns, whose partial (map-side)
+  * aggregation reduces each group to N longs before the shuffle, so the
+  * exchange carries O(docs × N), not O(shingles).
   */
 object Dedup {
 
@@ -41,23 +45,22 @@ object Dedup {
         sequence(lit(1), size(toks) - (n - 1)),
         i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + j)): _*))))
 
-  /** (doc_id, shingle_set) projection — shared by signature generation and
-    * exact-Jaccard verification. Resolves to the native
-    * [[graft.functions.ShingleSet]] kernel when the session carries
-    * GraftExtensions (bit-identical output; the declarative HOF chain
-    * interprets a lambda per token and dominated every MinHash-family
-    * query), falling back to the declarative form otherwise. */
-  /** The shingle-set Column over an unresolved `text` column — the
-    * kernel-or-declarative probe of [[withShingleSets]] as a bare
-    * expression, for callers that must PRESERVE other columns (the
-    * streaming ingest path keeps its event-time column for the
-    * watermark). */
+  /** The shingle-set Column over an unresolved `text` column. Resolves
+    * to the native [[graft.functions.ShingleSet]] kernel when the session
+    * carries GraftExtensions (bit-identical output; the declarative HOF
+    * chain interprets a lambda per token and dominated every
+    * MinHash-family query), falling back to the declarative [[shingles]]
+    * form otherwise. A bare expression for callers that must PRESERVE
+    * other columns (the streaming ingest path keeps its event-time
+    * column for the watermark). */
   def shingleSetExpr(spark: org.apache.spark.sql.SparkSession,
       shingleSize: Int): Column =
     if (spark.catalog.functionExists("graft_shingles"))
       expr(s"graft_shingles(text, $shingleSize)")
     else shingles(TextOps.tokens(col("text")), shingleSize)
 
+  /** (doc_id, shingle_set) projection through [[shingleSetExpr]] —
+    * shared by signature generation and exact-Jaccard verification. */
   def withShingleSets(docs: DataFrame, shingleSize: Int): DataFrame =
     // deliberately NOT fanned out: consumers that partial-agg the
     // shingles down to O(1) per doc (MinHash signatures, contamination
@@ -88,9 +91,8 @@ object Dedup {
     }
   }
 
-  /** MinHash signatures + LSH band-bucket keys via explode + hash-agg:
-    * each shingle row is hashed once per seed inside a codegen'd partial
-    * aggregate; the signature is assembled post-agg and sliced into
+  /** MinHash signatures + LSH band-bucket keys: `numHashes` minima of a
+    * seeded hash over each document's shingles, sliced into
     * `numHashes / rowsPerBand` band buckets. Docs sharing any bucket are
     * near-dup candidates. Empty documents produce no shingles and drop
     * out (nothing to collide with).
@@ -106,30 +108,57 @@ object Dedup {
     minHashOfSets(withShingleSets(docs, shingleSize), numHashes,
       rowsPerBand, replicable)
 
-  /** [[minHash]] over a precomputed (doc_id, shingle_set) frame — lets
-    * callers that ALSO need the shingle sets (exact-Jaccard verification)
-    * tokenize and shingle the corpus exactly once. */
+  /** [[minHash]] over a precomputed (doc_id, shingle_set) frame, one row
+    * per doc_id — lets callers that ALSO need the shingle sets
+    * (exact-Jaccard verification) tokenize and shingle the corpus
+    * exactly once. Output (doc_id, signature, bands). */
   def minHashOfSets(shingleSets: DataFrame,
       numHashes: Int = 32, rowsPerBand: Int = 4,
-      replicable: Boolean = false): DataFrame = {
+      replicable: Boolean = false): DataFrame =
+    minHashOfSetsImpl(shingleSets, numHashes, rowsPerBand, replicable,
+      shingleSets.sparkSession.catalog.functionExists("graft_minhash"))
+
+  /** [[minHashOfSets]] with the kernel choice forced. `native` signs
+    * each row through `graft_minhash` (the minimum over the same hash
+    * multiset, so value-identical); otherwise each shingle row is
+    * hashed once per seed inside a codegen'd partial aggregate and the
+    * signature assembled post-agg — the form for unextended sessions
+    * and the spec's reference. One divergence, on input no shingler
+    * produces: a non-empty set of only NULL elements signs to a null
+    * signature and bands on the kernel path, to arrays of nulls on the
+    * aggregate path (inert either way: a null bucket joins nothing). */
+  private[graft] def minHashOfSetsImpl(shingleSets: DataFrame,
+      numHashes: Int, rowsPerBand: Int, replicable: Boolean,
+      native: Boolean): DataFrame = {
     require(numHashes % rowsPerBand == 0, "bands must tile the signature")
-    val nBands = numHashes / rowsPerBand
-    val hashes = shingleSets
-      .select(col("doc_id"), explode(col("shingle_set")).as("sh"))
-      .select(col("doc_id"),
-        (if (replicable) sha2TokenHash(col("sh")) else xxhash64(col("sh")))
-          .as("h"))
-    val sigCols = (0 until numHashes).map { s =>
-      val mixed =
-        if (replicable) mixMod(col("h"), s) else xxhash64(col("h"), lit(s))
-      min(mixed).as(s"m$s")
-    }
-    val bandCol = bandsExpr(nBands, rowsPerBand, replicable)
-    hashes.groupBy("doc_id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature"))
-      .select(col("doc_id"), col("signature"), bandCol.as("bands"))
+    val bandCol = bandsExpr(numHashes / rowsPerBand, rowsPerBand, replicable)
+    val signed =
+      if (native)
+        // screen on the INPUT (cheap size check) rather than the kernel's
+        // null output: a filter over the signature would be pushed below
+        // its projection and evaluate the kernel twice
+        shingleSets.filter(size(col("shingle_set")) > 0)
+          .select(col("doc_id"),
+            expr(s"graft_minhash(shingle_set, $numHashes, $replicable)")
+              .as("signature"))
+      else {
+        val sigCols = (0 until numHashes).map { s =>
+          val mixed =
+            if (replicable) mixMod(col("h"), s) else xxhash64(col("h"), lit(s))
+          min(mixed).as(s"m$s")
+        }
+        shingleSets
+          .select(col("doc_id"), explode(col("shingle_set")).as("sh"))
+          .select(col("doc_id"),
+            (if (replicable) sha2TokenHash(col("sh")) else xxhash64(col("sh")))
+              .as("h"))
+          .groupBy("doc_id")
+          .agg(sigCols.head, sigCols.tail: _*)
+          .select(col("doc_id"),
+            array((0 until numHashes).map(i => col(s"m$i")): _*)
+              .as("signature"))
+      }
+    signed.select(col("doc_id"), col("signature"), bandCol.as("bands"))
   }
 
   /** Band-bucket keys from a per-row `signature` array — shared by the
@@ -230,7 +259,14 @@ object Dedup {
     * doc_id, for the verification join. */
   def nearDupPairs(docs: DataFrame, shingleSize: Int = 3,
       threshold: Double = 0.5, numHashes: Int = 32,
-      rowsPerBand: Int = 4): DataFrame = {
+      rowsPerBand: Int = 4): DataFrame =
+    verifiedPairs(docs, shingleSize, threshold, numHashes, rowsPerBand)
+      .orderBy("doc_a", "doc_b")
+
+  /** [[nearDupPairs]] without the presentation sort — what the component
+    * kernels consume (they never read the order). */
+  private def verifiedPairs(docs: DataFrame, shingleSize: Int,
+      threshold: Double, numHashes: Int, rowsPerBand: Int): DataFrame = {
     // shingle once: signature generation and Jaccard verification share
     // this frame (it used to be tokenized+shingled twice), and the
     // checkpoint keeps the verification join from re-running the
@@ -272,7 +308,6 @@ object Dedup {
           / (size(col("set_a")) + size(col("set_b")) - inter) * 10000 + 0.5) / 10000)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Incremental near-dup detection — the production ingestion path: an
@@ -382,23 +417,16 @@ object Dedup {
   /** Near-duplicate CLUSTERS: the near-dup pair graph collapsed to
     * connected components, each doc mapped to its component's smallest
     * id (the canonical "keep" doc — the dedup decision a 100 TB
-    * pipeline actually executes). Components come from min-label
-    * propagation over the pair graph: each round every node adopts the
-    * smallest label among itself and its neighbors — one broadcast-free
-    * join + partial hash-agg per round, state is (node, label) only.
-    * Labels decrease monotonically, so the loop runs UNTIL QUIESCENT (a
-    * round that changes no label is the global fixpoint = the true
-    * transitive closure, which is what the DuckDB recursive-CTE oracle
-    * computes) — a duplicate chain longer than any fixed round count
-    * cannot be silently split into two keep-groups. Typical duplicate
-    * families collapse in 3–5 rounds; each round's frame is tiny
-    * relative to the corpus, so the per-round convergence probe (an
-    * id-equi-join + isEmpty on co-partitioned frames) is cheap. */
+    * pipeline actually executes). Components come from
+    * [[minLabelComponents]]: the true transitive closure, which is what
+    * the DuckDB recursive-CTE oracle computes — a duplicate chain longer
+    * than any fixed round count cannot be silently split into two
+    * keep-groups. */
   def dedupGroups(docs: DataFrame, shingleSize: Int = 3,
       threshold: Double = 0.5, numHashes: Int = 32,
       rowsPerBand: Int = 4): DataFrame =
     minLabelComponents(
-      nearDupPairs(docs, shingleSize, threshold, numHashes, rowsPerBand)
+      verifiedPairs(docs, shingleSize, threshold, numHashes, rowsPerBand)
         .select(col("doc_a"), col("doc_b")))
       .select(col("node").as("doc_id"), col("keep").as("keep_id"))
       .orderBy("doc_id")
@@ -425,7 +453,7 @@ object Dedup {
       threshold: Double = 0.5, numHashes: Int = 32,
       rowsPerBand: Int = 4): DataFrame = {
     val fam = minLabelComponents(
-      nearDupPairs(docs, shingleSize, threshold, numHashes, rowsPerBand)
+      verifiedPairs(docs, shingleSize, threshold, numHashes, rowsPerBand)
         .select(col("doc_a"), col("doc_b")))
       .select(col("node").as("doc_id"), col("keep").as("family_id"))
     // 1e-4-integer sigmoid of the quality-model logit: exact argmax key
@@ -446,22 +474,68 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Connected components of an undirected pair graph by min-label
-    * propagation to quiescence — the keep-decision kernel shared by
-    * [[dedupGroups]] and `Similarity.semDedupGroups`. Input (doc_a,
-    * doc_b) pairs; output one (node, keep) row per node that appears in
-    * a pair, `keep` = the component's minimum id (nodes with no pair
-    * are absent — callers left-join and default to self). */
-  private[llm] def minLabelComponents(pairFrame: DataFrame): DataFrame = {
-    // the pair graph is orders of magnitude smaller than the corpus
-    // (duplicate families only) — size the round-loop partitioning to
-    // it, or ten rounds of 32 near-empty shuffle partitions cost more
-    // than the LSH pipeline that fed them
-    val pairs = pairFrame.localCheckpoint()
-    val spark = pairFrame.sparkSession
+  /** Connected components of an undirected pair graph — the keep-
+    * decision kernel shared by [[dedupGroups]] and
+    * `Similarity.semDedupGroups`. Input (doc_a, doc_b) pairs; output one
+    * (node, keep) row per node that appears in a pair, `keep` = the
+    * component's minimum id (nodes with no pair are absent — callers
+    * left-join and default to self).
+    *
+    * The pair graph is orders of magnitude smaller than the corpus
+    * (duplicate families only), so the round loop's partitioning is
+    * sized to it: one partition per 200k pairs. A graph that sizes to
+    * ONE partition is collected and resolved by a driver-side min-root
+    * union-find — bounded by the same 200k pairs, and one job instead
+    * of the ~20 of a label-round loop whose every round runs on a
+    * single task anyway. Larger graphs run [[labelRounds]];
+    * `distributed = true` forces that path (the spec's reference). */
+  private[graft] def minLabelComponents(pairFrame: DataFrame,
+      distributed: Boolean = false): DataFrame = {
+    val (pairs, nPairs) = graft.core.Observed.checkpointCounted(pairFrame)
     val nParts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism,
-      (pairs.count() / 200000L).toInt))
+      pairFrame.sparkSession.sparkContext.defaultParallelism,
+      (nPairs / 200000L).toInt))
+    if (nParts == 1 && !distributed) unionFind(pairs)
+    else labelRounds(pairs, nParts)
+  }
+
+  /** Min-root union-find over collected (doc_a, doc_b) pairs: every
+    * union links the larger root under the smaller, so each root is
+    * its component's minimum id — the fixpoint [[labelRounds]]
+    * reaches. Output typed like the input ids. */
+  private def unionFind(pairs: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    pairs.collect().foreach { row =>
+      val a = row.getAs[Number](0).longValue
+      val b = row.getAs[Number](1).longValue
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = parent.keys.toSeq.map(n => org.apache.spark.sql.Row(n, find(n)))
+    val t = pairs.schema.head.dataType
+    pairs.sparkSession.createDataFrame(rows.asJava,
+        org.apache.spark.sql.types.StructType.fromDDL("node long, keep long"))
+      .select(col("node").cast(t), col("keep").cast(t))
+  }
+
+  /** Components by min-label propagation over a checkpointed pair
+    * frame: each round every node adopts the smallest label among itself
+    * and its neighbors — one broadcast-free join + partial hash-agg per
+    * round, state is (node, label) only. Labels decrease monotonically,
+    * so the loop runs UNTIL QUIESCENT: a round that changes no label is
+    * the global fixpoint. Typical duplicate families collapse in 3–5
+    * rounds. */
+  private def labelRounds(pairs: DataFrame, nParts: Int): DataFrame = {
     val und = pairs
       .union(pairs.select(col("doc_b"), col("doc_a")))
       .toDF("node", "nbr")

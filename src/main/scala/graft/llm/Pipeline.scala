@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Observed
+
 /** The composed pre-training curation pipeline — the four-stage chain a
   * real training-data run executes as ONE job, promoted out of the
   * scale-rehearsal tool (`graft.tools.PipelineRehearsal`, rounds 12–13)
@@ -41,15 +43,15 @@ object Pipeline {
 
   /** Run the chain over `corpusDir`'s documents + embeddings, exporting
     * the final training set under `outDir/train_set`; returns (total
-    * wall seconds, per-stage vector). `langs` runs the gate stack once
-    * per language and unions the survivor sets (StressGen replicas
-    * classify 'und', so scaled corpora pass "en,und" to keep the
-    * replica survivors flowing through the downstream stages). */
-  /** With `semDiag = true`, the semdedup stage's blocking-quality
-    * decomposition ([[Similarity.semDedupStats]]: candidate pairs,
-    * verified pairs, max cell occupancy) is computed and logged AFTER
-    * the total clock stops — the SCALE-rung rungs read it without the
-    * diag cost polluting the gated wall numbers. */
+    * wall seconds, per-stage vector). `langs` keeps the survivors of
+    * every listed language (StressGen replicas classify 'und', so
+    * scaled corpora pass "en,und" to keep the replica survivors flowing
+    * through the downstream stages). With `semDiag = true`, the
+    * semdedup stage's blocking-quality decomposition
+    * ([[Similarity.semDedupStats]]: candidate pairs, verified pairs, max
+    * cell occupancy) is computed and logged AFTER the total clock stops
+    * — the SCALE-rung rungs read it without the diag cost polluting the
+    * gated wall numbers. */
   def curateChain(spark: SparkSession, corpusDir: String, outDir: String,
       langs: Seq[String] = Seq("en"),
       log: String => Unit = _ => (),
@@ -66,7 +68,8 @@ object Pipeline {
     // localCheckpoint — its lineage is cut, so every OTHER RDD this
     // stage persisted is droppable the moment the stage returns. The
     // output is the last checkpoint the stage creates, so it is the
-    // max persisted-RDD id among the stage's new entries.
+    // max persisted-RDD id among the stage's new entries. Its row count
+    // rides that checkpoint's own job (Observed.checkpointCounted).
     def stage[T](name: String)(body: => (Long, T)): T = {
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
@@ -94,10 +97,11 @@ object Pipeline {
     //    minhash pipeline once per language (the r14 ×300 rung caught
     //    the second run reading 2-3× in the first run's aged heap)
     val curated = stage("curate") {
-      val kept = TextOps.curateMulti(docs, minQuality = 0.5,
-          langs = langs, shingleSize = 3, threshold = 0.5, maxDup3 = 0.9)
-        .select("doc_id").localCheckpoint()
-      (kept.count(), kept)
+      val (kept, n) = Observed.checkpointCounted(
+        TextOps.curateKept(docs, minQuality = 0.5, langs = langs,
+          shingleSize = 3, threshold = 0.5, maxDup3 = 0.9)
+        .select("doc_id"))
+      (n, kept)
     }
 
     // 2. Bloom decontamination of the SURVIVORS against an eval slice
@@ -107,10 +111,11 @@ object Pipeline {
       val evalDocs = docs.filter(col("doc_id") % 100 === 7)
       val train = docs.join(curated, Seq("doc_id"))
         .filter(col("doc_id") % 100 =!= 7)
-      val screened = CorpusOps.bloomDecontaminateAgainst(
-          train, evalDocs, n = 3, maxOverlap = 0.5)
-        .filter(!col("dropped")).select("doc_id").localCheckpoint()
-      (screened.count(), screened)
+      val (screened, n) = Observed.checkpointCounted(
+        CorpusOps.bloomScreen(train, evalDocs, n = 3, maxOverlap = 0.5,
+          mBits = 0, numHashes = 4)
+        .filter(!col("dropped")).select("doc_id"))
+      (n, screened)
     }
 
     // 3. semantic dedup over the survivors' embeddings (vec_id = doc_id
@@ -121,20 +126,23 @@ object Pipeline {
       val survEmb = emb.join(
         clean.withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"))
       survEmbForDiag = survEmb
-      val keepVec = Similarity.semDedup(survEmb, tau = 0.4)
+      val keepVec = Similarity.semDedupKeep(survEmb, tau = 0.4, nlist = 0,
+          iters = 5)
         .filter(col("keep")).select(col("vec_id").as("doc_id"))
       val noVec = clean.join(
         emb.select(col("vec_id").as("doc_id")), Seq("doc_id"),
         "left_anti")
-      val all = keepVec.unionByName(noVec).localCheckpoint()
-      (all.count(), all)
+      val (all, n) = Observed.checkpointCounted(keepVec.unionByName(noVec))
+      (n, all)
     }
 
     // 4. split + shard assignment in ONE projection over the kept
     //    payload, partitioned JSONL export (the exportTrainingSet tail)
     stage("split_export") {
       CorpusOps.exportAssigned(docs, kept, s"$outDir/train_set")
-      val written = spark.read.json(s"$outDir/train_set").count()
+      // read-back count with the written schema given: no inference scan
+      val written = spark.read.schema("doc_id LONG, text STRING")
+        .json(s"$outDir/train_set").count()
       (written, ())
     }
 

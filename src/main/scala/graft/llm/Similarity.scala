@@ -1537,10 +1537,10 @@ object Similarity {
     * single equi-joinable cell key, so the pair kernel and the
     * diagnostics are blocking-agnostic. */
   private[graft] def semAssign(emb: DataFrame, nlist: Int,
-      iters: Int): DataFrame =
+      iters: Int, nKnown: Long = -1L): DataFrame =
     if (nlist > 0) lloydAssign(emb, nlist, iters)
     else {
-      val n = emb.count()
+      val n = if (nKnown >= 0) nKnown else emb.count()
       if ((n + 999) / 1000 <= semFlatCellCap)
         lloydAssign(emb, adaptiveNlist(n), iters)
       else {
@@ -1716,7 +1716,18 @@ object Similarity {
     * subquadratic too. */
   def semDedup(emb: DataFrame, tau: Double, nlist: Int = 0,
       iters: Int = 5): DataFrame =
-    semDedupFromAssign(semAssign(emb, nlist, iters), emb, tau)
+    semDedupKeep(emb, tau, nlist, iters).orderBy("vec_id")
+
+  /** [[semDedup]] without the presentation sort, for callers that
+    * materialize the keep set (the curation chain). */
+  private[llm] def semDedupKeep(emb: DataFrame, tau: Double, nlist: Int,
+      iters: Int): DataFrame = {
+    // the input feeds the corpus count, every Lloyd iteration, the
+    // assignment and both sides of the pair join: materialized ONCE, so
+    // an upstream plan (a survivor join, say) runs once, not per use
+    val (e, n) = graft.core.Observed.checkpointCounted(emb)
+    semDedupFromAssign(semAssign(e, nlist, iters, n), e, tau)
+  }
 
   /** The low-id-wins keep rule over any (vec_id, cell) blocking — the
     * blocking-agnostic half of [[semDedup]], split out so the flat and
@@ -1729,7 +1740,6 @@ object Similarity {
     assign
       .join(dups.withColumn("dup", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("dup").isNull.as("keep"))
-      .orderBy("vec_id")
   }
 
   /** Blocking-quality diagnostics for [[semDedup]]'s cell structure —

@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
   * Everything here is built from codegen'd built-in expressions and
   * higher-order functions — no UDFs — so the whole stage stays inside
   * WholeStageCodegen and distributes embarrassingly (per-row, no shuffle).
+  * The per-row curation gates ([[gates]]) evaluate through a native
+  * kernel instead when the session carries GraftExtensions.
   * The reference's closest machinery is its tokenize-then-aggregate IDF
   * path (`ml/IDFRunner.scala:102-111`); these operators generalize that
   * per-document feature extraction.
@@ -48,16 +50,20 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Heuristic quality score: unique-token ratio, alphabetic-character
-    * ratio, mean token length, stopword ratio — the standard cheap
-    * pre-training quality filters. */
-  /** (uniqRatio, alphaRatio, meanTokenLen, stopwordRatio) expression
-    * pack over an unresolved `text` column — shared by [[quality]] and
-    * the single-scan [[curate]] projection. */
+  /** The stopword list of the quality score's stopword ratio. */
+  private[graft] val qualityStopwords =
+    Seq("the", "a", "and", "of", "to", "in", "is", "it")
+
+  /** Heuristic quality features — unique-token ratio, alphabetic-
+    * character ratio, mean token length, stopword ratio, the standard
+    * cheap pre-training quality filters — as a (uniqRatio, alphaRatio,
+    * meanTokenLen, stopwordRatio) expression pack over an unresolved
+    * `text` column, shared by [[quality]], [[qualityScoreExpr]] and
+    * [[qualityLogit6Expr]]. */
   private def qualityParts: (Column, Column, Column, Column) = {
     val toks = tokens(col("text"))
     val n = size(toks)
-    val stop = typedLit(Seq("the", "a", "and", "of", "to", "in", "is", "it"))
+    val stop = typedLit(qualityStopwords)
     val uniqRatio = size(array_distinct(toks)).cast("double") / n
     val alphaRatio = length(regexp_replace(col("text"), "[^a-zA-Z]", ""))
       .cast("double") / greatest(length(col("text")), lit(1))
@@ -221,21 +227,22 @@ object TextOps {
         floor(x.cast("double") / nrm * 10000 + 0.5) / 10000))
   }
 
-  private val stopwords: Map[String, Seq[String]] = Map(
+  private[graft] val langStopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "a", "and", "of", "to", "in", "is", "you", "that", "it"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ich", "mit", "ein", "zu"),
     "es" -> Seq("el", "la", "los", "de", "que", "y", "en", "un", "es", "por"),
     "fr" -> Seq("le", "les", "et", "une", "est", "que", "pour", "dans", "il", "au"))
 
-  /** Stopword/character-class language ID (en/de/es/fr + CJK → zh).
+  /** Stopword/character-class language ID (en/de/es/fr + CJK → zh) as a
+    * (pred_lang, confidence) expression pair over an unresolved `text`
+    * column, shared by [[langId]] and the declarative [[curate]] gates.
     * Scores = stopword hit-rate per language; CJK characters dominate.
-    * Deterministic argmax with 'und' (undetermined) when nothing matches. */
-  /** (pred_lang, confidence) expression pair over an unresolved `text`
-    * column — shared by [[langId]] and the single-scan [[curate]]. */
+    * Deterministic argmax with 'und' (undetermined) when nothing
+    * matches. */
   private[llm] def langIdExprs: (Column, Column) = {
     val toks = tokens(lower(col("text")))
     val nTok = greatest(size(toks), lit(1))
-    val hits = stopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
+    val hits = langStopwords.toSeq.sortBy(_._1).map { case (l, ws) =>
       val arr = typedLit(ws)
       l -> (size(filter(toks, t => array_contains(arr, t))).cast("double") / nTok)
     }
@@ -294,34 +301,34 @@ object TextOps {
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => array_join(slice(toks, i.cast("int"), lit(n)), " ")))
 
-  /** Within-document repetition ratios — the Gopher-style repetitive-text
-    * filters (duplicate-token fraction, duplicate 2-gram / 3-gram
-    * fraction). `1 - distinct/total` per granularity; a doc whose 3-grams
-    * are mostly repeats of each other is boilerplate or spam. Pure
-    * per-row codegen'd HOFs: no shuffle, embarrassingly parallel at any
-    * scale. */
-  /** `1 - distinct/total` duplicate fraction of an array, 0 when empty. */
-  /** `1 - distinct/total` duplicate fraction with the total supplied in
-    * CLOSED FORM: the k-grams of an n-token array number exactly
-    * n − k + 1, so the empty-guard and the denominator are cheap integer
-    * arithmetic on `size(tokens)` and the expensive gram array is
-    * referenced exactly once. This matters because higher-order-function
-    * lambdas are interpreted, not codegen'd, and every extra Column
-    * reference re-evaluates the whole chain — the previous
-    * `size(arr)`-based form referenced the gram build three times (guard,
-    * distinct, total), which made the strict-curation filter ~3× the
-    * cost of the gram build itself (measured 8.4 s → ~3 s at sf0.1). */
+  /** `1 - distinct/total` duplicate fraction of an array, 0 when empty,
+    * with the total supplied in CLOSED FORM: the k-grams of an n-token
+    * array number exactly n − k + 1, so the empty-guard and the
+    * denominator are cheap integer arithmetic on `size(tokens)` and the
+    * expensive gram array is referenced exactly once. This matters
+    * because higher-order-function lambdas are interpreted, not
+    * codegen'd, and every extra Column reference re-evaluates the whole
+    * chain — the previous `size(arr)`-based form referenced the gram
+    * build three times (guard, distinct, total), which made the
+    * strict-curation filter ~3× the cost of the gram build itself
+    * (measured 8.4 s → ~3 s at sf0.1). */
   private def dupRatioClosed(arr: Column, total: Column): Column =
     when(total <= 0, lit(0.0)).otherwise(
       lit(1.0) - size(array_distinct(arr)).cast("double") / total)
 
   /** Rounded duplicate-3-gram fraction — identical to the
     * `dup_3gram_ratio` column of [[repetition]]; shared with the
-    * single-scan [[curate]]. */
+    * declarative [[curate]] gates. */
   private[llm] def dup3RatioExpr: Column =
     r4(dupRatioClosed(gramsAll(tokens(col("text")), 3),
       size(tokens(col("text"))) - 2))
 
+  /** Within-document repetition ratios — the Gopher-style repetitive-text
+    * filters (duplicate-token fraction, duplicate 2-gram / 3-gram
+    * fraction). `1 - distinct/total` per granularity; a doc whose 3-grams
+    * are mostly repeats of each other is boilerplate or spam. Pure
+    * per-row codegen'd HOFs: no shuffle, embarrassingly parallel at any
+    * scale. */
   def repetition(docs: DataFrame, flagThreshold: Double = 0.5): DataFrame = {
     val toks = tokens(col("text"))
     val n = size(toks)
@@ -980,35 +987,42 @@ object TextOps {
     if (ordered) out.orderBy("doc_id") else out
   }
 
+  /** The per-row curation gates as `(doc_id, quality, pred_lang,
+    * dup_3gram_ratio)` in ONE corpus scan. In a session carrying
+    * GraftExtensions all three come from the native
+    * `graft_curate_gate` kernel ([[graft.functions.CurateGate]],
+    * bit-identical by construction); otherwise from the operators' own
+    * declarative expressions ([[qualityScoreExpr]], [[langIdExprs]],
+    * [[dup3RatioExpr]]), which interpret six lambda calls per token.
+    * The kernel's struct is projected once and its fields read off the
+    * bound column (single-reference rule); a filter on those fields is
+    * still pushed below the projection by Catalyst and re-evaluates the
+    * kernel per conjunct — one compiled call each, which stays far below
+    * the cost of a materialization. */
+  private def gates(docs: DataFrame): DataFrame =
+    gatesImpl(docs,
+      docs.sparkSession.catalog.functionExists("graft_curate_gate"))
+
+  /** [[gates]] with the kernel choice forced — the spec differential
+    * runs both paths in one extended session. */
+  private[graft] def gatesImpl(docs: DataFrame, native: Boolean): DataFrame =
+    if (native)
+      docs.select(col("doc_id"), expr("graft_curate_gate(text)").as("g"))
+        .select(col("doc_id"), col("g.quality").as("quality"),
+          col("g.pred_lang").as("pred_lang"),
+          col("g.dup_3gram_ratio").as("dup_3gram_ratio"))
+    else
+      docs.select(col("doc_id"), qualityScoreExpr.as("quality"),
+        langIdExprs._1.as("pred_lang"), dup3RatioExpr.as("dup_3gram_ratio"))
+
   /** End-to-end training-data curation: quality gate ∧ language gate ∧
     * near-dup keep decision (strict mode adds ¬boilerplate) — the flow a
-    * 100 TB corpus pipeline runs before tokenization. The per-row gates
-    * reuse the operators' own expressions ([[qualityScoreExpr]],
-    * [[langIdExprs]], [[dup3RatioExpr]]) projected in ONE corpus scan;
-    * the [[Dedup.dedupGroups]] keep decision is the single remaining
-    * id-equi-join, and docs outside any dup pair carry no dedupGroups
-    * row and keep themselves (left join). */
+    * 100 TB corpus pipeline runs before tokenization; [[curateMulti]]
+    * with one language. */
   def curate(docs: DataFrame, minQuality: Double = 0.5,
       lang: String = "en", shingleSize: Int = 3,
-      threshold: Double = 0.5, maxDup3: Double = 1.0): DataFrame = {
-    // every non-dedup gate is a pure per-row expression, so they share
-    // ONE corpus scan (at 100 TB, the former operator-per-scan + join
-    // composition read the corpus up to 4x and shuffled it for each
-    // doc_id equi-join); the expressions are the operators' own
-    // (qualityScoreExpr / langIdExprs / dup3RatioExpr), so the outputs —
-    // and the composed-CTE oracle — are unchanged
-    val perRow = docs.select(col("doc_id"),
-        qualityScoreExpr.as("quality"), langIdExprs._1.as("pred_lang"),
-        dup3RatioExpr.as("dup_3gram_ratio"))
-      .filter(col("quality") >= minQuality && col("pred_lang") === lang &&
-        (if (maxDup3 >= 1.0) lit(true) else col("dup_3gram_ratio") <= maxDup3))
-    // the one remaining join: the dedup keep-decision genuinely needs its
-    // own (minhash-banded) pipeline; survivors-only on the probe side
-    perRow.join(Dedup.dedupGroups(docs, shingleSize, threshold),
-        Seq("doc_id"), "left")
-      .filter(col("keep_id").isNull || col("keep_id") === col("doc_id"))
-      .select("doc_id", "quality", "pred_lang").orderBy("doc_id")
-  }
+      threshold: Double = 0.5, maxDup3: Double = 1.0): DataFrame =
+    curateMulti(docs, minQuality, Seq(lang), shingleSize, threshold, maxDup3)
 
   /** Multi-language [[curate]] — exactly the UNION of the per-language
     * curate calls (each doc has ONE predicted language, so
@@ -1021,14 +1035,28 @@ object TextOps {
     * rung measured the second run landing in a heap aged by the first
     * run's checkpoint blocks, reading 2-3× the first at matched quiet
     * canaries. A multi-language funnel (the deployment shape: keep
-    * en+de+fr, say) should always enter here. */
+    * en+de+fr, say) should always enter here.
+    *
+    * Every non-dedup gate is a pure per-row expression, so they share
+    * ONE corpus scan ([[gates]]; at 100 TB, the former operator-per-scan
+    * + join composition read the corpus up to 4x and shuffled it for
+    * each doc_id equi-join). The [[Dedup.dedupGroups]] keep decision is
+    * the single remaining id-equi-join, survivors-only on the probe
+    * side; docs outside any dup pair carry no dedupGroups row and keep
+    * themselves (left join). */
   def curateMulti(docs: DataFrame, minQuality: Double = 0.5,
       langs: Seq[String] = Seq("en"), shingleSize: Int = 3,
-      threshold: Double = 0.5, maxDup3: Double = 1.0): DataFrame = {
+      threshold: Double = 0.5, maxDup3: Double = 1.0): DataFrame =
+    curateKept(docs, minQuality, langs, shingleSize, threshold, maxDup3)
+      .orderBy("doc_id")
+
+  /** [[curateMulti]] without the presentation sort, for callers that
+    * materialize the kept set (the curation chain). */
+  private[llm] def curateKept(docs: DataFrame, minQuality: Double,
+      langs: Seq[String], shingleSize: Int, threshold: Double,
+      maxDup3: Double): DataFrame = {
     require(langs.nonEmpty, "need at least one language")
-    val perRow = docs.select(col("doc_id"),
-        qualityScoreExpr.as("quality"), langIdExprs._1.as("pred_lang"),
-        dup3RatioExpr.as("dup_3gram_ratio"))
+    val perRow = gates(docs)
       .filter(col("quality") >= minQuality &&
         col("pred_lang").isin(langs: _*) &&
         (if (maxDup3 >= 1.0) lit(true)
@@ -1036,16 +1064,15 @@ object TextOps {
     perRow.join(Dedup.dedupGroups(docs, shingleSize, threshold),
         Seq("doc_id"), "left")
       .filter(col("keep_id").isNull || col("keep_id") === col("doc_id"))
-      .select("doc_id", "quality", "pred_lang").orderBy("doc_id")
+      .select("doc_id", "quality", "pred_lang")
   }
 
   /** Curation funnel report — the per-gate drop accounting an operator
     * of a [[curate]]-style pipeline watches: for each stage in the
     * sequential gate order (quality → language → boilerplate → dedup),
     * how many docs entered, how many it dropped, how many survived.
-    * Gate expressions are the operators' own ([[qualityScoreExpr]],
-    * [[langIdExprs]], [[dup3RatioExpr]], [[Dedup.dedupGroups]] keep),
-    * so the funnel is exactly the accounting of [[curate]]'s filter.
+    * Gates are [[curate]]'s own ([[gates]], [[Dedup.dedupGroups]]
+    * keep), so the funnel is exactly the accounting of its filter.
     *
     * Scale shape: the same ONE corpus scan + one dedup keep join as
     * [[curate]], then a single 5-counter aggregate (map-side partials)
@@ -1053,10 +1080,10 @@ object TextOps {
   def curationFunnel(docs: DataFrame, minQuality: Double = 0.5,
       lang: String = "en", shingleSize: Int = 3,
       threshold: Double = 0.5, maxDup3: Double = 1.0): DataFrame = {
-    val flags = docs.select(col("doc_id"),
-        (qualityScoreExpr >= minQuality).as("g_quality"),
-        (langIdExprs._1 === lang).as("g_lang"),
-        (if (maxDup3 >= 1.0) lit(true) else dup3RatioExpr <= maxDup3)
+    val flags = gates(docs).select(col("doc_id"),
+        (col("quality") >= minQuality).as("g_quality"),
+        (col("pred_lang") === lang).as("g_lang"),
+        (if (maxDup3 >= 1.0) lit(true) else col("dup_3gram_ratio") <= maxDup3)
           .as("g_rep"))
       .join(Dedup.dedupGroups(docs, shingleSize, threshold),
         Seq("doc_id"), "left")

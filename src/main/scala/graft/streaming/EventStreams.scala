@@ -63,7 +63,7 @@ object EventStreams {
     import graft.llm.Dedup
     // static side built in-place and persist()ed — NOT localCheckpoint:
     // every micro-batch re-evaluates the static plan, so the cache is
-    // what stops the corpus-wide minhash aggregate re-running per
+    // what stops the corpus-wide minhash signing re-running per
     // batch, and persist keeps lineage so a lost executor recomputes
     // instead of failing a long-lived query
     val ssCor = Dedup.withShingleSets(corpus, shingleSize).persist()

@@ -19,6 +19,21 @@ class CoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("nope"))
   }
 
+  test("observed metrics: a checkpoint counts its own rows; a missing or " +
+      "null metric fails naming the metric and the plan") {
+    import org.apache.spark.sql.functions.{lit, sum}
+    import graft.core.Observed
+    val (cp, n) = Observed.checkpointCounted(spark.range(7).toDF("x"))
+    assert(n == 7 && cp.count() == 7)
+    val obs = spark.range(0).toDF("x").observe("s", sum("x").as("v"))
+    obs.localCheckpoint()
+    for (metric <- Seq("s", "not_observed")) {
+      val ex = intercept[IllegalStateException](Observed.long(obs, metric, "v"))
+      assert(ex.getMessage.contains(s"'$metric.v'") &&
+        ex.getMessage.contains("Range"), ex.getMessage)
+    }
+  }
+
   test("timed job splits load and compute and emits a json-line report") {
     val (report, df) = Harness.timed("agg_smoke") {
       Tables(spark, sf0001, "region")

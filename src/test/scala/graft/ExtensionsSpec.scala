@@ -249,4 +249,53 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(native == decl, s"shingles diverge at n=$n")
     }
   }
+
+  test("graft_curate_gate is bit-identical to the declarative gates") {
+    import extended.implicits._
+    import graft.llm.TextOps
+    // null, empty (one empty token), runs of spaces (empty tokens kept),
+    // under-3-token (no 3-grams), CJK share, mixed-case stopwords (the
+    // quality list is case-sensitive, the language list lowered), and
+    // non-ASCII capitals whose case mapping is not ASCII's: dotted
+    // capital I lowers to i + U+0307, the Kelvin sign to k, Greek
+    // capitals to their lower forms
+    val fixtures = Seq[(Long, String)](
+      (1L, null), (2L, ""), (3L, "the  cat   sat"), (4L, "two words"),
+      (5L, "这是 一个 中文 文本 的 测试 the"), (6L, "The AND Of the and of"),
+      (7L, "İs the İt is"), (8L, "\u212Aein der die und das"),
+      (9L, "ΣΤΟ the of ΣΤΟ"), (10L, "Die Katze IST nicht da"),
+      (11L, "x y z x y z x y z")).toDF("doc_id", "text")
+    val corpus = Tables(extended, TestSpark.sf0001, "documents")
+    for (df <- Seq(fixtures, corpus)) {
+      def rows(native: Boolean) = TextOps.gatesImpl(df, native).collect()
+        .map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      val native = rows(native = true)
+      assert(native == rows(native = false))
+      assert(native.size == df.count())
+    }
+    val lang = TextOps.gatesImpl(fixtures, native = true)
+      .select("doc_id", "pred_lang").as[(Long, String)].collect().toMap
+    assert(lang(5L) == "zh" && lang(10L) == "de" && lang(6L) == "en")
+  }
+
+  test("minHashOfSets kernel path matches the aggregate for both hash " +
+      "families") {
+    import extended.implicits._
+    import graft.llm.Dedup
+    // null text (null set), empty text (the one-empty-token set), one
+    // token (the shorter-than-n fallback), plus the real corpus
+    val fixtures = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "one"),
+      (4L, "the cat sat on the mat")).toDF("doc_id", "text")
+    val corpus = Tables(extended, TestSpark.sf0001, "documents")
+    for (df <- Seq(fixtures, corpus); rep <- Seq(false, true)) {
+      val sets = Dedup.withShingleSets(df, 3)
+      def sigs(native: Boolean) =
+        Dedup.minHashOfSetsImpl(sets, 32, 4, rep, native).collect()
+          .map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getSeq[Long](2)))
+          .toMap
+      val native = sigs(native = true)
+      assert(native == sigs(native = false), s"replicable=$rep")
+      assert(native.size == df.filter($"text".isNotNull).count())
+    }
+  }
 }

@@ -92,6 +92,17 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(q - 0.357143) < 1e-6)
   }
 
+  test("louvain on an edge-free graph returns an empty community frame") {
+    val none = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
+    val out = Community.louvain(spark, none)
+    assert(out.columns.toSeq == Seq("node", "community"))
+    assert(out.collect().isEmpty)
+    // one self-loop is a graph with one node in its own community
+    val loop = Seq((7L, 7L, 1.0)).toDF("src", "dst", "weight")
+    assert(Community.louvain(spark, loop).as[(Long, Long)].collect()
+      .toSeq == Seq((7L, 7L)))
+  }
+
   test("weighted pagerank conserves total rank on the strongly-connected fixture") {
     val wpr = Iterative.weightedPageRank(spark, fixtureGraph, 20).collect()
     assert(math.abs(wpr.map(_.getDouble(1)).sum - 6.0) < 0.01)

@@ -9,6 +9,10 @@ class LlmSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** Spark jobs of one `Pipeline.curateChain` over sf0.001 in the test
+    * session (local[4], 4 shuffle partitions, AQE on). */
+  private val ChainJobs = 51
+
   private lazy val tinyDocs = Seq(
     (1L, "the cat sat on the mat"),
     (2L, "the cat sat on the mat"), // exact dup of 1
@@ -291,6 +295,52 @@ class LlmSpec extends AnyFunSuite {
       "(expected at most its 3 stage-output checkpoints)")
     // survivors monotone non-increasing through the gates
     assert(stages.map(_.survivors).sliding(2).forall(p => p(0) >= p(1)))
+  }
+
+  test("curateChain runs a pinned number of Spark jobs on sf0.001") {
+    // one job per materialization: stage outputs and operator
+    // checkpoints count their rows in their own job, the small-graph
+    // dedup resolves in one collect. A change that adds a job per stage
+    // boundary or per label round moves this number.
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_chain_jobs").toString
+    val sc = spark.sparkContext
+    val tag = "graft-chain-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try Pipeline.curateChain(spark, sf0001, out)
+    finally {
+      sc.removeJobTag(tag)
+      org.apache.spark.ListenerBusFlush(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == ChainJobs, s"curateChain ran ${jobs.get} jobs")
+  }
+
+  test("union-find components equal the distributed label rounds") {
+    val chain = (1L until 60L).map(i => (i + 1, i)) // long, reversed
+    val star = (201L to 210L).map(l => (205L, l)).filter(p => p._2 != 205L)
+    val dups = Seq((300L, 301L), (301L, 300L), (300L, 301L), (302L, 301L))
+    for (pairs <- Seq(chain, star, dups, chain ++ star ++ dups)) {
+      val df = pairs.toDF("doc_a", "doc_b")
+      def comps(distributed: Boolean) =
+        Dedup.minLabelComponents(df, distributed).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val uf = comps(distributed = false)
+      assert(uf == comps(distributed = true))
+      assert(uf.keySet == pairs.flatMap(p => Seq(p._1, p._2)).toSet)
+    }
+    assert(Dedup.minLabelComponents(Seq((2L, 1L), (3L, 2L)).toDF("doc_a",
+      "doc_b")).collect().forall(_.getLong(1) == 1L))
   }
 
   test("vocab: tf counts occurrences, df counts docs, rank cut is total") {

@@ -445,7 +445,10 @@ class PlanSpec extends AnyFunSuite {
       // top-5-overlap and Spearman collects merged into one bounded
       // per-source aggregate (same O(|sources|) driver rows)
       "graph/GraphChecks.scala" -> 3, "graph/GraphQueries.scala" -> 1,
-      "llm/CorpusOps.scala" -> 3, "llm/LlmQueries.scala" -> 2,
+      "llm/CorpusOps.scala" -> 3,
+      // Dedup's union-find collects a pair graph only when it sizes to
+      // one partition, i.e. fewer than 200k (id, id) pairs
+      "llm/Dedup.scala" -> 1, "llm/LlmQueries.scala" -> 2,
       "llm/Similarity.scala" -> 6, "llm/TextOps.scala" -> 2,
       "ml/Checks.scala" -> 9, "ml/Unsupervised.scala" -> 2,
       "ml/knn/Knn.scala" -> 2, "streaming/EventStreams.scala" -> 1)

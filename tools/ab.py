@@ -1,0 +1,112 @@
+#!/usr/bin/env python3
+"""Paired A/B of two checkouts on one perfbench workload.
+
+    python3 tools/ab.py PARENT_DIR CHANGE_DIR --workload W --seeds 31 32 ...
+
+For each seed it runs `perfbench/run.py` once in each checkout, back to
+back, switching which side runs first from one pair to the next so that a
+drift of the host's speed does not favour either side. Each checkout
+builds and runs its own benchmark; nothing under `perfbench/` is edited.
+
+It prints, per end-to-end metric, each side's median and quartiles, the
+change of the median, and how many pairs the change won (lower is
+better). For `curate_chain` it also checks that each seed's kept-set
+digest, which each checkout stores under `perfbench/.work/kept/`, is the
+same in both checkouts: the benchmark's own check only compares runs
+within one checkout.
+"""
+import argparse
+import glob
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+METRICS = ("pass_wall_s", "op_p50_s", "setup_s")
+
+
+def run(checkout, workload, seed, seconds):
+    """One benchmark run; returns its result line as a dict."""
+    p = subprocess.run(
+        [sys.executable, os.path.join(checkout, "perfbench", "run.py"),
+         "--workload", workload, "--seed", str(seed),
+         "--seconds", str(seconds), "--trace", "0"],
+        cwd=checkout, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.strip()]
+    if p.returncode != 0 or not lines:
+        sys.exit(f"run failed in {checkout} (seed {seed}, exit "
+                 f"{p.returncode})")
+    return json.loads(lines[-1])
+
+
+def kept_digests(checkout, seed):
+    """The stored kept-set digests of `seed`, keyed by input digest."""
+    out = {}
+    pattern = os.path.join(checkout, "perfbench", ".work", "kept", f"{seed}-*")
+    for path in glob.glob(pattern):
+        with open(path) as f:
+            out[os.path.basename(path)] = f.read().strip()
+    return out
+
+
+def quartiles(xs):
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent", help="checkout of the parent commit")
+    ap.add_argument("change", help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", type=int, nargs="+", required=True)
+    ap.add_argument("--seconds", type=float, default=10)
+    args = ap.parse_args()
+    if len(args.seeds) < 2:
+        ap.error("need at least two seeds for quartiles")
+    sides = {"parent": os.path.abspath(args.parent),
+             "change": os.path.abspath(args.change)}
+
+    values = {s: {m: [] for m in METRICS} for s in sides}
+    problems = []
+    for i, seed in enumerate(args.seeds):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        row = {}
+        for side in order:
+            r = run(sides[side], args.workload, seed, args.seconds)
+            row[side] = r
+            if not r["correct"]:
+                problems.append(f"seed {seed}: {side} reported correct=false")
+            for m in METRICS:
+                values[side][m].append(r["metrics"][m]["value"])
+        if args.workload == "curate_chain":
+            kp, kc = (kept_digests(sides[s], seed) for s in ("parent", "change"))
+            if not kp or kp != kc:
+                problems.append(f"seed {seed}: kept-set digests differ "
+                                f"(parent {kp}, change {kc})")
+        print(f"seed {seed} ({order[0]} first): " + "  ".join(
+            f"{m} {row['parent']['metrics'][m]['value']:.3f} -> "
+            f"{row['change']['metrics'][m]['value']:.3f}" for m in METRICS),
+            flush=True)
+
+    print(f"\n{args.workload}, {len(args.seeds)} pairs")
+    for m in METRICS:
+        p, c = values["parent"][m], values["change"][m]
+        wins = sum(b < a for a, b in zip(p, c))
+        (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
+        print(f"  {m:12s} parent {pm:8.3f} [{p1:.3f}, {p3:.3f}]  "
+              f"change {cm:8.3f} [{c1:.3f}, {c3:.3f}]  "
+              f"median {100 * (cm / pm - 1):+6.1f}%  "
+              f"drop {pm - cm:.3f} vs parent IQR {p3 - p1:.3f}  "
+              f"change won {wins}/{len(p)}")
+    if args.workload == "curate_chain" and not problems:
+        print("  kept-set digests equal across the two checkouts on every seed")
+    for line in problems:
+        print("  PROBLEM: " + line)
+    sys.exit(1 if problems else 0)
+
+
+if __name__ == "__main__":
+    main()

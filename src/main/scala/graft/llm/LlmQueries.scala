@@ -1734,8 +1734,8 @@ object LlmQueries {
 
   /** Residual-Lloyd CTE: the DuckDB unroll of
     * [[Similarity.lloydCentersJoin]] run on the `resid` CTE — id-ordered
-    * r6 init, ROUNDED-distance argmin (the join trainer's packedArgmin
-    * ordering; the exact trainer's CTE uses raw distance), r6 means,
+    * r6 init, ROUNDED-distance argmin (the rounded rule of the Lloyd
+    * kernel; the exact rule's CTE uses raw distance), r6 means,
     * empty clusters keep their center. Valid only while the trainer's
     * hash-systematic subsample is the identity (m = max(1, n/(256k)) =
     * 1, i.e. n < 512k at k=2 — true at the sf0.01 gate's 500 vectors;

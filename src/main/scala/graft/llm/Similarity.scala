@@ -417,9 +417,8 @@ object Similarity {
   def ivfTopKTrained(queries: DataFrame, corpus: DataFrame, k: Int,
       nlist: Int = 4, iters: Int = 5, nProbe: Int = 2): DataFrame = {
     import corpus.sparkSession.implicits._
-    val (centers, _) =
-      graft.ml.Unsupervised.lloydCenters(corpus.sparkSession, corpus,
-        nlist, iters)
+    val centers =
+      graft.ml.Unsupervised.lloydCenters(corpus, nlist, iters).centers
     val cents = broadcast(centers.zipWithIndex.toSeq
       .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
     val spark = corpus.sparkSession
@@ -977,25 +976,26 @@ object Similarity {
     * exposed as its own frame. Centroids are nlist-bounded and
     * broadcast; the argmin is a map-side partial agg over rounded
     * distances (cid tiebreak), so the exchange carries (id, cell) only.
-    * Shared by [[semDedup]] and cluster-balanced sampling.
+    * The assignment stays in SQL on [[euclidExpr]], the distance the IVF
+    * probes route with. Shared by [[semDedup]] and cluster-balanced
+    * sampling.
     *
     * `nlist = 0` (the default) sizes the cell count from the corpus via
-    * [[adaptiveNlist]]. An explicit nlist ≤ 64 trains through the
-    * oracle-replayable exact trainer (`Unsupervised.lloydCenters` — a
-    * per-center expression chain, the path every pinned query uses);
-    * larger or auto-chosen cell counts train through the join-based
-    * trainer, which also caps the TRAINING frame at ~256 vectors per
-    * centroid (deterministic hash-systematic subsample — standard IVF
-    * practice; assignment still covers the full corpus). */
+    * [[adaptiveNlist]]. Training runs the one Lloyd kernel
+    * (`Unsupervised.lloyd`); the cell count only picks its argmin rule.
+    * Up to 64 cells it trains on the whole corpus with exact distances,
+    * the rule every pinned oracle replays; past 64, [[lloydCentersJoin]]
+    * trains with rounded distances on a subsample of ~256 vectors per
+    * centroid (assignment still covers the full corpus). */
   def lloydAssign(emb: DataFrame, nlist: Int = 0,
       iters: Int = 5): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val k = if (nlist > 0) nlist else adaptiveNlist(emb.count())
-    // auto mode that lands in exact-trainer range uses the same trainer
-    // as an explicit nlist, so the two agree wherever they overlap
+    // auto mode that lands in the exact rule's range trains like an
+    // explicit nlist, so the two agree wherever they overlap
     val centers =
-      if (k <= 64) graft.ml.Unsupervised.lloydCenters(spark, emb, k, iters)._1
+      if (k <= 64) graft.ml.Unsupervised.lloydCenters(emb, k, iters).centers
       else lloydCentersJoin(emb, k, iters)
     val cents = broadcast(centers.zipWithIndex.toSeq
       .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
@@ -1012,62 +1012,28 @@ object Similarity {
       .localCheckpoint()
   }
 
-  /** Join-based Lloyd trainer for cell counts past the exact trainer's
-    * expression-chain range (`lloydCenters` builds an O(k) `when`
-    * chain — fine at the pinned k≤8, codegen-hostile at k=4096).
-    * Everything is joins + aggregations: assignment is a broadcast
-    * centroid join with a rounded-distance argmin agg, the update a
-    * (cluster, dim)-keyed mean. Deterministic end to end: id-ordered
-    * init, 1e-6-rounded means (the exact trainer's discipline), and a
-    * hash-systematic training subsample (`xxhash64(vec_id) % m = 0`,
-    * never `DataFrame.sample`, whose output depends on partition
-    * layout) capped at ~256 vectors per centroid. Driver state is the
-    * k×dim center table (~2 MB at the 4,096 cap) — never corpus-sized. */
+  /** Lloyd training for cell counts past 64 and for the residual
+    * codebooks: the Lloyd kernel (`Unsupervised.lloyd`) with the
+    * rounded-distance argmin of the cell assignment (`floor(d·1e6+0.5)`,
+    * lower id wins), on a hash-systematic training subsample
+    * (`xxhash64(vec_id) % m = 0`, never `DataFrame.sample`, whose output
+    * depends on partition layout) capped at ~256 vectors per centroid.
+    * The k lowest vec_ids of the whole frame seed it, subsampled or
+    * not. Driver state is the k×dim center table (~2 MB at the 4,096
+    * cap) — never corpus-sized. */
   private[graft] def lloydCentersJoin(emb: DataFrame, k: Int,
       iters: Int, nKnown: Long = -1L): Array[Array[Double]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     // nKnown must be emb's EXACT row count when passed (it sizes the
     // hash-systematic training subsample — an approximate count could
     // change the sample and therefore the trained centers); callers in
     // the residual-index family know it because every residual frame is
-    // one row per corpus vector (r15 opt round: each skipped count was
-    // a full scan job of a checkpointed array frame)
+    // one row per corpus vector
     val n = if (nKnown >= 0) nKnown else emb.count()
     val m = math.max(1L, n / (256L * k))
-    val train =
-      (if (m > 1) emb.filter(xxhash64(col("vec_id")) % m === 0) else emb)
-        .select(col("vec_id"),
-          transform(col("embedding"), v => v.cast("double")).as("x"))
-        .localCheckpoint()
-    // Number, not Float: the residual second level ([[ivfResidualIndex]])
-    // trains on array<double> residual frames through this same trainer
-    var centers: Array[Array[Double]] = emb.orderBy("vec_id").limit(k)
-      .select("embedding").collect()
-      .map(_.getSeq[Number](0).map(f => r6(f.doubleValue)).toArray)
-    for (_ <- 1 to iters) {
-      val cents = broadcast(centers.zipWithIndex.toSeq
-        .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
-      val d6i =
-        floor(euclidExpr(spark, "x", "cv") * 1e6 + 0.5).cast("long")
-      val assigned = train.join(cents)
-        .groupBy("vec_id")
-        .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-        // payload rejoins by id after the fixed-width argmin
-        .join(train, Seq("vec_id"))
-        .select(unpackId(col("mp")).as("cid"), col("x"))
-      val means = assigned
-        .select(col("cid"), posexplode(col("x")).as(Seq("p", "v")))
-        .groupBy("cid", "p").agg(avg("v").as("v"))
-        .collect()
-      val next = centers.map(_.clone())
-      means.foreach { r =>
-        next(r.getLong(0).toInt)(r.getInt(1)) = r6(r.getDouble(2))
-      }
-      centers = next // clusters with no training member keep their center
-    }
-    centers
+    if (m == 1) graft.ml.Unsupervised.lloyd(emb, k, iters, rounded = true).centers
+    else graft.ml.Unsupervised.lloyd(
+      emb.filter(xxhash64(col("vec_id")) % m === 0), k, iters,
+      rounded = true, initFrom = Some(emb)).centers
   }
 
   /** Residual-split ladder past the [[adaptiveNlist]] 4,096-cell cap
@@ -1124,8 +1090,7 @@ object Similarity {
     val k1 = if (nlist > 0) nlist else adaptiveNlist(n)
     val k2 = if (nsplit > 0) nsplit else adaptiveNsplit(n)
     val c1 =
-      if (k1 <= 64)
-        graft.ml.Unsupervised.lloydCenters(spark, corpus, k1, iters)._1
+      if (k1 <= 64) graft.ml.Unsupervised.lloydCenters(corpus, k1, iters).centers
       else lloydCentersJoin(corpus, k1, iters, n)
     val cents1 = broadcast(c1.zipWithIndex.toSeq
       .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
@@ -1560,15 +1525,14 @@ object Similarity {
     * 600k vectors vs 35.1 s for the FLAT 600-cell assignment it was
     * supposed to beat (quiet canaries both sides) — the index build's
     * constants are an oracle contract, not a blocking necessity: at
-    * k1 ≤ 64 it trains through the exact oracle-replayable trainer
-    * (full-corpus HOF expression chains, no native kernel, no
-    * subsample), and it checkpoints two corpus-sized payload frames
-    * (assignment with embeddings + materialized residuals). Blocking
-    * needs none of that:
-    *   - both codebooks train through the subsampled join trainer
-    *     ([[lloydCentersJoin]] — native distance kernel, ≤256 training
-    *     vectors per centroid); the residual codebook trains on the
-    *     SAMPLE's residuals only, never a corpus-sized residual frame;
+    * k1 ≤ 64 it trains with the exact oracle-replayable rule on the
+    * full corpus (no subsample), and it checkpoints two corpus-sized
+    * payload frames (assignment with embeddings + materialized
+    * residuals). Blocking needs none of that:
+    *   - both codebooks train through the subsampled trainer
+    *     ([[lloydCentersJoin]] — ≤256 training vectors per centroid);
+    *     the residual codebook trains on the SAMPLE's residuals only,
+    *     never a corpus-sized residual frame;
     *   - checkpoints carry (vec_id, cell) only, never the payload;
     *   - the second-level argmin runs against the k1·k2 COMBINED
     *     centers (wv = cv + sv: ||x−c−s|| ≡ ||x−(c+s)||), so residual
@@ -1602,7 +1566,7 @@ object Similarity {
       .select(col("vec_id"), unpackId(col("mp")).as("cell"))
       .localCheckpoint()
     // residual codebook: trained on the hash-systematic SAMPLE's
-    // residuals (the join trainer's own cap, applied before the
+    // residuals ([[lloydCentersJoin]]'s own cap, applied before the
     // residual projection, so the HOF zip_with touches ~256·k2 rows)
     val m2 = math.max(1L, n / (256L * k2))
     val sampResid = emb

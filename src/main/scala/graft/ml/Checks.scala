@@ -56,31 +56,15 @@ object Checks {
     val data = Supervised.embeddingFeatures(embeddings)
     val m = new org.apache.spark.ml.clustering.KMeans()
       .setK(8).setMaxIter(20).setSeed(2020L).fit(data)
-    val n = data.count()
     val sizes = m.summary.clusterSizes
     val wssse = m.summary.trainingCost
-    val (centers, assigned) =
-      Unsupervised.lloydCenters(spark, embeddings, 4, 5, lloydMemoKey)
-    val distSq = centers.zipWithIndex.map { case (c, i) =>
-      when(col("cluster") === i, aggregate(
-        zip_with(col("x"), typedLit(c.toSeq),
-          (x, cc) => (x - cc) * (x - cc)),
-        lit(0.0), (acc, v) => acc + v))
-      // reduceRight: each otherwise() lands on a fresh when() column
-      // (left-fold would re-apply otherwise to the finished chain)
-    }.reduceRight(_ otherwise _)
-    // per-row rounding discipline (round-9 advice): round each squared
-    // distance to 1e-6 BEFORE summing so the summed operands are
-    // bit-identical on both engines (DuckDB's POWER(LIST_DISTANCE,2)
-    // differs from the direct sum by ulps; unrounded operands let
-    // summation order move the final 1e-4 rounding boundary)
-    val wssseLloyd = assigned
-      .select((floor(distSq * 1e6 + 0.5) / 1e6).as("d2"))
-      .agg(sum("d2")).head().getDouble(0)
+    val lloyd =
+      Unsupervised.lloydCenters(embeddings, 4, 5, lloydMemoKey, wssse = true)
+    val wssseLloyd = lloyd.wssse.get
     verdictsV(spark, Seq(
       "kmeans_clusters_in_range" ->
         b2d(sizes.length >= 2 && sizes.length <= 8),
-      "kmeans_sizes_sum_n" -> b2d(sizes.sum == n),
+      "kmeans_sizes_sum_n" -> b2d(sizes.sum == lloyd.n),
       "kmeans_wssse_le_lloyd4" -> b2d(wssse <= wssseLloyd * 1.005),
       // the companion bound itself — DuckDB recomputes it by replaying
       // the deterministic Lloyd chain and summing squared distances

@@ -196,16 +196,16 @@ object MlQueries {
       "(SELECT vec_id, i, v, ROW_NUMBER() OVER (PARTITION BY i ORDER BY v) AS rn FROM x) q) " +
       upperMatrix("CORR(a.v, b.v)", "rk")
 
-  /** Unrolled deterministic-Lloyd oracle: one (assign, update, centers)
-    * CTE triple per iteration. LIST_DISTANCE is sequential like the
-    * Spark-side fold; centers rounded to 1e-6 per iteration on both
-    * sides so group-summation order cannot drift; clusters that lose
-    * every point keep their previous center. MATERIALIZED per the
-    * DuckDB-inlines-CTEs-per-reference lesson. */
-  /** The Lloyd CTE chain alone (x/xd/c0/a_i/m_i/c_i up to c$iters) — the
-    * shared prefix of the ml_lloyd_fixed oracle and the composed
+  /** The unrolled deterministic-Lloyd CTE chain (x/xd/c0/a_i/m_i/c_i up
+    * to c$iters): one (assign, update, centers) triple per iteration —
+    * the shared prefix of the ml_lloyd_fixed oracle and the composed
     * trained-IVF oracle (llm_ann_ivf_trained), which appends the
-    * assignment/probe/rank stages on top of the trained centroids. */
+    * assignment/probe/rank stages on top of the trained centroids.
+    * LIST_DISTANCE sums left to right like the Spark-side kernel;
+    * centers are rounded to 1e-6 per iteration on both sides so
+    * group-summation order cannot drift; clusters that lose every point
+    * keep their previous center. MATERIALIZED per the
+    * DuckDB-inlines-CTEs-per-reference lesson. */
   private[graft] def lloydCentroidCte(k: Int, iters: Int, dim: Int): String = {
     val sb = new StringBuilder
     sb ++= "WITH x AS MATERIALIZED (SELECT vec_id, " +

@@ -6,6 +6,7 @@ import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Unsupervised surface (SURVEY §2.B B1, B9, B11): KMeans, PCA, SVD.
   * Reference: `ml/KMeansRunner.scala:134-161`, `ml/PCARunner.scala:124-190`,
@@ -15,6 +16,12 @@ import org.apache.spark.sql.functions._
   * the removed `computeCost`, SURVEY §7 risk 7). PCA/SVD spectra are
   * rounded; eigenvector signs are indeterminate so only magnitudes
   * (variances / singular values) are emitted (SURVEY §7 risk 6).
+  *
+  * Every deterministic k-means in graft trains through one Lloyd kernel
+  * here ([[lloyd]]): like stock MLlib it iterates over cached vectors
+  * with one aggregate job per iteration, and its argmin takes either of
+  * the two rules the pinned oracles fix (exact distances for k ≤ 64,
+  * 1e-6-rounded ones past that).
   */
 object Unsupervised {
 
@@ -34,91 +41,138 @@ object Unsupervised {
       .orderBy("term")
   }
 
-  /** Lloyd iterations with DETERMINISTIC initialization (centers = the k
-    * lowest vec_ids) — the oracle-checkable complement to [[kmeans]]
-    * (stock KMeans|| init is seeded RNG state no external engine can
-    * replay). The plan is the scale-correct Lloyd shape: centers live on
-    * the driver (k×dim doubles) and enter the plan as literals, so
-    * assignment is a map-side projection — argmin over k codegen'd
-    * distance expressions, no shuffle — and only the center update
-    * shuffles k×dim partial sums. Centers are rounded to 1e-6 each
-    * iteration so cross-engine float summation order cannot drift.
-    * Output: (cluster, dim, value) flattened centers + (cluster, -1, n)
-    * size rows. */
-  /** The deterministic Lloyd centers themselves (rounded 1e-6 per
-    * iteration) — reused by [[lloydFixed]] and as the trained coarse
-    * quantizer of the IVF ANN path (`Similarity.ivfTopKTrained`). The
-    * driver only ever holds k×dim doubles. Returns (centers, final
-    * assignment frame). */
-  private[graft] def lloydCenters(spark: SparkSession, embeddings: DataFrame,
-      k: Int = 4, iters: Int = 5, memoKey: Option[String] = None)
-      : (Array[Array[Double]], DataFrame) = {
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    val xd = transform(col("embedding"), v => v.cast("double"))
-    def distTo(c: Array[Double]): org.apache.spark.sql.Column =
-      sqrt(aggregate(
-        zip_with(xd, typedLit(c.toSeq), (x, cc) => (x - cc) * (x - cc)),
-        lit(0.0), (acc, v) => acc + v))
-    def assignTo(cs: Array[Array[Double]]): DataFrame = {
-      // array_min over (d, c) structs: the same lexicographic argmin the
-      // historic when(a <= b, a).otherwise(b) fold computed (compare d,
-      // tie-break on the center index), but with a LINEAR-size
-      // expression tree — the fold copied the accumulated tree into
-      // both branches, i.e. 2^k nodes, which exhausted a 24 GiB driver
-      // at k = 20 (round-10 probe). Bit-identical assignment: same raw
-      // distances, same comparison order.
-      val best = array_min(array(cs.zipWithIndex
-        .map { case (c, i) => struct(distTo(c).as("d"), lit(i).as("c")) }: _*))
-      embeddings
-        .select(col("vec_id"), xd.as("x"), best.getField("c").as("cluster"))
-    }
-    // the loop's product is (c_{iters-1}, c_iters): the returned frame is
-    // the LAST-iteration assignment (to the pre-update centers) and the
-    // returned centers are the post-update means of that assignment —
-    // exactly the a$iters/c$iters pair the DuckDB oracle unrolls. Both
-    // center arrays (k×dim doubles) are memoizable driver state; the
-    // assignment frame is rebuilt lazily from c_{iters-1}, so a memo hit
-    // (ml_kmeans ↔ ml_lloyd_fixed share the same twin) skips all
-    // iters×2 corpus passes.
-    def run(): (Array[Array[Double]], Array[Array[Double]]) = {
-      var centers: Array[Array[Double]] = embeddings.orderBy("vec_id")
-        .limit(k).select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-        .map(_.map(r6))
-      var prev = centers
-      for (_ <- 1 to iters) {
-        prev = centers
-        val sums = assignTo(centers)
-          .select(col("cluster"), posexplode(col("x")).as(Seq("dim", "v")))
-          .groupBy("cluster", "dim").agg(avg("v").as("m"))
-          .collect()
-        val next = centers.map(_.clone())
-        sums.foreach(r =>
-          next(r.getInt(0))(r.getInt(1)) = r6(r.getDouble(2)))
-        centers = next // clusters that lost every point keep their center
-      }
-      (prev, centers)
-    }
-    val (cPrev, cFinal) = memoKey match {
-      case Some(key) =>
-        graft.core.QueryCache.value(s"lloyd:$key:$k:$iters")(run())
-      case None => run()
-    }
-    (cFinal, assignTo(cPrev))
+  /** One deterministic Lloyd run: the previous and final centers (the
+    * `c_{iters-1}`, `c_iters` pair the DuckDB oracle unrolls), the sizes
+    * of the last assignment (to `prev`), the number of vectors trained
+    * on, and, when asked for, the WSSSE of that assignment against the
+    * final centers. */
+  private[graft] final case class LloydRun(prev: Array[Array[Double]],
+      centers: Array[Array[Double]], sizes: Array[Long], n: Long,
+      wssse: Option[Double])
+
+  private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  // the IEEE operation sequence of graft_euclid, of the zip_with /
+  // aggregate chain and of DuckDB's LIST_DISTANCE: difference-based
+  // squares summed left to right from 0.0
+  private def sqDist(x: Array[Double], c: Array[Double]): Double = {
+    require(x.length == c.length,
+      s"Lloyd vectors differ in dimension: ${x.length} vs ${c.length}")
+    var s = 0.0
+    for (j <- x.indices) { val d = x(j) - c(j); s += d * d }
+    s
   }
 
+  /** Index of the center nearest x. The exact rule compares raw
+    * distances with NaN above every number, as Spark orders doubles; the
+    * rounded rule compares `floor(d·1e6+0.5)` saturated at 2^30−1, the
+    * key of `Similarity`'s packed argmin (a NaN distance floors to 0
+    * there, as Spark's `floor` does). Either way the lower index wins a
+    * tie. */
+  private def nearest(cs: Array[Array[Double]], x: Array[Double],
+      rounded: Boolean): Int = {
+    def key(c: Array[Double]) = {
+      val d = math.sqrt(sqDist(x, c))
+      if (rounded) math.min(math.floor(d * 1e6 + 0.5).toLong, (1L << 30) - 1).toDouble
+      else d
+    }
+    var best = 0
+    var bestKey = key(cs(0))
+    for (i <- 1 until cs.length) {
+      val k = key(cs(i))
+      if (k < bestKey || bestKey.isNaN && !k.isNaN) { best = i; bestKey = k }
+    }
+    best
+  }
+
+  /** The Lloyd kernel behind every deterministic k-means in graft:
+    * [[lloydFixed]], the k-means check's companion bound, the trained
+    * IVF quantizers and the SemDeDup cells (`Similarity.lloydAssign`).
+    * It reads `(vec_id, embedding)` once into a persisted RDD of double
+    * arrays, starts from the k lowest `vec_id`s (of `initFrom` when
+    * given, else of `emb`), and runs each iteration as one
+    * `treeAggregate` of per-cluster sums and counts against broadcast
+    * centers. Means are rounded to 1e-6, so cross-engine summation
+    * order cannot drift; a center that loses every vector keeps its
+    * position. A null embedding, or one with a null element, is
+    * skipped: it adds to no mean, no size and no WSSSE. Fewer vectors
+    * than k give that many centers; none give none. The driver only
+    * ever holds k×dim doubles. */
+  private[graft] def lloyd(emb: DataFrame, k: Int, iters: Int,
+      rounded: Boolean = false, wssse: Boolean = false,
+      initFrom: Option[DataFrame] = None): LloydRun = {
+    require(k >= 1 && iters >= 1,
+      s"Lloyd needs k >= 1 and iters >= 1, got k = $k, iters = $iters")
+    def vectors(df: DataFrame) = df
+      .filter(col("embedding").isNotNull && !exists(col("embedding"), _.isNull))
+      .select(col("vec_id").cast("long"), transform(col("embedding"), _.cast("double")))
+      .rdd.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val data = vectors(emb).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      var centers = initFrom.fold(data)(vectors)
+        .takeOrdered(k)(Ordering.by[(Long, Array[Double]), Long](_._1))
+        .map(_._2.map(r6))
+      var prev = centers
+      // the accumulator holds, per cluster, its dim sums and then its count
+      val w = centers.headOption.fold(0)(_.length) + 1
+      var sizes = Array.empty[Long]
+      for (_ <- 1 to iters if centers.nonEmpty) {
+        prev = centers
+        val bc = data.sparkContext.broadcast(prev)
+        val acc = data.treeAggregate(new Array[Double](prev.length * w))(
+          { case (acc, (_, x)) =>
+            val a = nearest(bc.value, x, rounded) * w
+            for (j <- x.indices) acc(a + j) += x(j)
+            acc(a + w - 1) += 1
+            acc
+          },
+          (a, b) => { for (j <- a.indices) a(j) += b(j); a })
+        sizes = Array.tabulate(prev.length)(c => acc(c * w + w - 1).toLong)
+        centers = Array.tabulate(prev.length)(c =>
+          if (sizes(c) == 0) prev(c)
+          else Array.tabulate(w - 1)(j => r6(acc(c * w + j) / sizes(c))))
+      }
+      // each squared distance is rounded to 1e-6 before the sum, as the
+      // DuckDB oracle does; the Long of floor maps NaN to 0, as Spark's
+      // floor did in the SQL form
+      val cost = if (!wssse) None else {
+        val bc = data.sparkContext.broadcast((prev, centers))
+        Some(data.map { case (_, x) =>
+          val (p, f) = bc.value
+          math.floor(sqDist(x, f(nearest(p, x, rounded))) * 1e6 + 0.5).toLong / 1e6
+        }.sum())
+      }
+      LloydRun(prev, centers, sizes, sizes.sum, cost)
+    } finally data.unpersist(blocking = true)
+  }
+
+  /** The exact-rule run that [[lloydFixed]], the k-means check and the
+    * small-k IVF quantizers train with. Keyed runs are memoized on the
+    * driver (ml_kmeans and ml_lloyd_fixed share one) and always carry
+    * the WSSSE, so either caller may come first. */
+  private[graft] def lloydCenters(embeddings: DataFrame, k: Int = 4,
+      iters: Int = 5, memoKey: Option[String] = None,
+      wssse: Boolean = false): LloydRun = {
+    def run() = lloyd(embeddings, k, iters, wssse = wssse || memoKey.isDefined)
+    memoKey.fold(run())(key =>
+      graft.core.QueryCache.value(s"lloyd:$key:$k:$iters")(run()))
+  }
+
+  /** Deterministic Lloyd (centers = the k lowest vec_ids to start) — the
+    * oracle-checkable complement to [[kmeans]], whose KMeans|| init is
+    * seeded RNG state no external engine can replay. Output:
+    * (cluster, dim, value) flattened centers plus one (cluster, -1, n)
+    * size row per non-empty cluster of the last assignment. */
   def lloydFixed(spark: SparkSession, embeddings: DataFrame, k: Int = 4,
-      iters: Int = 5, dim: Int = 64,
-      memoKey: Option[String] = None): DataFrame = {
+      iters: Int = 5, memoKey: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val (centers, assigned) = lloydCenters(spark, embeddings, k, iters, memoKey)
-    val sizes = assigned.groupBy("cluster")
-      .agg(count(lit(1)).cast("double").as("value"))
-      .select(col("cluster").cast("long"), lit(-1).as("dim"), col("value"))
-    val flat = centers.zipWithIndex.flatMap { case (c, i) =>
+    val run = lloydCenters(embeddings, k, iters, memoKey)
+    val flat = run.centers.zipWithIndex.flatMap { case (c, i) =>
       c.zipWithIndex.map { case (v, j) => (i.toLong, j, v) } }
-      .toSeq.toDF("cluster", "dim", "value")
-    flat.unionByName(sizes).orderBy("cluster", "dim")
+    val sizes = run.sizes.zipWithIndex.collect {
+      case (s, i) if s > 0 => (i.toLong, -1, s.toDouble) }
+    (flat ++ sizes).toSeq.toDF("cluster", "dim", "value")
+      .orderBy("cluster", "dim")
   }
 
   /** PCA top-k principal components; output = per-component explained
@@ -146,7 +200,6 @@ object Unsupervised {
     // slice, the lower bound here (r13 advice).
     require(off >= 1, s"off is a 1-based dim index, got $off")
     import spark.implicits._
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val data = embeddings.select(
       org.apache.spark.ml.functions.array_to_vector(
         slice(col("embedding"), off, 2)).as("features"))
@@ -165,7 +218,6 @@ object Unsupervised {
       off: Int = 1): DataFrame = {
     require(off >= 1, s"off is a 1-based dim index, got $off")
     import spark.implicits._
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val rows = embeddings.select(slice(col("embedding"), off, 2).as("xy"))
       .rdd.map(r => OldVectors.dense(
         r.getSeq[Float](0).map(_.toDouble).toArray))

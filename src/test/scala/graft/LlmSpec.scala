@@ -11,7 +11,7 @@ class LlmSpec extends AnyFunSuite {
 
   /** Spark jobs of one `Pipeline.curateChain` over sf0.001 in the test
     * session (local[4], 4 shuffle partitions, AQE on). */
-  private val ChainJobs = 51
+  private val ChainJobs = 46
 
   private lazy val tinyDocs = Seq(
     (1L, "the cat sat on the mat"),

@@ -98,6 +98,58 @@ class MlSpec extends AnyFunSuite {
     assert(r.exists(x => x.getString(0) == "wssse" && x.getDouble(1) > 0))
   }
 
+  // deterministic Lloyd on degenerate inputs: (vec_id, embedding) rows,
+  // None for a null embedding
+  private def vecs(rows: (Long, Option[Seq[Float]])*) =
+    rows.toDF("vec_id", "embedding")
+
+  private def lloydRows(df: org.apache.spark.sql.DataFrame, k: Int,
+      iters: Int): Seq[(Long, Int, Double)] =
+    Unsupervised.lloydFixed(spark, df, k, iters).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
+
+  test("lloyd skips a null embedding: no mean, no size, no wssse") {
+    val df = vecs((0L, Some(Seq(0f, 0f))), (1L, Some(Seq(10f, 10f))),
+      (2L, None), (3L, Some(Seq(1f, 0f))))
+    assert(lloydRows(df, 2, 2) == Seq((0L, -1, 2.0), (0L, 0, 0.5),
+      (0L, 1, 0.0), (1L, -1, 1.0), (1L, 0, 10.0), (1L, 1, 10.0)))
+    val run = Unsupervised.lloydCenters(df, 2, 2, wssse = true)
+    assert(run.n == 3 && run.wssse.contains(0.5))
+  }
+
+  test("lloyd rejects k < 1 naming k") {
+    val df = vecs((0L, Some(Seq(1f))))
+    val e = intercept[IllegalArgumentException](lloydRows(df, 0, 5))
+    assert(e.getMessage.contains("k = 0"), e.getMessage)
+  }
+
+  test("lloyd with fewer rows than k returns one center per row") {
+    val df = vecs((0L, Some(Seq(1f))), (1L, Some(Seq(2f))),
+      (2L, Some(Seq(4f))))
+    assert(lloydRows(df, 5, 3) == Seq((0L, -1, 1.0), (0L, 0, 1.0),
+      (1L, -1, 1.0), (1L, 0, 2.0), (2L, -1, 1.0), (2L, 0, 4.0)))
+  }
+
+  test("lloyd on an empty frame gives no centers and no size rows") {
+    assert(lloydRows(vecs(), 4, 5).isEmpty)
+    val run = Unsupervised.lloydCenters(vecs(), 4, 5, wssse = true)
+    assert(run.centers.isEmpty && run.n == 0 && run.wssse.contains(0.0))
+  }
+
+  test("lloyd puts a vector with a NaN component in cluster 0") {
+    // every distance to it is NaN, a tie the lower index wins; cluster
+    // 0's mean then turns NaN in that dim, so from the second pass on
+    // every finite vector is nearer cluster 1
+    val df = vecs((0L, Some(Seq(0f, 0f))), (1L, Some(Seq(10f, 10f))),
+      (2L, Some(Seq(1f, 0f))), (3L, Some(Seq(Float.NaN, 5f))),
+      (4L, Some(Seq(9f, 10f))))
+    val rows = lloydRows(df, 2, 3)
+    assert(rows.filter(_._2 == -1) == Seq((0L, -1, 1.0), (1L, -1, 4.0)))
+    val c0 = rows.filter(r => r._1 == 0 && r._2 >= 0).map(_._3)
+    assert(c0.head.isNaN && c0(1) == 5.0)
+    assert(rows.filter(r => r._1 == 1 && r._2 >= 0).map(_._3) == Seq(5.0, 5.0))
+  }
+
   test("pca explained variance is positive and decreasing") {
     val ev = Unsupervised.pca(spark, embeddings, k = 6).collect()
       .map(_.getDouble(1))

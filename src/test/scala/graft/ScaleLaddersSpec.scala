@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.llm.Similarity
 
 /** The round-9 scale ladders: adaptive sign-LSH projection count,
-  * adaptive SemDeDup cell count, and the join-based Lloyd trainer that
-  * backs cell counts past the exact trainer's k≤64 expression range. */
+  * adaptive SemDeDup cell count, and the subsampled Lloyd trainer that
+  * backs cell counts past 64, with the two argmin rules of the Lloyd
+  * kernel pinned. */
 class ScaleLaddersSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -55,11 +56,55 @@ class ScaleLaddersSpec extends AnyFunSuite {
   test("lloydCentersJoin matches the exact trainer where they overlap") {
     val e = blobs(80)
     val exact =
-      graft.ml.Unsupervised.lloydCenters(spark, e, 4, 5)._1
+      graft.ml.Unsupervised.lloydCenters(e, 4, 5).centers
     val joined = Similarity.lloydCentersJoin(e, 4, 5)
     assert(exact.length == 4 && joined.length == 4)
     exact.zip(joined).foreach { case (a, b) =>
       a.zip(b).foreach { case (x, y) => assert(math.abs(x - y) < 1e-5) }
+    }
+  }
+
+  // one-pass Lloyd runs over (vec_id, array<double>) rows: the first k
+  // ids seed the centers, so each case places the later vectors against
+  // known centers and reads the argmin off the cluster sizes
+  private def onePass(xs: Seq[Seq[Double]], k: Int, rounded: Boolean) =
+    graft.ml.Unsupervised.lloyd(
+      xs.zipWithIndex.map { case (x, i) => (i.toLong, x) }
+        .toDF("vec_id", "embedding"), k, 1, rounded = rounded)
+
+  test("exact argmin: a tie at equal distance goes to the lower index") {
+    val run = onePass(Seq(Seq(0.0, 0.0), Seq(2.0, 0.0), Seq(1.0, 0.0)),
+      2, rounded = false)
+    assert(run.sizes.toSeq == Seq(2L, 1L))
+    assert(run.centers.map(_.toSeq).toSeq == Seq(Seq(0.5, 0.0), Seq(2.0, 0.0)))
+  }
+
+  test("rounded argmin: distances equal after 1e-6 rounding tie to the lower id") {
+    // raw 1.0000002 vs 0.9999998: the exact rule takes center 1, the
+    // rounded rule sees 1000000 twice and takes center 0
+    val xs = Seq(Seq(0.0), Seq(2.0), Seq(1.0000002))
+    assert(onePass(xs, 2, rounded = true).sizes.toSeq == Seq(2L, 1L))
+    assert(onePass(xs, 2, rounded = false).sizes.toSeq == Seq(1L, 2L))
+  }
+
+  test("rounded argmin: distances past the 2^30-1 saturation tie to the lower id") {
+    // 20000 and 10000 both round past 2^30-1 (~1073.74), so they tie
+    val xs = Seq(Seq(0.0), Seq(10000.0), Seq(20000.0))
+    val rounded = onePass(xs, 2, rounded = true)
+    assert(rounded.sizes.toSeq == Seq(2L, 1L))
+    assert(rounded.centers.map(_.toSeq).toSeq == Seq(Seq(10000.0), Seq(10000.0)))
+    assert(onePass(xs, 2, rounded = false).sizes.toSeq == Seq(1L, 2L))
+  }
+
+  test("a center that loses every vector keeps its position") {
+    // centers 1 and 2 start at the same point; the lower index takes
+    // both of their vectors and the one at 6
+    for (rounded <- Seq(false, true)) {
+      val run = onePass(Seq(Seq(0.0), Seq(4.0), Seq(4.0), Seq(6.0)), 3,
+        rounded)
+      assert(run.sizes.toSeq == Seq(1L, 3L, 0L))
+      assert(run.centers.map(_.toSeq).toSeq ==
+        Seq(Seq(0.0), Seq(4.666667), Seq(4.0)))
     }
   }
 

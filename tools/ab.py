@@ -9,8 +9,10 @@ drift of the host's speed does not favour either side. Each checkout
 builds and runs its own benchmark; nothing under `perfbench/` is edited.
 
 It prints, per end-to-end metric, each side's median and quartiles, the
-change of the median, and how many pairs the change won (lower is
-better). For `curate_chain` it also checks that each seed's kept-set
+change of the median, how many pairs the change won (lower is better),
+and one verdict (see `verdict`) against the metric's bound in the change
+checkout's `BENCHMARK.json`. For `curate_chain` it also checks that each
+seed's kept-set
 digest, which each checkout stores under `perfbench/.work/kept/`, is the
 same in both checkouts: the benchmark's own check only compares runs
 within one checkout.
@@ -56,6 +58,39 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(parent, change, bound):
+    """One verdict for a lower-is-better metric over paired runs.
+
+    `parent[i]` and `change[i]` are pair i; `bound` is the share of the
+    parent's median by which the metric may worsen.
+
+    - gain: the change won at least 9/10 of the pairs (ties count for
+      neither) and its median drop exceeds the parent's quartile spread;
+    - worse: the change's median is above the parent's by more than the
+      bound;
+    - unresolved: the parent's quartile spread, as a share of its median,
+      is wider than the bound, and not every change run beats every
+      parent run;
+    - flat: otherwise.
+    """
+    p1, pm, p3 = quartiles(parent)
+    cm = statistics.median(change)
+    wins = sum(c < p for p, c in zip(parent, change))
+    if 10 * wins >= 9 * len(parent) and pm - cm > p3 - p1:
+        return "gain"
+    if cm > pm * (1 + bound):
+        return "worse"
+    if p3 - p1 > bound * pm and not max(change) < min(parent):
+        return "unresolved"
+    return "flat"
+
+
+def bounds(checkout):
+    """The end-to-end bounds `BENCHMARK.json` declares, by metric name."""
+    with open(os.path.join(checkout, "BENCHMARK.json")) as f:
+        return {m["name"]: m["bound"] for m in json.load(f)["end_to_end"]}
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent", help="checkout of the parent commit")
@@ -68,6 +103,7 @@ def main():
         ap.error("need at least two seeds for quartiles")
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
+    bound = bounds(sides["change"])
 
     values = {s: {m: [] for m in METRICS} for s in sides}
     problems = []
@@ -100,7 +136,7 @@ def main():
               f"change {cm:8.3f} [{c1:.3f}, {c3:.3f}]  "
               f"median {100 * (cm / pm - 1):+6.1f}%  "
               f"drop {pm - cm:.3f} vs parent IQR {p3 - p1:.3f}  "
-              f"change won {wins}/{len(p)}")
+              f"change won {wins}/{len(p)}  {verdict(p, c, bound[m])}")
     if args.workload == "curate_chain" and not problems:
         print("  kept-set digests equal across the two checkouts on every seed")
     for line in problems:

@@ -5,9 +5,17 @@ import org.apache.spark.graphx.lib.{ConnectedComponents, LabelPropagation, PageR
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** GraphX built-in wrappers (SURVEY §2.C C1–C2, C7–C10, C14–C16), with
-  * uniform DataFrame outputs: (node, value) keyed rows, totally ordered,
-  * floats floor-rounded for stability.
+/** GraphX built-ins (SURVEY §2.C C1–C2, C7–C10, C14–C16), with uniform
+  * DataFrame outputs: (node, value) keyed rows, totally ordered, floats
+  * floor-rounded for stability.
+  *
+  * The static PageRank pair ([[pageRank]], [[personalizedPageRank]])
+  * does not run GraphX: it runs the damped-rank kernel ([[DampedRank]])
+  * with GraphX's `runWithOptions` semantics (vertex set, init, reset,
+  * `normalizeRankSum`) over the edge frame, and builds its output on the
+  * driver in node order. The tolerance-converged variants and the
+  * vector-batched multi-source PPR stay on GraphX, whose activation and
+  * replication order are their semantics.
   * Reference call sites: `graph/PageRankRunner.scala:108-113`,
   * `PersonalizedPageRankRunner.scala:102-114`, `MSSPRunner.scala:100-107`,
   * `ConnectedComponentsRunner.scala:65-68`,
@@ -25,13 +33,13 @@ object Builtins {
     vs.toDF("node", valueName)
   }
 
-  /** PageRank: fixed iterations or tolerance-converged. */
-  def pageRank(spark: SparkSession, g: Graph[Double, Double], numIter: Int,
+  /** PageRank over `(src, dst, weight)` edges for `numIter` iterations,
+    * normalized to rank sum |V| (GraphX `PageRank.run`). */
+  def pageRank(spark: SparkSession, edges: DataFrame, numIter: Int,
       resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    PageRank.run(g, numIter, resetProb).vertices.toDF("node", "rank")
-      .select(col("node"), r6(col("rank")).as("rank"))
-      .orderBy("node")
+    require(numIter > 0, s"PageRank needs numIter > 0, got $numIter")
+    DampedRank.frame(spark, DampedRank.run(edges,
+      DampedRank.Spec(numIter, resetProb, normalize = true)), "rank")
   }
 
   def pageRankUntilConvergence(spark: SparkSession, g: Graph[Double, Double],
@@ -42,13 +50,16 @@ object Builtins {
       .select(col("node"), r6(col("rank")).as("rank")).orderBy("node")
   }
 
-  /** Personalized PageRank from one source. */
-  def personalizedPageRank(spark: SparkSession, g: Graph[Double, Double],
+  /** Personalized PageRank from one source, normalized to rank sum 1
+    * (GraphX `PageRank.runWithOptions(..., Some(src))`). A source that
+    * is not a vertex of a non-empty graph fails naming it. */
+  def personalizedPageRank(spark: SparkSession, edges: DataFrame,
       src: VertexId, numIter: Int, resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    PageRank.runWithOptions(g, numIter, resetProb, Some(src)).vertices
-      .toDF("node", "rank")
-      .select(col("node"), r6(col("rank")).as("rank")).orderBy("node")
+    require(numIter > 0, s"PageRank needs numIter > 0, got $numIter")
+    val run = DampedRank.run(edges, DampedRank.Spec(numIter, resetProb,
+      seeds = Some(Set(src)), normalize = true))
+    DampedRank.requireVertices(run, Seq(src), "personalized PageRank source")
+    DampedRank.frame(spark, run, "rank")
   }
 
   /** Personalized PageRank run to tolerance convergence (the reference's

@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphChecks {
 
-  private def verdicts(spark: SparkSession,
-      rows: Seq[(String, Boolean)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("metric", "ok").orderBy("metric")
-  }
-
   private def b2d(b: Boolean): Double = graft.ml.Checks.b2d(b)
 
   /** Async GraphX LPA vs the oracle-checked synchronous twin: the

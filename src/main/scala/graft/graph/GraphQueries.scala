@@ -564,12 +564,12 @@ object GraphQueries {
     "graph_triangles" -> ((s, d) => Builtins.triangleCounts(s, ugraph(s, d))),
     "graph_clustering_coef" -> ((s, d) =>
       Builtins.clusteringCoefficient(s, ugraph(s, d))),
-    "graph_pagerank" -> ((s, d) => Builtins.pageRank(s, graph(s, d), 10)),
+    "graph_pagerank" -> ((s, d) => Builtins.pageRank(s, edges(s, d), 10)),
     "graph_pagerank_conv" -> ((s, d) =>
       Builtins.pageRankUntilConvergence(s, graph(s, d), 1e-4)),
     "graph_ppr" -> ((s, d) => {
       val e = edgesChk(s, d)
-      Builtins.personalizedPageRank(s, GraphSource.toGraph(e), minNode(e), 10)
+      Builtins.personalizedPageRank(s, e, minNode(e), 10)
     }),
     "graph_ppr_multi" -> ((s, d) => {
       // stock GraphX vector-batched variant, adjudicated through
@@ -588,17 +588,12 @@ object GraphQueries {
       Builtins.personalizedPageRankUntilConvergence(s, GraphSource.toGraph(e),
         minNode(e), 1e-4)
     }),
-    "graph_wpr" -> ((s, d) => Iterative.weightedPageRank(s, graph(s, d), 10)),
+    "graph_wpr" -> ((s, d) => Iterative.weightedPageRank(s, edges(s, d), 10)),
     "graph_trustrank" -> ((s, d) => {
       val e = edgesChk(s, d)
-      Iterative.trustRank(s, GraphSource.toGraph(e),
-        smallestNodes(e, 5).toSet, 10)
+      Iterative.trustRank(s, e, smallestNodes(e, 5).toSet, 10)
     }),
-    "graph_incpr" -> ((s, d) => {
-      val g = graph(s, d)
-      val prior = Builtins.pageRank(s, g, 5)
-      Iterative.incrementalPageRank(s, g, prior, 5)
-    }),
+    "graph_incpr" -> ((s, d) => Iterative.incrementalPageRank(s, edges(s, d), 5, 5)),
     "graph_bfs" -> ((s, d) => {
       val e = edgesChk(s, d)
       Iterative.bfs(s, GraphSource.toGraph(e), minNode(e), 10)

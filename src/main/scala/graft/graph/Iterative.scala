@@ -4,8 +4,6 @@ import org.apache.spark.graphx.{EdgeDirection, Graph, VertexId, VertexRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.reflect.ClassTag
-
 import graft.core.Hints
 
 /** Custom iterative graph algorithms (SURVEY §2.C C3–C6, C12–C13) —
@@ -15,90 +13,53 @@ import graft.core.Hints
   * `KCoreDecompositionRunner.scala:62-65`, `ModularityRunner.scala:82-85`);
   * these are independent re-derivations from the published algorithms.
   *
-  * Iteration hygiene (critical): each step caches the new graph and
-  * materializes its EDGES (which forces the replicated vertex view)
-  * before unpersisting the previous graph — materializing only the
-  * vertices leaves the next aggregateMessages depending on unpersisted
-  * state and the lineage re-executes from iteration 0 (observed: a
-  * 20-iteration loop went quadratic). Same discipline as GraphX's own
-  * PageRank implementation.
+  * The damped-rank members ([[weightedPageRank]], [[trustRank]],
+  * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]]):
+  * the edges are read once, rank state is one dense driver array over
+  * the sorted vertex ids, a graph that fits one partition runs as one
+  * task, and the output is built on the driver in node order. None of
+  * them normalizes its ranks.
+  *
+  * Iteration hygiene for the GraphX loops below (critical): each step
+  * caches the new graph and materializes its EDGES (which forces the
+  * replicated vertex view) before unpersisting the previous graph —
+  * materializing only the vertices leaves the next aggregateMessages
+  * depending on unpersisted state and the lineage re-executes from
+  * iteration 0 (observed: a 20-iteration loop went quadratic). Same
+  * discipline as GraphX's own PageRank implementation.
   */
 object Iterative {
 
   private def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
 
-  /** One cached+materialized step; unpersists the previous graph. */
-  private def step[VD: ClassTag](next: Graph[VD, Double],
-      prev: Graph[VD, Double]): Graph[VD, Double] = {
-    next.cache()
-    next.edges.foreachPartition(_ => ())
-    prev.vertices.unpersist(blocking = false)
-    prev.edges.unpersist(blocking = false)
-    next
-  }
-
-  /** Generic damped rank iteration over pre-normalized edge weights:
-    * rank'(v) = reset(v) + (1−α)·Σ_{u→v} rank(u)·w(u,v). */
-  private def rankLoop(init: Graph[Double, Double], numIter: Int,
-      reset: VertexId => Double, damp: Double): Graph[Double, Double] = {
-    var ranks = init.cache()
-    ranks.edges.foreachPartition(_ => ())
-    var i = 0
-    while (i < numIter) {
-      val msgs = ranks.aggregateMessages[Double](
-        ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _)
-      val next = ranks.outerJoinVertices(msgs)((v, _, m) =>
-        reset(v) + damp * m.getOrElse(0.0))
-      ranks = step(next, ranks)
-      i += 1
-    }
-    ranks
-  }
-
-  /** Weighted PageRank: contributions proportional to edge weight /
-    * source out-weight (C3). */
-  def weightedPageRank(spark: SparkSession, g: Graph[Double, Double],
-      numIter: Int, resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    val outW = g.aggregateMessages[Double](ctx => ctx.sendToSrc(ctx.attr), _ + _)
-    val norm = g.outerJoinVertices(outW)((_, _, w) => w.getOrElse(0.0))
-      .mapTriplets(t => if (t.srcAttr > 0) t.attr / t.srcAttr else 0.0)
-      .mapVertices((_, _) => 1.0)
-    rankLoop(norm, numIter, _ => resetProb, 1 - resetProb)
-      .vertices.toDF("node", "rank")
-      .select(col("node"), r6(col("rank")).as("rank")).orderBy("node")
-  }
+  /** Weighted PageRank over `(src, dst, weight)` edges: contributions
+    * proportional to edge weight / source out-weight (C3). */
+  def weightedPageRank(spark: SparkSession, edges: DataFrame,
+      numIter: Int, resetProb: Double = 0.15): DataFrame =
+    DampedRank.frame(spark, DampedRank.run(edges,
+      DampedRank.Spec(numIter, resetProb, weighted = true)), "rank")
 
   /** TrustRank (C5): personalized PageRank whose reset mass goes only to
-    * the trusted seed set (uniformly). */
-  def trustRank(spark: SparkSession, g: Graph[Double, Double],
+    * the trusted seed set (uniformly). A seed that is not a vertex of a
+    * non-empty graph fails naming it. */
+  def trustRank(spark: SparkSession, edges: DataFrame,
       seeds: Set[VertexId], numIter: Int, resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    require(seeds.nonEmpty)
-    val seedMass = 1.0 / seeds.size
-    val norm = g.outerJoinVertices(g.outDegrees)((_, _, d) => d.getOrElse(0))
-      .mapTriplets(t => if (t.srcAttr > 0) 1.0 / t.srcAttr else 0.0)
-      .mapVertices((v, _) => if (seeds(v)) seedMass else 0.0)
-    rankLoop(norm, numIter,
-        v => if (seeds(v)) resetProb * seedMass else 0.0, 1 - resetProb)
-      .vertices.toDF("node", "trust")
-      .select(col("node"), r6(col("trust")).as("trust")).orderBy("node")
+    require(seeds.nonEmpty, "TrustRank needs at least one trusted seed")
+    val run = DampedRank.run(edges,
+      DampedRank.Spec(numIter, resetProb, seeds = Some(seeds)))
+    DampedRank.requireVertices(run, seeds, "TrustRank seed")
+    DampedRank.frame(spark, run, "trust")
   }
 
   /** Incremental PageRank (C4): resume iterating from prior ranks — the
     * delta answer to "the graph changed a little, don't restart from
-    * uniform". priorRanks: (node, rank). */
-  def incrementalPageRank(spark: SparkSession, g: Graph[Double, Double],
-      priorRanks: DataFrame, extraIter: Int, resetProb: Double = 0.15): DataFrame = {
-    import spark.implicits._
-    val prior = priorRanks.select(col("node").cast("long"), col("rank").cast("double"))
-      .rdd.map(r => (r.getLong(0), r.getDouble(1)))
-    val norm = g.outerJoinVertices(g.outDegrees)((_, _, d) => d.getOrElse(0))
-      .mapTriplets(t => if (t.srcAttr > 0) 1.0 / t.srcAttr else 0.0)
-      .outerJoinVertices(prior)((_, _, p) => p.getOrElse(1.0))
-    rankLoop(norm, extraIter, _ => resetProb, 1 - resetProb)
-      .vertices.toDF("node", "rank")
-      .select(col("node"), r6(col("rank")).as("rank")).orderBy("node")
+    * uniform". The prior is [[Builtins.pageRank]]'s `priorIter`-iteration
+    * output (normalized, rounded to 1e-6), computed in the same run. */
+  def incrementalPageRank(spark: SparkSession, edges: DataFrame,
+      priorIter: Int, extraIter: Int, resetProb: Double = 0.15): DataFrame = {
+    require(priorIter > 0, s"the prior needs priorIter > 0, got $priorIter")
+    DampedRank.frame(spark, DampedRank.run(edges,
+      DampedRank.Spec(extraIter, resetProb, priorIters = priorIter)), "rank")
   }
 
   /** BFS (C6): minimum hop distance from `src`, depth-limited; vertices

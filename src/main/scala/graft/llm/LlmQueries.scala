@@ -288,7 +288,6 @@ object LlmQueries {
       // kernel broke) and >= 60% recall of the true in-radius pairs
       // (probed 0.96 at sf0.01, 0.93 at sf0.1 — wide headroom).
       // Constant-truth oracle like the Checks family.
-      import s.implicits._
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 10)
       val lsh = Similarity.lshNeighbors(q, e, maxDist = 1.2)
@@ -313,14 +312,13 @@ object LlmQueries {
       val keys = Seq("query_id", "neighbor_id")
       val nHit = lsh.join(truePairs, keys, "leftsemi").count()
       val nFp = lsh.join(truePairs, keys, "left_anti").count()
-      Seq(
+      graft.ml.Checks.verdictsV(s, Seq(
         ("ann_lsh_no_false_positives", if (nFp == 0L) 1.0 else 0.0),
         ("ann_lsh_range_recall_ge_60pct",
           if (nTrue > 0L && nHit.toDouble >= 0.6 * nTrue) 1.0 else 0.0),
         // the denominator of the recall bound — DuckDB recomputes the
         // exact in-radius pair count itself (round-10 directive #3)
-        ("ann_lsh_true_pairs", nTrue.toDouble))
-        .toDF("metric", "value").orderBy("metric")
+        ("ann_lsh_true_pairs", nTrue.toDouble)))
     }),
     "llm_ann_lsh_det" -> ((s, d) => {
       val e = emb(s, d)

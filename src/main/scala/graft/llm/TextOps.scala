@@ -605,7 +605,8 @@ object TextOps {
         prev.unpersist(blocking = false)
       }
     }
-    merges.toSeq.toDF("step", "lhs", "rhs", "pair_count").orderBy("step")
+    // steps were appended in ascending order: no Spark sort needed
+    merges.toSeq.toDF("step", "lhs", "rhs", "pair_count")
   }
 
   /** BPE tokenizer vocabulary — the id table a training export ships:

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.VerifyUtils.scalarMatch
 
@@ -21,20 +22,22 @@ import graft.core.VerifyUtils.scalarMatch
   */
 object Checks {
 
-  private[graft] def verdicts(spark: SparkSession,
-      rows: Seq[(String, Boolean)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("metric", "ok").orderBy("metric")
+  /** Spark's order of strings: their UTF-8 bytes, unsigned. */
+  private[graft] val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
   }
 
   /** Value-verdict frame (metric, value): boolean checks as 1.0/0.0,
     * DuckDB-recomputable companion metrics as their rounded values —
     * paired with [[graft.core.VerifyUtils.valueVerdictSql]] so the
-    * external engine hash-matches the metric VALUES, not constants. */
+    * external engine hash-matches the metric VALUES, not constants.
+    * Rows are sorted by metric on the driver: Spark would run a sort of
+    * the local rows as jobs of their own. */
   private[graft] def verdictsV(spark: SparkSession,
       rows: Seq[(String, Double)]): DataFrame = {
     import spark.implicits._
-    rows.toDF("metric", "value").orderBy("metric")
+    rows.sortBy(_._1)(utf8Order).toDF("metric", "value")
   }
 
   private[graft] def b2d(b: Boolean): Double = if (b) 1.0 else 0.0

@@ -171,8 +171,9 @@ object Unsupervised {
       c.zipWithIndex.map { case (v, j) => (i.toLong, j, v) } }
     val sizes = run.sizes.zipWithIndex.collect {
       case (s, i) if s > 0 => (i.toLong, -1, s.toDouble) }
-    (flat ++ sizes).toSeq.toDF("cluster", "dim", "value")
-      .orderBy("cluster", "dim")
+    // sorted on the driver: Spark would sort these local rows in jobs
+    (flat ++ sizes).sortBy(r => (r._1, r._2)).toSeq
+      .toDF("cluster", "dim", "value")
   }
 
   /** PCA top-k principal components; output = per-component explained

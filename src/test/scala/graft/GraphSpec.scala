@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.graphx.{Graph, VertexId}
+import org.apache.spark.graphx.lib.PageRank
+import org.apache.spark.sql.functions.{col, lit, min}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph._
+import graft.sources.Tables
 
 /** Structural tests on hand-computable fixture graphs.
   * Fixture: two triangles {1,2,3} and {4,5,6} joined by bridge 3–4, all
@@ -10,6 +14,8 @@ import graft.graph._
 class GraphSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
+
+  private val PageRankJobs = 4
 
   private def fixtureEdges = {
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
@@ -104,7 +110,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("weighted pagerank conserves total rank on the strongly-connected fixture") {
-    val wpr = Iterative.weightedPageRank(spark, fixtureGraph, 20).collect()
+    val wpr = Iterative.weightedPageRank(spark, fixtureEdges, 20).collect()
     assert(math.abs(wpr.map(_.getDouble(1)).sum - 6.0) < 0.01)
   }
 
@@ -112,24 +118,22 @@ class GraphSpec extends AnyFunSuite {
     // 1→2 weight 9, 1→3 weight 1: rank(2) > rank(3)
     val e = Seq((1L, 2L, 9.0), (1L, 3L, 1.0), (2L, 1L, 1.0), (3L, 1L, 1.0))
       .toDF("src", "dst", "weight")
-    val r = Iterative.weightedPageRank(spark, GraphSource.toGraph(e), 20)
+    val r = Iterative.weightedPageRank(spark, e, 20)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(r(2L) > r(3L))
   }
 
   test("trustrank concentrates mass near the seed") {
-    val t = Iterative.trustRank(spark, fixtureGraph, Set(1L), 20).collect()
+    val t = Iterative.trustRank(spark, fixtureEdges, Set(1L), 20).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(t(1L) == t.values.max)
     assert(t(2L) > t(5L)) // closer to seed ⇒ more trust
   }
 
   test("incremental pagerank from a prior converges like a longer direct run") {
-    val g = fixtureGraph
-    val direct = Builtins.pageRank(spark, g, 30).collect()
+    val direct = Builtins.pageRank(spark, fixtureEdges, 30).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val prior = Builtins.pageRank(spark, g, 20)
-    val inc = Iterative.incrementalPageRank(spark, g, prior, 10).collect()
+    val inc = Iterative.incrementalPageRank(spark, fixtureEdges, 20, 10).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     direct.foreach { case (n, v) => assert(math.abs(inc(n) - v) < 1e-3, s"node $n") }
   }
@@ -176,5 +180,186 @@ class GraphSpec extends AnyFunSuite {
       val want = spark.sql(sql).collect().map(_.toSeq.map(String.valueOf)).toSeq
       assert(dsl == want, s"$name differs from oracle")
     }
+  }
+
+  // damped-rank kernel vs GraphX. The fixture has two sinks with in-edges
+  // only (4, 6), parallel 1→2 edges, a self-loop at 3 and a vertex with
+  // out-edges only (5).
+  private def rankFixture = Seq((1L, 2L, 1.0), (1L, 2L, 2.0), (2L, 3L, 1.0),
+    (3L, 1L, 1.0), (3L, 3L, 1.0), (3L, 4L, 1.0), (5L, 1L, 1.0), (2L, 6L, 3.0))
+    .toDF("src", "dst", "weight")
+
+  private def partEdges = GraphSource.partTransitions(
+    Tables(spark, sf0001, "lineitem")).localCheckpoint()
+
+  private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
+
+  /** The kernel's raw ranks equal the reference's to 1e-12 (sums of the
+    * same products, some in another order) and its rounded output
+    * equals the reference rounded. */
+  private def assertMatches(df: org.apache.spark.sql.DataFrame,
+      run: DampedRank.RankRun, want: Map[Long, Double]): Unit = {
+    assert(run.ids.toSeq == want.keys.toSeq.sorted)
+    run.ids.zip(run.ranks).foreach { case (v, r) =>
+      assert(math.abs(r - want(v)) <= 1e-12 * math.max(1.0, math.abs(r)),
+        s"vertex $v: kernel $r, reference ${want(v)}")
+    }
+    assert(df.as[(Long, Double)].collect().toSeq ==
+      want.toSeq.sorted.map { case (v, r) => (v, r6(r)) })
+  }
+
+  /** The GraphX rank loop the kernel replaced for wpr, trustrank and
+    * incpr: rank'(v) = reset(v) + damp·Σ rank(u)·attr(u→v). */
+  private def graphxRankLoop(init: Graph[Double, Double], numIter: Int,
+      reset: VertexId => Double, damp: Double = 0.85): Map[Long, Double] = {
+    var ranks = init.cache()
+    for (_ <- 1 to numIter) {
+      val msgs = ranks.aggregateMessages[Double](
+        ctx => ctx.sendToDst(ctx.srcAttr * ctx.attr), _ + _)
+      ranks = ranks.outerJoinVertices(msgs)((v, _, m) =>
+        reset(v) + damp * m.getOrElse(0.0)).cache()
+    }
+    ranks.vertices.collect().toMap
+  }
+
+  private def byOutDegree(g: Graph[Double, Double]) =
+    g.outerJoinVertices(g.outDegrees)((_, _, d) => d.getOrElse(0))
+      .mapTriplets(t => if (t.srcAttr > 0) 1.0 / t.srcAttr else 0.0)
+
+  test("rank kernel equals GraphX PageRank.run and runWithOptions(src)") {
+    for (e <- Seq(rankFixture, partEdges)) {
+      val g = GraphSource.toGraph(e)
+      val src = e.agg(min("src")).head().getLong(0)
+      assertMatches(Builtins.pageRank(spark, e, 10),
+        DampedRank.run(e, DampedRank.Spec(10, 0.15, normalize = true)),
+        PageRank.run(g, 10, 0.15).vertices.collect().toMap)
+      assertMatches(Builtins.personalizedPageRank(spark, e, src, 10),
+        DampedRank.run(e, DampedRank.Spec(10, 0.15, seeds = Some(Set(src)),
+          normalize = true)),
+        PageRank.runWithOptions(g, 10, 0.15, Some(src)).vertices.collect().toMap)
+    }
+  }
+
+  test("rank kernel equals the GraphX rank loop for wpr, trustrank and incpr") {
+    for (e <- Seq(rankFixture, partEdges)) {
+      val g = GraphSource.toGraph(e)
+      val outW = g.aggregateMessages[Double](ctx => ctx.sendToSrc(ctx.attr), _ + _)
+      val wprInit = g.outerJoinVertices(outW)((_, _, w) => w.getOrElse(0.0))
+        .mapTriplets(t => if (t.srcAttr > 0) t.attr / t.srcAttr else 0.0)
+        .mapVertices((_, _) => 1.0)
+      assertMatches(Iterative.weightedPageRank(spark, e, 10),
+        DampedRank.run(e, DampedRank.Spec(10, 0.15, weighted = true)),
+        graphxRankLoop(wprInit, 10, _ => 0.15))
+
+      val seeds = g.vertices.keys.collect().sorted.take(3).toSet
+      val mass = 1.0 / seeds.size
+      assertMatches(Iterative.trustRank(spark, e, seeds, 10),
+        DampedRank.run(e, DampedRank.Spec(10, 0.15, seeds = Some(seeds))),
+        graphxRankLoop(byOutDegree(g).mapVertices((v, _) =>
+          if (seeds(v)) mass else 0.0), 10,
+          v => if (seeds(v)) 0.15 * mass else 0.0))
+
+      val prior = PageRank.run(g, 5, 0.15).vertices
+        .mapValues(r => math.floor(r * 1e6 + 0.5).toLong / 1e6)
+      assertMatches(Iterative.incrementalPageRank(spark, e, 5, 5),
+        DampedRank.run(e, DampedRank.Spec(5, 0.15, priorIters = 5)),
+        graphxRankLoop(byOutDegree(g).outerJoinVertices(prior)((_, _, p) =>
+          p.getOrElse(1.0)), 5, _ => 0.15))
+    }
+  }
+
+  test("both rank kernel placements give identical ranks and traces") {
+    val specs = Seq(
+      DampedRank.Spec(10, 0.15, normalize = true),
+      DampedRank.Spec(10, 0.15, seeds = Some(Set(1L)), normalize = true),
+      DampedRank.Spec(10, 0.15, weighted = true),
+      DampedRank.Spec(10, 0.15, seeds = Some(Set(1L, 5L))),
+      DampedRank.Spec(5, 0.15, priorIters = 5))
+    for (e <- Seq(rankFixture, partEdges); spec <- specs) {
+      val oneTask = DampedRank.run(e, spec)
+      val perIteration = DampedRank.run(e, spec, perIteration = true)
+      assert(oneTask.ids.sameElements(perIteration.ids))
+      assert(oneTask.ranks.sameElements(perIteration.ranks), spec.toString)
+      assert(oneTask.deltas.sameElements(perIteration.deltas), spec.toString)
+    }
+  }
+
+  test("a one-partition graph past 100k edges runs one job per iteration") {
+    // a 100k-edge ring arriving in one partition: the one task counts it,
+    // hands it to the per-iteration placement, and every rank stays 1.0
+    val ring = spark.range(0, 100000, 1, 1).select(col("id").as("src"),
+      ((col("id") + 1) % 100000).as("dst"), lit(1.0).as("weight"))
+    val run = DampedRank.run(ring, DampedRank.Spec(3, 0.15, normalize = true))
+    assert(run.ids.length == 100000 && run.ranks.forall(r => math.abs(r - 1.0) < 1e-12))
+    assert(run.deltas.length == 3 && run.deltas.forall(_ < 1e-6))
+  }
+
+  test("rank trace: one L1 change per iteration, falling on the fixture") {
+    val run = DampedRank.run(fixtureEdges, DampedRank.Spec(10, 0.15,
+      normalize = true))
+    assert(run.deltas.length == 10)
+    assert(run.deltas.head > 0.0)
+    assert(run.deltas.sliding(2).forall(p => p(1) < p(0)),
+      run.deltas.mkString(", "))
+    // incremental PageRank traces its prior's iterations first
+    assert(DampedRank.run(fixtureEdges, DampedRank.Spec(4, 0.15,
+      priorIters = 3)).deltas.length == 7)
+  }
+
+  test("rank queries on degenerate graphs: empty, self-loops only, absent seeds") {
+    val none = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
+    val loops = Seq((1L, 1L, 1.0), (2L, 2L, 2.0)).toDF("src", "dst", "weight")
+    def five(e: org.apache.spark.sql.DataFrame) = Seq(
+      "rank" -> Builtins.pageRank(spark, e, 10),
+      "rank" -> Builtins.personalizedPageRank(spark, e, 1L, 10),
+      "rank" -> Iterative.weightedPageRank(spark, e, 10),
+      "trust" -> Iterative.trustRank(spark, e, Set(2L), 10),
+      "rank" -> Iterative.incrementalPageRank(spark, e, 5, 5))
+    for ((name, df) <- five(none)) {
+      assert(df.columns.toSeq == Seq("node", name))
+      assert(df.collect().isEmpty)
+    }
+    // a vertex whose only edge is a self-loop keeps its own mass
+    assert(five(loops).map(_._2.as[(Long, Double)].collect().toSeq) == Seq(
+      Seq((1L, 1.0), (2L, 1.0)), Seq((1L, 1.0), (2L, 0.0)),
+      Seq((1L, 1.0), (2L, 1.0)), Seq((1L, 0.0), (2L, 1.0)),
+      Seq((1L, 1.0), (2L, 1.0))))
+    val ppr = intercept[IllegalArgumentException](
+      Builtins.personalizedPageRank(spark, fixtureEdges, 99L, 10))
+    assert(ppr.getMessage.contains("source 99"))
+    val trust = intercept[IllegalArgumentException](
+      Iterative.trustRank(spark, fixtureEdges, Set(1L, 99L, 98L), 10))
+    assert(trust.getMessage.contains("seed 98, 99"))
+    val noSeed = intercept[IllegalArgumentException](
+      Iterative.trustRank(spark, fixtureEdges, Set.empty, 10))
+    assert(noSeed.getMessage.contains("at least one trusted seed"))
+  }
+
+  test("graph_pagerank runs a pinned number of Spark jobs on sf0.001") {
+    // the lineitem schema read, the edge derivation's two shuffle map
+    // stages and the one rank task (the edges arrive in one partition,
+    // so no count job runs); the output is built on the driver, so
+    // collecting it runs no job
+    graft.core.QueryCache.clear()
+    val sc = spark.sparkContext
+    val tag = "graft-pagerank-job-pin"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag)))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try GraphQueries.all("graph_pagerank")(spark, sf0001).collect()
+    finally {
+      sc.removeJobTag(tag)
+      org.apache.spark.ListenerBusFlush(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == PageRankJobs, s"graph_pagerank ran ${jobs.get} jobs")
   }
 }

@@ -445,6 +445,10 @@ class PlanSpec extends AnyFunSuite {
       // top-5-overlap and Spearman collects merged into one bounded
       // per-source aggregate (same O(|sources|) driver rows)
       "graph/GraphChecks.scala" -> 3, "graph/GraphQueries.scala" -> 1,
+      // the damped-rank kernel's multi-partition placement collects each
+      // edge block's vertex ids and per-source degrees: O(|V|) rows, the
+      // size of the rank output every caller already holds on the driver
+      "graph/DampedRank.scala" -> 1,
       "llm/CorpusOps.scala" -> 3,
       // Dedup's union-find collects a pair graph only when it sizes to
       // one partition, i.e. fewer than 200k (id, id) pairs
@@ -472,5 +476,31 @@ class PlanSpec extends AnyFunSuite {
         "(driver memory must stay O(k), never O(corpus)) and update " +
         s"the map.\n  got: ${got.toSeq.sorted}\n  want: " +
         s"${expected.toSeq.sorted}")
+  }
+
+  test("driver-built frames keep the order orderBy gave them, with no Sort") {
+    import spark.implicits._
+    def same(df: org.apache.spark.sql.DataFrame, keys: String*): Unit = {
+      assert(df.queryExecution.optimizedPlan.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s
+      }.isEmpty)
+      assert(df.collect().toSeq ==
+        df.orderBy(keys.map(org.apache.spark.sql.functions.col): _*)
+          .collect().toSeq)
+    }
+    // UTF-8 bytes order 'é' (C3 A9) < U+FFFD (EF BF BD) < U+1D4B3 (F0 9D
+    // 92 B3); UTF-16 code units put the surrogate pair before U+FFFD
+    val names = Seq("b", "a", "ab", "Z", "\u00e9", "\uFFFD", "\uD835\uDCB3")
+    assert(names.sorted != names.sorted(graft.ml.Checks.utf8Order))
+    same(graft.ml.Checks.verdictsV(spark, names.map(_ -> 1.0)), "metric")
+    same(graft.llm.LlmQueries.all("llm_ann_lsh")(spark, sf0001), "metric")
+    same(graft.llm.TextOps.bpeLearn(Tables(spark, sf0001, "documents"),
+      nMerges = 4, mergesPerRound = 2), "step")
+    same(graft.ml.Unsupervised.lloydFixed(spark,
+      Tables(spark, sf0001, "embeddings")), "cluster", "dim")
+    val edges = Seq((3L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0))
+      .toDF("src", "dst", "weight")
+    same(graft.graph.Builtins.pageRank(spark, edges, 5), "node")
+    same(graft.graph.Iterative.trustRank(spark, edges, Set(2L), 5), "node")
   }
 }

@@ -71,13 +71,13 @@ object GraphFuzzSeed {
       GraphCase(s"gfz_pagerank_i${iters}_r${(reset * 100).toInt}",
         GraphQueries.rankIterSql(neUnweighted, iters, "1.0",
           s"$reset", "rank", damp = 1.0 - reset),
-        (s, d) => Builtins.pageRank(s, graph(s, d), iters, reset))
+        (s, d) => Builtins.pageRank(s, edges(s, d), iters, reset))
     }
 
     val wpr = Seq(5, 15).map { iters =>
       GraphCase(s"gfz_wpr_i$iters",
         GraphQueries.rankIterSql(neWeighted, iters, "1.0", "0.15", "rank"),
-        (s, d) => Iterative.weightedPageRank(s, graph(s, d), iters))
+        (s, d) => Iterative.weightedPageRank(s, edges(s, d), iters))
     }
 
     val ppr = Seq((5, 0.15), (15, 0.15), (10, 0.30)).map {
@@ -89,8 +89,7 @@ object GraphFuzzSeed {
             "rank", damp = 1.0 - reset),
           (s, d) => {
             val e = edges(s, d)
-            Builtins.personalizedPageRank(s, GraphSource.toGraph(e),
-              minNode(e), iters, reset)
+            Builtins.personalizedPageRank(s, e, minNode(e), iters, reset)
           })
     }
 
@@ -104,8 +103,7 @@ object GraphFuzzSeed {
           extraCte = s", lm AS (SELECT v FROM n ORDER BY v LIMIT $seeds)"),
         (s, d) => {
           val e = edges(s, d)
-          Iterative.trustRank(s, GraphSource.toGraph(e),
-            smallestNodes(e, seeds).toSet, iters)
+          Iterative.trustRank(s, e, smallestNodes(e, seeds).toSet, iters)
         })
     }
 
@@ -113,11 +111,8 @@ object GraphFuzzSeed {
       GraphCase(s"gfz_incpr_split$roundAt",
         GraphQueries.rankIterSql(neUnweighted, 10, "1.0", "0.15", "rank",
           roundAt = roundAt),
-        (s, d) => {
-          val g = graph(s, d)
-          val prior = Builtins.pageRank(s, g, roundAt)
-          Iterative.incrementalPageRank(s, g, prior, 10 - roundAt)
-        })
+        (s, d) =>
+          Iterative.incrementalPageRank(s, edges(s, d), roundAt, 10 - roundAt))
     }
 
     val conv = Seq((1e-3, false), (1e-3, true), (5e-4, false),

@@ -16,6 +16,11 @@ seed's kept-set
 digest, which each checkout stores under `perfbench/.work/kept/`, is the
 same in both checkouts: the benchmark's own check only compares runs
 within one checkout.
+
+Neither side's change touches set-up, so a pair whose two `setup_s`
+values differ by more than that metric's bound (see `drifted`) ran on a
+host whose speed moved between its runs: it is flagged on its line and
+the summary counts the flagged pairs.
 """
 import argparse
 import glob
@@ -85,6 +90,12 @@ def verdict(parent, change, bound):
     return "flat"
 
 
+def drifted(parent_setup, change_setup, bound):
+    """Whether one pair's two `setup_s` values differ by more than
+    `bound`, as a share of the parent run's value."""
+    return abs(change_setup - parent_setup) > bound * parent_setup
+
+
 def bounds(checkout):
     """The end-to-end bounds `BENCHMARK.json` declares, by metric name."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
@@ -107,6 +118,7 @@ def main():
 
     values = {s: {m: [] for m in METRICS} for s in sides}
     problems = []
+    flagged = 0
     for i, seed in enumerate(args.seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         row = {}
@@ -122,12 +134,17 @@ def main():
             if not kp or kp != kc:
                 problems.append(f"seed {seed}: kept-set digests differ "
                                 f"(parent {kp}, change {kc})")
+        drift = drifted(values["parent"]["setup_s"][-1],
+                        values["change"]["setup_s"][-1], bound["setup_s"])
+        flagged += drift
         print(f"seed {seed} ({order[0]} first): " + "  ".join(
             f"{m} {row['parent']['metrics'][m]['value']:.3f} -> "
-            f"{row['change']['metrics'][m]['value']:.3f}" for m in METRICS),
-            flush=True)
+            f"{row['change']['metrics'][m]['value']:.3f}" for m in METRICS)
+            + ("  HOST DRIFT (setup_s)" if drift else ""), flush=True)
 
-    print(f"\n{args.workload}, {len(args.seeds)} pairs")
+    print(f"\n{args.workload}, {len(args.seeds)} pairs, {flagged} flagged "
+          f"for host drift (setup_s apart by more than its bound "
+          f"{bound['setup_s']})")
     for m in METRICS:
         p, c = values["parent"][m], values["change"][m]
         wins = sum(b < a for a, b in zip(p, c))

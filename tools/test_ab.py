@@ -1,4 +1,4 @@
-"""Unit tests of `tools/ab.py`'s verdict rule.
+"""Unit tests of `tools/ab.py`'s verdict rule and host-drift flag.
 
     python3 -m unittest discover -s tools
 """
@@ -7,7 +7,7 @@ import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from ab import verdict  # noqa: E402
+from ab import drifted, verdict  # noqa: E402
 
 # ten parent runs with median 10.0 and quartile spread 0.5 (5% of it)
 PARENT = [9.6, 9.7, 9.8, 9.9, 10.0, 10.0, 10.1, 10.2, 10.3, 10.4]
@@ -43,6 +43,15 @@ class VerdictTest(unittest.TestCase):
         skewed = [9.0, 9.0, 9.0, 9.1, 9.2, 12.0, 13.0, 14.0, 15.0, 16.0]
         self.assertEqual(verdict(skewed, [8.9] * 10, 0.25), "flat")
         self.assertEqual(verdict(skewed, [9.05] * 10, 0.25), "unresolved")
+
+
+class DriftTest(unittest.TestCase):
+
+    def test_a_pair_is_flagged_past_the_setup_bound_either_way(self):
+        self.assertFalse(drifted(4.0, 4.9, 0.25))
+        self.assertFalse(drifted(4.0, 3.1, 0.25))
+        self.assertTrue(drifted(4.0, 5.1, 0.25))
+        self.assertTrue(drifted(4.0, 2.9, 0.25))
 
 
 if __name__ == "__main__":

@@ -2,10 +2,8 @@ package graft.graph
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The damped-rank kernel behind every static-iteration rank query:
   * PageRank, personalized PageRank, weighted PageRank, TrustRank and
@@ -21,12 +19,10 @@ import org.apache.spark.storage.StorageLevel
   * GraphX edge partition. Rank state is one dense array over the sorted
   * vertex ids.
   *
-  * The edges are read once into cached blocks. When they fit in one
-  * partition under [[GraphSource.partitionsFor]], the whole run (degrees,
-  * every iteration, normalization) is one task; otherwise each iteration
-  * is one `treeAggregate` of index-encoded blocks against broadcast
-  * ranks, looped on the driver. Both placements share [[step]] and the
-  * loop of [[solve]].
+  * The whole run (degrees, every iteration, normalization) is one task
+  * over all the edges, coalesced into it: one Spark job. Measured on the
+  * sf0.1 part-transition graph (~450k edges) this single-threaded loop
+  * beats GraphX's parallel rounds, so there is no distributed placement.
   */
 private[graft] object DampedRank {
 
@@ -53,93 +49,8 @@ private[graft] object DampedRank {
       s"reset probability must be in [0, 1], got $resetProb")
   }
 
-  /** Unsorted edges of one partition. */
-  private final class Raw(val src: Array[Long], val dst: Array[Long],
-      val w: Array[Double]) extends Serializable {
-    def size: Int = src.length
-
-    /** The same edges in (src, dst) order; parallel edges keep theirs. */
-    def sorted: Raw = {
-      val o = Array.range(0, size).sorted(new Ordering[Int] {
-        def compare(a: Int, b: Int): Int = {
-          val c = java.lang.Long.compare(src(a), src(b))
-          if (c != 0) c else java.lang.Long.compare(dst(a), dst(b))
-        }
-      })
-      new Raw(o.map(src), o.map(dst), o.map(w))
-    }
-  }
-
-  private object Raw {
-    def concat(rs: Seq[Raw]): Raw = new Raw(rs.flatMap(_.src).toArray,
-      rs.flatMap(_.dst).toArray, rs.flatMap(_.w).toArray)
-  }
-
-  /** Sorted edges as indices into the sorted vertex ids, each with its
-    * contribution factor. */
-  private final class Block(val src: Array[Int], val dst: Array[Int],
-      val f: Array[Double]) extends Serializable
-
-  /** A sorted block's vertex ids and, per source id ascending, its
-    * out-degree and out-weight summed in edge order. */
-  private final class Summary(val ids: Array[Long], val src: Array[Long],
-      val deg: Array[Int], val w: Array[Double]) extends Serializable
-
-  private def summary(e: Raw): Summary = {
-    val src = ArrayBuffer.empty[Long]
-    val deg = ArrayBuffer.empty[Int]
-    val w = ArrayBuffer.empty[Double]
-    for (i <- 0 until e.size) {
-      if (src.isEmpty || src.last != e.src(i)) {
-        src += e.src(i); deg += 0; w += 0.0
-      }
-      deg(deg.size - 1) += 1
-      w(w.size - 1) += e.w(i)
-    }
-    new Summary((e.src ++ e.dst).distinct.sorted, src.toArray, deg.toArray,
-      w.toArray)
-  }
-
-  /** The sorted vertex ids of all blocks, with each vertex's out-degree
-    * and out-weight; block partials are added in block order. */
-  private def vertices(blocks: Seq[Summary])
-      : (Array[Long], Array[Int], Array[Double]) = {
-    val ids = blocks.flatMap(_.ids).toArray.distinct.sorted
-    val outDeg = new Array[Int](ids.length)
-    val outW = new Array[Double](ids.length)
-    for (b <- blocks; i <- b.src.indices) {
-      val v = index(ids, b.src(i))
-      outDeg(v) += b.deg(i)
-      outW(v) += b.w(i)
-    }
-    (ids, outDeg, outW)
-  }
-
   private def index(ids: Array[Long], v: Long): Int =
     java.util.Arrays.binarySearch(ids, v)
-
-  /** Encodes sorted edges against the vertex ids and the per-vertex
-    * out-degree and out-weight. */
-  private def encode(e: Raw, ids: Array[Long], outDeg: Array[Int],
-      outW: Array[Double], weighted: Boolean): Block = {
-    val s = e.src.map(index(ids, _))
-    val f = Array.tabulate(e.size) { i =>
-      if (!weighted) 1.0 / outDeg(s(i))
-      else if (outW(s(i)) > 0) e.w(i) / outW(s(i)) else 0.0
-    }
-    new Block(s, e.dst.map(index(ids, _)), f)
-  }
-
-  /** Adds each edge's contribution rank(src)·f to acc(dst), in edge order. */
-  private def step(b: Block, ranks: Array[Double], acc: Array[Double])
-      : Array[Double] = {
-    var i = 0
-    while (i < b.src.length) {
-      acc(b.dst(i)) += ranks(b.src(i)) * b.f(i)
-      i += 1
-    }
-    acc
-  }
 
   private def r6(x: Double): Double = math.floor(x * 1e6 + 0.5).toLong / 1e6
 
@@ -179,80 +90,60 @@ private[graft] object DampedRank {
       deltas.toArray)
   }
 
-  /** The whole run over all edges in one place. */
-  private def runLocal(edges: Raw, spec: Spec): RankRun = {
-    val e = edges.sorted
-    val (ids, outDeg, outW) = vertices(Seq(summary(e)))
-    val b = encode(e, ids, outDeg, outW, spec.weighted)
-    solve(ids, spec, ranks => step(b, ranks, new Array[Double](ids.length)))
+  /** `order` stably sorted by `key(i)`, a vertex index in [0, n): one
+    * counting-sort pass. */
+  private def byVertex(order: Array[Int], key: Array[Int], n: Int): Array[Int] = {
+    val start = new Array[Int](n + 1)
+    order.foreach(i => start(key(i) + 1) += 1)
+    for (v <- 1 to n) start(v) += start(v - 1)
+    val out = new Array[Int](order.length)
+    order.foreach { i => out(start(key(i))) = i; start(key(i)) += 1 }
+    out
   }
 
-  /** One `treeAggregate` job per iteration over `parts` index-encoded
-    * blocks against broadcast ranks. */
-  private def runPerIteration(raw: RDD[Raw], spec: Spec, parts: Int): RankRun = {
-    val sc = raw.sparkContext
-    val blocks = raw.coalesce(parts).mapPartitions(rs =>
-      Iterator(Raw.concat(rs.toSeq).sorted))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (ids, outDeg, outW) = vertices(blocks.map(summary).collect())
-      val bcDeg = sc.broadcast((ids, outDeg, outW))
-      val weighted = spec.weighted
-      val encoded = blocks.map { b =>
-        val (ids, outDeg, outW) = bcDeg.value
-        encode(b, ids, outDeg, outW, weighted)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = ids.length
-      try solve(ids, spec, ranks => {
-        val bc = sc.broadcast(ranks)
-        try encoded.treeAggregate(new Array[Double](n))(
-          (acc, b) => step(b, bc.value, acc),
-          (a, b) => { for (v <- a.indices) a(v) += b(v); a })
-        finally bc.destroy()
-      })
-      finally { encoded.unpersist(blocking = true); bcDeg.destroy() }
-    } finally blocks.unpersist(blocking = true)
+  /** The whole run over all edges: vertex ids, out-degrees and
+    * out-weights, per-edge factors, then [[solve]]. */
+  private def runLocal(src: Array[Long], dst: Array[Long], w: Array[Double],
+      spec: Spec): RankRun = {
+    val ids = (src ++ dst).distinct.sorted
+    val n = ids.length
+    val s0 = src.map(index(ids, _))
+    val d0 = dst.map(index(ids, _))
+    // (src, dst) order, parallel edges keeping theirs: GraphX's edge order
+    val order = byVertex(byVertex(Array.range(0, src.length), d0, n), s0, n)
+    val s = order.map(s0)
+    val d = order.map(d0)
+    val ew = order.map(w)
+    val outDeg = new Array[Int](n)
+    val outW = new Array[Double](n)
+    for (k <- s.indices) { outDeg(s(k)) += 1; outW(s(k)) += ew(k) }
+    val f = Array.tabulate(s.length) { k =>
+      if (!spec.weighted) 1.0 / outDeg(s(k))
+      else if (outW(s(k)) > 0) ew(k) / outW(s(k)) else 0.0
+    }
+    solve(ids, spec, ranks => {
+      val acc = new Array[Double](n)
+      var k = 0
+      while (k < s.length) {
+        acc(d(k)) += ranks(s(k)) * f(k)
+        k += 1
+      }
+      acc
+    })
   }
 
-  /** Runs `spec` over the `(src, dst, weight)` edges. `perIteration`
-    * forces one job per iteration even when the edges fit in one
-    * partition (the two placements give identical ranks there). */
-  def run(edges: DataFrame, spec: Spec,
-      perIteration: Boolean = false): RankRun = {
-    val raw = edges.select(col("src").cast("long"), col("dst").cast("long"),
+  /** Runs `spec` over the `(src, dst, weight)` edges in one task. */
+  def run(edges: DataFrame, spec: Spec): RankRun =
+    edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("weight").cast("double")).rdd
+      .coalesce(1)
       .mapPartitions { rows =>
         val (s, d, w) = (ArrayBuffer.empty[Long], ArrayBuffer.empty[Long],
           ArrayBuffer.empty[Double])
         rows.foreach { r => s += r.getLong(0); d += r.getLong(1); w += r.getDouble(2) }
-        Iterator(new Raw(s.toArray, d.toArray, w.toArray))
+        Iterator(runLocal(s.toArray, d.toArray, w.toArray, spec))
       }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val par = raw.sparkContext.defaultParallelism
-      // The one task counts its own edges and, when they need more than
-      // one partition, returns that count in place of a run (the edges
-      // stay cached for the per-iteration placement). It goes first when
-      // the edges arrive in one partition; otherwise a count job decides.
-      def oneTask: Either[Long, RankRun] = raw.coalesce(1).mapPartitions { rs =>
-        val e = Raw.concat(rs.toSeq)
-        Iterator(if (GraphSource.partitionsFor(e.size, par) > 1) Left(e.size.toLong)
-          else Right(runLocal(e, spec)))
-      }.first()
-      def count = raw.map(_.size.toLong).fold(0L)(_ + _)
-      val outcome =
-        if (perIteration) Left(count)
-        else if (raw.getNumPartitions == 1) oneTask
-        else {
-          val m = count
-          if (m == 0) Right(solve(Array.empty, spec, identity))
-          else if (GraphSource.partitionsFor(m, par) == 1) oneTask
-          else Left(m)
-        }
-      outcome.fold(m =>
-        runPerIteration(raw, spec, GraphSource.partitionsFor(m, par)), identity)
-    } finally raw.unpersist(blocking = true)
-  }
+      .take(1).headOption.getOrElse(solve(Array.empty, spec, identity))
 
   /** Fails naming every seed that is not a vertex of a non-empty run. */
   def requireVertices(run: RankRun, seeds: Iterable[Long], what: String): Unit =

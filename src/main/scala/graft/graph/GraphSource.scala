@@ -44,24 +44,23 @@ object GraphSource {
         greatest(col("src"), col("dst")).as("dst"), col("weight"))
       .groupBy("src", "dst").agg(sum("weight").as("weight"))
 
-  /** Partitions for `edges` edges: ~100k edges per partition, capped at
-    * the cluster parallelism, not inherited from
+  /** Edge DataFrame → GraphX property graph (default vertex attr 1.0).
+    *
+    * Partition count is sized to the data (~100k edges per partition,
+    * capped at the cluster parallelism), not inherited from
     * `spark.sql.shuffle.partitions`: a Pregel fixpoint launches every
     * partition as a task each round, so 20 rounds over 32 near-empty
-    * partitions is ~600 wasted task launches on a 450k-edge graph. */
-  private[graph] def partitionsFor(edges: Long, parallelism: Int): Int =
-    math.max(1L, math.min(edges / 100000L + 1L, parallelism.toLong)).toInt
-
-  /** Edge DataFrame → GraphX property graph (default vertex attr 1.0),
-    * in [[partitionsFor]] partitions. The sizing count() doubles as the
-    * materialization of the persisted edge RDD, so the upstream
-    * window/agg still runs only once. */
+    * partitions is ~600 wasted task launches on a 450k-edge graph. The
+    * sizing count() doubles as the materialization of the persisted edge
+    * RDD, so the upstream window/agg still runs only once. */
   def toGraph(edges: DataFrame): Graph[Double, Double] = {
     val es = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("weight").cast("double"))
       .rdd.map(r => Edge(r.getLong(0), r.getLong(1), r.getDouble(2)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val parts = partitionsFor(es.count(), es.sparkContext.defaultParallelism)
+    val n = es.count()
+    val parts = math.max(1L, math.min(n / 100000L + 1L,
+      es.sparkContext.defaultParallelism.toLong)).toInt
     Graph.fromEdges(es.coalesce(parts), 1.0,
         edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
         vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)

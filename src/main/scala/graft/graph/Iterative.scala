@@ -15,10 +15,9 @@ import graft.core.Hints
   *
   * The damped-rank members ([[weightedPageRank]], [[trustRank]],
   * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]]):
-  * the edges are read once, rank state is one dense driver array over
-  * the sorted vertex ids, a graph that fits one partition runs as one
-  * task, and the output is built on the driver in node order. None of
-  * them normalizes its ranks.
+  * the whole run is one task over all the edges, rank state is one
+  * dense array over the sorted vertex ids, and the output is built on
+  * the driver in node order. None of them normalizes its ranks.
   *
   * Iteration hygiene for the GraphX loops below (critical): each step
   * caches the new graph and materializes its EDGES (which forces the

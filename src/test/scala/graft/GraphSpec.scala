@@ -268,30 +268,19 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("both rank kernel placements give identical ranks and traces") {
-    val specs = Seq(
-      DampedRank.Spec(10, 0.15, normalize = true),
-      DampedRank.Spec(10, 0.15, seeds = Some(Set(1L)), normalize = true),
-      DampedRank.Spec(10, 0.15, weighted = true),
-      DampedRank.Spec(10, 0.15, seeds = Some(Set(1L, 5L))),
-      DampedRank.Spec(5, 0.15, priorIters = 5))
-    for (e <- Seq(rankFixture, partEdges); spec <- specs) {
-      val oneTask = DampedRank.run(e, spec)
-      val perIteration = DampedRank.run(e, spec, perIteration = true)
-      assert(oneTask.ids.sameElements(perIteration.ids))
-      assert(oneTask.ranks.sameElements(perIteration.ranks), spec.toString)
-      assert(oneTask.deltas.sameElements(perIteration.deltas), spec.toString)
+  test("a rank run is one Spark job whatever the edges' size or partitioning") {
+    // a 100k-edge ring, the size at which GraphX would split its edges,
+    // arriving in one partition and in four: every rank stays 1.0
+    for (parts <- Seq(1, 4)) {
+      val ring = spark.range(0, 100000, 1, parts).select(col("id").as("src"),
+        ((col("id") + 1) % 100000).as("dst"), lit(1.0).as("weight"))
+      val (run, jobs) = jobsOf(DampedRank.run(ring,
+        DampedRank.Spec(3, 0.15, normalize = true)))
+      assert(jobs == 1, s"$parts partitions: $jobs jobs")
+      assert(run.ids.length == 100000 &&
+        run.ranks.forall(r => math.abs(r - 1.0) < 1e-12))
+      assert(run.deltas.length == 3 && run.deltas.forall(_ < 1e-6))
     }
-  }
-
-  test("a one-partition graph past 100k edges runs one job per iteration") {
-    // a 100k-edge ring arriving in one partition: the one task counts it,
-    // hands it to the per-iteration placement, and every rank stays 1.0
-    val ring = spark.range(0, 100000, 1, 1).select(col("id").as("src"),
-      ((col("id") + 1) % 100000).as("dst"), lit(1.0).as("weight"))
-    val run = DampedRank.run(ring, DampedRank.Spec(3, 0.15, normalize = true))
-    assert(run.ids.length == 100000 && run.ranks.forall(r => math.abs(r - 1.0) < 1e-12))
-    assert(run.deltas.length == 3 && run.deltas.forall(_ < 1e-6))
   }
 
   test("rank trace: one L1 change per iteration, falling on the fixture") {
@@ -335,14 +324,11 @@ class GraphSpec extends AnyFunSuite {
     assert(noSeed.getMessage.contains("at least one trusted seed"))
   }
 
-  test("graph_pagerank runs a pinned number of Spark jobs on sf0.001") {
-    // the lineitem schema read, the edge derivation's two shuffle map
-    // stages and the one rank task (the edges arrive in one partition,
-    // so no count job runs); the output is built on the driver, so
-    // collecting it runs no job
-    graft.core.QueryCache.clear()
+  /** `body`'s result and the Spark jobs it ran, counted by a job-tag
+    * listener. */
+  private def jobsOf[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
-    val tag = "graft-pagerank-job-pin"
+    val tag = "graft-rank-job-count"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -354,12 +340,22 @@ class GraphSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     sc.addJobTag(tag)
-    try GraphQueries.all("graph_pagerank")(spark, sf0001).collect()
+    val result = try body
     finally {
       sc.removeJobTag(tag)
       org.apache.spark.ListenerBusFlush(sc)
       sc.removeSparkListener(listener)
     }
-    assert(jobs.get == PageRankJobs, s"graph_pagerank ran ${jobs.get} jobs")
+    (result, jobs.get)
+  }
+
+  test("graph_pagerank runs a pinned number of Spark jobs on sf0.001") {
+    // the lineitem schema read, the edge derivation's two shuffle map
+    // stages and the one rank task; the output is built on the driver,
+    // so collecting it runs no job
+    graft.core.QueryCache.clear()
+    val (_, jobs) =
+      jobsOf(GraphQueries.all("graph_pagerank")(spark, sf0001).collect())
+    assert(jobs == PageRankJobs, s"graph_pagerank ran $jobs jobs")
   }
 }

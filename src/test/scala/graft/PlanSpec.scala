@@ -445,10 +445,6 @@ class PlanSpec extends AnyFunSuite {
       // top-5-overlap and Spearman collects merged into one bounded
       // per-source aggregate (same O(|sources|) driver rows)
       "graph/GraphChecks.scala" -> 3, "graph/GraphQueries.scala" -> 1,
-      // the damped-rank kernel's multi-partition placement collects each
-      // edge block's vertex ids and per-source degrees: O(|V|) rows, the
-      // size of the rank output every caller already holds on the driver
-      "graph/DampedRank.scala" -> 1,
       "llm/CorpusOps.scala" -> 3,
       // Dedup's union-find collects a pair graph only when it sizes to
       // one partition, i.e. fewer than 200k (id, id) pairs

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * The static PageRank pair ([[pageRank]], [[personalizedPageRank]])
   * does not run GraphX: it runs the damped-rank kernel ([[DampedRank]])
   * with GraphX's `runWithOptions` semantics (vertex set, init, reset,
-  * `normalizeRankSum`) over the edge frame, and builds its output on the
+  * `normalizeRankSum`) over a [[LocalGraph]] built in its one task, from
+  * an edge frame or straight from lineitem, and builds its output on the
   * driver in node order. The tolerance-converged variants and the
-  * vector-batched multi-source PPR stay on GraphX, whose activation and
-  * replication order are their semantics.
+  * vector-batched multi-source PPR stay on GraphX graphs, whose
+  * activation and replication order are their semantics.
   * Reference call sites: `graph/PageRankRunner.scala:108-113`,
   * `PersonalizedPageRankRunner.scala:102-114`, `MSSPRunner.scala:100-107`,
   * `ConnectedComponentsRunner.scala:65-68`,
@@ -33,12 +34,12 @@ object Builtins {
     vs.toDF("node", valueName)
   }
 
-  /** PageRank over `(src, dst, weight)` edges for `numIter` iterations,
-    * normalized to rank sum |V| (GraphX `PageRank.run`). */
-  def pageRank(spark: SparkSession, edges: DataFrame, numIter: Int,
+  /** PageRank over `graph` for `numIter` iterations, normalized to rank
+    * sum |V| (GraphX `PageRank.run`). */
+  def pageRank(spark: SparkSession, graph: LocalGraph.Reader, numIter: Int,
       resetProb: Double = 0.15): DataFrame = {
     require(numIter > 0, s"PageRank needs numIter > 0, got $numIter")
-    DampedRank.frame(spark, DampedRank.run(edges,
+    DampedRank.frame(spark, DampedRank.run(graph,
       DampedRank.Spec(numIter, resetProb, normalize = true)), "rank")
   }
 
@@ -50,15 +51,15 @@ object Builtins {
       .select(col("node"), r6(col("rank")).as("rank")).orderBy("node")
   }
 
-  /** Personalized PageRank from one source, normalized to rank sum 1
-    * (GraphX `PageRank.runWithOptions(..., Some(src))`). A source that
-    * is not a vertex of a non-empty graph fails naming it. */
-  def personalizedPageRank(spark: SparkSession, edges: DataFrame,
-      src: VertexId, numIter: Int, resetProb: Double = 0.15): DataFrame = {
+  /** Personalized PageRank from the source `src` picks, normalized to
+    * rank sum 1 (GraphX `PageRank.runWithOptions(..., Some(src))`). A
+    * source that is not a vertex of a non-empty graph fails naming it. */
+  def personalizedPageRank(spark: SparkSession, graph: LocalGraph.Reader,
+      src: LocalGraph.Pick, numIter: Int, resetProb: Double = 0.15): DataFrame = {
     require(numIter > 0, s"PageRank needs numIter > 0, got $numIter")
-    val run = DampedRank.run(edges, DampedRank.Spec(numIter, resetProb,
-      seeds = Some(Set(src)), normalize = true))
-    DampedRank.requireVertices(run, Seq(src), "personalized PageRank source")
+    val run = DampedRank.run(graph, DampedRank.Spec(numIter, resetProb,
+      seeds = Some(src), normalize = true))
+    DampedRank.requireSeeds(run, "personalized PageRank source")
     DampedRank.frame(spark, run, "rank")
   }
 

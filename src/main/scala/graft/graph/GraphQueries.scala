@@ -31,8 +31,23 @@ object GraphQueries {
   private def ugraph(s: SparkSession, d: String) =
     GraphSource.toGraph(GraphSource.canonicalUndirected(edges(s, d)))
 
-  private def minNode(e: DataFrame): Long =
-    e.agg(min(col("src"))).head().getLong(0)
+  /** The part-transition graph, derived inside the one task of a
+    * [[LocalGraph]] client. */
+  private def transitions(s: SparkSession, d: String): LocalGraph.Reader =
+    LocalGraph.fromLineitem(Tables(s, d, "lineitem"))
+
+  /** min(src), none on an empty edge frame. */
+  private def minNode(e: DataFrame): Option[Long] =
+    Option(e.agg(min(col("src"))).head().get(0)).map(_.asInstanceOf[Long])
+
+  /** Converged personalized PageRank from min(src); an empty edge frame
+    * has no source and gives no rows. */
+  private[graft] def pprConv(s: SparkSession, e: DataFrame,
+      tol: Double): DataFrame =
+    minNode(e).fold(s.createDataFrame(Seq.empty[(Long, Double)])
+        .toDF("node", "rank"))(src =>
+      Builtins.personalizedPageRankUntilConvergence(s, GraphSource.toGraph(e),
+        src, tol))
 
   // deterministic sync twins memoized per sfDir: each is BOTH its own
   // replay-oracle-checked query AND the companion of a stock-fit verdict
@@ -65,7 +80,7 @@ object GraphQueries {
         smallestNodes(ed, 4), 10)
     }
 
-  private def smallestNodes(e: DataFrame, n: Int): Seq[Long] =
+  private[graft] def smallestNodes(e: DataFrame, n: Int): Seq[Long] =
     e.select(col("src").as("v")).union(e.select(col("dst")))
       .distinct().orderBy("v").limit(n).collect().map(_.getLong(0)).toSeq
 
@@ -564,13 +579,11 @@ object GraphQueries {
     "graph_triangles" -> ((s, d) => Builtins.triangleCounts(s, ugraph(s, d))),
     "graph_clustering_coef" -> ((s, d) =>
       Builtins.clusteringCoefficient(s, ugraph(s, d))),
-    "graph_pagerank" -> ((s, d) => Builtins.pageRank(s, edges(s, d), 10)),
+    "graph_pagerank" -> ((s, d) => Builtins.pageRank(s, transitions(s, d), 10)),
     "graph_pagerank_conv" -> ((s, d) =>
       Builtins.pageRankUntilConvergence(s, graph(s, d), 1e-4)),
-    "graph_ppr" -> ((s, d) => {
-      val e = edgesChk(s, d)
-      Builtins.personalizedPageRank(s, e, minNode(e), 10)
-    }),
+    "graph_ppr" -> ((s, d) => Builtins.personalizedPageRank(s,
+      transitions(s, d), LocalGraph.Pick.MinSource, 10)),
     "graph_ppr_multi" -> ((s, d) => {
       // stock GraphX vector-batched variant, adjudicated through
       // GraphChecks: its replicated triplet view displaces distribution
@@ -583,21 +596,15 @@ object GraphQueries {
         Some(pprMultiSyncShared(s, d, Some(e))))
     }),
     "graph_ppr_multi_sync" -> ((s, d) => pprMultiSyncShared(s, d)),
-    "graph_ppr_conv" -> ((s, d) => {
-      val e = edgesChk(s, d)
-      Builtins.personalizedPageRankUntilConvergence(s, GraphSource.toGraph(e),
-        minNode(e), 1e-4)
-    }),
-    "graph_wpr" -> ((s, d) => Iterative.weightedPageRank(s, edges(s, d), 10)),
-    "graph_trustrank" -> ((s, d) => {
-      val e = edgesChk(s, d)
-      Iterative.trustRank(s, e, smallestNodes(e, 5).toSet, 10)
-    }),
-    "graph_incpr" -> ((s, d) => Iterative.incrementalPageRank(s, edges(s, d), 5, 5)),
-    "graph_bfs" -> ((s, d) => {
-      val e = edgesChk(s, d)
-      Iterative.bfs(s, GraphSource.toGraph(e), minNode(e), 10)
-    }),
+    "graph_ppr_conv" -> ((s, d) => pprConv(s, edgesChk(s, d), 1e-4)),
+    "graph_wpr" -> ((s, d) =>
+      Iterative.weightedPageRank(s, transitions(s, d), 10)),
+    "graph_trustrank" -> ((s, d) => Iterative.trustRank(s, transitions(s, d),
+      LocalGraph.Pick.Smallest(5), 10)),
+    "graph_incpr" -> ((s, d) =>
+      Iterative.incrementalPageRank(s, transitions(s, d), 5, 5)),
+    "graph_bfs" -> ((s, d) =>
+      Iterative.bfs(s, transitions(s, d), LocalGraph.Pick.MinSource, 10)),
     "graph_sssp" -> ((s, d) => {
       val e = edgesChk(s, d)
       Builtins.shortestPaths(s, GraphSource.toGraph(e), smallestNodes(e, 3))

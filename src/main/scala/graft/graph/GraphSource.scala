@@ -13,7 +13,10 @@ import org.apache.spark.storage.StorageLevel
   * contribute a directed edge between their part keys, weight = number of
   * co-occurrences. Deterministic, derived purely from the fixture tables,
   * and — being a window + group-by — expressible in portable SQL for the
-  * oracle.
+  * oracle. [[partTransitions]] is that derivation as a Spark plan: the
+  * input of the GraphX and DataFrame algorithms, and the reference the
+  * tests hold [[LocalGraph.fromLineitem]] to. The rank family and BFS do
+  * not run it: they derive the same edges inside their one task.
   *
   * Cleaning semantics follow the reference (`graph/Util.scala:230-258`,
   * `TrangleCountRunner.scala:68-77`): self-loops dropped, parallel edges

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.graphx.{EdgeDirection, Graph, VertexId, VertexRDD}
+import org.apache.spark.graphx.{Graph, VertexRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,11 @@ import graft.core.Hints
   * these are independent re-derivations from the published algorithms.
   *
   * The damped-rank members ([[weightedPageRank]], [[trustRank]],
-  * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]]):
-  * the whole run is one task over all the edges, rank state is one
-  * dense array over the sorted vertex ids, and the output is built on
-  * the driver in node order. None of them normalizes its ranks.
+  * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]])
+  * and [[bfs]] runs a frontier loop, each over a [[LocalGraph]] built in
+  * its one task: rank or distance state is one dense array over the
+  * sorted vertex ids, and the output is built on the driver in node
+  * order. None of the rank members normalizes its ranks.
   *
   * Iteration hygiene for the GraphX loops below (critical): each step
   * caches the new graph and materializes its EDGES (which forces the
@@ -31,22 +32,21 @@ object Iterative {
 
   private def r6(c: org.apache.spark.sql.Column) = floor(c * 1e6 + 0.5) / 1e6
 
-  /** Weighted PageRank over `(src, dst, weight)` edges: contributions
-    * proportional to edge weight / source out-weight (C3). */
-  def weightedPageRank(spark: SparkSession, edges: DataFrame,
+  /** Weighted PageRank over `graph`: contributions proportional to edge
+    * weight / source out-weight (C3). */
+  def weightedPageRank(spark: SparkSession, graph: LocalGraph.Reader,
       numIter: Int, resetProb: Double = 0.15): DataFrame =
-    DampedRank.frame(spark, DampedRank.run(edges,
+    DampedRank.frame(spark, DampedRank.run(graph,
       DampedRank.Spec(numIter, resetProb, weighted = true)), "rank")
 
   /** TrustRank (C5): personalized PageRank whose reset mass goes only to
-    * the trusted seed set (uniformly). A seed that is not a vertex of a
-    * non-empty graph fails naming it. */
-  def trustRank(spark: SparkSession, edges: DataFrame,
-      seeds: Set[VertexId], numIter: Int, resetProb: Double = 0.15): DataFrame = {
-    require(seeds.nonEmpty, "TrustRank needs at least one trusted seed")
-    val run = DampedRank.run(edges,
+    * the trusted seeds `seeds` picks (uniformly). A seed that is not a
+    * vertex of a non-empty graph fails naming it. */
+  def trustRank(spark: SparkSession, graph: LocalGraph.Reader,
+      seeds: LocalGraph.Pick, numIter: Int, resetProb: Double = 0.15): DataFrame = {
+    val run = DampedRank.run(graph,
       DampedRank.Spec(numIter, resetProb, seeds = Some(seeds)))
-    DampedRank.requireVertices(run, seeds, "TrustRank seed")
+    DampedRank.requireSeeds(run, "TrustRank seed")
     DampedRank.frame(spark, run, "trust")
   }
 
@@ -54,34 +54,26 @@ object Iterative {
     * delta answer to "the graph changed a little, don't restart from
     * uniform". The prior is [[Builtins.pageRank]]'s `priorIter`-iteration
     * output (normalized, rounded to 1e-6), computed in the same run. */
-  def incrementalPageRank(spark: SparkSession, edges: DataFrame,
+  def incrementalPageRank(spark: SparkSession, graph: LocalGraph.Reader,
       priorIter: Int, extraIter: Int, resetProb: Double = 0.15): DataFrame = {
     require(priorIter > 0, s"the prior needs priorIter > 0, got $priorIter")
-    DampedRank.frame(spark, DampedRank.run(edges,
+    DampedRank.frame(spark, DampedRank.run(graph,
       DampedRank.Spec(extraIter, resetProb, priorIters = priorIter)), "rank")
   }
 
-  /** BFS (C6): minimum hop distance from `src`, depth-limited; vertices
-    * never reached are omitted (reference filters MAX_VALUE:
-    * `BFSRunner.scala:95-101`). */
-  def bfs(spark: SparkSession, g: Graph[Double, Double], src: VertexId,
-      maxDepth: Int, directed: Boolean = true): DataFrame = {
+  /** BFS (C6): minimum hop distance along out-edges from the sources
+    * `src` picks, depth-limited; vertices never reached are omitted
+    * (reference filters MAX_VALUE: `BFSRunner.scala:95-101`). Rows are
+    * (node, dist) in node order. */
+  def bfs(spark: SparkSession, graph: LocalGraph.Reader, src: LocalGraph.Pick,
+      maxDepth: Int): DataFrame = {
     import spark.implicits._
-    val init = g.mapVertices((v, _) => if (v == src) 0 else Int.MaxValue)
-    val res = init.pregel(Int.MaxValue, maxDepth,
-      if (directed) EdgeDirection.Out else EdgeDirection.Either)(
-      (_, d, msg) => math.min(d, msg),
-      t => {
-        val out = if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-          Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty
-        val back = if (!directed && t.dstAttr != Int.MaxValue &&
-          t.dstAttr + 1 < t.srcAttr) Iterator((t.srcId, t.dstAttr + 1))
-        else Iterator.empty
-        out ++ back
-      },
-      math.min)
-    res.vertices.filter(_._2 != Int.MaxValue).toDF("node", "dist")
-      .orderBy("node")
+    val reached = LocalGraph.run(graph) { g =>
+      val dist = g.hops(src(g).toSeq.map(g.index).filter(_ >= 0), maxDepth)
+      g.ids.indices.filter(dist(_) != Int.MaxValue)
+        .map(v => (g.ids(v), dist(v))).toArray
+    }
+    reached.toSeq.toDF("node", "dist")
   }
 
   /** K-core decomposition (C12) via the distributed h-operator fixpoint

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graphx.{Graph, VertexId}
+import org.apache.spark.graphx.{EdgeDirection, Graph, VertexId}
 import org.apache.spark.graphx.lib.PageRank
 import org.apache.spark.sql.functions.{col, lit, min}
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +15,8 @@ class GraphSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private val PageRankJobs = 4
+  private val PageRankJobs = 2
+  private val BfsJobs = 2
 
   private def fixtureEdges = {
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
@@ -23,6 +24,8 @@ class GraphSpec extends AnyFunSuite {
       .toDF("src", "dst", "weight")
   }
   private def fixtureGraph = GraphSource.toGraph(fixtureEdges)
+  private def fixture = LocalGraph.fromEdges(fixtureEdges)
+  private def given(v: Long*) = LocalGraph.Pick.Given(v.toSet)
 
   test("degrees on the fixture") {
     val d = Builtins.degrees(spark, fixtureGraph).collect()
@@ -67,7 +70,7 @@ class GraphSpec extends AnyFunSuite {
   test("connected components: single component; bfs distances correct") {
     val comp = Builtins.connectedComponents(spark, fixtureGraph).collect()
     assert(comp.map(_.getLong(1)).distinct.length == 1)
-    val dist = Iterative.bfs(spark, fixtureGraph, 1L, 10).collect()
+    val dist = Iterative.bfs(spark, fixture, given(1L), 10).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(dist == Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2, 5L -> 3, 6L -> 3))
   }
@@ -75,7 +78,7 @@ class GraphSpec extends AnyFunSuite {
   test("bfs and shortest-paths agree on the symmetric fixture") {
     val sp = Builtins.shortestPaths(spark, fixtureGraph, Seq(1L)).collect()
       .map(r => r.getLong(0) -> r.getInt(2)).toMap
-    val bf = Iterative.bfs(spark, fixtureGraph, 1L, 10).collect()
+    val bf = Iterative.bfs(spark, fixture, given(1L), 10).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(sp == bf)
   }
@@ -110,7 +113,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("weighted pagerank conserves total rank on the strongly-connected fixture") {
-    val wpr = Iterative.weightedPageRank(spark, fixtureEdges, 20).collect()
+    val wpr = Iterative.weightedPageRank(spark, fixture, 20).collect()
     assert(math.abs(wpr.map(_.getDouble(1)).sum - 6.0) < 0.01)
   }
 
@@ -118,22 +121,22 @@ class GraphSpec extends AnyFunSuite {
     // 1→2 weight 9, 1→3 weight 1: rank(2) > rank(3)
     val e = Seq((1L, 2L, 9.0), (1L, 3L, 1.0), (2L, 1L, 1.0), (3L, 1L, 1.0))
       .toDF("src", "dst", "weight")
-    val r = Iterative.weightedPageRank(spark, e, 20)
+    val r = Iterative.weightedPageRank(spark, LocalGraph.fromEdges(e), 20)
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(r(2L) > r(3L))
   }
 
   test("trustrank concentrates mass near the seed") {
-    val t = Iterative.trustRank(spark, fixtureEdges, Set(1L), 20).collect()
+    val t = Iterative.trustRank(spark, fixture, given(1L), 20).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(t(1L) == t.values.max)
     assert(t(2L) > t(5L)) // closer to seed ⇒ more trust
   }
 
   test("incremental pagerank from a prior converges like a longer direct run") {
-    val direct = Builtins.pageRank(spark, fixtureEdges, 30).collect()
+    val direct = Builtins.pageRank(spark, fixture, 30).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val inc = Iterative.incrementalPageRank(spark, fixtureEdges, 20, 10).collect()
+    val inc = Iterative.incrementalPageRank(spark, fixture, 20, 10).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     direct.foreach { case (n, v) => assert(math.abs(inc(n) - v) < 1e-3, s"node $n") }
   }
@@ -229,12 +232,12 @@ class GraphSpec extends AnyFunSuite {
   test("rank kernel equals GraphX PageRank.run and runWithOptions(src)") {
     for (e <- Seq(rankFixture, partEdges)) {
       val g = GraphSource.toGraph(e)
-      val src = e.agg(min("src")).head().getLong(0)
-      assertMatches(Builtins.pageRank(spark, e, 10),
-        DampedRank.run(e, DampedRank.Spec(10, 0.15, normalize = true)),
+      val (src, lg) = (e.agg(min("src")).head().getLong(0), LocalGraph.fromEdges(e))
+      assertMatches(Builtins.pageRank(spark, lg, 10),
+        DampedRank.run(lg, DampedRank.Spec(10, 0.15, normalize = true)),
         PageRank.run(g, 10, 0.15).vertices.collect().toMap)
-      assertMatches(Builtins.personalizedPageRank(spark, e, src, 10),
-        DampedRank.run(e, DampedRank.Spec(10, 0.15, seeds = Some(Set(src)),
+      assertMatches(Builtins.personalizedPageRank(spark, lg, given(src), 10),
+        DampedRank.run(lg, DampedRank.Spec(10, 0.15, seeds = Some(given(src)),
           normalize = true)),
         PageRank.runWithOptions(g, 10, 0.15, Some(src)).vertices.collect().toMap)
     }
@@ -242,27 +245,28 @@ class GraphSpec extends AnyFunSuite {
 
   test("rank kernel equals the GraphX rank loop for wpr, trustrank and incpr") {
     for (e <- Seq(rankFixture, partEdges)) {
-      val g = GraphSource.toGraph(e)
+      val (g, lg) = (GraphSource.toGraph(e), LocalGraph.fromEdges(e))
       val outW = g.aggregateMessages[Double](ctx => ctx.sendToSrc(ctx.attr), _ + _)
       val wprInit = g.outerJoinVertices(outW)((_, _, w) => w.getOrElse(0.0))
         .mapTriplets(t => if (t.srcAttr > 0) t.attr / t.srcAttr else 0.0)
         .mapVertices((_, _) => 1.0)
-      assertMatches(Iterative.weightedPageRank(spark, e, 10),
-        DampedRank.run(e, DampedRank.Spec(10, 0.15, weighted = true)),
+      assertMatches(Iterative.weightedPageRank(spark, lg, 10),
+        DampedRank.run(lg, DampedRank.Spec(10, 0.15, weighted = true)),
         graphxRankLoop(wprInit, 10, _ => 0.15))
 
       val seeds = g.vertices.keys.collect().sorted.take(3).toSet
       val mass = 1.0 / seeds.size
-      assertMatches(Iterative.trustRank(spark, e, seeds, 10),
-        DampedRank.run(e, DampedRank.Spec(10, 0.15, seeds = Some(seeds))),
+      val pick = LocalGraph.Pick.Given(seeds)
+      assertMatches(Iterative.trustRank(spark, lg, pick, 10),
+        DampedRank.run(lg, DampedRank.Spec(10, 0.15, seeds = Some(pick))),
         graphxRankLoop(byOutDegree(g).mapVertices((v, _) =>
           if (seeds(v)) mass else 0.0), 10,
           v => if (seeds(v)) 0.15 * mass else 0.0))
 
       val prior = PageRank.run(g, 5, 0.15).vertices
         .mapValues(r => math.floor(r * 1e6 + 0.5).toLong / 1e6)
-      assertMatches(Iterative.incrementalPageRank(spark, e, 5, 5),
-        DampedRank.run(e, DampedRank.Spec(5, 0.15, priorIters = 5)),
+      assertMatches(Iterative.incrementalPageRank(spark, lg, 5, 5),
+        DampedRank.run(lg, DampedRank.Spec(5, 0.15, priorIters = 5)),
         graphxRankLoop(byOutDegree(g).outerJoinVertices(prior)((_, _, p) =>
           p.getOrElse(1.0)), 5, _ => 0.15))
     }
@@ -274,7 +278,7 @@ class GraphSpec extends AnyFunSuite {
     for (parts <- Seq(1, 4)) {
       val ring = spark.range(0, 100000, 1, parts).select(col("id").as("src"),
         ((col("id") + 1) % 100000).as("dst"), lit(1.0).as("weight"))
-      val (run, jobs) = jobsOf(DampedRank.run(ring,
+      val (run, jobs) = jobsOf(DampedRank.run(LocalGraph.fromEdges(ring),
         DampedRank.Spec(3, 0.15, normalize = true)))
       assert(jobs == 1, s"$parts partitions: $jobs jobs")
       assert(run.ids.length == 100000 &&
@@ -284,26 +288,29 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("rank trace: one L1 change per iteration, falling on the fixture") {
-    val run = DampedRank.run(fixtureEdges, DampedRank.Spec(10, 0.15,
+    val run = DampedRank.run(fixture, DampedRank.Spec(10, 0.15,
       normalize = true))
     assert(run.deltas.length == 10)
     assert(run.deltas.head > 0.0)
     assert(run.deltas.sliding(2).forall(p => p(1) < p(0)),
       run.deltas.mkString(", "))
     // incremental PageRank traces its prior's iterations first
-    assert(DampedRank.run(fixtureEdges, DampedRank.Spec(4, 0.15,
+    assert(DampedRank.run(fixture, DampedRank.Spec(4, 0.15,
       priorIters = 3)).deltas.length == 7)
   }
 
   test("rank queries on degenerate graphs: empty, self-loops only, absent seeds") {
     val none = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
     val loops = Seq((1L, 1L, 1.0), (2L, 2L, 2.0)).toDF("src", "dst", "weight")
-    def five(e: org.apache.spark.sql.DataFrame) = Seq(
-      "rank" -> Builtins.pageRank(spark, e, 10),
-      "rank" -> Builtins.personalizedPageRank(spark, e, 1L, 10),
-      "rank" -> Iterative.weightedPageRank(spark, e, 10),
-      "trust" -> Iterative.trustRank(spark, e, Set(2L), 10),
-      "rank" -> Iterative.incrementalPageRank(spark, e, 5, 5))
+    def five(df: org.apache.spark.sql.DataFrame) = {
+      val e = LocalGraph.fromEdges(df)
+      Seq(
+        "rank" -> Builtins.pageRank(spark, e, 10),
+        "rank" -> Builtins.personalizedPageRank(spark, e, given(1L), 10),
+        "rank" -> Iterative.weightedPageRank(spark, e, 10),
+        "trust" -> Iterative.trustRank(spark, e, given(2L), 10),
+        "rank" -> Iterative.incrementalPageRank(spark, e, 5, 5))
+    }
     for ((name, df) <- five(none)) {
       assert(df.columns.toSeq == Seq("node", name))
       assert(df.collect().isEmpty)
@@ -314,14 +321,14 @@ class GraphSpec extends AnyFunSuite {
       Seq((1L, 1.0), (2L, 1.0)), Seq((1L, 0.0), (2L, 1.0)),
       Seq((1L, 1.0), (2L, 1.0))))
     val ppr = intercept[IllegalArgumentException](
-      Builtins.personalizedPageRank(spark, fixtureEdges, 99L, 10))
+      Builtins.personalizedPageRank(spark, fixture, given(99L), 10))
     assert(ppr.getMessage.contains("source 99"))
     val trust = intercept[IllegalArgumentException](
-      Iterative.trustRank(spark, fixtureEdges, Set(1L, 99L, 98L), 10))
+      Iterative.trustRank(spark, fixture, given(1L, 99L, 98L), 10))
     assert(trust.getMessage.contains("seed 98, 99"))
     val noSeed = intercept[IllegalArgumentException](
-      Iterative.trustRank(spark, fixtureEdges, Set.empty, 10))
-    assert(noSeed.getMessage.contains("at least one trusted seed"))
+      Iterative.trustRank(spark, fixture, given(), 10))
+    assert(noSeed.getMessage.contains("at least one vertex"))
   }
 
   /** `body`'s result and the Spark jobs it ran, counted by a job-tag
@@ -350,12 +357,123 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("graph_pagerank runs a pinned number of Spark jobs on sf0.001") {
-    // the lineitem schema read, the edge derivation's two shuffle map
-    // stages and the one rank task; the output is built on the driver,
-    // so collecting it runs no job
+    // the lineitem schema read and the one task that derives the graph
+    // and ranks it; the output is built on the driver, so collecting it
+    // runs no job
     graft.core.QueryCache.clear()
     val (_, jobs) =
       jobsOf(GraphQueries.all("graph_pagerank")(spark, sf0001).collect())
     assert(jobs == PageRankJobs, s"graph_pagerank ran $jobs jobs")
+  }
+
+  test("graph_bfs runs a pinned number of Spark jobs on sf0.001") {
+    // the lineitem schema read and the one task that derives the graph
+    // and walks it
+    val (_, jobs) =
+      jobsOf(GraphQueries.all("graph_bfs")(spark, sf0001).collect())
+    assert(jobs == BfsJobs, s"graph_bfs ran $jobs jobs")
+  }
+
+  private def lineitemRows(rows: (Option[Long], Option[Int], Option[Long])*) =
+    rows.toDF("l_orderkey", "l_linenumber", "l_partkey")
+
+  /** The graph's edges as (src id, dst id, weight), in its edge order. */
+  private def edgesOf(graph: LocalGraph.Reader): Seq[(Long, Long, Double)] =
+    LocalGraph.run(graph)(g => Array.tabulate(g.numEdges)(k =>
+      (g.ids(g.src(k)), g.ids(g.dst(k)), g.weight(k)))).toSeq
+
+  private def transitionEdges(lineitem: org.apache.spark.sql.DataFrame) =
+    GraphSource.partTransitions(lineitem).as[(Long, Long, Double)]
+      .collect().toSeq.sorted
+
+  test("the lineitem reader derives partTransitions' edges in its task") {
+    val (n, k) = (Option.empty[Long], Option.empty[Int])
+    val fixture = lineitemRows(
+      // null order keys form one group: 10 -> 11, 11 -> null dropped
+      (n, Some(1), Some(10L)), (n, Some(2), Some(11L)), (n, Some(3), n),
+      // a null partkey breaks the chain on both sides
+      (Some(1L), Some(1), Some(5L)), (Some(1L), Some(2), n),
+      (Some(1L), Some(3), Some(6L)),
+      // a duplicate (orderkey, linenumber) orders by partkey: 3 -> 7 -> 8
+      (Some(2L), Some(1), Some(7L)), (Some(2L), Some(1), Some(3L)),
+      (Some(2L), Some(2), Some(8L)),
+      // a one-line order gives no edge
+      (Some(3L), Some(1), Some(9L)),
+      // a repeated partkey is no edge, and 5 -> 6 recurs: weight 2
+      (Some(4L), Some(1), Some(5L)), (Some(4L), Some(2), Some(5L)),
+      (Some(4L), Some(3), Some(6L)), (Some(5L), Some(1), Some(5L)),
+      (Some(5L), Some(2), Some(6L)),
+      // a null linenumber sorts first: 12 -> 13
+      (Some(6L), Some(1), Some(13L)), (Some(6L), k, Some(12L)),
+      // vertices 20 and 21 only meet nulls: not vertices
+      (Some(7L), Some(1), Some(20L)), (Some(7L), Some(2), n),
+      (Some(8L), k, n), (Some(8L), Some(1), Some(21L)))
+    val want = transitionEdges(fixture)
+    assert(want.contains((5L, 6L, 2.0)) && want.contains((12L, 13L, 1.0)))
+    assert(edgesOf(LocalGraph.fromLineitem(fixture)) == want)
+    assert(LocalGraph.run(LocalGraph.fromLineitem(fixture))(_.ids.toSeq) ==
+      want.flatMap(e => Seq(e._1, e._2)).distinct.sorted)
+    assert(edgesOf(LocalGraph.fromLineitem(lineitemRows())).isEmpty)
+    val li = Tables(spark, sf0001, "lineitem")
+    assert(edgesOf(LocalGraph.fromLineitem(li)) == transitionEdges(li))
+  }
+
+  test("rank runs over the lineitem reader equal runs over the edge frame") {
+    val li = Tables(spark, sf0001, "lineitem")
+    val specs = Seq(DampedRank.Spec(10, 0.15, normalize = true),
+      DampedRank.Spec(10, 0.15, weighted = true),
+      DampedRank.Spec(10, 0.15, seeds = Some(LocalGraph.Pick.Smallest(5))),
+      DampedRank.Spec(5, 0.15, priorIters = 5))
+    for (spec <- specs) {
+      val (a, b) = (DampedRank.run(LocalGraph.fromLineitem(li), spec),
+        DampedRank.run(LocalGraph.fromEdges(partEdges), spec))
+      assert(a.ids.toSeq == b.ids.toSeq && a.ranks.toSeq == b.ranks.toSeq &&
+        a.seeds == b.seeds, spec.toString)
+    }
+    // the in-task picks are min(src) and the smallest endpoints
+    val e = partEdges
+    val minSrc = e.agg(min("src")).head().getLong(0)
+    assert(DampedRank.run(LocalGraph.fromLineitem(li), DampedRank.Spec(1, 0.15,
+      seeds = Some(LocalGraph.Pick.MinSource))).seeds == Set(minSrc))
+    assert(DampedRank.run(LocalGraph.fromLineitem(li), DampedRank.Spec(1, 0.15,
+      seeds = Some(LocalGraph.Pick.Smallest(5)))).seeds ==
+      GraphQueries.smallestNodes(e, 5).toSet)
+  }
+
+  /** BFS as GraphX Pregel runs it: directed, `maxDepth` rounds. */
+  private def graphxBfs(g: Graph[Double, Double], src: VertexId,
+      maxDepth: Int): Seq[(Long, Int)] =
+    g.mapVertices((v, _) => if (v == src) 0 else Int.MaxValue)
+      .pregel(Int.MaxValue, maxDepth, EdgeDirection.Out)(
+        (_, d, msg) => math.min(d, msg),
+        t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
+          Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
+        math.min)
+      .vertices.filter(_._2 != Int.MaxValue).collect().toSeq.sorted
+
+  test("bfs equals GraphX Pregel BFS on the fixture and on sf0.001") {
+    val li = Tables(spark, sf0001, "lineitem")
+    for ((e, graph) <- Seq(rankFixture -> LocalGraph.fromEdges(rankFixture),
+        partEdges -> LocalGraph.fromLineitem(li)); depth <- Seq(2, 10)) {
+      val src = e.agg(min("src")).head().getLong(0)
+      val got = Iterative.bfs(spark, graph, LocalGraph.Pick.MinSource, depth)
+        .as[(Long, Int)].collect().toSeq
+      assert(got == graphxBfs(GraphSource.toGraph(e), src, depth), s"depth $depth")
+    }
+    // a source that is not a vertex reaches nothing
+    assert(Iterative.bfs(spark, LocalGraph.fromEdges(rankFixture), given(99L), 10)
+      .collect().isEmpty)
+  }
+
+  test("graph queries on an empty lineitem give empty frames") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_li").toString
+    Tables(spark, sf0001, "lineitem").limit(0)
+      .write.parquet(s"$dir/lineitem.parquet")
+    for (q <- Seq("graph_pagerank", "graph_ppr", "graph_wpr", "graph_trustrank",
+        "graph_incpr", "graph_bfs", "graph_ppr_conv")) {
+      val df = GraphQueries.all(q)(spark, dir)
+      assert(df.collect().isEmpty, q)
+      assert(df.columns.head == "node", q)
+    }
   }
 }

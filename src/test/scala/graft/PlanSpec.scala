@@ -496,7 +496,9 @@ class PlanSpec extends AnyFunSuite {
       Tables(spark, sf0001, "embeddings")), "cluster", "dim")
     val edges = Seq((3L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0))
       .toDF("src", "dst", "weight")
-    same(graft.graph.Builtins.pageRank(spark, edges, 5), "node")
-    same(graft.graph.Iterative.trustRank(spark, edges, Set(2L), 5), "node")
+    val graph = graft.graph.LocalGraph.fromEdges(edges)
+    same(graft.graph.Builtins.pageRank(spark, graph, 5), "node")
+    same(graft.graph.Iterative.trustRank(spark, graph,
+      graft.graph.LocalGraph.Pick.Given(Set(2L)), 5), "node")
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{Builtins, Centrality, Community, GraphQueries,
-  GraphSource, Iterative, Motifs, Node2Vec}
+  GraphSource, Iterative, LocalGraph, Motifs, Node2Vec}
 import graft.sources.Tables
 
 /** Parameter-grid differential fuzz over the GRAPH operator surface
@@ -52,12 +52,10 @@ object GraphFuzzSeed {
   private def ugraph(s: SparkSession, d: String) =
     GraphSource.toGraph(GraphSource.canonicalUndirected(edges(s, d)))
 
-  private def minNode(e: DataFrame): Long =
-    e.agg(min(col("src"))).head().getLong(0)
-
-  private def smallestNodes(e: DataFrame, n: Int): Seq[Long] =
-    e.select(col("src").as("v")).union(e.select(col("dst")))
-      .distinct().orderBy("v").limit(n).collect().map(_.getLong(0)).toSeq
+  /** The part-transition graph the rank and BFS cases derive in their
+    * own task. */
+  private def transitions(s: SparkSession, d: String) =
+    LocalGraph.fromLineitem(Tables(s, d, "lineitem"))
 
   private val neUnweighted = GraphQueries.neUnweighted
 
@@ -71,13 +69,13 @@ object GraphFuzzSeed {
       GraphCase(s"gfz_pagerank_i${iters}_r${(reset * 100).toInt}",
         GraphQueries.rankIterSql(neUnweighted, iters, "1.0",
           s"$reset", "rank", damp = 1.0 - reset),
-        (s, d) => Builtins.pageRank(s, edges(s, d), iters, reset))
+        (s, d) => Builtins.pageRank(s, transitions(s, d), iters, reset))
     }
 
     val wpr = Seq(5, 15).map { iters =>
       GraphCase(s"gfz_wpr_i$iters",
         GraphQueries.rankIterSql(neWeighted, iters, "1.0", "0.15", "rank"),
-        (s, d) => Iterative.weightedPageRank(s, edges(s, d), iters))
+        (s, d) => Iterative.weightedPageRank(s, transitions(s, d), iters))
     }
 
     val ppr = Seq((5, 0.15), (15, 0.15), (10, 0.30)).map {
@@ -87,10 +85,8 @@ object GraphFuzzSeed {
             "CASE WHEN v = (SELECT MIN(src) FROM g) THEN 1.0 ELSE 0 END",
             s"CASE WHEN n.v = (SELECT MIN(src) FROM g) THEN $reset ELSE 0 END",
             "rank", damp = 1.0 - reset),
-          (s, d) => {
-            val e = edges(s, d)
-            Builtins.personalizedPageRank(s, e, minNode(e), iters, reset)
-          })
+          (s, d) => Builtins.personalizedPageRank(s, transitions(s, d),
+            LocalGraph.Pick.MinSource, iters, reset))
     }
 
     val trust = Seq((3, 10), (5, 5), (8, 10)).map { case (seeds, iters) =>
@@ -101,10 +97,8 @@ object GraphFuzzSeed {
           s"CASE WHEN n.v IN (SELECT v FROM lm) THEN ${0.15 * seedMass} ELSE 0 END",
           "trust",
           extraCte = s", lm AS (SELECT v FROM n ORDER BY v LIMIT $seeds)"),
-        (s, d) => {
-          val e = edges(s, d)
-          Iterative.trustRank(s, e, smallestNodes(e, seeds).toSet, iters)
-        })
+        (s, d) => Iterative.trustRank(s, transitions(s, d),
+          LocalGraph.Pick.Smallest(seeds), iters))
     }
 
     val incpr = Seq(3, 7).map { roundAt =>
@@ -112,7 +106,8 @@ object GraphFuzzSeed {
         GraphQueries.rankIterSql(neUnweighted, 10, "1.0", "0.15", "rank",
           roundAt = roundAt),
         (s, d) =>
-          Iterative.incrementalPageRank(s, edges(s, d), roundAt, 10 - roundAt))
+          Iterative.incrementalPageRank(s, transitions(s, d), roundAt,
+            10 - roundAt))
     }
 
     val conv = Seq((1e-3, false), (1e-3, true), (5e-4, false),
@@ -121,20 +116,15 @@ object GraphFuzzSeed {
       GraphCase(s"gfz_conv_${tag}_t${(tol * 10000).toInt}",
         GraphQueries.prConvSql(tol, 100, personalized = pers),
         (s, d) =>
-          if (pers) {
-            val e = edges(s, d)
-            Builtins.personalizedPageRankUntilConvergence(s,
-              GraphSource.toGraph(e), minNode(e), tol)
-          } else Builtins.pageRankUntilConvergence(s, graph(s, d), tol))
+          if (pers) GraphQueries.pprConv(s, edges(s, d), tol)
+          else Builtins.pageRankUntilConvergence(s, graph(s, d), tol))
     }
 
     val bfs = Seq(2, 3, 5).map { depth =>
       GraphCase(s"gfz_bfs_d$depth",
         GraphQueries.bfsSql(depth),
-        (s, d) => {
-          val e = edges(s, d)
-          Iterative.bfs(s, GraphSource.toGraph(e), minNode(e), depth)
-        })
+        (s, d) => Iterative.bfs(s, transitions(s, d),
+          LocalGraph.Pick.MinSource, depth))
     }
 
     val sssp = Seq(2, 5).map { k =>
@@ -143,7 +133,7 @@ object GraphFuzzSeed {
         (s, d) => {
           val e = edges(s, d)
           Builtins.shortestPaths(s, GraphSource.toGraph(e),
-            smallestNodes(e, k))
+            GraphQueries.smallestNodes(e, k))
         })
     }
 
@@ -153,7 +143,7 @@ object GraphFuzzSeed {
         (s, d) => {
           val e = edges(s, d)
           Centrality.closeness(s, GraphSource.toGraph(e),
-            smallestNodes(e, k))
+            GraphQueries.smallestNodes(e, k))
         })
     }
 
@@ -163,7 +153,7 @@ object GraphFuzzSeed {
         (s, d) => {
           val e = edges(s, d)
           Centrality.closeness(s, GraphSource.toGraph(e),
-            smallestNodes(e, k), weighted = true)
+            GraphQueries.smallestNodes(e, k), weighted = true)
         })
     }
 
@@ -172,7 +162,7 @@ object GraphFuzzSeed {
         GraphQueries.betweennessSql(k, levels = 6),
         (s, d) => {
           val e = edges(s, d)
-          Centrality.betweenness(s, e, smallestNodes(e, k))
+          Centrality.betweenness(s, e, GraphQueries.smallestNodes(e, k))
         })
     }
 
@@ -230,7 +220,7 @@ object GraphFuzzSeed {
         (s, d) => {
           val e = edges(s, d)
           Iterative.parallelPersonalizedPageRankSync(s, e,
-            smallestNodes(e, ns), iters)
+            GraphQueries.smallestNodes(e, ns), iters)
         })
     }
 

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Paired A/B of two checkouts on one perfbench workload.
+"""Paired A/B of two checkouts on one perfbench workload or on graft.Bench rows.
 
     python3 tools/ab.py PARENT_DIR CHANGE_DIR --workload W --seeds 31 32 ...
+    python3 tools/ab.py PARENT_DIR CHANGE_DIR --bench-rows R1,R2 --pairs 4 \
+        --sf-dir DATA_DIR
 
 For each seed it runs `perfbench/run.py` once in each checkout, back to
 back, switching which side runs first from one pair to the next so that a
@@ -21,6 +23,14 @@ Neither side's change touches set-up, so a pair whose two `setup_s`
 values differ by more than that metric's bound (see `drifted`) ran on a
 host whose speed moved between its runs: it is flagged on its line and
 the summary counts the flagged pairs.
+
+With `--bench-rows` each pair runs `graft.Bench` once in each checkout
+with `SPARK_GRAFT_ONLY` set to the rows, over `--sf-dir`, from the jar
+each checkout's benchmark builds. A row's value is the Bench's drop-max
+mean of its samples: three for a headline row (its suite pass and two
+reruns), the one suite pass for any other row. The pair's host-drift
+flag compares the two runs' `cpu_spin` canaries, taken before the rows.
+Each row gets the same verdict, against the `pass_wall_s` bound.
 """
 import argparse
 import glob
@@ -29,6 +39,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 METRICS = ("pass_wall_s", "op_p50_s", "setup_s")
 
@@ -46,6 +57,108 @@ def run(checkout, workload, seed, seconds):
         sys.exit(f"run failed in {checkout} (seed {seed}, exit "
                  f"{p.returncode})")
     return json.loads(lines[-1])
+
+
+def bench_jar(checkout):
+    """Builds the checkout's benchmark jar (it holds graft.Bench) unless an
+    up-to-date one is there; returns the java command that runs a main
+    class from it."""
+    p = subprocess.run(
+        [sys.executable, "-c",
+         "import json, sys; sys.path.insert(0, 'perfbench'); import run; "
+         "run.build(); print(json.dumps([run.JAR, run.spark_home(), "
+         "run.JAVA_OPENS]))"],
+        cwd=checkout, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL, text=True)
+    if p.returncode != 0:
+        sys.exit(f"benchmark build failed in {checkout}")
+    jar, spark, opens = json.loads(p.stdout.splitlines()[-1])
+    return (["java", f"-Xmx{os.environ.get('SPARK_DRIVER_MEM', '8g')}",
+             "-Dspark.ui.enabled=false"] +
+            [a for o in opens for a in ("--add-opens", f"{o}=ALL-UNNAMED")] +
+            ["-cp", f"{jar}{os.pathsep}{os.path.join(spark, 'jars', '*')}"])
+
+
+def drop_max_mean(samples):
+    """The mean of `samples` without their largest, or the one sample."""
+    kept = sorted(samples)[:-1] or samples
+    return sum(kept) / len(kept)
+
+
+def parse_bench(stdout, detail, rows):
+    """The rows' values and the start canary of one graft.Bench run, from
+    its standard output (the last JSON line is the run's record) and its
+    detail file: a row's samples are its suite pass plus any reruns.
+    Fails naming a row that errored or that the run lacks."""
+    line = next((json.loads(l) for l in reversed(stdout.splitlines())
+                 if l.startswith("{") and '"metric":"total"' in l), None)
+    if line is None:
+        raise ValueError("no graft.Bench result line")
+    bad = [r for r in rows
+           if r in line["errors"] or r not in detail["single_pass"]]
+    if bad:
+        raise ValueError(f"rows failed or missing: {', '.join(bad)}")
+    return ({r: drop_max_mean([detail["single_pass"][r]] +
+                              detail["reruns"].get(r, [])) for r in rows},
+            line["canary"]["cpu_spin_start"])
+
+
+def run_bench(java, rows, sf_dir):
+    """One graft.Bench run of `rows`; returns (values by row, canary)."""
+    with tempfile.TemporaryDirectory() as tmp:
+        detail_path = os.path.join(tmp, "detail.json")
+        env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(rows),
+                   SPARK_GRAFT_SF_DIR=sf_dir,
+                   SPARK_GRAFT_DETAIL_OUT=detail_path,
+                   SPARK_GRAFT_MANIFEST_OUT=os.path.join(tmp, "manifest.json"))
+        p = subprocess.run(java + [f"-Djava.io.tmpdir={tmp}", "graft.Bench"],
+                           cwd=tmp, env=env, stdin=subprocess.DEVNULL,
+                           stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+                           text=True)
+        try:
+            with open(detail_path) as f:
+                return parse_bench(p.stdout, json.load(f), rows)
+        except (OSError, ValueError) as e:
+            sys.exit(f"graft.Bench run failed (exit {p.returncode}): {e}")
+
+
+def summary(name, p, c, bound):
+    """One line: both sides' medians and quartiles, the win count and the
+    verdict of a lower-is-better metric over paired runs."""
+    wins = sum(b < a for a, b in zip(p, c))
+    (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
+    return (f"  {name:16s} parent {pm:8.3f} [{p1:.3f}, {p3:.3f}]  "
+            f"change {cm:8.3f} [{c1:.3f}, {c3:.3f}]  "
+            f"median {100 * (cm / pm - 1):+6.1f}%  "
+            f"drop {pm - cm:.3f} vs parent IQR {p3 - p1:.3f}  "
+            f"change won {wins}/{len(p)}  {verdict(p, c, bound)}")
+
+
+def bench_rows_ab(sides, rows, pairs, sf_dir, bound):
+    """The `--bench-rows` mode: `pairs` alternating graft.Bench pairs."""
+    java = {s: bench_jar(d) for s, d in sides.items()}
+    values = {s: {r: [] for r in rows} for s in sides}
+    flagged = 0
+    for i in range(pairs):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        canary = {}
+        for side in order:
+            vals, canary[side] = run_bench(java[side], rows, sf_dir)
+            for r in rows:
+                values[side][r].append(vals[r])
+        drift = drifted(canary["parent"], canary["change"], bound["setup_s"])
+        flagged += drift
+        print(f"pair {i + 1} ({order[0]} first): " + "  ".join(
+            f"{r} {values['parent'][r][-1]:.3f} -> {values['change'][r][-1]:.3f}"
+            for r in rows) + f"  canary {canary['parent']:.3f} -> "
+            f"{canary['change']:.3f}" + ("  HOST DRIFT (canary)" if drift else ""),
+            flush=True)
+    print(f"\ngraft.Bench rows over {sf_dir}, {pairs} pairs, {flagged} flagged "
+          f"for host drift (cpu_spin canaries apart by more than "
+          f"{bound['setup_s']})")
+    for r in rows:
+        print(summary(r, values["parent"][r], values["change"][r],
+                      bound["pass_wall_s"]))
 
 
 def kept_digests(checkout, seed):
@@ -106,15 +219,25 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent", help="checkout of the parent commit")
     ap.add_argument("change", help="checkout of the change")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", type=int, nargs="+", required=True)
+    ap.add_argument("--workload")
+    ap.add_argument("--seeds", type=int, nargs="+")
     ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--bench-rows", help="comma-separated graft.Bench rows")
+    ap.add_argument("--pairs", type=int, default=4)
+    ap.add_argument("--sf-dir", help="graft.Bench input directory")
     args = ap.parse_args()
-    if len(args.seeds) < 2:
-        ap.error("need at least two seeds for quartiles")
     sides = {"parent": os.path.abspath(args.parent),
              "change": os.path.abspath(args.change)}
     bound = bounds(sides["change"])
+    if args.bench_rows:
+        if args.pairs < 2 or not args.sf_dir:
+            ap.error("--bench-rows needs --sf-dir and at least two --pairs")
+        rows = [r.strip() for r in args.bench_rows.split(",") if r.strip()]
+        bench_rows_ab(sides, rows, args.pairs, os.path.abspath(args.sf_dir),
+                      bound)
+        return
+    if not args.workload or not args.seeds or len(args.seeds) < 2:
+        ap.error("need --workload and at least two --seeds for quartiles")
 
     values = {s: {m: [] for m in METRICS} for s in sides}
     problems = []
@@ -146,14 +269,7 @@ def main():
           f"for host drift (setup_s apart by more than its bound "
           f"{bound['setup_s']})")
     for m in METRICS:
-        p, c = values["parent"][m], values["change"][m]
-        wins = sum(b < a for a, b in zip(p, c))
-        (p1, pm, p3), (c1, cm, c3) = quartiles(p), quartiles(c)
-        print(f"  {m:12s} parent {pm:8.3f} [{p1:.3f}, {p3:.3f}]  "
-              f"change {cm:8.3f} [{c1:.3f}, {c3:.3f}]  "
-              f"median {100 * (cm / pm - 1):+6.1f}%  "
-              f"drop {pm - cm:.3f} vs parent IQR {p3 - p1:.3f}  "
-              f"change won {wins}/{len(p)}  {verdict(p, c, bound[m])}")
+        print(summary(m, values["parent"][m], values["change"][m], bound[m]))
     if args.workload == "curate_chain" and not problems:
         print("  kept-set digests equal across the two checkouts on every seed")
     for line in problems:

@@ -1,4 +1,5 @@
-"""Unit tests of `tools/ab.py`'s verdict rule and host-drift flag.
+"""Unit tests of `tools/ab.py`'s verdict rule, host-drift flag and
+graft.Bench line parser.
 
     python3 -m unittest discover -s tools
 """
@@ -7,7 +8,7 @@ import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from ab import drifted, verdict  # noqa: E402
+from ab import drifted, parse_bench, verdict  # noqa: E402
 
 # ten parent runs with median 10.0 and quartile spread 0.5 (5% of it)
 PARENT = [9.6, 9.7, 9.8, 9.9, 10.0, 10.0, 10.1, 10.2, 10.3, 10.4]
@@ -52,6 +53,38 @@ class DriftTest(unittest.TestCase):
         self.assertFalse(drifted(4.0, 3.1, 0.25))
         self.assertTrue(drifted(4.0, 5.1, 0.25))
         self.assertTrue(drifted(4.0, 2.9, 0.25))
+
+
+# graft.Bench's stdout (log noise, then its one record line last) and
+# its detail file: a headline row has two reruns, any other row none
+BENCH_OUT = """[bench] warm-up 3.1 s
+{"not": "the record"}
+{"metric":"total","value":9.5,"unit":"sec","queries":{"graph_pagerank":2.6},"errors":[],"canary":{"cpu_spin_start":0.612,"cpu_spin_end":0.64},"method":"\\u00a75"}
+"""
+DETAIL = {"single_pass": {"graph_pagerank": 4.0, "graph_bfs": 1.25},
+          "reruns": {"graph_pagerank": [2.5, 2.7]}}
+
+
+class BenchLineTest(unittest.TestCase):
+
+    def test_reads_each_rows_drop_max_mean_and_the_start_canary(self):
+        values, canary = parse_bench(BENCH_OUT, DETAIL,
+                                     ["graph_bfs", "graph_pagerank"])
+        self.assertEqual(canary, 0.612)
+        self.assertEqual(values["graph_bfs"], 1.25)
+        self.assertAlmostEqual(values["graph_pagerank"], 2.6)
+
+    def test_a_missing_or_failed_row_is_named(self):
+        with self.assertRaisesRegex(ValueError, "graph_ppr"):
+            parse_bench(BENCH_OUT, DETAIL, ["graph_pagerank", "graph_ppr"])
+        failed = BENCH_OUT.replace('"errors":[]', '"errors":["graph_bfs"]')
+        with self.assertRaisesRegex(ValueError, "graph_bfs"):
+            parse_bench(failed, DETAIL, ["graph_bfs"])
+
+    def test_output_without_a_record_fails(self):
+        with self.assertRaisesRegex(ValueError, "no graft.Bench result line"):
+            parse_bench("[bench] graph_pagerank failed\n", DETAIL,
+                        ["graph_pagerank"])
 
 
 if __name__ == "__main__":

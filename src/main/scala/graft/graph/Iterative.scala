@@ -1,8 +1,11 @@
 package graft.graph
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graphx.{Graph, VertexRDD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.Hints
 
@@ -67,13 +70,16 @@ object Iterative {
     * (node, dist) in node order. */
   def bfs(spark: SparkSession, graph: LocalGraph.Reader, src: LocalGraph.Pick,
       maxDepth: Int): DataFrame = {
-    import spark.implicits._
     val reached = LocalGraph.run(graph) { g =>
       val dist = g.hops(src(g).toSeq.map(g.index).filter(_ >= 0), maxDepth)
       g.ids.indices.filter(dist(_) != Int.MaxValue)
-        .map(v => (g.ids(v), dist(v))).toArray
+        .map(v => Row(g.ids(v), dist(v))).toArray
     }
-    reached.toSeq.toDF("node", "dist")
+    // Rows against an explicit schema, not `toDF`, for the reason
+    // DampedRank.frame gives
+    spark.createDataFrame(reached.toSeq.asJava,
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("dist", IntegerType, nullable = false))))
   }
 
   /** K-core decomposition (C12) via the distributed h-operator fixpoint

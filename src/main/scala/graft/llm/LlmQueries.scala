@@ -329,16 +329,17 @@ object LlmQueries {
       // IVF scale path: coarse-quantize the corpus into cells, probe the
       // nProbe nearest cells per query — |Q|·nProbe/nlist·|C| candidates
       val e = emb(s, d)
-      Similarity.ivfTopK(e.filter(col("vec_id") < 10), e, k = 5,
-        nProbe = 4)
+      Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+        Similarity.ivfIndex(e), k = 5, nProbe = Seq(4))
     }),
     "llm_ann_ivf_trained" -> ((s, d) => {
       // trained coarse quantizer: deterministic Lloyd centers feed the
       // same assignment/probe/rank plan — the whole index (training
       // included) is replayed by the composed oracle SQL
       val e = emb(s, d)
-      Similarity.ivfTopKTrained(e.filter(col("vec_id") < 10), e, k = 5,
-        nlist = 4, iters = 5, nProbe = 2)
+      Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+        Similarity.ivfTrainedIndex(e, nlist = 4, iters = 5), k = 5,
+        nProbe = Seq(2))
     }),
     "llm_ann_ivf_residual" -> ((s, d) => {
       // two-level residual index at PARTIAL probes — nProbe=2 of
@@ -347,8 +348,9 @@ object LlmQueries {
       // approximation (train both levels, assign, route, rank), not
       // just the exhaustive-probe exactness the contract tests cover
       val e = emb(s, d)
-      Similarity.ivfResidualTopK(e.filter(col("vec_id") < 10), e, k = 5,
-        nlist = 4, nsplit = 2, nProbe = 2, nProbeSub = 1, iters = 5)
+      Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+        Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2),
+          iters = 5), k = 5, nProbe = Seq(2, 1))
     }),
     "llm_ann_ivf_residual3" -> ((s, d) => {
       // three-level residual index at PARTIAL probes (round 11 — the
@@ -356,9 +358,9 @@ object LlmQueries {
       // three Lloyd trainings, the (cell, sub, sub2) assignment and
       // the three-stage routing replay in one oracle statement
       val e = emb(s, d)
-      Similarity.ivfResidual3TopK(e.filter(col("vec_id") < 10), e,
-        k = 5, nlist = 4, nsplit = 2, nsplit3 = 2,
-        nProbe = 2, nProbeSub = 1, nProbeSub3 = 1, iters = 5)
+      Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+        Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2, 2),
+          iters = 5), k = 5, nProbe = Seq(2, 1, 1))
     }),
     "llm_ann_pq" -> ((s, d) => {
       // product-quantization ADC: corpus compressed to m=4 codes, a
@@ -426,28 +428,23 @@ object LlmQueries {
         Similarity.recallAtK(ap, bf, k = 5).withColumn("method", lit(m))
       // the two-level residual index is the shared prefix of THREE of
       // the swept variants — ivf_residual probes it directly,
-      // ivf_residual3 extends it one level, and ivf_trained's Lloyd
-      // cells + coarse assignment are exactly its level 1 (same
-      // centers, same packedArgmin) — so it is built ONCE here instead
-      // of three Lloyd trainings + three coarse argmins (r14 opt
-      // round; rows byte-identical by construction, the Indexed entry
-      // points are the same code the composed builders call)
-      val (c1, c2, a2raw) = Similarity.ivfResidualIndex(e,
-        nlist = 4, nsplit = 2, iters = 5)
-      val a2 = a2raw.localCheckpoint()
-      row("ivf",
-          Similarity.ivfTopK(q, e, k = 5, nProbe = 4))
-        .union(row("ivf_residual", Similarity.ivfResidualTopKIndexed(
-          q, c1, c2, a2, k = 5, nProbe = 2, nProbeSub = 1)))
-        .union(row("ivf_residual3", {
-          val (d1, d2, d3, a3) = Similarity.ivfResidual3IndexFrom(
-            e, c1, c2, a2, nsplit3 = 2, iters = 5)
-          Similarity.ivfResidual3TopKIndexed(q, d1, d2, d3, a3, k = 5,
-            nProbe = 2, nProbeSub = 1, nProbeSub3 = 1)
-        }))
-        .union(row("ivf_trained", Similarity.ivfTopKIndexed(q, c1,
-          a2.select(col("neighbor_id"), col("ce"), col("cell")),
-          k = 5, nProbe = 2)))
+      // ivf_residual3 adds one level to it, and ivf_trained is exactly
+      // its level 0 (same centers, same assignment) — so it is built
+      // ONCE here instead of three Lloyd trainings + three coarse
+      // argmins (rows byte-identical by construction: the fused
+      // builders run the same steps)
+      val i2 = Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2),
+        iters = 5)
+      val ix = i2.copy(assignment = i2.assignment.localCheckpoint())
+      row("ivf", Similarity.ivfProbe(q, Similarity.ivfIndex(e), k = 5,
+          nProbe = Seq(4)))
+        .union(row("ivf_residual",
+          Similarity.ivfProbe(q, ix, k = 5, nProbe = Seq(2, 1))))
+        .union(row("ivf_residual3", Similarity.ivfProbe(q,
+          Similarity.addLevel(ix, nsplit = 2, iters = 5), k = 5,
+          nProbe = Seq(2, 1, 1))))
+        .union(row("ivf_trained",
+          Similarity.ivfProbe(q, ix.take(1), k = 5, nProbe = Seq(2))))
         .union(row("ivfpq", Similarity.ivfPqTopK(q, e, k = 5,
           nProbe = 4, rerank = 20)))
         .union(row("pq", Similarity.pqTopK(q, e, k = 5)))
@@ -460,7 +457,8 @@ object LlmQueries {
       val e = emb(s, d)
       val q = e.filter(col("vec_id") < 10)
       Similarity.recallAtK(
-        Similarity.ivfTopK(q, e, k = 5, nProbe = 4),
+        Similarity.ivfProbe(q, Similarity.ivfIndex(e), k = 5,
+          nProbe = Seq(4)),
         Similarity.bruteForceTopK(q, e, k = 5), k = 5)
     }),
     "llm_curation" -> ((s, d) =>
@@ -1762,8 +1760,8 @@ object LlmQueries {
     sb.toString
   }
 
-  /** Two-level residual-IVF replica ([[Similarity.ivfResidualTopK]]):
-    * level 1 is the exact-trainer Lloyd chain + rounded-argmin corpus
+  /** Two-level residual-IVF replica ([[Similarity.ivfTrainedIndex]]
+    * with one residual level): level 1 is the exact-trainer Lloyd chain + rounded-argmin corpus
     * assignment (the llm_ann_ivf_trained stages), then residuals
     * against the assigned coarse center, a [[residualLloydCte]] second
     * Lloyd run, sub assignment, two-stage query routing (nProbe coarse
@@ -1816,8 +1814,8 @@ object LlmQueries {
       "ORDER BY query_id, rank"
   }
 
-  /** Three-level residual-IVF replica ([[Similarity.ivfResidual3TopK]]):
-    * the [[annIvfResidualSql]] chain extended once — level-2 residuals
+  /** Three-level residual-IVF replica ([[Similarity.ivfTrainedIndex]]
+    * with two residual levels): the [[annIvfResidualSql]] chain extended once — level-2 residuals
     * against the assigned second-level center, a third
     * [[residualLloydCte]] run (prefix `t`), sub2 assignment, and the
     * third routing stage on the query's level-2 residual; candidates

@@ -1,23 +1,27 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths, mirroring the reference's exact-vs-approximate KNN split
+  * The reference's exact-vs-approximate KNN split
   * (`ml/KNNRunner.scala:282-342` brute force vs the spill-tree estimator):
   *
   *  - [[bruteForceTopK]]: exact top-k by dot product/cosine. The query set
   *    is broadcast (it is small by construction), the corpus is never
   *    shuffled, and the per-query top-k is a window rank — so the cost is
   *    one scan of the corpus regardless of cluster size.
-  *  - [[lshNeighbors]]: `BucketedRandomProjectionLSH` bucketed join — the
-  *    scale path when the query set is itself huge; candidates meet only
-  *    within hash buckets.
+  *  - approximate indexes: sign-projection LSH, the [[IvfIndex]] of any
+  *    depth (strided or trained level 0, residual levels), PQ and IVF+PQ;
+  *    [[lshNeighbors]] is MLlib's `BucketedRandomProjectionLSH` join.
   *
   * Dot products run in double precision, accumulated left-to-right
   * (`aggregate` HOF), which matches DuckDB's `list_inner_product` on
@@ -34,32 +38,14 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k neighbors of each query by (rounded) dot product.
-    * Ranking uses the 1e-6-rounded score with id tiebreak so results are
-    * stable across engines/partitionings despite float ulp wobble. */
+  /** Exact top-k neighbors of each query by (rounded) dot product,
+    * ranked by [[topK]]. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").as("ce"))
-    // native codegen'd kernel when the session carries GraftExtensions
-    // (no per-row intermediate array); identical IEEE sequence either way
-    val rawDot: Column =
-      if (queries.sparkSession.catalog.functionExists("graft_dot"))
-        expr("graft_dot(qe, ce)")
-      else dot(col("qe"), col("ce"))
-    val scored = c.join(q)
-      .select(col("query_id"), col("neighbor_id"), rawDot.as("raw_dot"))
-      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
-        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot6").desc, col("neighbor_id"))
-    scored
+    topK(corpusRows(corpus).join(q)
       .select(col("query_id"), col("neighbor_id"),
-        row_number().over(w).as("rank"),
-        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
+        dotExpr(queries.sparkSession, "qe", "ce").as("raw_dot")), k)
   }
 
   /** Deterministic sign-projection LSH: like [[lshNeighbors]] but the
@@ -104,41 +90,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         (floor(col("d") * 10000 + 0.5) / 10000).as("dist"))
       .orderBy("query_id", "neighbor_id")
-  }
-
-  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
-    * into cells by nearest coarse centroid; each query probes only its
-    * `nProbe` nearest cells. Mirrors the coarse-quantize-then-scan
-    * structure of FAISS-style IVF indexes, re-expressed as two joins:
-    *
-    *  - assignment: corpus ⋈ broadcast(centroids) + map-side
-    *    `min(struct(dist, cid))` — a per-row argmin whose exchange
-    *    carries one (vec_id, cell, embedding) row per corpus vector
-    *    (the index must store the vector), never the |corpus|×|cents|
-    *    scored expansion — partial aggregation collapses that
-    *    map-side;
-    *  - probe: query cells ⋈ corpus cells on the cell id — candidate
-    *    cost is |Q| · nProbe/nlist · |C| instead of |Q|×|C|.
-    *
-    * Centroids here are the deterministic `vec_id % centroidStride = 0`
-    * subset, so the whole index is engine-replicable (oracle-checkable);
-    * a k-means-trained centroid set drops in without changing the plan.
-    * Distances/scores are rounded (1e-6) with id tiebreaks, so ranking
-    * is stable across engines and partitionings.
-    *
-    * Scale note: a FIXED stride makes nlist = |C|/stride, so the
-    * build-side assignment join (|C|·nlist distances) is quadratic in
-    * the corpus — measured 15.4× runtime at 10× data with stride 31.
-    * `centroidStride = 0` (the default) picks the stride from the
-    * corpus via [[adaptiveStride]] — stride doubles per 4× corpus
-    * growth, i.e. stride ∝ √|C| and nlist ∝ √|C| (the FAISS sizing
-    * rule), balancing build (|C|^1.5) against probe
-    * (|Q| · nProbe · √|C|) and keeping the centroid broadcast bounded
-    * (~72k × dim at 1e9 vectors). */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      centroidStride: Int = 0, nProbe: Int = 4): DataFrame = {
-    val (cents, assign) = ivfIndex(corpus, centroidStride)
-    ivfTopKIndexed(queries, cents, assign, k, nProbe)
   }
 
   /** Coarse-centroid stride ladder: 31 up to 5,000 vectors (the pinned
@@ -206,13 +157,11 @@ object Similarity {
     (0 until numTables).map(t => if (t < rem) base + 1 else base)
   }
 
-  /** Shared distance kernels for the split build/probe IVF pair: the
-    * BUILD-side cell assignment and the PROBE-side query routing must
-    * stay bit-identical (rounding, native fallback and all) or a
-    * persisted index silently disagrees with its probes — one
-    * definition serves both sides. */
-  private def euclidExpr(spark: org.apache.spark.sql.SparkSession,
-      a: String, b: String): Column =
+  /** Shared distance kernels: the BUILD-side cell assignment and the
+    * PROBE-side query routing must stay bit-identical (rounding, native
+    * fallback and all) or a persisted index silently disagrees with its
+    * probes, so one definition serves both sides. */
+  private def euclidExpr(spark: SparkSession, a: String, b: String): Column =
     if (spark.catalog.functionExists("graft_euclid"))
       expr(s"graft_euclid($a, $b)")
     else sqrt(aggregate(
@@ -221,85 +170,51 @@ object Similarity {
           (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v))
 
-  private def dotExpr(spark: org.apache.spark.sql.SparkSession,
-      a: String, b: String): Column =
+  /** [[dot]] through the codegen'd `graft_dot` kernel when the session
+    * carries GraftExtensions: the same IEEE sequence either way. */
+  private def dotExpr(spark: SparkSession, a: String, b: String): Column =
     if (spark.catalog.functionExists("graft_dot"))
       expr(s"graft_dot($a, $b)")
     else dot(col(a), col(b))
 
-  /** IVF index build as a PERSISTABLE artifact — the ANN counterpart of
-    * the minhash index tables ([[Dedup.indexDelta]]): `centroids`
-    * `(cid, cv)` and `assign` `(neighbor_id, ce, cell)`, both plain
-    * parquet-able frames. At 100 TB the index is built ONCE (the
-    * corpus-side argmin scan is the only corpus-sized job) and every
-    * later query batch probes the stored tables via
-    * [[ivfTopKIndexed]] — the corpus is never re-assigned. Write the
-    * assignment PARTITIONED BY CELL
-    * (`assign.write.partitionBy("cell")`) — then a probe's cell
-    * equi-join partition-prunes to the nProbe probed cells' files, and
-    * probe I/O is nProbe/nlist of the index instead of a full
-    * corpus-sized read. [[ivfTopK]] is exactly build + probe fused, so
-    * the fused oracle transfers to the round-tripped path
-    * (WritersAndPipelineSpec asserts partitioned round-trip
-    * equality). */
-  def ivfIndex(corpus: DataFrame,
-      centroidStride: Int = 0): (DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    val n = corpus.count()
-    val stride =
-      if (centroidStride > 0) centroidStride
-      else if (smoothSizing(spark)) smoothStride(n)
-      else adaptiveStride(n)
-    val cents = broadcast(
-      corpus.filter(pmod(col("vec_id"), lit(stride)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-    // corpus→cell argmin as a map-side partial agg (struct min orders by
-    // rounded distance then centroid id — deterministic tiebreak).
-    // The argmin is COMPUTE-bound (n · nlist = n²/stride distance
-    // evals): a small parquet corpus arriving as one scan partition
-    // would run the whole build on one core (measured: full build+probe
-    // at the ×30 stress corpus, 29M evals, 8.5–21 s → 3.5 s once
-    // spread). Fan out only when the eval count can repay the
-    // exchange's fixed cost — n²/stride > 4M evals (the sf0.1 build is
-    // 129k evals and measured FASTER unspread: 0.78 vs 1.0 s).
-    val d6i = floor(euclidExpr(spark, "ce", "cv") * 1e6 + 0.5).cast("long")
-    val spread =
-      if (n * (n / stride) > 4_000_000L) Dedup.fanOut(corpus) else corpus
-    val assign = spread
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .join(cents)
-      .groupBy("neighbor_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      // the embedding payload REJOINS by id after the argmin: carrying
-      // it through the aggregate (the historic first(ce)) forced a
-      // non-fixed-width buffer — see [[packedArgmin]]
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce")), Seq("neighbor_id"))
-      .select(col("neighbor_id"), col("ce"), unpackId(col("mp")).as("cell"))
-    (cents, assign)
-  }
+  /** A codebook as a `(id, vec)` frame, each id its center's position.
+    * Built from Rows against an explicit schema (the one `toDF` would
+    * derive), which skips the reflective encoder a session's first
+    * `toDF` pays for. */
+  private def centersFrame(spark: SparkSession,
+      centers: Seq[Array[Double]], id: String, vec: String): DataFrame =
+    spark.createDataFrame(
+      centers.zipWithIndex.map { case (c, i) => Row(i.toLong, c.toSeq) }.asJava,
+      StructType(Seq(StructField(id, LongType, nullable = false),
+        StructField(vec, ArrayType(DoubleType, containsNull = false)))))
 
-  /** Packed argmin key: the build-side cell assignment aggregates
-    * n×nlist joined rows, and `min` over a STRUCT buffer cannot
-    * hash-aggregate (ObjectHashAggregate falls back to sort-based past
-    * its key threshold) — at 4.3M vectors × 4,096 centroids the
-    * resulting sort tried to spill the whole cross-product and filled
-    * the disk (round-10 wide-corpus probe; invisible at the pinned
-    * sizes, where the spill fit). Packing the (rounded-distance,
-    * id) order into ONE BIGINT makes the argmin a plain fixed-width
-    * `min`: HashAggregate with map-side partial collapse — nothing
-    * corpus×nlist-sized is ever sorted or spilled. Ordering is
-    * identical to the struct form (lexicographic (d6i, id), both
-    * non-negative). Bounds: id < 2^33 (8.6B — strided-cid vec_ids
+  /** The argmin is COMPUTE-bound (rows × centers distance evals): a
+    * small parquet corpus arriving as one scan partition would run it
+    * on one core (measured: build+probe at the ×30 stress corpus, 29M
+    * evals, 8.5–21 s → 3.5 s once spread). Fan out only when the eval
+    * count can repay the exchange's fixed cost, past 4M evals (the
+    * sf0.1 strided build is 129k evals and measured FASTER unspread:
+    * 0.78 vs 1.0 s). */
+  private def spread(df: DataFrame, evals: Long): DataFrame =
+    if (evals > 4_000_000L) Dedup.fanOut(df) else df
+
+  /** Packed argmin key: the cell assignment aggregates rows × centers
+    * joined rows, and `min` over a STRUCT buffer cannot hash-aggregate
+    * (ObjectHashAggregate falls back to sort-based past its key
+    * threshold): at 4.3M vectors × 4,096 centroids the resulting sort
+    * tried to spill the whole cross-product and filled the disk.
+    * Packing the (rounded-distance, id) order into ONE BIGINT makes the
+    * argmin a plain fixed-width `min`: HashAggregate with map-side
+    * partial collapse, nothing rows×centers-sized sorted or spilled.
+    * Ordering is identical to the struct form (lexicographic (d6i, id),
+    * both non-negative). Bounds: id < 2^33 (8.6B; strided-cid vec_ids
     * beyond that should use the trained path, whose ids are dense) and
-    * d6i clamped at 2^30−1 ≈ distance 1073.0 (far beyond any embedding
-    * distance this engine targets; ties at the clamp break by id).
-    * Both bounds are ENFORCED per row: an out-of-range id (only
-    * reachable through the strided paths, which pack raw vec_ids as
-    * cids) raises instead of silently corrupting the packed order, and
-    * a NULL distance (null embedding element / dimension mismatch)
-    * stays NULL — `min` then skips the row, so a degenerate centroid
-    * never wins an argmin by masquerading as the clamp value. */
+    * d6i clamped at 2^30−1 ≈ distance 1073.0 (ties at the clamp break by
+    * id). Both are ENFORCED per row: an out-of-range id raises instead
+    * of silently corrupting the packed order, and a NULL distance (null
+    * embedding element / dimension mismatch) stays NULL, so `min` skips
+    * it and a degenerate center never wins by masquerading as the
+    * clamp value. */
   private def packedArgmin(d6i: Column, id: Column): Column = {
     val guardedId = when(id < 0 || id >= lit(1L << 33),
       raise_error(concat(lit("packedArgmin id out of [0, 2^33): "),
@@ -310,39 +225,330 @@ object Similarity {
 
   private def unpackId(packed: Column): Column = pmod(packed, lit(1L << 33))
 
-  /** The distance-kernel identity of a session — which implementation
-    * [[euclidExpr]] resolves to. Persisted with every written index
-    * ([[ivfIndexWrite]]) and checked on load ([[ivfIndexRead]]): cell
-    * assignment and probe routing must use the SAME kernel, and a
-    * probe session whose kernel differs from the builder's must fail
-    * loudly instead of silently degrading recall if the two ever
-    * diverge by an ulp at a rounding boundary. */
-  private def kernelId(spark: org.apache.spark.sql.SparkSession): String =
+  /** The one cell assignment: for each group of `rows` (its `keys`), the
+    * id of the codebook entry nearest the vector column `x`, as `out`.
+    * The codebook `(id, vec)` is broadcast and meets the rows by cross
+    * join, or on the `on` columns when each row may only take entries
+    * sharing them. The argmin orders by the 1e-6-rounded distance, then
+    * the lower id ([[packedArgmin]]): a map-side partial aggregate, so
+    * the exchange carries keys and one BIGINT, never the payload. */
+  private def assign(rows: DataFrame, keys: Seq[String], x: String,
+      cents: DataFrame, id: String, vec: String, out: String,
+      on: Seq[String] = Nil): DataFrame = {
+    val d6i =
+      floor(euclidExpr(rows.sparkSession, x, vec) * 1e6 + 0.5).cast("long")
+    val joined =
+      if (on.isEmpty) rows.join(broadcast(cents))
+      else rows.join(broadcast(cents), on)
+    joined.groupBy(keys.map(col): _*)
+      .agg(min(packedArgmin(d6i, col(id))).as("mp"))
+      .select(keys.map(col) :+ unpackId(col("mp")).as(out): _*)
+  }
+
+  /** `rows` plus `out`: the vector `x` minus the center each level's key
+    * picks from `codebooks`, subtracted level by level in doubles. It is
+    * what the next level trains, assigns and routes on. */
+  private def residual(rows: DataFrame, codebooks: Seq[DataFrame],
+      x: String, out: String): DataFrame = {
+    val withCenters = codebooks.zipWithIndex.foldLeft(rows) {
+      case (df, (cb, j)) =>
+        val lv = level(j)
+        df.join(broadcast(cb.select(col(lv.id), col(lv.vec))),
+          col(lv.key) === col(lv.id))
+    }
+    val r = codebooks.indices.foldLeft(transform(col(x), _.cast("double"))) {
+      (acc, j) => zip_with(acc, col(level(j).vec), (a, c) => a - c)
+    }
+    withCenters.select(rows.columns.map(col) :+ r.as(out): _*)
+  }
+
+  /** The rank stage every dot-scored top-k ends in: per query the k
+    * best `raw_dot`, ordered by the 1e-6-rounded score with the lower
+    * neighbor id first on a tie (stable across engines and
+    * partitionings despite float ulp wobble); `sim` is the dot rounded
+    * to 1e-4. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("dot6").desc, col("neighbor_id"))
+    scored
+      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
+        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
+      .select(col("query_id"), col("neighbor_id"),
+        row_number().over(w).as("rank"),
+        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
+      .filter(col("rank") <= k)
+      .orderBy("query_id", "rank")
+  }
+
+  /** IVF (inverted-file) approximate top-k index, of any depth: FAISS's
+    * coarse-quantize-then-scan re-expressed as joins. `codebooks` are
+    * the levels' center tables, in order; `assignment` holds one
+    * `(neighbor_id, ce, <level keys>)` row per corpus vector (the index
+    * must store the vector). A query routes to its `nProbe` nearest
+    * entries per level and meets the assignment on the composite key, so
+    * candidate cost is |Q| · Π nProbe/|codebook| · |C| instead of
+    * |Q|×|C|. Level 0 is a strided corpus subset ([[ivfIndex]]) or
+    * Lloyd-trained ([[ivfTrainedIndex]]); each further level
+    * ([[addLevel]]) is ONE SHARED codebook trained on the residuals
+    * against the levels above (the FAISS residual quantizer), so the key
+    * refines to up to Π|codebook| cells while broadcast state stays the
+    * sum of the codebooks, never their product. Every level is
+    * rounded-distance/id-tiebreak deterministic, so the whole index is
+    * engine-replicable and oracle-checkable.
+    *
+    * `n` is the corpus row count when the build knew it (else −1); later
+    * levels size their training subsample from it. */
+  final case class IvfIndex(codebooks: Seq[DataFrame], assignment: DataFrame,
+      n: Long = -1L) {
+    def levels: Int = codebooks.size
+
+    /** The index's first `l` levels. */
+    def take(l: Int): IvfIndex = IvfIndex(codebooks.take(l),
+      assignment.select(("neighbor_id" +: "ce" +: levelKeys(l)).map(col): _*),
+      n)
+  }
+
+  /** Level `j`'s names: its codebook's `(id, vec)` columns, its key in
+    * the assignment (a partition column when written) and its directory
+    * in a written index. */
+  private final case class Level(id: String, vec: String, key: String,
+      dir: String)
+
+  private def level(j: Int): Level = j match {
+    case 0 => Level("cid", "cv", "cell", "centroids")
+    case 1 => Level("sid", "sv", "sub", "subcentroids")
+    case 2 => Level("tid", "tv", "sub2", "subcentroids3")
+    case _ => Level(s"id$j", s"v$j", s"sub$j", s"subcentroids${j + 1}")
+  }
+
+  private def levelKeys(l: Int): Seq[String] = (0 until l).map(level(_).key)
+
+  /** The strided coarse centroids `(cid, cv)`, the deterministic
+    * `vec_id % stride = 0` subset, with the corpus count and the
+    * stride. A FIXED stride makes nlist = |C|/stride, so the assignment
+    * (|C|·nlist distances) is quadratic in the corpus (measured 15.4×
+    * runtime at 10× data with stride 31); `centroidStride = 0` picks the
+    * stride from the corpus via [[adaptiveStride]] (or [[smoothStride]]),
+    * stride ∝ √|C| and nlist ∝ √|C| (the FAISS sizing rule), balancing
+    * build (|C|^1.5) against probe (|Q| · nProbe · √|C|). */
+  private def stridedCenters(corpus: DataFrame,
+      centroidStride: Int): (DataFrame, Long, Int) = {
+    val n = corpus.count()
+    val stride =
+      if (centroidStride > 0) centroidStride
+      else if (smoothSizing(corpus.sparkSession)) smoothStride(n)
+      else adaptiveStride(n)
+    (corpus.filter(pmod(col("vec_id"), lit(stride)) === 0)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv")), n, stride)
+  }
+
+  private def corpusRows(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+
+  /** A level-0 assignment with the vector payload: the payload REJOINS
+    * by id after the fixed-width argmin (carrying it through the
+    * aggregate forced a non-fixed-width buffer, see [[packedArgmin]]). */
+  private def firstLevel(corpus: DataFrame, cents: DataFrame, n: Long,
+      evals: Long): IvfIndex =
+    IvfIndex(Seq(cents),
+      assign(spread(corpusRows(corpus), evals), Seq("neighbor_id"), "ce",
+        cents, "cid", "cv", "cell")
+        .join(corpusRows(corpus), Seq("neighbor_id"))
+        .select(col("neighbor_id"), col("ce"), col("cell")), n)
+
+  /** One-level IVF index on the strided centroids ([[stridedCenters]]);
+    * the oracle replays it engine-exactly. */
+  def ivfIndex(corpus: DataFrame, centroidStride: Int = 0): IvfIndex = {
+    val (cents, n, stride) = stridedCenters(corpus, centroidStride)
+    firstLevel(corpus, cents, n, n * (n / stride))
+  }
+
+  /** IVF index on a TRAINED coarse quantizer: level 0 is the
+    * deterministic Lloyd centers ([[trainCenters]]; `nlist = 0` sizes it
+    * by [[adaptiveNlist]]), the FAISS-style production shape where
+    * trained cells cut the per-cell candidate skew of striding; then one
+    * [[addLevel]] per entry of `splits` (0 = [[adaptiveNsplit]]). The
+    * training is engine-replicable, so the WHOLE index (training,
+    * assignment, probe, rank) is oracle-checkable. */
+  def ivfTrainedIndex(corpus: DataFrame, nlist: Int = 0,
+      splits: Seq[Int] = Nil, iters: Int = 5): IvfIndex = {
+    // the count sizes adaptive levels, the residual trainers' subsamples
+    // and the fan-out guard; an explicit one-level build needs none
+    val n = if (nlist > 0 && splits.isEmpty) -1L else corpus.count()
+    val k = if (nlist > 0) nlist else adaptiveNlist(n)
+    val cents = centersFrame(corpus.sparkSession,
+      trainCenters(corpus, k, iters, n), "cid", "cv")
+    splits.foldLeft(firstLevel(corpus, cents, n, n * k))(addLevel(_, _, iters))
+  }
+
+  /** The trained-level rule: exact distances on the whole corpus up to
+    * 64 centers (the rule every pinned oracle replays), the subsampled
+    * rounded-distance [[lloydCentersJoin]] past that. */
+  private def trainCenters(emb: DataFrame, k: Int, iters: Int,
+      n: Long): Array[Array[Double]] =
+    if (k <= 64) graft.ml.Unsupervised.lloydCenters(emb, k, iters).centers
+    else lloydCentersJoin(emb, k, iters, n)
+
+  /** One more index level: a SHARED codebook of `nsplit` centers (0 =
+    * [[adaptiveNsplit]] for this level) trained by [[lloydCentersJoin]]
+    * on every vector's residual against the levels above, and each
+    * vector's nearest entry as the next key. Sharing the codebook across
+    * cells makes the level trainable as one distributed Lloyd run
+    * instead of one fit per cell. ONE checkpoint carries the assignment
+    * and the residual, so the level reads the levels above once. */
+  def addLevel(index: IvfIndex, nsplit: Int = 0, iters: Int = 5): IvfIndex = {
+    val l = index.levels
+    val lv = level(l)
+    // one row per corpus vector at every level, so n is the corpus count
+    val n = if (index.n >= 0) index.n else index.assignment.count()
+    val k = if (nsplit > 0) nsplit else adaptiveNsplit(n, l)
+    val withResid =
+      residual(index.assignment, index.codebooks, "ce", "resid")
+        .localCheckpoint()
+    val cents = centersFrame(index.assignment.sparkSession,
+      lloydCentersJoin(withResid.select(col("neighbor_id").as("vec_id"),
+        col("resid").as("embedding")), k, iters, n), lv.id, lv.vec)
+    val key = assign(withResid.select("neighbor_id", "resid"),
+      Seq("neighbor_id"), "resid", cents, lv.id, lv.vec, lv.key)
+    IvfIndex(index.codebooks :+ cents,
+      withResid.select(index.assignment.columns.map(col): _*)
+        .join(key, Seq("neighbor_id")), n)
+  }
+
+  /** The probe routing alone: `(query_id, qe, <level keys>)`, each
+    * query's `nProbe(l)` nearest level-`l` entries per key chosen above
+    * it, ordered by rounded distance, then id. Level 0 routes the query;
+    * each later level routes its residual `qr` against the centers
+    * chosen above, carried down from level to level. Exposed so
+    * measurement tooling can count the deterministic candidate volume. */
+  private[graft] def probeKeys(queries: DataFrame, codebooks: Seq[DataFrame],
+      nProbe: Seq[Int]): DataFrame = {
+    require(nProbe.size == codebooks.size,
+      s"one nProbe per level: ${nProbe.size} for ${codebooks.size} levels")
+    val spark = queries.sparkSession
+    val q0 = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("qe"))
+    codebooks.zipWithIndex.foldLeft(q0) { case (q, (cb, l)) =>
+      val lv = level(l)
+      val kept = ("query_id" +: "qe" +: levelKeys(l)).map(col)
+      val x = if (l == 0) "qe" else "qr"
+      val next =
+        if (l + 1 == codebooks.size) Nil
+        else Seq(zip_with(if (l == 0) transform(col("qe"), _.cast("double"))
+          else col("qr"), col(lv.vec), (a, c) => a - c).as("next"))
+      q.join(broadcast(cb.select(col(lv.id), col(lv.vec))))
+        .select(kept ++ next :+ col(lv.id) :+
+          (floor(euclidExpr(spark, x, lv.vec) * 1e6 + 0.5) / 1e6).as("d"): _*)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(("query_id" +: levelKeys(l)).map(col): _*)
+            .orderBy(col("d"), col(lv.id))))
+        .filter(col("rn") <= nProbe(l))
+        .select(kept ++ next.map(_ => col("next").as("qr")) :+
+          col(lv.id).as(lv.key): _*)
+    }
+  }
+
+  /** Top-k through an [[IvfIndex]] built in this session or read back
+    * with [[ivfRead]]: route ([[probeKeys]]), meet the assignment on the
+    * composite key, rank ([[topK]]). An empty `nProbe` takes the default
+    * operating point: 4 for one level, else (8, 3) and then 2 per level.
+    * (8, 3) measured recall@5 0.87 on the ×30 past-cap geometry model
+    * (n = 60k, nlist = 20, nsplit = 3, `graft.tools.ResidualRecall`)
+    * against 0.62 at (4, 2); coarse routing dominates the loss, so
+    * widening spends its candidate budget on level 0 first.
+    *
+    * `staticPrune = true` is the persisted-index deployment path: the
+    * probed keys (bounded by |Q|·Π nProbe) are collected and applied as
+    * ONE literal set filter on a packed key over the partition columns,
+    * so an index written by [[ivfWrite]] provably reads only the probed
+    * cells' files (PlanSpec asserts the scan's partition count), with no
+    * reliance on runtime DPP heuristics. The composite equi-join stays
+    * the exact filter either way. */
+  def ivfProbe(queries: DataFrame, index: IvfIndex, k: Int,
+      nProbe: Seq[Int] = Nil, staticPrune: Boolean = false): DataFrame = {
+    val probes =
+      if (nProbe.nonEmpty) nProbe
+      else if (index.levels == 1) Seq(4)
+      else Seq(8, 3) ++ Seq.fill(index.levels - 2)(2)
+    val keys = levelKeys(index.levels)
+    val routed0 = probeKeys(queries, index.codebooks, probes)
+    val routed = if (staticPrune) routed0.localCheckpoint() else routed0
+    val target =
+      if (staticPrune) probedOnly(index.assignment, routed, keys)
+      else index.assignment
+    topK(routed.join(target, keys)
+      .select(col("query_id"), col("neighbor_id"),
+        dotExpr(queries.sparkSession, "qe", "ce").as("raw_dot")), k)
+  }
+
+  /** The assignment restricted to the routed keys by one set-membership
+    * filter on a packed key, not an OR chain (one conjunction per probed
+    * key stalls or stack-overflows Catalyst on exactly the large-index
+    * path static pruning exists for). Levels past the first share 48
+    * bits, at most 16 each; level 0 keeps the rest of 63. A key outside
+    * its bits could collide and silently read extra files, so it fails
+    * loudly instead (the keys are on the driver: the check is free). An
+    * empty query batch probes nothing. */
+  private def probedOnly(assignment: DataFrame, routed: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val sub = math.min(16, 48 / math.max(1, keys.size - 1))
+    val widths = (63 - sub * (keys.size - 1)) +: Seq.fill(keys.size - 1)(sub)
+    val shifts = widths.scanRight(0)(_ + _).tail
+    val packed = routed.select(keys.map(col): _*).distinct()
+      .collect() // bounded: <= |Q| * prod(nProbe) keys
+      .map(r => keys.indices.map { j =>
+        val v = r.getLong(j)
+        require(v >= 0 && (v >>> widths(j)) == 0,
+          s"staticPrune packed key out of budget: ${keys(j)}=$v (< " +
+            s"2^${widths(j)}) — rebuild the index with codebooks inside " +
+            "the pack's bit budget")
+        v << shifts(j)
+      }.sum)
+    if (packed.isEmpty) assignment.limit(0)
+    else assignment.filter(keys.zip(shifts)
+      .map { case (c, s) => shiftleft(col(c).cast("long"), s) }
+      .reduce(_ + _).isInCollection(packed))
+  }
+
+  /** The distance-kernel identity of a session, which implementation
+    * [[euclidExpr]] resolves to. Persisted with every written index and
+    * checked on load: cell assignment and probe routing must use the
+    * SAME kernel, and a probe session whose kernel differs from the
+    * builder's must fail loudly instead of silently degrading recall if
+    * the two ever diverge by an ulp at a rounding boundary. */
+  private def kernelId(spark: SparkSession): String =
     if (spark.catalog.functionExists("graft_euclid")) "graft_euclid/1"
     else "builtin_hof_euclid/1"
 
-  /** Persist an [[ivfIndex]] as its deployment layout: `centroids`,
-    * `assign` PARTITIONED BY CELL (so probes partition-prune to the
-    * nProbe probed cells' files), and a one-row `meta` frame recording
-    * the building session's distance kernel + format version. */
-  def ivfIndexWrite(centroids: DataFrame, assign: DataFrame,
-      dir: String): Unit = {
-    val spark = centroids.sparkSession
+  /** Persist an [[IvfIndex]] in its deployment layout: one directory per
+    * codebook (`centroids`, `subcentroids`, `subcentroids3`, …), the
+    * assignment PARTITIONED BY its level keys (so a static-pruned probe
+    * reads only the probed cells' files), and a one-row `meta` recording
+    * the building session's distance kernel. */
+  def ivfWrite(index: IvfIndex, dir: String): Unit = {
+    val spark = index.assignment.sparkSession
     import spark.implicits._
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    assign.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/assign")
+    index.codebooks.zipWithIndex.foreach { case (cb, j) =>
+      cb.write.mode("overwrite").parquet(s"$dir/${level(j).dir}")
+    }
+    // a deeper index written here before would leave codebooks the
+    // reader counts as levels
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Iterator.from(index.levels).map(j => new Path(root, level(j).dir))
+      .takeWhile(fs.exists).foreach(fs.delete(_, true))
+    index.assignment.write.mode("overwrite")
+      .partitionBy(levelKeys(index.levels): _*).parquet(s"$dir/assign")
     Seq(kernelId(spark)).toDF("kernel")
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** Load a persisted IVF index, FAILING LOUDLY if the probing
-    * session's distance kernel differs from the one that built the
-    * index (see [[kernelId]] — a silent mismatch could route queries
-    * to cells the stored assignment never used). Returns
-    * (centroids, assign) ready for [[ivfTopKIndexed]]. */
-  def ivfIndexRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
+  /** Load a persisted [[IvfIndex]]; its depth is the number of codebook
+    * directories present. FAILS LOUDLY if the probing session's distance
+    * kernel differs from the one that built the index ([[kernelId]]: a
+    * silent mismatch could route queries to cells the stored assignment
+    * never used). */
+  def ivfRead(spark: SparkSession, dir: String): IvfIndex = {
     val stored = spark.read.parquet(s"$dir/meta")
       .select("kernel").head().getString(0)
     val here = kernelId(spark)
@@ -352,115 +558,12 @@ object Similarity {
         "can silently disagree with the stored cell assignment. Register " +
         "GraftExtensions (or rebuild the index) so build and probe share " +
         "one kernel.")
-    (spark.read.parquet(s"$dir/centroids"),
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val levels = Iterator.from(0)
+      .takeWhile(j => fs.exists(new Path(root, level(j).dir))).size
+    IvfIndex((0 until levels).map(j => spark.read.parquet(s"$dir/${level(j).dir}")),
       spark.read.parquet(s"$dir/assign"))
-  }
-
-  /** Probe a stored [[ivfIndex]]: identical plan and output to
-    * [[ivfTopK]] given the same index frames (read them back with
-    * `spark.read.parquet`). Queries assign to their nProbe nearest
-    * centroids and meet the assignment table on the cell key — an
-    * ids+vectors equi-join bounded by the probed cells, never a corpus
-    * scan.
-    *
-    * `staticPrune = true` is the persisted-index deployment path: the
-    * probed cell set (bounded by |Q|·nProbe, and by nlist overall) is
-    * collected and applied as a LITERAL partition filter on the
-    * assignment scan, so a `partitionBy("cell")` index provably reads
-    * only the probed cells' files (PlanSpec asserts the scan's
-    * partition count) — no reliance on runtime DPP heuristics. The
-    * collect is bounded driver state (cell ids only), the
-    * Lloyd-centers discipline. */
-  def ivfTopKIndexed(queries: DataFrame, centroids: DataFrame,
-      assign: DataFrame, k: Int, nProbe: Int = 4,
-      staticPrune: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    val cents = broadcast(centroids.select(col("cid"), col("cv")))
-    val qd6 = floor(euclidExpr(spark, "qe", "cv") * 1e6 + 0.5) / 1e6
-    val qCells0 = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(cents)
-      .select(col("query_id"), col("qe"), col("cid"), qd6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qe"), col("cid").as("cell"))
-    val qCells = if (staticPrune) qCells0.localCheckpoint() else qCells0
-    val probeTarget = if (staticPrune) {
-      val cells = qCells.select("cell").distinct()
-        .collect().map(_.get(0)) // bounded: <= |Q| * nProbe cell ids
-      assign.filter(col("cell").isin(cells.toIndexedSeq: _*))
-    } else assign
-    val scored = qCells.join(probeTarget, Seq("cell"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotExpr(spark, "qe", "ce").as("raw_dot"))
-      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
-        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot6").desc, col("neighbor_id"))
-    scored
-      .select(col("query_id"), col("neighbor_id"),
-        row_number().over(w).as("rank"),
-        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
-  }
-
-  /** IVF with a TRAINED coarse quantizer: identical probe plan to
-    * [[ivfTopK]], but the cells are the deterministic Lloyd k-means
-    * centers (`Unsupervised.lloydCenters`, rounded 1e-6 per iteration)
-    * instead of a strided corpus subset — the FAISS-style production
-    * shape, where nlist bounds the broadcast and trained cells cut the
-    * per-cell candidate skew of arbitrary striding. Because the trainer
-    * is engine-replicable, the WHOLE index — training, assignment,
-    * probe, rank — is oracle-checkable as one composed SQL query. */
-  def ivfTopKTrained(queries: DataFrame, corpus: DataFrame, k: Int,
-      nlist: Int = 4, iters: Int = 5, nProbe: Int = 2): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val centers =
-      graft.ml.Unsupervised.lloydCenters(corpus, nlist, iters).centers
-    val cents = broadcast(centers.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
-    val spark = corpus.sparkSession
-    // centroid vectors are doubles (iteration means); the kernel (and
-    // its HOF fallback) computes the same left-to-right IEEE sequence
-    // as LIST_DISTANCE — graft_euclid accepts float|double sides (r10)
-    def euclidToCent(e: String): Column = euclidExpr(spark, e, "cv")
-    def dotOf(a: String, b: String): Column =
-      if (spark.catalog.functionExists("graft_dot")) expr(s"graft_dot($a, $b)")
-      else dot(col(a), col(b))
-    val d6i = floor(euclidToCent("ce") * 1e6 + 0.5).cast("long")
-    val assign = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .join(cents)
-      .groupBy("neighbor_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      // payload rejoins by id after the fixed-width argmin (packedArgmin)
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce")), Seq("neighbor_id"))
-      .select(col("neighbor_id"), col("ce"), unpackId(col("mp")).as("cell"))
-    val qd6 = floor(euclidToCent("qe") * 1e6 + 0.5) / 1e6
-    val qCells = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(cents)
-      .select(col("query_id"), col("qe"), col("cid"), qd6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qe"), col("cid").as("cell"))
-    val scored = qCells.join(assign, Seq("cell"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotOf("qe", "ce").as("raw_dot"))
-      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
-        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot6").desc, col("neighbor_id"))
-    scored
-      .select(col("query_id"), col("neighbor_id"),
-        row_number().over(w).as("rank"),
-        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
   }
 
   /** Product-quantization (PQ) asymmetric-distance top-k — the
@@ -567,17 +670,11 @@ object Similarity {
     * exact-dot refine over the top-`rerank` shortlist). */
   private def pqFinish(scored: DataFrame, queries: DataFrame,
       corpus: DataFrame, k: Int, rerank: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy((floor(col("raw_dot") * 1e6 + 0.5) / 1e6).desc,
-        col("neighbor_id"))
-    if (rerank <= 0)
-      scored
-        .select(col("query_id"), col("neighbor_id"),
-          row_number().over(w).as("rank"),
-          (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-        .filter(col("rank") <= k)
-        .orderBy("query_id", "rank")
+    if (rerank <= 0) topK(scored, k)
     else {
+      val w = Window.partitionBy("query_id")
+        .orderBy((floor(col("raw_dot") * 1e6 + 0.5) / 1e6).desc,
+          col("neighbor_id"))
       val short = scored
         .select(col("query_id"), col("neighbor_id"),
           row_number().over(w).as("rn"))
@@ -585,23 +682,10 @@ object Similarity {
         .select("query_id", "neighbor_id")
       val qe = broadcast(queries
         .select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-      val exact = short
-        .join(corpus.select(col("vec_id").as("neighbor_id"),
-          col("embedding").as("ce")), Seq("neighbor_id"))
+      topK(short.join(corpusRows(corpus), Seq("neighbor_id"))
         .join(qe, Seq("query_id"))
         .select(col("query_id"), col("neighbor_id"),
-          (if (queries.sparkSession.catalog.functionExists("graft_dot"))
-            expr("graft_dot(qe, ce)")
-          else dot(col("qe"), col("ce"))).as("raw_dot"))
-      val w2 = Window.partitionBy("query_id")
-        .orderBy((floor(col("raw_dot") * 1e6 + 0.5) / 1e6).desc,
-          col("neighbor_id"))
-      exact
-        .select(col("query_id"), col("neighbor_id"),
-          row_number().over(w2).as("rank"),
-          (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-        .filter(col("rank") <= k)
-        .orderBy("query_id", "rank")
+          dotExpr(queries.sparkSession, "qe", "ce").as("raw_dot")), k)
     }
   }
 
@@ -609,10 +693,10 @@ object Similarity {
     * the IVF coarse quantizer bounds WHICH candidates a query touches
     * (nProbe/nlist of the corpus) and PQ bounds WHAT each candidate
     * costs (m table lookups on m-byte codes). Both stages are the
-    * verified deterministic building blocks ([[ivfTopK]] cells,
-    * [[pqTopK]] codebook/encoding), so the whole composed index —
-    * coarse assignment, encoding, probe, ADC scan, optional exact
-    * refine — replays in one oracle SQL statement.
+    * verified deterministic building blocks (the strided [[ivfIndex]]
+    * cells and routing, the [[pqTopK]] codebook/encoding), so the whole
+    * composed index (coarse assignment, encoding, probe, ADC scan,
+    * optional exact refine) replays in one oracle SQL statement.
     *
     * Scale shape: the per-query candidate set is nProbe/nlist · |C|
     * ids+codes (no embeddings move for the ADC scan); only the refine
@@ -621,50 +705,18 @@ object Similarity {
       centroidStride: Int = 0, nProbe: Int = 4,
       m: Int = 4, ksub: Int = 16, stride: Int = 31,
       rerank: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
     // coarse stride scales with the corpus ([[adaptiveStride]]); the PQ
     // codebook `stride` stays fixed — it only seeds ksub rows (LIMIT-16
     // semantics), so it has no scale exposure
-    val nCorpus = corpus.count()
-    val cStride =
-      if (centroidStride > 0) centroidStride
-      else if (smoothSizing(spark)) smoothStride(nCorpus)
-      else adaptiveStride(nCorpus)
-    val hasNative = spark.catalog.functionExists("graft_euclid")
-    def euclid(a: String, b: String): Column =
-      if (hasNative) expr(s"graft_euclid($a, $b)")
-      else sqrt(aggregate(
-        zip_with(col(a), col(b),
-          (x, y) => (x.cast("double") - y.cast("double")) *
-            (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc, v) => acc + v))
-    val coarse = broadcast(
-      corpus.filter(pmod(col("vec_id"), lit(cStride)) === 0)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv")))
-    // coarse assignment: map-side argmin, exchange carries (id, cell)
-    val d6i = floor(euclid("ce", "cv") * 1e6 + 0.5).cast("long")
-    // same compute-guarded fan-out as ivfIndex: the coarse argmin is the
-    // corpus-sized job, and a narrow parquet scan would single-core it
-    val spreadPq =
-      if (nCorpus * (nCorpus / cStride) > 4000000L) Dedup.fanOut(corpus)
-      else corpus
-    val cells = spreadPq
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .join(coarse)
-      .groupBy("neighbor_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      .select(col("neighbor_id"), unpackId(col("mp")).as("cell"))
+    val (coarse, n, cStride) = stridedCenters(corpus, centroidStride)
+    // coarse assignment without the payload: the exchange carries
+    // (id, cell)
+    val cells = assign(spread(corpusRows(corpus), n * (n / cStride)),
+      Seq("neighbor_id"), "ce", coarse, "cid", "cv", "cell")
     val (cents, sub) = pqCodebook(corpus, m, ksub, stride)
     val codes = pqCodes(corpus, cents, m, sub, ksub).join(cells, Seq("neighbor_id"))
-    val qd6 = floor(euclid("qe", "cv") * 1e6 + 0.5) / 1e6
-    val qCells = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(coarse)
-      .select(col("query_id"), col("qe"), col("cid"), qd6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id") +: col("cid").as("cell") +:
+    val qCells = probeKeys(queries, Seq(coarse), Seq(nProbe))
+      .select(col("query_id") +: col("cell") +:
         pqTableCols(cents, m, sub, ksub): _*)
     val scored = broadcast(qCells).join(codes, Seq("cell"))
       .select(col("query_id"), col("neighbor_id"),
@@ -732,18 +784,16 @@ object Similarity {
     // and each vector's norm is computed ONCE before the pair join
     // instead of per surviving pair. Same IEEE sequence either way:
     // sqrt(dot(x,x)) per side, then d / (na * nb).
-    val native = emb.sparkSession.catalog.functionExists("graft_dot")
-    def dotOf(a: String, b: String): Column =
-      if (native) expr(s"graft_dot($a, $b)") else dot(col(a), col(b))
+    val spark = emb.sparkSession
     val e = emb.select(col("vec_id"), col("embedding").as("ev"))
-      .withColumn("nv", sqrt(dotOf("ev", "ev")))
+      .withColumn("nv", sqrt(dotExpr(spark, "ev", "ev")))
     cand
       .join(e.select(col("vec_id").as("doc_a"), col("ev").as("ea"),
         col("nv").as("na")), Seq("doc_a"))
       .join(e.select(col("vec_id").as("doc_b"), col("ev").as("eb"),
         col("nv").as("nb")), Seq("doc_b"))
       .select(col("doc_a"), col("doc_b"),
-        (dotOf("ea", "eb") / (col("na") * col("nb"))).as("c"))
+        (dotExpr(spark, "ea", "eb") / (col("na") * col("nb"))).as("c"))
       .filter(col("c") >= tau)
       .select(col("doc_a"), col("doc_b"),
         (floor(col("c") * 10000 + 0.5) / 10000).as("cos_sim"))
@@ -913,19 +963,17 @@ object Similarity {
       .select(col("t"), col("b"), col("vec_id").as("corpus_id"))
     val cand = bNew.join(bCor, Seq("t", "b"))
       .select("new_id", "corpus_id").dropDuplicates("new_id", "corpus_id")
-    val native = corpusEmb.sparkSession.catalog.functionExists("graft_dot")
-    def dotOf(a: String, b: String): Column =
-      if (native) expr(s"graft_dot($a, $b)") else dot(col(a), col(b))
+    val spark = corpusEmb.sparkSession
     def withNorm(df: DataFrame) =
       df.select(col("vec_id"), col("embedding").as("ev"))
-        .withColumn("nv", sqrt(dotOf("ev", "ev")))
+        .withColumn("nv", sqrt(dotExpr(spark, "ev", "ev")))
     cand
       .join(withNorm(newEmb).select(col("vec_id").as("new_id"),
         col("ev").as("ea"), col("nv").as("na")), Seq("new_id"))
       .join(withNorm(corpusEmb).select(col("vec_id").as("corpus_id"),
         col("ev").as("eb"), col("nv").as("nb")), Seq("corpus_id"))
       .select(col("new_id"), col("corpus_id"),
-        (dotOf("ea", "eb") / (col("na") * col("nb"))).as("c"))
+        (dotExpr(spark, "ea", "eb") / (col("na") * col("nb"))).as("c"))
       .filter(col("c") >= tau)
       .select(col("new_id"), col("corpus_id"),
         (floor(col("c") * 10000 + 0.5) / 10000).as("cos_sim"))
@@ -955,8 +1003,8 @@ object Similarity {
     * in the corpus — where the balanced split is ~n^1.5/√1000. Each
     * level caps at 4,096 (the [[adaptiveNlist]] broadcast bound),
     * carrying the operating point to 4,096² ≈ 16.8M effective cells
-    * ≈ 16.8B vectors; past that, [[ivfResidual3Index]]'s third shared
-    * codebook is the blocking to reach for. */
+    * ≈ 16.8B vectors; past that, a third shared residual codebook
+    * ([[addLevel]]) is the blocking to reach for. */
   def semBalancedCells(n: Long): (Int, Int) = {
     val t = math.max(1L, (n + 999) / 1000)
     val k1 = math.min(4096, math.ceil(math.sqrt(t.toDouble)).toInt)
@@ -972,43 +1020,28 @@ object Similarity {
   private[graft] val semFlatCellCap = 128L
 
   /** Deterministic Lloyd cell assignment: (vec_id, cell) for every
-    * corpus vector — the trained coarse quantizer of [[ivfTopKTrained]]
-    * exposed as its own frame. Centroids are nlist-bounded and
-    * broadcast; the argmin is a map-side partial agg over rounded
-    * distances (cid tiebreak), so the exchange carries (id, cell) only.
-    * The assignment stays in SQL on [[euclidExpr]], the distance the IVF
-    * probes route with. Shared by [[semDedup]] and cluster-balanced
-    * sampling.
+    * corpus vector, the trained level 0 of [[ivfTrainedIndex]] without
+    * the payload. Centroids are nlist-bounded and broadcast; the argmin
+    * is the shared map-side [[assign]] over rounded distances, on
+    * [[euclidExpr]], the distance the IVF probes route with, so the
+    * exchange carries (id, cell) only. Shared by [[semDedup]] and
+    * cluster-balanced sampling.
     *
     * `nlist = 0` (the default) sizes the cell count from the corpus via
-    * [[adaptiveNlist]]. Training runs the one Lloyd kernel
-    * (`Unsupervised.lloyd`); the cell count only picks its argmin rule.
-    * Up to 64 cells it trains on the whole corpus with exact distances,
-    * the rule every pinned oracle replays; past 64, [[lloydCentersJoin]]
-    * trains with rounded distances on a subsample of ~256 vectors per
-    * centroid (assignment still covers the full corpus). */
+    * [[adaptiveNlist]]; training follows [[trainCenters]] (exact on the
+    * whole corpus up to 64 cells, the rule every pinned oracle replays;
+    * past 64, [[lloydCentersJoin]] on a subsample of ~256 vectors per
+    * centroid, while the assignment still covers the full corpus). */
   def lloydAssign(emb: DataFrame, nlist: Int = 0,
       iters: Int = 5): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val k = if (nlist > 0) nlist else adaptiveNlist(emb.count())
+    val n = if (nlist > 0) -1L else emb.count()
     // auto mode that lands in the exact rule's range trains like an
     // explicit nlist, so the two agree wherever they overlap
-    val centers =
-      if (k <= 64) graft.ml.Unsupervised.lloydCenters(emb, k, iters).centers
-      else lloydCentersJoin(emb, k, iters)
-    val cents = broadcast(centers.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
-    // same rounded-distance argmin as the trained-IVF assignment — the
-    // equivalence to the oracle's LIST_DISTANCE is already proven by
-    // llm_ann_ivf_trained; codegen'd kernel when registered (r10)
-    val d6i = floor(euclidExpr(spark, "ce", "cv") * 1e6 + 0.5).cast("long")
-    emb
-      .select(col("vec_id"), col("embedding").as("ce"))
-      .join(cents)
-      .groupBy("vec_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      .select(col("vec_id"), unpackId(col("mp")).as("cell"))
+    val k = if (nlist > 0) nlist else adaptiveNlist(n)
+    val cents = centersFrame(emb.sparkSession,
+      trainCenters(emb, k, iters, n), "cid", "cv")
+    assign(emb.select(col("vec_id"), col("embedding").as("ce")),
+      Seq("vec_id"), "ce", cents, "cid", "cv", "cell")
       .localCheckpoint()
   }
 
@@ -1036,459 +1069,20 @@ object Similarity {
       rounded = true, initFrom = Some(emb)).centers
   }
 
-  /** Residual-split ladder past the [[adaptiveNlist]] 4,096-cell cap
-    * (round-10 directive #4 — the rung SCALE_r9 §Remaining bounds named
-    * but did not build): the number of SHARED residual subcells so that
-    * nlist × nsplit keeps ~1,000 vectors per EFFECTIVE cell once the
-    * coarse level saturates. 1 (no split) below ~4.1M vectors; capped at
-    * 256, which bounds the second broadcast at 256×dim doubles and
-    * carries the ~1,000/cell operating point to ~1B vectors. */
-  def adaptiveNsplit(n: Long): Int = {
+  /** Residual-split ladder for index level `level` ≥ 1: the number of
+    * SHARED residual subcells that keeps ~1,000 vectors per EFFECTIVE
+    * cell once the levels above saturate (4,096 coarse cells, then 256
+    * per later level). Level 1 (past the [[adaptiveNlist]] 4,096-cell
+    * cap) is 1 below ~4.1M vectors; level 2 engages past the two-level
+    * key's ~1M effective cells (~1B vectors). Capped at 256 per level,
+    * which bounds each broadcast at 256×dim doubles; level 2's cap
+    * carries the operating point to ~268B vectors. */
+  def adaptiveNsplit(n: Long, level: Int = 1): Int = {
+    val cellsAbove = (1 until level).foldLeft(4096L)((c, _) =>
+      math.min(c * 256, 1L << 52))
     val targetCells = (n + 999) / 1000
-    math.max(1, math.min(256, ((targetCells + 4095) / 4096).toInt))
-  }
-
-  /** Third-level companion of [[adaptiveNsplit]] (round 11 — the last
-    * named engine ceiling, SCALE_r10 §Remaining bounds): once the
-    * two-level key saturates at nlist×nsplit = 4096×256 ≈ 1M effective
-    * cells (~1B vectors at the ~1,000/cell operating point), a THIRD
-    * shared residual codebook keeps refining. 1 (no third level) below
-    * ~1B vectors; capped at 256, carrying the operating point to
-    * ~268B vectors — past any corpus this engine targets. */
-  def adaptiveNsplit3(n: Long): Int = {
-    val targetCells = (n + 999) / 1000
-    math.max(1, math.min(256,
-      ((targetCells + 4096L * 256 - 1) / (4096L * 256)).toInt))
-  }
-
-  /** Two-level IVF residual index — the FAISS residual-quantizer second
-    * blocking level: level 1 is the trained coarse quantizer (the
-    * [[lloydAssign]] kernels), level 2 is ONE SHARED residual codebook —
-    * nsplit centroids trained on (x − c1[cell]) residuals — so the
-    * effective cell key `(cell, sub)` partitions the corpus into up to
-    * nlist×nsplit cells while broadcast/driver state stays two bounded
-    * center tables (nlist×dim + nsplit×dim doubles), never
-    * nlist×nsplit×dim. Sharing the residual codebook across cells is
-    * what makes the second level trainable as one distributed Lloyd run
-    * instead of nlist driver-side fits.
-    *
-    * Returns (coarse `(cid, cv)`, residual `(sid, sv)`, assign
-    * `(neighbor_id, ce, cell, sub)`) — the same persistable-frames
-    * contract as [[ivfIndex]]; write `assign` partitioned by
-    * `(cell, sub)` and probes partition-prune exactly as there.
-    *
-    * Scale shape: both argmins are map-side partial aggs against
-    * broadcast centers (the exchange carries ids+cells only); the
-    * corpus-sized coarse argmin fans out when compute-bound, the same
-    * guard as [[ivfIndex]]. Everything is rounded-distance/id-tiebreak
-    * deterministic, so the whole two-level build is engine-replicable. */
-  def ivfResidualIndex(corpus: DataFrame, nlist: Int = 0, nsplit: Int = 0,
-      iters: Int = 5, nKnown: Long = -1L): (DataFrame, DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = if (nKnown >= 0) nKnown else corpus.count()
-    val k1 = if (nlist > 0) nlist else adaptiveNlist(n)
-    val k2 = if (nsplit > 0) nsplit else adaptiveNsplit(n)
-    val c1 =
-      if (k1 <= 64) graft.ml.Unsupervised.lloydCenters(corpus, k1, iters).centers
-      else lloydCentersJoin(corpus, k1, iters, n)
-    val cents1 = broadcast(c1.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
-    val d6i = floor(euclidExpr(spark, "ce", "cv") * 1e6 + 0.5).cast("long")
-    // compute-guarded fan-out, same threshold as ivfIndex: the coarse
-    // argmin is the corpus-sized job and a narrow parquet scan would
-    // otherwise run it on a few cores
-    val spread =
-      if (n * k1.toLong > 4000000L) Dedup.fanOut(corpus) else corpus
-    // ONE checkpoint carries the assignment AND the residual against the
-    // assigned coarse center (doubles end to end) — the residual used to
-    // be a second materialization pass re-reading the coarse checkpoint
-    // (r15 opt round; identical zip_with arithmetic, same inputs)
-    val coarseR = spread
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-      .join(cents1)
-      .groupBy("neighbor_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      // payload rejoins by id after the fixed-width argmin (packedArgmin)
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce")), Seq("neighbor_id"))
-      .select(col("neighbor_id"), col("ce"), unpackId(col("mp")).as("cell"))
-      .join(cents1, col("cell") === col("cid"))
-      .select(col("neighbor_id"), col("ce"), col("cell"),
-        zip_with(transform(col("ce"), v => v.cast("double")), col("cv"),
-          (x, c) => x - c).as("resid"))
-      .localCheckpoint()
-    val coarse = coarseR.select(col("neighbor_id"), col("ce"), col("cell"))
-    val resid = coarseR.select(col("neighbor_id").as("vec_id"),
-      col("resid").as("embedding"))
-    // resid is one row per corpus vector, so its count is n — pass it
-    // through instead of re-scanning the checkpoint
-    val c2 = lloydCentersJoin(resid, k2, iters, n)
-    val cents2 = broadcast(c2.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("sid", "sv"))
-    val rd6i =
-      floor(euclidExpr(spark, "embedding", "sv") * 1e6 + 0.5).cast("long")
-    val sub = resid.join(cents2)
-      .groupBy("vec_id")
-      .agg(min(packedArgmin(rd6i, col("sid"))).as("ms"))
-      .select(col("vec_id").as("neighbor_id"), unpackId(col("ms")).as("sub"))
-    val assign = coarse.join(sub, Seq("neighbor_id"))
-      .select(col("neighbor_id"), col("ce"), col("cell"), col("sub"))
-    (cents1, cents2, assign)
-  }
-
-  /** Probe a two-level [[ivfResidualIndex]]: queries route to their
-    * nProbe nearest coarse cells, then — per probed cell, against the
-    * residual q − c1[cell] — to the nProbeSub nearest residual subcells,
-    * and candidates meet on the composite `(cell, sub)` key: expected
-    * candidate volume |Q|·nProbe·nProbeSub·|C|/(nlist·nsplit). The rank
-    * stage is identical to [[ivfTopKIndexed]] (rounded-dot window,
-    * neighbor-id tiebreak).
-    *
-    * Default operating point (8, 3): measured recall@5 on the ×30
-    * past-cap geometry model (n = 60k, nlist = 20, nsplit = 3 —
-    * graft.tools.ResidualRecall, round 11) is 0.87 at (8, 3) vs 0.62
-    * at the former (4, 2) default, which sat under the 0.8 deployment
-    * bar. The sweep shows coarse routing dominates the loss —
-    * exhaustive subs at nProbe = 4 still only reach 0.72 — so widening
-    * spends its candidate budget on nProbe first; at matched budget,
-    * narrow-coarse/exhaustive-sub (4,3) edges out wide-coarse/partial
-    * (6,2), 0.722 vs 0.692. */
-  /** The two-stage probe routing alone — the `(query_id, qe, cell,
-    * sub)` keys [[ivfResidualTopKIndexed]] scores against: nProbe
-    * nearest coarse cells per query, then per probed cell the
-    * nProbeSub nearest residual subcells of q − c1[cell]. Exposed so
-    * measurement tooling can count the deterministic candidate volume
-    * (probed-subcell populations) without re-deriving the routing. */
-  private[graft] def residualProbeKeys(queries: DataFrame,
-      cents1: DataFrame, cents2: DataFrame,
-      nProbe: Int, nProbeSub: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val c1 = broadcast(cents1.select(col("cid"), col("cv")))
-    val c2 = broadcast(cents2.select(col("sid"), col("sv")))
-    val qd6 = floor(euclidExpr(spark, "qe", "cv") * 1e6 + 0.5) / 1e6
-    val qCells = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .join(c1)
-      .select(col("query_id"), col("qe"), col("cid"), col("cv"),
-        qd6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qe"), col("cid").as("cell"),
-        zip_with(transform(col("qe"), v => v.cast("double")), col("cv"),
-          (x, c) => x - c).as("qr"))
-    val sd6 = floor(euclidExpr(spark, "qr", "sv") * 1e6 + 0.5) / 1e6
-    qCells.join(c2)
-      .select(col("query_id"), col("qe"), col("cell"), col("sid"),
-        sd6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id", "cell")
-          .orderBy(col("d"), col("sid"))))
-      .filter(col("rn") <= nProbeSub)
-      .select(col("query_id"), col("qe"), col("cell"),
-        col("sid").as("sub"))
-  }
-
-  def ivfResidualTopKIndexed(queries: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, assign: DataFrame, k: Int,
-      nProbe: Int = 8, nProbeSub: Int = 3,
-      staticPrune: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    val qSubs = residualProbeKeys(queries, cents1, cents2,
-      nProbe, nProbeSub)
-    // stored-index deployment path, identical contract to
-    // [[ivfTopKIndexed]]'s staticPrune: the probed composite keys
-    // (bounded by |Q|·nProbe·nProbeSub, and by nlist·nsplit overall)
-    // collect and apply as LITERAL partition filters, so a
-    // partitionBy("cell", "sub") index provably reads only the probed
-    // subcells' files
-    val qSubsP = if (staticPrune) qSubs.localCheckpoint() else qSubs
-    val probeTarget = if (staticPrune) {
-      // ONE set-membership filter on a packed composite key, not an OR
-      // chain: keys.map(===).reduce(_ || _) built a left-deep tree with
-      // one conjunction per probed (cell, sub) key — bounded by
-      // |Q|·nProbe·nProbeSub (and nlist·nsplit ≈ 1M overall), deep
-      // enough to stall or stack-overflow Catalyst on exactly the
-      // large-index path this flag exists for — and threw on an empty
-      // query batch. Cells and subs are dense center indexes
-      // (< nlist ≤ 4096, < nsplit ≤ 256), so cell·2^33 + sub packs
-      // collision-free in a Long; the expression references only the
-      // two partition columns, so file-source partition pruning still
-      // applies, and the (cell, sub) equi-join below stays the exact
-      // filter either way.
-      val keys = qSubsP.select("cell", "sub").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      // pack-budget guard (r11 advice): the packed filter is only
-      // collision-free for cell < 2^30 (the shift would overflow past
-      // that) and sub < 2^33. The exact equi-join below would still
-      // return correct rows on a collision, but the partition pruning
-      // this flag exists for would silently read extra files — fail
-      // loudly instead, like packedArgmin's id guard. The keys are
-      // already on the driver, so the check is free.
-      keys.foreach { case (c, s) =>
-        require(c >= 0 && c < (1L << 30) && s >= 0 && s < (1L << 33),
-          s"staticPrune packed key out of budget: cell=$c (< 2^30), " +
-            s"sub=$s (< 2^33) — rebuild the index with nlist/nsplit " +
-            "inside the pack's bit budget")
-      }
-      if (keys.isEmpty) assign.limit(0)
-      else assign.filter((col("cell") * lit(1L << 33) + col("sub"))
-        .isInCollection(keys.map { case (c, s) => c * (1L << 33) + s }))
-    } else assign
-    val scored = qSubsP.join(probeTarget, Seq("cell", "sub"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotExpr(spark, "qe", "ce").as("raw_dot"))
-      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
-        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot6").desc, col("neighbor_id"))
-    scored
-      .select(col("query_id"), col("neighbor_id"),
-        row_number().over(w).as("rank"),
-        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Persist an [[ivfResidualIndex]] as its deployment layout: both
-    * center tables, `assign` PARTITIONED BY (cell, sub) — so a
-    * staticPrune probe reads only the probed subcells' files — and the
-    * same one-row kernel `meta` contract as [[ivfIndexWrite]]. */
-  def ivfResidualIndexWrite(cents1: DataFrame, cents2: DataFrame,
-      assign: DataFrame, dir: String): Unit = {
-    val spark = cents1.sparkSession
-    import spark.implicits._
-    cents1.write.mode("overwrite").parquet(s"$dir/centroids")
-    cents2.write.mode("overwrite").parquet(s"$dir/subcentroids")
-    assign.write.mode("overwrite").partitionBy("cell", "sub")
-      .parquet(s"$dir/assign")
-    Seq(kernelId(spark)).toDF("kernel")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a persisted two-level index, FAILING LOUDLY on a kernel
-    * mismatch — same contract and reason as [[ivfIndexRead]]. */
-  def ivfResidualIndexRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val stored = spark.read.parquet(s"$dir/meta")
-      .select("kernel").head().getString(0)
-    val here = kernelId(spark)
-    require(stored == here,
-      s"residual IVF index at $dir was built with distance kernel " +
-        s"'$stored' but this session resolves '$here'; probing with a " +
-        "different kernel can silently disagree with the stored cell " +
-        "assignment. Register GraftExtensions (or rebuild the index) so " +
-        "build and probe share one kernel.")
-    (spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/subcentroids"),
-      spark.read.parquet(s"$dir/assign"))
-  }
-
-  /** Build + probe fused, the [[ivfTopK]] shape at two levels. */
-  def ivfResidualTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      nlist: Int = 0, nsplit: Int = 0, nProbe: Int = 8,
-      nProbeSub: Int = 3, iters: Int = 5): DataFrame = {
-    val (c1, c2, assign) = ivfResidualIndex(corpus, nlist, nsplit, iters)
-    ivfResidualTopKIndexed(queries, c1, c2, assign, k, nProbe, nProbeSub)
-  }
-
-  /** THREE-level residual index (round 11 — the rung past the two-level
-    * key's ~1M-effective-cell saturation at ~1B vectors, the last named
-    * engine ceiling): the [[ivfResidualIndex]] construction applied
-    * once more — a third SHARED codebook (nsplit3 centroids, trained on
-    * the level-2 residuals (x − c1[cell]) − c2[sub]) refines the
-    * composite key to `(cell, sub, sub2)`, up to nlist×nsplit×nsplit3
-    * effective cells with THREE bounded center tables; `adaptiveNsplit3`
-    * engages past ~1B vectors and carries the ~1,000/cell operating
-    * point to ~268B. Build scale shape is unchanged: each level is one
-    * broadcast-centroid argmin over a corpus-sized frame (the packed
-    * fixed-width aggregate), plus one bounded Lloyd training on a
-    * hash-systematic subsample. Deterministic end to end — the same
-    * rounded-distance/id-tiebreak discipline at every level. */
-  def ivfResidual3Index(corpus: DataFrame, nlist: Int = 0,
-      nsplit: Int = 0, nsplit3: Int = 0, iters: Int = 5)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // count once; both the two-level prefix and the third-level trainer
-    // need it (one row per corpus vector at every level)
-    val n = corpus.count()
-    val (c1, c2, a2) = ivfResidualIndex(corpus, nlist, nsplit, iters, n)
-    ivfResidual3IndexFrom(corpus, c1, c2, a2, nsplit3, iters, n)
-  }
-
-  /** [[ivfResidual3Index]] continued from an ALREADY-BUILT two-level
-    * index (cents1, cents2, level-2 assignment): the third-level
-    * training/assignment is exactly the tail of the composed build, so
-    * a caller that needs BOTH the two-level and three-level indexes of
-    * one corpus (llm_ann_recall_all sweeps every variant) builds the
-    * shared prefix once instead of twice (r14 opt round). `corpus` is
-    * only consulted for its count when `nsplit3 = 0` (adaptive). */
-  def ivfResidual3IndexFrom(corpus: DataFrame, c1: DataFrame,
-      c2: DataFrame, a2: DataFrame, nsplit3: Int = 0, iters: Int = 5,
-      nKnown: Long = -1L): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val n = if (nKnown >= 0) nKnown
-      else if (nsplit3 > 0) -1L else corpus.count()
-    val k3 = if (nsplit3 > 0) nsplit3 else adaptiveNsplit3(n)
-    // level-2 residuals against BOTH assigned centers (doubles end to
-    // end), rebuilt from the level-2 assignment — never materialized
-    // per (cell, sub) pair
-    val r2 = a2
-      .join(broadcast(c1.select(col("cid"), col("cv"))),
-        col("cell") === col("cid"))
-      .join(broadcast(c2.select(col("sid"), col("sv"))),
-        col("sub") === col("sid"))
-      .select(col("neighbor_id").as("vec_id"),
-        zip_with(
-          zip_with(transform(col("ce"), v => v.cast("double")),
-            col("cv"), (x, c) => x - c),
-          col("sv"), (r, s) => r - s).as("embedding"))
-      .localCheckpoint()
-    // r2 is one row per corpus vector: pass n when known so the trainer
-    // skips its own full-scan count of the checkpointed array frame
-    val cents3 = broadcast(lloydCentersJoin(r2, k3, iters, n)
-      .zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("tid", "tv"))
-    val td6i =
-      floor(euclidExpr(spark, "embedding", "tv") * 1e6 + 0.5).cast("long")
-    val sub2 = r2.join(cents3)
-      .groupBy("vec_id")
-      .agg(min(packedArgmin(td6i, col("tid"))).as("mt"))
-      .select(col("vec_id").as("neighbor_id"), unpackId(col("mt")).as("sub2"))
-    val assign = a2.join(sub2, Seq("neighbor_id"))
-      .select(col("neighbor_id"), col("ce"), col("cell"), col("sub"),
-        col("sub2"))
-    (c1, c2, cents3, assign)
-  }
-
-  /** Probe a three-level [[ivfResidual3Index]]: the two-level routing
-    * ([[residualProbeKeys]]) extends one stage — per probed
-    * (cell, sub), the query's level-2 residual routes to its nProbeSub3
-    * nearest third-level subcells — and candidates meet on the
-    * composite `(cell, sub, sub2)` key. Expected candidate volume
-    * |Q|·nProbe·nProbeSub·nProbeSub3·|C|/(nlist·nsplit·nsplit3); rank
-    * stage identical to the whole family. */
-  def ivfResidual3TopKIndexed(queries: DataFrame, cents1: DataFrame,
-      cents2: DataFrame, cents3: DataFrame, assign: DataFrame, k: Int,
-      nProbe: Int = 8, nProbeSub: Int = 3,
-      nProbeSub3: Int = 2, staticPrune: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    val qSubs = residualProbeKeys(queries, cents1, cents2,
-      nProbe, nProbeSub)
-    val qr2 = qSubs
-      .join(broadcast(cents1.select(col("cid"), col("cv"))),
-        col("cell") === col("cid"))
-      .join(broadcast(cents2.select(col("sid"), col("sv"))),
-        col("sub") === col("sid"))
-      .select(col("query_id"), col("qe"), col("cell"), col("sub"),
-        zip_with(
-          zip_with(transform(col("qe"), v => v.cast("double")),
-            col("cv"), (x, c) => x - c),
-          col("sv"), (r, s) => r - s).as("qr2"))
-    val c3 = broadcast(cents3.select(col("tid"), col("tv")))
-    val td6 = floor(euclidExpr(spark, "qr2", "tv") * 1e6 + 0.5) / 1e6
-    val qSub2 = qr2.join(c3)
-      .select(col("query_id"), col("qe"), col("cell"), col("sub"),
-        col("tid"), td6.as("d"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("query_id", "cell", "sub")
-          .orderBy(col("d"), col("tid"))))
-      .filter(col("rn") <= nProbeSub3)
-      .select(col("query_id"), col("qe"), col("cell"), col("sub"),
-        col("tid").as("sub2"))
-    // stored-index deployment path, the family's staticPrune contract
-    // (same empty-batch short-circuit + single packed-key set filter as
-    // [[ivfResidualTopKIndexed]] — the OR-chain form it replaced stalls
-    // Catalyst at exactly the large-index sizes the flag exists for).
-    // All three key components are dense center indexes (cell < nlist
-    // ≤ 4096, sub/sub2 < 256 ≤ 2^13), so the 26/13-bit pack is
-    // collision-free; the expression references only the three
-    // partition columns, so file-source partition pruning applies, and
-    // the composite equi-join below stays the exact filter either way.
-    val qSub2P = if (staticPrune) qSub2.localCheckpoint() else qSub2
-    val probeTarget = if (staticPrune) {
-      val keys = qSub2P.select("cell", "sub", "sub2").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // pack-budget guard (r11 advice): the 26/13-bit pack is only
-      // collision-free for sub/sub2 < 2^13 = 8192 and cell < 2^37; an
-      // explicit nsplit/nsplit3 above the adaptive 256 cap could
-      // otherwise collide — harmless for results (the composite
-      // equi-join below is the exact filter) but it silently defeats
-      // the partition pruning this flag exists for. Keys are already
-      // on the driver, so the check is free.
-      keys.foreach { case (c, s, t) =>
-        require(c >= 0 && c < (1L << 37) &&
-            s >= 0 && s < (1L << 13) && t >= 0 && t < (1L << 13),
-          s"staticPrune packed key out of budget: cell=$c (< 2^37), " +
-            s"sub=$s, sub2=$t (each < 2^13) — rebuild the index with " +
-            "nsplit/nsplit3 inside the pack's bit budget")
-      }
-      if (keys.isEmpty) assign.limit(0)
-      else assign.filter(
-        (col("cell") * lit(1L << 26) + col("sub") * lit(1L << 13) +
-          col("sub2")).isInCollection(keys.map { case (c, s, t) =>
-          c * (1L << 26) + s * (1L << 13) + t }))
-    } else assign
-    val scored = qSub2P.join(probeTarget, Seq("cell", "sub", "sub2"))
-      .select(col("query_id"), col("neighbor_id"),
-        dotExpr(spark, "qe", "ce").as("raw_dot"))
-      .select(col("query_id"), col("neighbor_id"), col("raw_dot"),
-        (floor(col("raw_dot") * 1e6 + 0.5) / 1e6).as("dot6"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot6").desc, col("neighbor_id"))
-    scored
-      .select(col("query_id"), col("neighbor_id"),
-        row_number().over(w).as("rank"),
-        (floor(col("raw_dot") * 10000 + 0.5) / 10000).as("sim"))
-      .filter(col("rank") <= k)
-      .orderBy("query_id", "rank")
-  }
-
-  /** Build + probe fused at three levels. */
-  def ivfResidual3TopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      nlist: Int = 0, nsplit: Int = 0, nsplit3: Int = 0,
-      nProbe: Int = 8, nProbeSub: Int = 3, nProbeSub3: Int = 2,
-      iters: Int = 5): DataFrame = {
-    val (c1, c2, c3, assign) =
-      ivfResidual3Index(corpus, nlist, nsplit, nsplit3, iters)
-    ivfResidual3TopKIndexed(queries, c1, c2, c3, assign, k,
-      nProbe, nProbeSub, nProbeSub3)
-  }
-
-  /** Persist an [[ivfResidual3Index]]: three center tables, `assign`
-    * PARTITIONED BY (cell, sub, sub2), the same one-row kernel `meta`
-    * contract as the rest of the family. */
-  def ivfResidual3IndexWrite(cents1: DataFrame, cents2: DataFrame,
-      cents3: DataFrame, assign: DataFrame, dir: String): Unit = {
-    val spark = cents1.sparkSession
-    import spark.implicits._
-    cents1.write.mode("overwrite").parquet(s"$dir/centroids")
-    cents2.write.mode("overwrite").parquet(s"$dir/subcentroids")
-    cents3.write.mode("overwrite").parquet(s"$dir/subcentroids3")
-    assign.write.mode("overwrite").partitionBy("cell", "sub", "sub2")
-      .parquet(s"$dir/assign")
-    Seq(kernelId(spark)).toDF("kernel")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  /** Load a persisted three-level index, failing loudly on a kernel
-    * mismatch — the family's contract ([[ivfIndexRead]]). */
-  def ivfResidual3IndexRead(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val stored = spark.read.parquet(s"$dir/meta")
-      .select("kernel").head().getString(0)
-    val here = kernelId(spark)
-    require(stored == here,
-      s"residual-3 IVF index at $dir was built with distance kernel " +
-        s"'$stored' but this session resolves '$here'; probing with a " +
-        "different kernel can silently disagree with the stored cell " +
-        "assignment. Register GraftExtensions (or rebuild the index) so " +
-        "build and probe share one kernel.")
-    (spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/subcentroids"),
-      spark.read.parquet(s"$dir/subcentroids3"),
-      spark.read.parquet(s"$dir/assign"))
+    math.max(1L, math.min(256L,
+      (targetCells + cellsAbove - 1) / cellsAbove)).toInt
   }
 
   /** Cell assignment for the semDedup family — the routing layer over
@@ -1518,17 +1112,17 @@ object Similarity {
     * single `cell` column the within-cell pair kernel blocks on —
     * sub < 2^16, so cell·2^16 + sub is injective. Deterministic end to
     * end (both levels are the rounded-distance / id-tiebreak Lloyd
-    * kernels).
+    * kernels and the shared [[assign]]).
     *
-    * LEAN build, deliberately NOT [[ivfResidualIndex]] (the persistable
-    * ANN index): a first cut reused that build and measured 138.9 s at
-    * 600k vectors vs 35.1 s for the FLAT 600-cell assignment it was
-    * supposed to beat (quiet canaries both sides) — the index build's
-    * constants are an oracle contract, not a blocking necessity: at
-    * k1 ≤ 64 it trains with the exact oracle-replayable rule on the
-    * full corpus (no subsample), and it checkpoints two corpus-sized
-    * payload frames (assignment with embeddings + materialized
-    * residuals). Blocking needs none of that:
+    * LEAN build, deliberately NOT [[ivfTrainedIndex]] + [[addLevel]]
+    * (the persistable ANN index): a first cut reused that build and
+    * measured 138.9 s at 600k vectors vs 35.1 s for the FLAT 600-cell
+    * assignment it was supposed to beat (quiet canaries both sides), a
+    * 4× cost. The index build's constants are an oracle contract, not a
+    * blocking necessity: at k1 ≤ 64 it trains with the exact
+    * oracle-replayable rule on the full corpus (no subsample), and it
+    * checkpoints corpus-sized payload frames (assignment with embeddings
+    * and materialized residuals). Blocking needs none of that:
     *   - both codebooks train through the subsampled trainer
     *     ([[lloydCentersJoin]] — ≤256 training vectors per centroid);
     *     the residual codebook trains on the SAMPLE's residuals only,
@@ -1550,74 +1144,48 @@ object Similarity {
   private[graft] def twoLevelCells(emb: DataFrame, k1: Int, k2: Int,
       iters: Int = 5, nKnown: Long = -1L): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val n = if (nKnown >= 0) nKnown else emb.count()
     val c1 = lloydCentersJoin(emb, k1, iters, n)
-    val cents1 = broadcast(c1.zipWithIndex.toSeq
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toDF("cid", "cv"))
-    val d6i = floor(euclidExpr(spark, "ce", "cv") * 1e6 + 0.5).cast("long")
-    val spread1 =
-      if (n * k1.toLong > 4000000L) Dedup.fanOut(emb) else emb
-    val a1 = spread1
-      .select(col("vec_id"), col("embedding").as("ce"))
-      .join(cents1)
-      .groupBy("vec_id")
-      .agg(min(packedArgmin(d6i, col("cid"))).as("mp"))
-      .select(col("vec_id"), unpackId(col("mp")).as("cell"))
+    val cents1 = centersFrame(spark, c1, "cid", "cv")
+    val a1 = assign(
+      spread(emb, n * k1).select(col("vec_id"), col("embedding").as("ce")),
+      Seq("vec_id"), "ce", cents1, "cid", "cv", "cell")
       .localCheckpoint()
     // residual codebook: trained on the hash-systematic SAMPLE's
     // residuals ([[lloydCentersJoin]]'s own cap, applied before the
     // residual projection, so the HOF zip_with touches ~256·k2 rows)
     val m2 = math.max(1L, n / (256L * k2))
-    val sampResid = emb
-      .filter(xxhash64(col("vec_id")) % m2 === 0)
-      .join(a1, Seq("vec_id"))
-      .join(cents1, col("cell") === col("cid"))
-      .select(col("vec_id"),
-        zip_with(transform(col("embedding"), v => v.cast("double")),
-          col("cv"), (x, c) => x - c).as("embedding"))
+    val sampResid = residual(
+      emb.filter(xxhash64(col("vec_id")) % m2 === 0).join(a1, Seq("vec_id")),
+      Seq(cents1), "embedding", "resid")
+      .select(col("vec_id"), col("resid").as("embedding"))
     val c2 = lloydCentersJoin(sampResid, k2, iters)
-    val spread2 =
-      if (n * k2.toLong > 4000000L) Dedup.fanOut(emb) else emb
-    val packed =
+    val rows = spread(emb, n * k2).join(a1, Seq("vec_id"))
+    // (vec_id, cell, sub)
+    val subs =
       if (k1.toLong * k2 <= 65536L) {
-        // combined-centers argmin: one native-kernel pass, no residuals
-        val comb = broadcast(
-          (for { (cc, i) <- c1.zipWithIndex.toSeq
-                 (sc, j) <- c2.zipWithIndex.toSeq }
-            yield (i.toLong, j.toLong,
-              cc.zip(sc).map { case (a, b) => a + b }.toSeq))
-            .toDF("cell", "sid", "wv"))
-        val sd6i =
-          floor(euclidExpr(spark, "ce", "wv") * 1e6 + 0.5).cast("long")
-        spread2
-          .select(col("vec_id"), col("embedding").as("ce"))
-          .join(a1, Seq("vec_id"))
-          .join(comb, Seq("cell"))
-          .groupBy("vec_id", "cell")
-          .agg(min(packedArgmin(sd6i, col("sid"))).as("ms"))
+        // combined-centers argmin: one native-kernel pass, no residuals;
+        // entry cell·k2 + sub combines coarse center cell and residual
+        // center sub, and meets only its cell's rows
+        val comb = centersFrame(spark,
+          for (cc <- c1.toSeq; sc <- c2.toSeq)
+            yield cc.zip(sc).map { case (a, b) => a + b }, "wid", "wv")
+          .withColumn("cell", floor(col("wid") / k2))
+        assign(rows.select(col("vec_id"), col("embedding").as("ce"),
+            col("cell")), Seq("vec_id", "cell"), "ce", comb, "wid", "wv",
+          "wid", on = Seq("cell"))
+          .select(col("vec_id"), col("cell"),
+            (col("wid") - col("cell") * k2).as("sub"))
       } else {
         // past the combined broadcast's 2^16-cell bound: materialize
         // (vec_id, cell, residual) once, argmin against the bounded
         // k2-row residual codebook
-        val cents2 = broadcast(c2.zipWithIndex.toSeq
-          .map { case (c, j) => (j.toLong, c.toSeq) }.toDF("sid", "sv"))
-        val resid = spread2
-          .join(a1, Seq("vec_id"))
-          .join(cents1, col("cell") === col("cid"))
-          .select(col("vec_id"), col("cell"),
-            zip_with(transform(col("embedding"), v => v.cast("double")),
-              col("cv"), (x, c) => x - c).as("re"))
-          .localCheckpoint()
-        val rd6i =
-          floor(euclidExpr(spark, "re", "sv") * 1e6 + 0.5).cast("long")
-        resid.join(cents2)
-          .groupBy("vec_id", "cell")
-          .agg(min(packedArgmin(rd6i, col("sid"))).as("ms"))
+        val resid = residual(rows, Seq(cents1), "embedding", "re")
+          .select("vec_id", "cell", "re").localCheckpoint()
+        assign(resid, Seq("vec_id", "cell"), "re",
+          centersFrame(spark, c2, "sid", "sv"), "sid", "sv", "sub")
       }
-    packed
-      .select(col("vec_id"),
-        (col("cell") * 65536 + unpackId(col("ms"))).as("cell"))
+    subs.select(col("vec_id"), (col("cell") * 65536 + col("sub")).as("cell"))
       .localCheckpoint()
   }
 
@@ -1627,11 +1195,9 @@ object Similarity {
     * and once-computed norms rejoin per surviving candidate. */
   private def semDupPairs(assign: DataFrame, emb: DataFrame,
       tau: Double): DataFrame = {
-    val native = emb.sparkSession.catalog.functionExists("graft_dot")
-    def dotOf(a: String, b: String): Column =
-      if (native) expr(s"graft_dot($a, $b)") else dot(col(a), col(b))
+    val spark = emb.sparkSession
     val e = emb.select(col("vec_id"), col("embedding").as("ev"))
-      .withColumn("nv", sqrt(dotOf("ev", "ev")))
+      .withColumn("nv", sqrt(dotExpr(spark, "ev", "ev")))
     val ids = assign.select(col("cell"), col("vec_id"))
     val cand = ids.select(col("cell"), col("vec_id").as("doc_a"))
       .join(ids.select(col("cell"), col("vec_id").as("doc_b")), Seq("cell"))
@@ -1645,7 +1211,7 @@ object Similarity {
       // (also keeps ANSI mode from raising on the 0·0 divide)
       .filter(col("na") > 0 && col("nb") > 0)
       .select(col("doc_a"), col("doc_b"),
-        (dotOf("ea", "eb") / (col("na") * col("nb"))).as("c"))
+        (dotExpr(spark, "ea", "eb") / (col("na") * col("nb"))).as("c"))
       .filter(col("c") >= tau)
       .select(col("doc_a"), col("doc_b"))
   }
@@ -1662,7 +1228,7 @@ object Similarity {
     * per corpus vector: (vec_id, cell, keep).
     *
     * Training reuses the deterministic Lloyd trainer that backs
-    * [[ivfTopKTrained]] (1e-6-rounded iteration means, id-ordered init),
+    * [[ivfTrainedIndex]] (1e-6-rounded iteration means, id-ordered init),
     * so clustering + assignment + pruning replay as ONE composed oracle
     * SQL statement.
     *

@@ -502,12 +502,14 @@ object MlQueries {
     "ml_kmeans" -> valueVerdictSql(
       Seq("kmeans_clusters_in_range", "kmeans_sizes_sum_n",
         "kmeans_wssse_le_lloyd4"),
-      // per-row 1e-6 rounding of the squared distance BEFORE the sum
-      // (round-9 advice): identical summed operands on both engines
+      // per-row rounding of the squared distance to whole 1e-6 units
+      // BEFORE the sum, the units summed as integers and the total
+      // rounded half up to 1e-4 in integers: the same exact value on
+      // both engines, whatever order either sums in
       Seq("SELECT 'kmeans_wssse_lloyd4' AS metric, " +
-        "FLOOR(SUM(FLOOR(POWER(LIST_DISTANCE(x.xv, c.cv), 2) " +
-        "* 1000000 + 0.5) / 1000000) * 10000 + 0.5) " +
-        "/ 10000 AS value FROM a5 a JOIN x ON x.vec_id = a.vec_id " +
+        "((SUM(CAST(FLOOR(POWER(LIST_DISTANCE(x.xv, c.cv), 2) " +
+        "* 1000000 + 0.5) AS BIGINT)) + 50) // 100) " +
+        "/ 10000.0 AS value FROM a5 a JOIN x ON x.vec_id = a.vec_id " +
         "JOIN c5 c ON c.cluster = a.cluster"),
       ctePrefix = lloydCentroidCte(k = 4, iters = 5, dim = 64)),
     "ml_pca" -> valueVerdictSql(

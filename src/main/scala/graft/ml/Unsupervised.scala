@@ -45,7 +45,7 @@ object Unsupervised {
     * `c_{iters-1}`, `c_iters` pair the DuckDB oracle unrolls), the sizes
     * of the last assignment (to `prev`), the number of vectors trained
     * on, and, when asked for, the WSSSE of that assignment against the
-    * final centers. */
+    * final centers, rounded to 1e-4. */
   private[graft] final case class LloydRun(prev: Array[Array[Double]],
       centers: Array[Array[Double]], sizes: Array[Long], n: Long,
       wssse: Option[Double])
@@ -132,15 +132,18 @@ object Unsupervised {
           if (sizes(c) == 0) prev(c)
           else Array.tabulate(w - 1)(j => r6(acc(c * w + j) / sizes(c))))
       }
-      // each squared distance is rounded to 1e-6 before the sum, as the
-      // DuckDB oracle does; the Long of floor maps NaN to 0, as Spark's
-      // floor did in the SQL form
+      // each squared distance is rounded to whole 1e-6 units and the
+      // units are summed as Longs, as the DuckDB oracle does, then the
+      // total rounds half up to 1e-4 in integers: no order of double
+      // additions can move a tie. The Long of floor maps NaN to 0, as
+      // Spark's floor did in the SQL form
       val cost = if (!wssse) None else {
         val bc = data.sparkContext.broadcast((prev, centers))
-        Some(data.map { case (_, x) =>
+        val units = data.map { case (_, x) =>
           val (p, f) = bc.value
-          math.floor(sqDist(x, f(nearest(p, x, rounded))) * 1e6 + 0.5).toLong / 1e6
-        }.sum())
+          math.floor(sqDist(x, f(nearest(p, x, rounded))) * 1e6 + 0.5).toLong
+        }.fold(0L)(_ + _)
+        Some((units + 50) / 100 / 1e4)
       }
       LloydRun(prev, centers, sizes, sizes.sum, cost)
     } finally data.unpersist(blocking = true)

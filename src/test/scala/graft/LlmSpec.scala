@@ -216,7 +216,7 @@ class LlmSpec extends AnyFunSuite {
   test("ivf topk: self found, sims agree with brute force, cells pruned") {
     val e = Tables(spark, sf0001, "embeddings")
     val q = e.filter($"vec_id" < 5)
-    val ivf = Similarity.ivfTopK(q, e, k = 5).collect()
+    val ivf = Similarity.ivfProbe(q, Similarity.ivfIndex(e), k = 5).collect()
     assert(ivf.nonEmpty)
     // every query retrieves itself (its own cell is always probed)
     val selfHits = ivf.filter(r => r.getLong(0) == r.getLong(1))
@@ -435,8 +435,8 @@ class LlmSpec extends AnyFunSuite {
   test("trained ivf: self found, sims agree with brute force") {
     val e = Tables(spark, sf0001, "embeddings")
     val q = e.filter($"vec_id" < 5)
-    val ivf = Similarity.ivfTopKTrained(q, e, k = 5, nlist = 4, nProbe = 2)
-      .collect()
+    val ivf = Similarity.ivfProbe(q, Similarity.ivfTrainedIndex(e, nlist = 4),
+      k = 5, nProbe = Seq(2)).collect()
     assert(ivf.nonEmpty)
     // a query's own cell is its nearest cell, so it always finds itself
     assert(ivf.count(r => r.getLong(0) == r.getLong(1)) == 5)

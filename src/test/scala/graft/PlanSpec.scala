@@ -58,8 +58,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("ivf probes cells through joins, never a cartesian corpus scan") {
     val e = Tables(spark, sf0001, "embeddings")
-    val df = graft.llm.Similarity.ivfTopK(e.filter(
-      org.apache.spark.sql.functions.col("vec_id") < 10), e, k = 5)
+    val df = graft.llm.Similarity.ivfProbe(e.filter(
+      org.apache.spark.sql.functions.col("vec_id") < 10),
+      graft.llm.Similarity.ivfIndex(e), k = 5)
     df.collect()
     val p = plan(df)
     // centroid assignment broadcasts the (tiny) centroid set; candidate
@@ -73,9 +74,10 @@ class PlanSpec extends AnyFunSuite {
   test("residual ivf probes composite (cell, sub) keys through joins, " +
       "never a cartesian corpus scan") {
     val e = Tables(spark, sf0001, "embeddings")
-    val df = graft.llm.Similarity.ivfResidualTopK(e.filter(
-      org.apache.spark.sql.functions.col("vec_id") < 10), e, k = 5,
-      nlist = 4, nsplit = 2)
+    val df = graft.llm.Similarity.ivfProbe(e.filter(
+      org.apache.spark.sql.functions.col("vec_id") < 10),
+      graft.llm.Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2)),
+      k = 5)
     df.collect()
     val p = plan(df)
     // both center tables broadcast (bounded by construction); the
@@ -89,14 +91,62 @@ class PlanSpec extends AnyFunSuite {
   test("three-level residual ivf keeps the (cell, sub, sub2) blocking " +
       "join-shaped — no cartesian fallback at any level") {
     val e = Tables(spark, sf0001, "embeddings")
-    val df = graft.llm.Similarity.ivfResidual3TopK(e.filter(
-      org.apache.spark.sql.functions.col("vec_id") < 10), e, k = 5,
-      nlist = 4, nsplit = 2, nsplit3 = 2)
+    val df = graft.llm.Similarity.ivfProbe(e.filter(
+      org.apache.spark.sql.functions.col("vec_id") < 10),
+      graft.llm.Similarity.ivfTrainedIndex(e, nlist = 4,
+        splits = Seq(2, 2)), k = 5)
     df.collect()
     val p = plan(df)
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       p.take(3000))
     assert(!p.contains("CartesianProduct"), p.take(3000))
+  }
+
+  test("lloydAssign checkpoints one broadcast argmin: a map-side packed " +
+      "min keyed by vec_id, never the payload past the exchange") {
+    // the curation chain's semdedup runs this plan: pin its shape
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (f == "localCheckpoint")
+          plans.synchronized { plans += qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.llm.Similarity.lloydAssign(Tables(spark, sf0001, "embeddings"),
+        nlist = 4)
+      org.apache.spark.ListenerBusFlush(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, plans)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val fin = nodes(plans.head)
+    val p = plans.head.toString
+    def count(name: String) = fin.count(_.nodeName == name)
+    // the k-row center table broadcasts into a nested-loop join ...
+    assert(count("BroadcastNestedLoopJoin") == 1 &&
+      count("LocalTableScan") == 1, p)
+    // ... under a partial + final fixed-width HashAggregate on vec_id
+    // with ONE shuffle between them, which carries (vec_id, min) only
+    val aggs = fin.collect { case h: HashAggregateExec => h }
+    assert(aggs.size == 2 && aggs.forall(_.groupingExpressions
+      .map(_.name) == Seq("vec_id")), p)
+    assert(aggs.map(_.output.map(_.name)).contains(Seq("vec_id", "min")), p)
+    assert(count("Exchange") == 1 && count("BroadcastExchange") == 1, p)
+    assert(Seq("SortAggregate", "ObjectHashAggregate", "SortMergeJoin",
+      "Window", "CartesianProduct").forall(count(_) == 0), p)
+    // one corpus scan, reading the id and the vector only
+    val scans = fin.filter(_.nodeName.startsWith("Scan parquet"))
+    assert(scans.size == 1 && scans.head.output.map(_.name) ==
+      Seq("vec_id", "embedding"), p)
   }
 
   test("semdedup pair generation joins on the cell id, never all-pairs") {
@@ -360,16 +410,15 @@ class PlanSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.col("vec_id") < 3)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-ivf-prune").toString
-    val (cents, assign) = Similarity.ivfIndex(emb)
-    Similarity.ivfIndexWrite(cents, assign, dir)
-    val (rc, ra) = Similarity.ivfIndexRead(spark, dir)
-    val nCells = rc.count()
-    val pruned = Similarity.ivfTopKIndexed(queries, rc, ra, k = 5,
-      nProbe = 2, staticPrune = true)
+    Similarity.ivfWrite(Similarity.ivfIndex(emb), dir)
+    val stored = Similarity.ivfRead(spark, dir)
+    val nCells = stored.codebooks.head.count()
+    val pruned = Similarity.ivfProbe(queries, stored, k = 5,
+      nProbe = Seq(2), staticPrune = true)
     val rows = pruned.collect()
     // same answer as the unpruned probe of the same stored index
-    val plainRows = Similarity.ivfTopKIndexed(queries, rc, ra, k = 5,
-      nProbe = 2).collect()
+    val plainRows = Similarity.ivfProbe(queries, stored, k = 5,
+      nProbe = Seq(2)).collect()
     assert(rows.toSeq == plainRows.toSeq && rows.nonEmpty)
     // the assignment scan must carry a literal cell partition filter
     // and select at most |Q| x nProbe of the nCells partitions — the
@@ -451,8 +500,10 @@ class PlanSpec extends AnyFunSuite {
       "llm/Dedup.scala" -> 1, "llm/LlmQueries.scala" -> 2,
       // the Lloyd kernel (Unsupervised.lloyd) reads its k×dim centers
       // back through takeOrdered(k) and treeAggregate, not collect():
-      // Similarity dropped 6 -> 4 and Unsupervised 2 -> 0 with it
-      "llm/Similarity.scala" -> 4, "llm/TextOps.scala" -> 2,
+      // Similarity dropped 6 -> 4 and Unsupervised 2 -> 0 with it; the
+      // one static-pruned IVF probe for every depth then took Similarity
+      // 4 -> 2 (the PQ codebook and the |Q|-bounded probe keys)
+      "llm/Similarity.scala" -> 2, "llm/TextOps.scala" -> 2,
       "ml/Checks.scala" -> 9,
       "ml/knn/Knn.scala" -> 2, "streaming/EventStreams.scala" -> 1)
     val root = java.nio.file.Paths.get("src/main/scala/graft")

@@ -321,33 +321,36 @@ class ScaleLaddersSpec extends AnyFunSuite {
   }
 
   test("ivfResidualTopK with full probes equals brute-force top-k") {
-    // exhaustive probing (nProbe=nlist, nProbeSub=nsplit) removes the
-    // approximation: the two-level index must then reproduce the exact
-    // ranking — the contract that build, residual split, and probe
+    // exhaustive probing (nProbe = codebook size at both levels) removes
+    // the approximation: the two-level index must then reproduce the
+    // exact ranking — the contract that build, residual split, and probe
     // compose losslessly
     val e = blobs(240, dim = 8)
     val q = e.filter(col("vec_id") < 6)
     val exact = Similarity.bruteForceTopK(q, e, k = 3)
       .select("query_id", "neighbor_id", "rank").collect().toSet
-    val twoLevel = Similarity.ivfResidualTopK(q, e, k = 3,
-      nlist = 4, nsplit = 3, nProbe = 4, nProbeSub = 3)
+    val twoLevel = Similarity.ivfProbe(q,
+        Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(3)), k = 3,
+        nProbe = Seq(4, 3))
       .select("query_id", "neighbor_id", "rank").collect().toSet
     assert(twoLevel == exact)
   }
 
+  /** blobs + a strong SHARED residual component (same axis for every
+    * blob): a shared residual codebook can only refine structure that
+    * repeats across cells — exactly the IVF-residual assumption. */
+  private def sharedResidualBlobs(n: Int) = blobs(n, dim = 8)
+    .select(col("vec_id"),
+      transform(col("embedding"), (v, i) =>
+        when(i === 7, (pmod(col("vec_id"), lit(3)).cast("float") -
+          lit(1.0f)) * lit(0.3f)).otherwise(v)).as("embedding"))
+
   test("ivfResidualIndex: composite cells partition the corpus and shrink cells") {
-    // blobs + a strong SHARED residual component (same axis for every
-    // blob): the shared residual codebook can only refine structure
-    // that repeats across cells — exactly the IVF-residual assumption
-    val e = blobs(400, dim = 8)
-      .select(col("vec_id"),
-        transform(col("embedding"), (v, i) =>
-          when(i === 7, (pmod(col("vec_id"), lit(3)).cast("float") -
-            lit(1.0f)) * lit(0.3f)).otherwise(v)).as("embedding"))
-    val (c1, c2, assign) = Similarity.ivfResidualIndex(e,
-      nlist = 4, nsplit = 3)
-    assert(c1.count() == 4 && c2.count() == 3)
-    val rows = assign.select("neighbor_id", "cell", "sub").collect()
+    val ix = Similarity.ivfTrainedIndex(sharedResidualBlobs(400), nlist = 4,
+      splits = Seq(3))
+    assert(ix.levels == 2 && ix.n == 400)
+    assert(ix.codebooks(0).count() == 4 && ix.codebooks(1).count() == 3)
+    val rows = ix.assignment.select("neighbor_id", "cell", "sub").collect()
     assert(rows.length == 400) // every vector assigned exactly once
     assert(rows.map(_.getLong(0)).distinct.length == 400)
     val cellSizes = rows.groupBy(r => (r.getLong(1), r.getLong(2)))
@@ -357,22 +360,15 @@ class ScaleLaddersSpec extends AnyFunSuite {
     // composite cell is smaller than the largest coarse cell
     assert(cellSizes.max < coarseSizes.max,
       s"split did not refine: ${cellSizes.max} vs ${coarseSizes.max}")
-    // probing the built index matches the fused build+probe path
-    val viaIndex = Similarity.ivfResidualTopKIndexed(
-      e.filter(col("vec_id") < 5), c1, c2, assign, k = 3)
-      .collect().map(_.toString).toSeq
-    val fused = Similarity.ivfResidualTopK(
-      e.filter(col("vec_id") < 5), e, k = 3, nlist = 4, nsplit = 3)
-      .collect().map(_.toString).toSeq
-    assert(viaIndex == fused)
   }
 
   test("adaptiveNsplit3: 1 below ~1B vectors, then ~1000/effective-cell") {
-    assert(Similarity.adaptiveNsplit3(600) == 1)
-    assert(Similarity.adaptiveNsplit3(1000L * 1000 * 1000) == 1) // at the 2-level cap
-    assert(Similarity.adaptiveNsplit3(1100L * 1000 * 1000) == 2) // just past it
-    assert(Similarity.adaptiveNsplit3(4L * 1000 * 1000 * 1000) == 4)
-    assert(Similarity.adaptiveNsplit3(300L * 1000 * 1000 * 1000) == 256) // cap
+    // the third level's split: index level 2
+    assert(Similarity.adaptiveNsplit(level = 2, n = 600) == 1)
+    assert(Similarity.adaptiveNsplit(level = 2, n = 1000L * 1000 * 1000) == 1) // at the 2-level cap
+    assert(Similarity.adaptiveNsplit(level = 2, n = 1100L * 1000 * 1000) == 2) // just past it
+    assert(Similarity.adaptiveNsplit(level = 2, n = 4L * 1000 * 1000 * 1000) == 4)
+    assert(Similarity.adaptiveNsplit(level = 2, n = 300L * 1000 * 1000 * 1000) == 256) // cap
   }
 
   test("ivfResidual3TopK with full probes equals brute-force top-k") {
@@ -382,52 +378,37 @@ class ScaleLaddersSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") < 6)
     val exact = Similarity.bruteForceTopK(q, e, k = 3)
       .select("query_id", "neighbor_id", "rank").collect().toSet
-    val threeLevel = Similarity.ivfResidual3TopK(q, e, k = 3,
-      nlist = 4, nsplit = 2, nsplit3 = 2,
-      nProbe = 4, nProbeSub = 2, nProbeSub3 = 2)
+    val threeLevel = Similarity.ivfProbe(q,
+        Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2, 2)),
+        k = 3, nProbe = Seq(4, 2, 2))
       .select("query_id", "neighbor_id", "rank").collect().toSet
     assert(threeLevel == exact)
   }
 
   test("ivfResidual3Index: (cell, sub, sub2) strictly refines (cell, sub)") {
-    val e = blobs(400, dim = 8)
-      .select(col("vec_id"),
-        transform(col("embedding"), (v, i) =>
-          when(i === 7, (pmod(col("vec_id"), lit(3)).cast("float") -
-            lit(1.0f)) * lit(0.3f)).otherwise(v)).as("embedding"))
-    val (c1, c2, c3, assign) = Similarity.ivfResidual3Index(e,
-      nlist = 4, nsplit = 2, nsplit3 = 2)
-    assert(c1.count() == 4 && c2.count() == 2 && c3.count() == 2)
-    val rows = assign.select("neighbor_id", "cell", "sub", "sub2").collect()
+    val e = sharedResidualBlobs(400)
+    val two = Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2))
+    val ix = Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq(2, 2))
+    assert(ix.codebooks.map(_.count()) == Seq(4L, 2L, 2L))
+    val rows = ix.assignment.select("neighbor_id", "cell", "sub", "sub2")
+      .collect()
     assert(rows.length == 400)
     assert(rows.map(_.getLong(0)).distinct.length == 400)
     val three = rows.groupBy(r =>
       (r.getLong(1), r.getLong(2), r.getLong(3))).map(_._2.length)
-    val two = rows.groupBy(r => (r.getLong(1), r.getLong(2)))
+    val twoSizes = rows.groupBy(r => (r.getLong(1), r.getLong(2)))
       .map(_._2.length)
-    assert(three.max < two.max,
-      s"third level did not refine: ${three.max} vs ${two.max}")
-    // stored ≡ fused through the deployment write/read contract
-    val dir = java.nio.file.Files
-      .createTempDirectory("r3idx").toString
-    Similarity.ivfResidual3IndexWrite(c1, c2, c3, assign, dir)
-    val (r1, r2, r3c, ra) = Similarity.ivfResidual3IndexRead(spark, dir)
-    val q = e.filter(col("vec_id") < 5)
-    val viaStored = Similarity.ivfResidual3TopKIndexed(
-      q, r1, r2, r3c, ra, k = 3).collect().map(_.toString).toSeq
-    val viaBuilt = Similarity.ivfResidual3TopKIndexed(
-      q, c1, c2, c3, assign, k = 3).collect().map(_.toString).toSeq
-    assert(viaStored == viaBuilt)
-    // the staticPrune deployment path: identical result through the
-    // packed (cell, sub, sub2) partition filter, and an empty query
-    // batch short-circuits to empty instead of throwing
-    val viaPruned = Similarity.ivfResidual3TopKIndexed(
-      q, r1, r2, r3c, ra, k = 3, staticPrune = true)
-      .collect().map(_.toString).toSeq
-    assert(viaPruned == viaStored)
-    assert(Similarity.ivfResidual3TopKIndexed(
-      e.filter(col("vec_id") < 0), r1, r2, r3c, ra, k = 3,
-      staticPrune = true).count() == 0)
+    assert(three.max < twoSizes.max,
+      s"third level did not refine: ${three.max} vs ${twoSizes.max}")
+    // one more level on a built two-level index is the fused three-level
+    // build (llm_ann_recall_all composes it that way)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("neighbor_id").collect().map(_.toString).toSeq
+    assert(sorted(Similarity.addLevel(two, nsplit = 2).assignment) ==
+      sorted(ix.assignment))
+    // and taking its first level back gives the trained one-level index
+    assert(sorted(ix.take(1).assignment) ==
+      sorted(Similarity.ivfTrainedIndex(e, nlist = 4).assignment))
   }
 
   test("packedArgmin id bound fails loudly, not by silent mis-ranking") {
@@ -439,7 +420,7 @@ class ScaleLaddersSpec extends AnyFunSuite {
       (col("vec_id") + lit(1L << 33)).as("vec_id"), col("embedding"))
     val ex = intercept[Exception] {
       // stride 1: every row is a centroid, ids flow into the pack
-      Similarity.ivfIndex(e, centroidStride = 1)._2.collect()
+      Similarity.ivfIndex(e, centroidStride = 1).assignment.collect()
     }
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8).toSeq
@@ -448,55 +429,48 @@ class ScaleLaddersSpec extends AnyFunSuite {
       s"expected the packedArgmin guard, got: $ex")
   }
 
-  test("residual staticPrune: empty query batch short-circuits to empty") {
+  /** A trained index of `levels` levels: 4 coarse cells, 2 per later level. */
+  private def trained(e: org.apache.spark.sql.DataFrame, levels: Int) =
+    Similarity.ivfTrainedIndex(e, nlist = 4, splits = Seq.fill(levels - 1)(2))
+
+  test("staticPrune: an empty query batch short-circuits to empty at 1, 2 " +
+      "and 3 levels") {
     // the probed-key partition filter used to reduce over an empty key
     // set (UnsupportedOperationException); an empty batch must instead
-    // return zero rows through the same code path
+    // return zero rows through the same code path at every depth
     val e = blobs(60)
-    val (c1, c2, assign) = Similarity.ivfResidualIndex(e,
-      nlist = 4, nsplit = 2)
-    val out = Similarity.ivfResidualTopKIndexed(
-      e.filter(col("vec_id") < 0), c1, c2, assign, k = 3,
-      staticPrune = true)
-    assert(out.count() == 0)
+    for (levels <- 1 to 3)
+      assert(Similarity.ivfProbe(e.filter(col("vec_id") < 0),
+        trained(e, levels), k = 3, staticPrune = true).count() == 0,
+        s"$levels levels")
   }
 
   test("staticPrune packed-key budget guards fail loudly, not by " +
       "silently unpruned scans") {
-    // r11 advice: a key component past the pack's bit budget could
-    // never corrupt results (the composite equi-join is the exact
-    // filter) but silently defeated the partition pruning the flag
-    // exists for — both probe paths must now RAISE on the collected
-    // keys instead. Doctored center ids simulate an index built with
-    // out-of-budget nlist/nsplit3.
+    // a key component past the pack's bit budget could never corrupt
+    // results (the composite equi-join is the exact filter) but would
+    // silently defeat the partition pruning the flag exists for, so the
+    // probe RAISES on the collected keys instead. Levels past the first
+    // pack 16 bits each, level 0 the rest of 63; doctored center ids
+    // simulate an index built with out-of-budget codebooks.
     val e = blobs(60, dim = 8)
     val q = e.filter(col("vec_id") < 3)
-    // two-level pack: cell >= 2^30 would overflow the cell·2^33 shift
-    val (c1, c2, assign) = Similarity.ivfResidualIndex(e,
-      nlist = 2, nsplit = 2)
-    val badC1 = c1.select((col("cid") + lit(1L << 30)).as("cid"),
-      col("cv")).localCheckpoint()
-    val badAssign = assign
-      .withColumn("cell", col("cell") + lit(1L << 30)).localCheckpoint()
-    val ex2 = intercept[IllegalArgumentException](
-      Similarity.ivfResidualTopKIndexed(q, badC1, c2, badAssign, k = 3,
-        staticPrune = true))
-    assert(ex2.getMessage.contains("bit budget"), ex2.getMessage)
-    // three-level pack: sub2 >= 2^13 collides in the 26/13-bit key
-    val (r1, r2, r3, ra) = Similarity.ivfResidual3Index(e,
-      nlist = 2, nsplit = 2, nsplit3 = 2)
-    val badC3 = r3.select((col("tid") + lit(8192L)).as("tid"),
-      col("tv")).localCheckpoint()
-    val badRa = ra
-      .withColumn("sub2", col("sub2") + lit(8192L)).localCheckpoint()
-    val ex3 = intercept[IllegalArgumentException](
-      Similarity.ivfResidual3TopKIndexed(q, r1, r2, badC3, badRa, k = 3,
-        staticPrune = true))
-    assert(ex3.getMessage.contains("bit budget"), ex3.getMessage)
-    // the undoctored indexes pass the same guards (the pruned contract
-    // tests above already assert result identity)
-    assert(Similarity.ivfResidualTopKIndexed(q, c1, c2, assign, k = 3,
-      staticPrune = true).count() > 0)
+    val names = Seq("cid" -> "cell", "sid" -> "sub", "tid" -> "sub2")
+    for (levels <- 2 to 3; j <- Seq(0, levels - 1)) {
+      val ix = trained(e, levels)
+      val (id, key) = names(j)
+      val off = 1L << (if (j == 0) 63 - 16 * (levels - 1) else 16)
+      val bad = Similarity.IvfIndex(
+        ix.codebooks.updated(j, ix.codebooks(j)
+          .withColumn(id, col(id) + lit(off)).localCheckpoint()),
+        ix.assignment.withColumn(key, col(key) + lit(off)).localCheckpoint())
+      val ex = intercept[IllegalArgumentException](
+        Similarity.ivfProbe(q, bad, k = 3, staticPrune = true))
+      assert(ex.getMessage.contains("bit budget"), ex.getMessage)
+      // the undoctored index passes the same guard
+      assert(Similarity.ivfProbe(q, ix, k = 3, staticPrune = true)
+        .count() > 0, s"$levels levels")
+    }
   }
 
   test("sign patterns are pairwise-independent (the degeneracy probe)") {

@@ -524,73 +524,84 @@ class WritersAndPipelineSpec extends AnyFunSuite {
       s"append=$viaAppend rebuild=$viaRebuild")
   }
 
-  test("persisted IVF index: parquet round-trip probe equals the fused " +
-      "ivfTopK answer") {
+  /** The same corpus indexed at 1 (strided), 2 and 3 (trained) levels. */
+  private def ivfIndexes(emb: org.apache.spark.sql.DataFrame) = {
     import graft.llm.Similarity
-    val emb = Tables(spark, sf0001, "embeddings")
-    val queries = emb.filter(org.apache.spark.sql.functions
-      .col("vec_id") < 5)
-    val dir = tmp("graft-ivf-index")
-    val (cents, assign) = Similarity.ivfIndex(emb)
-    cents.write.parquet(s"$dir/centroids")
-    // partitionBy(cell) is the deployment shape: a probe's cell
-    // equi-join partition-prunes to the probed cells' files
-    assign.write.partitionBy("cell").parquet(s"$dir/assign")
-    val viaIndex = Similarity.ivfTopKIndexed(queries,
-        spark.read.parquet(s"$dir/centroids"),
-        spark.read.parquet(s"$dir/assign"), k = 5)
-      .collect().map(_.toSeq).toSeq
-    val fused = Similarity.ivfTopK(queries, emb, k = 5)
-      .collect().map(_.toSeq).toSeq
-    assert(viaIndex == fused && viaIndex.nonEmpty)
+    Seq(Similarity.ivfIndex(emb),
+      Similarity.ivfTrainedIndex(emb, nlist = 4, splits = Seq(2)),
+      Similarity.ivfTrainedIndex(emb, nlist = 4, splits = Seq(2, 2)))
   }
 
-  test("residual IVF index round-trips partitioned by (cell, sub) and " +
-      "the static-pruned probe equals the fused path") {
+  test("persisted IVF index at 1, 2 and 3 levels: the written-then-read " +
+      "probe equals the fused build+probe") {
     import graft.llm.Similarity
-    import org.apache.spark.sql.functions.col
     val emb = Tables(spark, sf0001, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
-    val dir = tmp("graft-ivf-residual")
-    val (c1, c2, assign) = Similarity.ivfResidualIndex(emb,
-      nlist = 4, nsplit = 2)
-    Similarity.ivfResidualIndexWrite(c1, c2, assign, dir)
-    val (rc1, rc2, ra) = Similarity.ivfResidualIndexRead(spark, dir)
-    assert(rc1.count() == 4 && rc2.count() == 2 &&
-      ra.count() == emb.count())
-    val viaStored = Similarity.ivfResidualTopKIndexed(queries,
-        rc1, rc2, ra, k = 5, staticPrune = true)
-      .collect().map(_.toSeq).toSeq
-    val fused = Similarity.ivfResidualTopK(queries, emb, k = 5,
-      nlist = 4, nsplit = 2)
-      .collect().map(_.toSeq).toSeq
-    assert(viaStored == fused && viaStored.nonEmpty)
-    // kernel marker guard, same contract as the single-level index
-    import spark.implicits._
-    Seq("some_other_kernel/9").toDF("kernel")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfResidualIndexRead(spark, dir)
+    val n = emb.count()
+    val dir = tmp("graft-ivf-index")
+    // deepest first into ONE directory: a shallower write must not leave
+    // the deeper index's codebooks behind for the reader to count
+    for (built <- ivfIndexes(emb).reverse) {
+      Similarity.ivfWrite(built, dir)
+      val stored = Similarity.ivfRead(spark, dir)
+      assert(stored.levels == built.levels)
+      assert(stored.assignment.count() == n)
+      val fused = Similarity.ivfProbe(queries, built, k = 5)
+        .collect().map(_.toSeq).toSeq
+      assert(fused.nonEmpty)
+      // partitionBy(level keys) is the deployment shape: the
+      // static-pruned probe reads only the probed cells' files
+      for (prune <- Seq(false, true))
+        assert(Similarity.ivfProbe(queries, stored, k = 5,
+          staticPrune = prune).collect().map(_.toSeq).toSeq == fused,
+          s"${built.levels} levels, staticPrune = $prune")
     }
-    assert(e.getMessage.contains("kernel"), e.getMessage)
+  }
+
+  test("an IVF index in the per-family on-disk layout reads back and " +
+      "probes like the index it was written from") {
+    // the layout the one-, two- and three-level writers produced before
+    // the index became one type: codebooks under centroids/,
+    // subcentroids/, subcentroids3/, the assignment partitioned by its
+    // keys, a one-row kernel marker
+    import graft.llm.Similarity
+    val emb = Tables(spark, sf0001, "embeddings")
+    val queries = emb.filter(col("vec_id") < 8)
+    val kernel =
+      if (spark.catalog.functionExists("graft_euclid")) "graft_euclid/1"
+      else "builtin_hof_euclid/1"
+    val dirs = Seq("centroids", "subcentroids", "subcentroids3")
+    val keys = Seq("cell", "sub", "sub2")
+    for (built <- ivfIndexes(emb)) {
+      val dir = tmp(s"graft-ivf-legacy${built.levels}")
+      built.codebooks.zip(dirs).foreach { case (cb, d) =>
+        cb.write.parquet(s"$dir/$d") }
+      built.assignment.write.partitionBy(keys.take(built.levels): _*)
+        .parquet(s"$dir/assign")
+      Seq(kernel).toDF("kernel").write.parquet(s"$dir/meta")
+      val stored = Similarity.ivfRead(spark, dir)
+      assert(stored.levels == built.levels)
+      assert(Similarity.ivfProbe(queries, stored, k = 5).collect().toSeq ==
+        Similarity.ivfProbe(queries, built, k = 5).collect().toSeq)
+    }
   }
 
   test("IVF index load fails loudly when the stored kernel marker " +
       "differs from the probing session's kernel") {
     import graft.llm.Similarity
     val emb = Tables(spark, sf0001, "embeddings")
-    val dir = tmp("graft-ivf-kernel")
-    val (cents, assign) = Similarity.ivfIndex(emb)
-    Similarity.ivfIndexWrite(cents, assign, dir)
-    // the marker round-trips on a matched session
-    val (rc, ra) = Similarity.ivfIndexRead(spark, dir)
-    assert(rc.count() > 0 && ra.count() == emb.count())
-    // simulate an index built by a session with a different kernel
-    Seq("some_other_kernel/9").toDF("kernel")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.ivfIndexRead(spark, dir)
+    for (built <- ivfIndexes(emb)) {
+      val dir = tmp(s"graft-ivf-kernel${built.levels}")
+      Similarity.ivfWrite(built, dir)
+      // the marker round-trips on a matched session
+      assert(Similarity.ivfRead(spark, dir).levels == built.levels)
+      // simulate an index built by a session with a different kernel
+      Seq("some_other_kernel/9").toDF("kernel")
+        .write.mode("overwrite").parquet(s"$dir/meta")
+      val e = intercept[IllegalArgumentException] {
+        Similarity.ivfRead(spark, dir)
+      }
+      assert(e.getMessage.contains("kernel"), e.getMessage)
     }
-    assert(e.getMessage.contains("kernel"), e.getMessage)
   }
 }

@@ -79,8 +79,9 @@ object LlmFuzzSeed {
         LlmQueries.annIvfSql(stride, nProbe, k),
         (s, d) => {
           val e = emb(s, d)
-          Similarity.ivfTopK(e.filter(col("vec_id") < 10), e, k,
-            centroidStride = stride, nProbe = nProbe)
+          Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+            Similarity.ivfIndex(e, centroidStride = stride), k,
+            nProbe = Seq(nProbe))
         })
     }
 
@@ -118,8 +119,9 @@ object LlmFuzzSeed {
           LlmQueries.annIvfTrainedSql(nlist, iters, nProbe, k),
           (s, d) => {
             val e = emb(s, d)
-            Similarity.ivfTopKTrained(e.filter(col("vec_id") < 10), e,
-              k = k, nlist = nlist, iters = iters, nProbe = nProbe)
+            Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+              Similarity.ivfTrainedIndex(e, nlist = nlist, iters = iters),
+              k = k, nProbe = Seq(nProbe))
           })
     }
     val semdedup = Seq((0.3, 4, 5), (0.5, 4, 3), (0.4, 8, 5),
@@ -144,9 +146,10 @@ object LlmFuzzSeed {
             nProbeSub, k),
           (s, d) => {
             val e = emb(s, d)
-            Similarity.ivfResidualTopK(e.filter(col("vec_id") < 10), e,
-              k = k, nlist = nlist, nsplit = nsplit, nProbe = nProbe,
-              nProbeSub = nProbeSub, iters = iters)
+            Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+              Similarity.ivfTrainedIndex(e, nlist = nlist,
+                splits = Seq(nsplit), iters = iters),
+              k = k, nProbe = Seq(nProbe, nProbeSub))
           })
     }
 
@@ -161,9 +164,10 @@ object LlmFuzzSeed {
             p1, p2, p3, k),
           (s, d) => {
             val e = emb(s, d)
-            Similarity.ivfResidual3TopK(e.filter(col("vec_id") < 10), e,
-              k = k, nlist = nlist, nsplit = nsplit, nsplit3 = nsplit3,
-              nProbe = p1, nProbeSub = p2, nProbeSub3 = p3, iters = iters)
+            Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+              Similarity.ivfTrainedIndex(e, nlist = nlist,
+                splits = Seq(nsplit, nsplit3), iters = iters),
+              k = k, nProbe = Seq(p1, p2, p3))
           })
     }
 

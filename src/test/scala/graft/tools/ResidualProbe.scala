@@ -53,9 +53,10 @@ object ResidualProbe {
       val vol1 = pairVolume(a1, Seq("cell"))
       val max1 = a1.groupBy("cell").count().agg(max("count")).head().getLong(0)
       // two level
-      System.err.println("[rp] stage: ivfResidualIndex")
+      System.err.println("[rp] stage: two-level ivfTrainedIndex")
       t0 = System.nanoTime()
-      val (c1, c2, a2) = Similarity.ivfResidualIndex(e, nlist, nsplit)
+      val ix = Similarity.ivfTrainedIndex(e, nlist, Seq(nsplit))
+      val a2 = ix.assignment
       val n2 = a2.count()
       val t2 = (System.nanoTime() - t0) / 1e9
       System.err.println("[rp] stage: pairVolume two-level")
@@ -65,11 +66,10 @@ object ResidualProbe {
       // probe wall: same query batch through both
       System.err.println("[rp] stage: probes")
       t0 = System.nanoTime()
-      Similarity.ivfTopKTrained(e.filter(col("vec_id") < 10), e, k = 5,
-        nlist = nlist, nProbe = 4)
-      val p1rows = Similarity.ivfResidualTopKIndexed(
-        e.filter(col("vec_id") < 10), c1, c2, a2, k = 5,
-        nProbe = 4, nProbeSub = 2).count()
+      Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+        Similarity.ivfTrainedIndex(e, nlist), k = 5, nProbe = Seq(4)).count()
+      val p1rows = Similarity.ivfProbe(e.filter(col("vec_id") < 10), ix,
+        k = 5, nProbe = Seq(4, 2)).count()
       val tp2 = (System.nanoTime() - t0) / 1e9
       println(f"RESIDUALPROBE rep$rep single: rows=$n1%-7d build=$t1%7.2f s " +
         f"pairVol=$vol1%-12d maxCell=$max1%-6d")

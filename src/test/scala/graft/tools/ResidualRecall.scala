@@ -50,21 +50,22 @@ object ResidualRecall {
       s"k=$k queries=$nQ")
     val q = e.filter(col("vec_id") < nQ).localCheckpoint()
     val truth = Similarity.bruteForceTopK(q, e, k).localCheckpoint()
-    val (c1, c2, assign0) = Similarity.ivfResidualIndex(e, nlist, nsplit)
-    val assign = assign0.localCheckpoint()
+    val ix0 = Similarity.ivfTrainedIndex(e, nlist, Seq(nsplit))
+    val ix = ix0.copy(assignment = ix0.assignment.localCheckpoint())
+    val assign = ix.assignment
     val cellSizes = assign.groupBy("cell", "sub").count().localCheckpoint()
     for ((nProbe, nProbeSub) <- Seq((2, 1), (4, 2), (4, 3), (6, 2),
       (8, 2), (8, 3), (12, 3))) {
       val t0 = System.nanoTime()
-      val ap = Similarity.ivfResidualTopKIndexed(q, c1, c2, assign, k,
-        nProbe = nProbe, nProbeSub = nProbeSub).localCheckpoint()
+      val ap = Similarity.ivfProbe(q, ix, k,
+        nProbe = Seq(nProbe, nProbeSub)).localCheckpoint()
       val rec = Similarity.recallAtK(ap, truth, k)
         .head().getDouble(0)
       val wall = (System.nanoTime() - t0) / 1e9
       // deterministic candidate volume: Σ over probed (query, cell, sub)
       // of that subcell's population — what the rank stage actually scores
-      val qSubs = Similarity.residualProbeKeys(q, c1, c2,
-        nProbe = nProbe, nProbeSub = nProbeSub)
+      val qSubs = Similarity.probeKeys(q, ix.codebooks,
+        Seq(nProbe, nProbeSub))
       val cand = qSubs.join(cellSizes, Seq("cell", "sub"))
         .agg(sum("count")).head().getLong(0)
       println(f"RESIDRECALL probe=($nProbe,$nProbeSub) recall@$k=$rec%6.4f " +

@@ -34,8 +34,8 @@ object SmoothProbe {
     val families: Seq[(String, String => Long)] = Seq(
       "ann_ivf" -> { dir: String =>
         val e = emb(dir)
-        Similarity.ivfTopK(e.filter(col("vec_id") < 10), e, k = 5,
-          nProbe = 4).count()
+        Similarity.ivfProbe(e.filter(col("vec_id") < 10),
+          Similarity.ivfIndex(e), k = 5, nProbe = Seq(4)).count()
       },
       "ann_ivfpq" -> { dir: String =>
         val e = emb(dir)

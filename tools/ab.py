@@ -27,8 +27,10 @@ the summary counts the flagged pairs.
 With `--bench-rows` each pair runs `graft.Bench` once in each checkout
 with `SPARK_GRAFT_ONLY` set to the rows, over `--sf-dir`, from the jar
 each checkout's benchmark builds. A row's value is the Bench's drop-max
-mean of its samples: three for a headline row (its suite pass and two
-reruns), the one suite pass for any other row. The pair's host-drift
+mean of its samples: its suite pass and two reruns, which a
+`SPARK_GRAFT_ONLY` run takes for every row it names (a Bench older than
+that reruns only headline rows, so any other row has its one suite
+pass). The pair's host-drift
 flag compares the two runs' `cpu_spin` canaries, taken before the rows.
 Each row gets the same verdict, against the `pass_wall_s` bound.
 """

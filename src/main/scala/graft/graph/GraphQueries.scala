@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 import graft.sources.Tables
 
@@ -44,8 +46,9 @@ object GraphQueries {
     * has no source and gives no rows. */
   private[graft] def pprConv(s: SparkSession, e: DataFrame,
       tol: Double): DataFrame =
-    minNode(e).fold(s.createDataFrame(Seq.empty[(Long, Double)])
-        .toDF("node", "rank"))(src =>
+    minNode(e).fold(s.createDataFrame(java.util.List.of[Row](),
+        StructType(Seq(StructField("node", LongType, nullable = false),
+          StructField("rank", DoubleType, nullable = false)))))(src =>
       Builtins.personalizedPageRankUntilConvergence(s, GraphSource.toGraph(e),
         src, tol))
 

@@ -78,13 +78,9 @@ object Similarity {
       .select(col("query_id"), col("embedding").as("qe"), col("t"), col("b"))
     val c = bucketed(corpus, "neighbor_id")
       .select(col("neighbor_id"), col("embedding").as("ce"), col("t"), col("b"))
-    val dist = sqrt(aggregate(
-      zip_with(col("qe"), col("ce"),
-        (x, y) => (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (a, v) => a + v))
     q.join(c, Seq("t", "b"))
-      .select(col("query_id"), col("neighbor_id"), dist.as("d"))
+      .select(col("query_id"), col("neighbor_id"),
+        euclidExpr(queries.sparkSession, "qe", "ce").as("d"))
       .groupBy("query_id", "neighbor_id").agg(min("d").as("d"))
       .filter(col("d") <= maxDist)
       .select(col("query_id"), col("neighbor_id"),

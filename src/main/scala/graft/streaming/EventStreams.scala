@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -16,12 +16,31 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark horizon; sessionization state is one small struct per
   * active user, expired by processing-time-independent event-time
   * timeout.
+  *
+  * Checkpoint I/O: every builder sets the stream's session to write its
+  * checkpoint (offsets, commits, state deltas) through
+  * [[LocalCheckpointFiles]], via Spark's
+  * `spark.sql.streaming.checkpointFileManagerClass`, unless that key is
+  * already set, in which case the caller's manager stays. The key is a
+  * session setting, so other streams of that session use it too; on
+  * non-local file systems it is Spark's default manager.
   */
 object EventStreams {
 
+  private val checkpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Installs [[LocalCheckpointFiles]] on `spark` unless a checkpoint
+    * file manager is already set there. */
+  private def localCheckpoints(spark: SparkSession): Unit =
+    if (spark.conf.getOption(checkpointManagerKey).isEmpty)
+      spark.conf.set(checkpointManagerKey,
+        classOf[LocalCheckpointFiles].getName)
+
   /** Tumbling-window counts + value sums per event type, 10-minute
     * windows, 20-minute watermark. */
-  def windowedCounts(events: DataFrame): DataFrame =
+  def windowedCounts(events: DataFrame): DataFrame = {
+    localCheckpoints(events.sparkSession)
     events
       .withWatermark("ts", "20 minutes")
       .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
@@ -29,15 +48,18 @@ object EventStreams {
         sum("value").as("value_sum"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("cnt"), col("value_sum"))
+  }
 
   /** Exactly-once-per-id dedup within the watermark horizon.
     * dropDuplicatesWithinWatermark, NOT dropDuplicates: plain
     * dropDuplicates only evicts state when the event-time column is part
     * of the dedup key, so keying on event_id alone would grow state
     * unboundedly on a long-running stream. */
-  def dedup(events: DataFrame): DataFrame =
+  def dedup(events: DataFrame): DataFrame = {
+    localCheckpoints(events.sparkSession)
     events.withWatermark("ts", "20 minutes")
       .dropDuplicatesWithinWatermark("event_id")
+  }
 
   /** Ingestion-time near-dup flagging — the streaming twin of
     * [[graft.llm.Dedup.incrementalNearDups]]: documents arriving on a
@@ -91,6 +113,7 @@ object EventStreams {
   def corpusMonitor(docs: DataFrame,
       watermark: String = "20 minutes"): DataFrame = {
     import graft.llm.TextOps
+    localCheckpoints(docs.sparkSession)
     val q4 = floor(TextOps.qualityScoreExpr * 10000 + 0.5).cast("long")
     docs.withWatermark("ts", watermark)
       .select(col("ts"), col("source"), TextOps.nTokExpr.as("n_tok"),
@@ -121,6 +144,7 @@ object EventStreams {
       watermark: String = "20 minutes",
       replicable: Boolean = false): DataFrame = {
     import graft.llm.Dedup
+    localCheckpoints(docsStream.sparkSession)
     val bCor = corpusIndex
       .select(col("doc_id").as("corpus_id"), explode(col("bands")).as("bucket"))
     val setB = corpusShingles.select(col("doc_id").as("corpus_id"),
@@ -155,6 +179,7 @@ object EventStreams {
     * evict join state on both sides (unbounded state otherwise). */
   def intervalJoin(left: DataFrame, right: DataFrame,
       maxDelayMinutes: Int = 10): DataFrame = {
+    localCheckpoints(left.sparkSession)
     val l = left.withWatermark("ts", "20 minutes")
       .select(col("user_id"), col("event_id").as("l_id"),
         col("event_type").as("l_type"), col("ts").as("l_ts"))
@@ -233,6 +258,7 @@ object EventStreams {
   def sessionize(events: Dataset[SessionEvent], gapMinutes: Int = 30)
       : Dataset[Session] = {
     import events.sparkSession.implicits._
+    localCheckpoints(events.sparkSession)
     val gapMs = gapMinutes * 60L * 1000L
     events
       .withWatermark("ts", "1 hour")
@@ -291,6 +317,7 @@ object EventStreams {
       shingleSize: Int = 3, maxOverlap: Double = 0.5,
       mBits: Int = 0, numHashes: Int = 4): DataFrame = {
     import graft.llm.{CorpusOps, Dedup, TextOps}
+    localCheckpoints(docsStream.sparkSession)
     val (bitmap, m) =
       CorpusOps.bloomBuild(evalDocs, shingleSize, mBits, numHashes)
     val bm = typedlit(bitmap.toSeq)
@@ -329,6 +356,7 @@ object EventStreams {
       dim: Int = 64, watermark: String = "20 minutes",
       nproj: Int = 0): DataFrame = {
     import graft.llm.Similarity
+    localCheckpoints(embStream.sparkSession)
     val native = corpusEmb.sparkSession.catalog.functionExists("graft_dot")
     def dotOf(a: String, b: String) =
       if (native) expr(s"graft_dot($a, $b)")
@@ -392,6 +420,7 @@ object EventStreams {
   def streamingDrift(docs: DataFrame, refDocs: DataFrame, dim: Int = 16,
       watermark: String = "20 minutes"): DataFrame = {
     import graft.llm.TextOps
+    localCheckpoints(docs.sparkSession)
     val e4of = (e: org.apache.spark.sql.Column) =>
       transform(e, x => floor(x * 10000 + 0.5).cast("long"))
     val refRow = TextOps.featurize(refDocs, dim, ordered = false)

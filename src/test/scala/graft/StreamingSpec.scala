@@ -2,12 +2,15 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, LocalCheckpointFiles}
 import graft.streaming.EventStreams.SessionEvent
 
 class StreamingSpec extends AnyFunSuite {
@@ -635,5 +638,121 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after == batchTwin, s"stream=$after batch=$batchTwin")
     } finally q.stop()
+  }
+
+  test("restart from a checkpoint: sessions and near-dup pairs written " +
+      "across a stop and restart equal their batch twins") {
+    implicit val sql = spark.sqlContext
+    import graft.llm.Dedup
+    val root = java.nio.file.Files.createTempDirectory("graft-restart-")
+    def dir(name: String) = root.resolve(name).toUri.toString
+    val corpus = Seq(
+      (100L, "the cat sat on the mat today"),
+      (101L, "a completely different corpus document here"))
+      .toDF("doc_id", "text")
+    val docs = MemoryStream[(Long, Timestamp, String)]
+    val events = MemoryStream[SessionEvent]
+    // each run rebuilds both queries over the same sources and
+    // checkpoints, as a restarted job does
+    def start() = Seq(
+      EventStreams.streamingNearDups(docs.toDF.toDF("doc_id", "ts", "text"),
+          corpus, shingleSize = 1)
+        .writeStream.format("parquet").option("path", dir("pairs"))
+        .option("checkpointLocation", dir("pairs_ckpt")).start(),
+      EventStreams.sessionize(events.toDS(), gapMinutes = 30)
+        .writeStream.format("parquet").option("path", dir("sessions"))
+        .option("checkpointLocation", dir("sessions_ckpt")).start())
+    def trigger(qs: Seq[org.apache.spark.sql.streaming.StreamingQuery],
+        d: Seq[(Long, Timestamp, String)], e: Seq[SessionEvent]): Unit = {
+      docs.addData(d: _*)
+      events.addData(e: _*)
+      qs.foreach(_.processAllAvailable())
+    }
+    val cat = "the cat sat on the mat today"
+    val other = "a completely different corpus document here"
+    val fed = Seq(
+      (Seq((1L, ts(0), cat)),
+        Seq(SessionEvent(7L, ts(0), 1.0), SessionEvent(7L, ts(10), 2.0),
+          SessionEvent(8L, ts(5), 3.0))),
+      (Seq((2L, ts(1), "brand new content never seen before anywhere")),
+        Seq(SessionEvent(7L, ts(25), 4.0))),
+      // after the restart: doc 1 again (its pair is in the dedup state,
+      // so it must not repeat) and a session that spans the restart
+      (Seq((1L, ts(2), cat), (3L, ts(2), other)),
+        Seq(SessionEvent(7L, ts(40), 8.0), SessionEvent(8L, ts(100), 1.0))),
+      (Seq((4L, ts(3), "the quick brown fox jumps over everything")),
+        Seq(SessionEvent(7L, ts(200), 16.0))))
+    try {
+      val first = start()
+      try fed.take(2).foreach { case (d, e) => trigger(first, d, e) }
+      finally first.foreach(_.stop())
+      val second = start()
+      try {
+        fed.drop(2).foreach { case (d, e) => trigger(second, d, e) }
+        // two far-future triggers of a flush user move the watermark
+        // past every open session
+        Seq(2000, 4000).foreach(t =>
+          trigger(second, Nil, Seq(SessionEvent(-1L, ts(t), 0.0))))
+      } finally second.foreach(_.stop())
+      val pairs = spark.read.parquet(dir("pairs")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      val pairsTwin = Dedup.incrementalNearDups(
+          fed.flatMap(_._1).map(d => (d._1, d._3)).distinct
+            .toDF("doc_id", "text"), corpus, shingleSize = 1)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(pairs.sorted == pairsTwin.toSeq.sorted,
+        s"streamed=$pairs batch=${pairsTwin.toSeq}")
+      assert(pairs.map(p => (p._1, p._2)).toSet == Set((1L, 100L), (3L, 101L)))
+      val sessions = spark.read.parquet(dir("sessions"))
+        .filter($"user_id" =!= -1L).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getInt(3).toLong, r.getDouble(4))).toSeq
+      val sessionsTwin = EventStreams.sessionizeBatch(
+          fed.flatMap(_._2).zipWithIndex.map { case (e, i) =>
+            (i.toLong, e.ts, e.user_id, e.value) }
+            .toDF("event_id", "ts", "user_id", "value"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getDouble(4))).toSeq
+      assert(sessions.sorted == sessionsTwin.sorted,
+        s"streamed=$sessions batch=$sessionsTwin")
+      // user 7's first session runs from t=0 to t=40, across the restart
+      assert(sessions.contains((7L, ts(0).getTime, ts(40).getTime, 4L, 15.0)))
+      // the logs were written by graft's manager: no .crc sidecars
+      for (q <- Seq("pairs_ckpt", "sessions_ckpt"); log <- Seq("offsets",
+          "commits"))
+        assert(!root.resolve(q).resolve(log).toFile.list()
+          .exists(_.endsWith(".crc")), s"$q/$log")
+    } finally org.apache.hadoop.fs.FileSystem
+      .getLocal(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(root.toUri), true)
+  }
+
+  test("stream builders install graft's checkpoint manager unless one is " +
+      "already set") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val localPath = new Path(java.nio.file.Files.createTempDirectory(
+      "graft-install-").toUri)
+    def hadoopConf(s: org.apache.spark.sql.SparkSession) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConf()
+    def frame(s: org.apache.spark.sql.SparkSession) =
+      s.range(1).selectExpr("id AS event_id",
+        "TIMESTAMP'2024-01-01 00:00:00' AS ts", "'a' AS event_type",
+        "1.0D AS value")
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(key).isEmpty)
+    EventStreams.windowedCounts(frame(fresh))
+    assert(fresh.conf.get(key) == classOf[LocalCheckpointFiles].getName)
+    assert(CheckpointFileManager.create(localPath, hadoopConf(fresh))
+      .isInstanceOf[LocalCheckpointFiles])
+    // a manager the user chose stays in place
+    val chosen = spark.newSession()
+    chosen.conf.set(key, classOf[FileSystemBasedCheckpointFileManager].getName)
+    EventStreams.dedup(frame(chosen))
+    assert(chosen.conf.get(key) ==
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+    assert(CheckpointFileManager.create(localPath, hadoopConf(chosen))
+      .getClass == classOf[FileSystemBasedCheckpointFileManager])
+    java.nio.file.Files.delete(java.nio.file.Paths.get(localPath.toUri))
   }
 }

@@ -32,7 +32,10 @@ mean of its samples: its suite pass and two reruns, which a
 that reruns only headline rows, so any other row has its one suite
 pass). The pair's host-drift
 flag compares the two runs' `cpu_spin` canaries, taken before the rows.
-Each row gets the same verdict, against the `pass_wall_s` bound.
+Each row gets the same verdict, against the `pass_wall_s` bound. The row
+name `streaming` stands for the Bench's three stream rows (`STREAM_ROWS`),
+read from its result line and judged as microseconds per row (1e6 /
+rows/s), so lower is better there too.
 """
 import argparse
 import glob
@@ -44,6 +47,9 @@ import sys
 import tempfile
 
 METRICS = ("pass_wall_s", "op_p50_s", "setup_s")
+# graft.Bench's throughput rows, all timed when SPARK_GRAFT_ONLY names
+# `streaming`
+STREAM_ROWS = ("near_dups_rps", "embed_dedup_rps", "sessionize_rps")
 
 
 def run(checkout, workload, seed, seconds):
@@ -87,29 +93,43 @@ def drop_max_mean(samples):
     return sum(kept) / len(kept)
 
 
+def bench_rows(names):
+    """The rows a `--bench-rows` list names, `streaming` standing for
+    `STREAM_ROWS`."""
+    return [r for n in names for r in (STREAM_ROWS if n == "streaming"
+                                       else (n,))]
+
+
 def parse_bench(stdout, detail, rows):
     """The rows' values and the start canary of one graft.Bench run, from
     its standard output (the last JSON line is the run's record) and its
-    detail file: a row's samples are its suite pass plus any reruns.
-    Fails naming a row that errored or that the run lacks."""
+    detail file: a query row's samples are its suite pass plus any
+    reruns; a stream row's value is microseconds per row, from the
+    record's rows/s. Fails naming a row that errored or that the run
+    lacks."""
     line = next((json.loads(l) for l in reversed(stdout.splitlines())
                  if l.startswith("{") and '"metric":"total"' in l), None)
     if line is None:
         raise ValueError("no graft.Bench result line")
+    stream = line.get("streaming", {})
     bad = [r for r in rows
-           if r in line["errors"] or r not in detail["single_pass"]]
+           if r in line["errors"] or
+           (r in STREAM_ROWS and stream.get(r, {}).get("rps", 0) <= 0) or
+           (r not in STREAM_ROWS and r not in detail["single_pass"])]
     if bad:
         raise ValueError(f"rows failed or missing: {', '.join(bad)}")
-    return ({r: drop_max_mean([detail["single_pass"][r]] +
-                              detail["reruns"].get(r, [])) for r in rows},
+    return ({r: 1e6 / stream[r]["rps"] if r in STREAM_ROWS else
+             drop_max_mean([detail["single_pass"][r]] +
+                           detail["reruns"].get(r, [])) for r in rows},
             line["canary"]["cpu_spin_start"])
 
 
-def run_bench(java, rows, sf_dir):
-    """One graft.Bench run of `rows`; returns (values by row, canary)."""
+def run_bench(java, names, sf_dir):
+    """One graft.Bench run of the rows `names` lists; returns (values by
+    row, canary)."""
     with tempfile.TemporaryDirectory() as tmp:
         detail_path = os.path.join(tmp, "detail.json")
-        env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(rows),
+        env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(names),
                    SPARK_GRAFT_SF_DIR=sf_dir,
                    SPARK_GRAFT_DETAIL_OUT=detail_path,
                    SPARK_GRAFT_MANIFEST_OUT=os.path.join(tmp, "manifest.json"))
@@ -119,7 +139,7 @@ def run_bench(java, rows, sf_dir):
                            text=True)
         try:
             with open(detail_path) as f:
-                return parse_bench(p.stdout, json.load(f), rows)
+                return parse_bench(p.stdout, json.load(f), bench_rows(names))
         except (OSError, ValueError) as e:
             sys.exit(f"graft.Bench run failed (exit {p.returncode}): {e}")
 
@@ -136,16 +156,17 @@ def summary(name, p, c, bound):
             f"change won {wins}/{len(p)}  {verdict(p, c, bound)}")
 
 
-def bench_rows_ab(sides, rows, pairs, sf_dir, bound):
+def bench_rows_ab(sides, names, pairs, sf_dir, bound):
     """The `--bench-rows` mode: `pairs` alternating graft.Bench pairs."""
     java = {s: bench_jar(d) for s, d in sides.items()}
+    rows = bench_rows(names)
     values = {s: {r: [] for r in rows} for s in sides}
     flagged = 0
     for i in range(pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         canary = {}
         for side in order:
-            vals, canary[side] = run_bench(java[side], rows, sf_dir)
+            vals, canary[side] = run_bench(java[side], names, sf_dir)
             for r in rows:
                 values[side][r].append(vals[r])
         drift = drifted(canary["parent"], canary["change"], bound["setup_s"])

@@ -1,5 +1,5 @@
 """Unit tests of `tools/ab.py`'s verdict rule, host-drift flag and
-graft.Bench line parser.
+graft.Bench line parser (query rows and stream rows).
 
     python3 -m unittest discover -s tools
 """
@@ -8,7 +8,7 @@ import sys
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from ab import drifted, parse_bench, verdict  # noqa: E402
+from ab import bench_rows, drifted, parse_bench, verdict  # noqa: E402
 
 # ten parent runs with median 10.0 and quartile spread 0.5 (5% of it)
 PARENT = [9.6, 9.7, 9.8, 9.9, 10.0, 10.0, 10.1, 10.2, 10.3, 10.4]
@@ -80,6 +80,27 @@ class BenchLineTest(unittest.TestCase):
         failed = BENCH_OUT.replace('"errors":[]', '"errors":["graph_bfs"]')
         with self.assertRaisesRegex(ValueError, "graph_bfs"):
             parse_bench(failed, DETAIL, ["graph_bfs"])
+
+    def test_streaming_reads_the_three_rows_as_microseconds_per_row(self):
+        line = BENCH_OUT.replace(
+            '"errors":[]', '"errors":[],"streaming":{"near_dups_rps":'
+            '{"rps":2000.0,"gate":2940.0,"verdict":"ok"},"embed_dedup_rps":'
+            '{"rps":4000.0},"sessionize_rps":{"rps":50000.0},'
+            '"canary_at_stream":0.7}')
+        rows = bench_rows(["streaming", "graph_bfs"])
+        self.assertEqual(rows, ["near_dups_rps", "embed_dedup_rps",
+                                "sessionize_rps", "graph_bfs"])
+        values, _ = parse_bench(line, DETAIL, rows)
+        self.assertEqual(values, {"near_dups_rps": 500.0,
+                                  "embed_dedup_rps": 250.0,
+                                  "sessionize_rps": 20.0,
+                                  "graph_bfs": 1.25})
+        # a failed stream section (Bench then ships no stream rows) names
+        # every stream row
+        failed = BENCH_OUT.replace('"errors":[]',
+                                   '"errors":["streaming"],"streaming":{}')
+        with self.assertRaisesRegex(ValueError, "sessionize_rps"):
+            parse_bench(failed, DETAIL, rows)
 
     def test_output_without_a_record_fails(self):
         with self.assertRaisesRegex(ValueError, "no graft.Bench result line"):

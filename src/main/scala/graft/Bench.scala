@@ -394,22 +394,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); Tables converts to micros.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus.toInt)
 
-    def clearSparkState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     /** One timed sample with standalone-cost semantics: memo-backed
       * queries get a cold QueryCache, and Spark-side cache/persisted
       * state is dropped afterwards so samples never subsidize each
@@ -419,7 +405,7 @@ object Bench {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      clearSparkState()
+      GraftSession.clearState(spark)
       dt
     }
 
@@ -440,7 +426,7 @@ object Bench {
       SparkEntry.queries("q04_join_inner")(spark, sfDir).count()
       Seq("documents", "embeddings", "events")
         .foreach(t => graft.sources.Tables(spark, sfDir, t).count())
-      clearSparkState()
+      GraftSession.clearState(spark)
       System.err.println(
         f"[bench] warm-up (q09+q04+footers) ${(System.nanoTime() - t0) / 1e9}%8.3f s (untimed)")
     } catch { case e: Throwable =>
@@ -489,7 +475,7 @@ object Bench {
         // localCheckpoint'ed so 195 queries in one JVM don't accumulate
         // storage pressure (round-2 bench ran node2vec 3x slower inside
         // the suite than isolated purely from leaked blocks)
-        clearSparkState()
+        GraftSession.clearState(spark)
         // full per-query trace on stderr (stdout stays one JSON line)
         System.err.println(f"[bench] $name%-24s $dt%8.3f s")
         if ((idx + 1) % 25 == 0) {
@@ -570,7 +556,7 @@ object Bench {
         val canaryAtStream = cpuSpin()
         val canaryAtStream8 = cpuSpin8()
         streamTriggers = streamBench(spark, sfDir)
-        clearSparkState()
+        GraftSession.clearState(spark)
         val rows = streamTriggers.map { case (k, v) => k -> steadyStat(v) }
         rows.foreach { case (k, v) =>
           val verdict = streamGate.get(k)
@@ -625,7 +611,7 @@ object Bench {
           System.err.println(f"[bench] x10 stress corpus -> $stressDir " +
             f"(${(System.nanoTime() - t0) / 1e9}%.1f s, untimed)")
         }
-        clearSparkState()
+        GraftSession.clearState(spark)
         val canaryAtPipeline = cpuSpin()
         val canaryAtPipeline8 = cpuSpin8()
         // the chain runs twice and the faster run ships — the same
@@ -639,7 +625,7 @@ object Bench {
           val r = graft.llm.Pipeline.curateChain(
             spark, stressDir, out, Seq("en", "und"),
             m => System.err.println(s"[bench] pipeline(run$i) $m"))
-          clearSparkState()
+          GraftSession.clearState(spark)
           // best-effort cleanup of the exported JSONL
           try {
             import scala.jdk.CollectionConverters._

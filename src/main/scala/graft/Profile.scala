@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop profiler: time a subset of SparkEntry.queries at an
   * arbitrary SF dir, each run `reps` times (first run pays scan/plan
@@ -13,22 +12,12 @@ object Profile {
     val names = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus.toInt)
     for (name <- names; fn = SparkEntry.queries(name); r <- 1 to reps) {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearState(spark)
       println(f"PROFILE $name%-24s rep$r rows=$n%-8d ${dt}%8.3f s")
     }
     spark.stop()

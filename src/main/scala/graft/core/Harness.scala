@@ -48,20 +48,12 @@ object Harness {
     def toJson: String = {
       // escape keys and null out non-finite values — a NaN metric or a
       // quote in a job name must not produce unparseable JSON
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       def num(v: Double): String = if (v.isNaN || v.isInfinite) "null"
         else v.toString
       val ms = metrics.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}:${num(v)}" }.mkString("{", ",", "}")
-      s"""{"job":${q(job)},"load_sec":${num(loadSec)},""" +
+        .map { case (k, v) => s"${Json.quote(k)}:${num(v)}" }
+        .mkString("{", ",", "}")
+      s"""{"job":${Json.quote(job)},"load_sec":${num(loadSec)},""" +
         s""""compute_sec":${num(computeSec)},"metrics":$ms}"""
     }
   }

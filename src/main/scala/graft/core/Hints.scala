@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions.broadcast
   *
   * A `broadcast()` hint FORCES the build regardless of size — the right
   * call for frames bounded by construction (centroids, codebooks,
-  * pivots), but the per-node label/community frames in Louvain/LPA/
-  * node2vec grow with the graph: one row per vertex (or per
+  * pivots), but the per-node frames in Louvain and node2vec grow
+  * with the graph: one row per vertex (or per
   * degree-capped edge). At bench scale they are kilobytes; on a
   * billion-vertex graph the forced build is a driver/executor OOM.
   *

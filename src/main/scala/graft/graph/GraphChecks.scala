@@ -26,7 +26,7 @@ object GraphChecks {
     val g = GraphSource.toGraph(edges)
     val async = Builtins.labelPropagation(spark, g, iters)
     val sync = syncDf.getOrElse(
-      Iterative.labelPropagationSync(spark, edges, iters))
+      Iterative.labelPropagationSync(spark, LocalGraph.fromEdges(edges), iters))
     // both surfaces are compared against the graph's own vertex count —
     // async.count == sync.count alone would pass if BOTH dropped the
     // same vertices (round-8 advice)
@@ -37,8 +37,8 @@ object GraphChecks {
     // Non-null invariant (r14 advice #1): countDistinct ignores NULLs
     // where the former distinct().count() counted one — safe here
     // because neither side can produce a null label: the async side is
-    // GraphX vertex attrs seeded from vertex ids, the sync side's loop
-    // state is built from non-null longs and checkpointed each round.
+    // GraphX vertex attrs seeded from vertex ids, the sync side's labels
+    // are vertex ids in a non-nullable column.
     def rowAndLabelCounts(df: DataFrame): (Long, Double) = {
       val r = df.agg(count(lit(1)), countDistinct(col("label"))).head()
       (r.getLong(0), r.getLong(1).toDouble)
@@ -76,7 +76,8 @@ object GraphChecks {
       Iterative.modularity(spark, sym,
         c.select(col("node"), col("community"))).head().getDouble(0)
     val mStock = modOf(Community.louvain(spark, und))
-    val mSync = modOf(syncDf.getOrElse(Iterative.louvainSync(spark, und, 8))
+    val mSync = modOf(syncDf
+      .getOrElse(Iterative.louvainSync(spark, LocalGraph.fromEdges(und), 8))
       .withColumnRenamed("comm", "community"))
     graft.ml.Checks.verdictsV(spark, Seq(
       "louvain_modularity_positive" -> b2d(mStock > 0.0),

@@ -1,9 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.sources.Tables
 
@@ -46,34 +45,26 @@ object GraphQueries {
     * has no source and gives no rows. */
   private[graft] def pprConv(s: SparkSession, e: DataFrame,
       tol: Double): DataFrame =
-    minNode(e).fold(s.createDataFrame(java.util.List.of[Row](),
-        StructType(Seq(StructField("node", LongType, nullable = false),
-          StructField("rank", DoubleType, nullable = false)))))(src =>
+    minNode(e).fold(LocalGraph.frame(s, Nil, "node" -> LongType,
+        "rank" -> DoubleType))(src =>
       Builtins.personalizedPageRankUntilConvergence(s, GraphSource.toGraph(e),
         src, tol))
 
   // deterministic sync twins memoized per sfDir: each is BOTH its own
   // replay-oracle-checked query AND the companion of a stock-fit verdict
   // query, so without the memo every suite pass ran each sweep twice
-  // (round-8 verdict #3 measured ~6 s of recompute for louvain alone)
-  // each shared twin accepts the caller's already-materialized edge (or
-  // undirected) frame so a verdict query and its twin share ONE edge
-  // derivation; standalone callers materialize their own
+  // (round-8 verdict #3 measured ~6 s of recompute for louvain alone).
+  // A verdict query passes the edge frame it shares with its stock run;
+  // the standalone rows derive the edges inside the kernel's task
   private def lpaSyncShared(s: SparkSession, d: String,
       e: Option[DataFrame] = None): DataFrame =
-    graft.core.QueryCache.df(s, s"lpa_sync:$d")(
-      Iterative.labelPropagationSync(s, e.getOrElse(edges(s, d)), 5))
+    graft.core.QueryCache.df(s, s"lpa_sync:$d")(Iterative.labelPropagationSync(s,
+      e.fold(transitions(s, d))(LocalGraph.fromEdges), 5))
 
-  // standalone path deliberately NOT checkpointed: the sym build's four
-  // references to the undirected frame live in ONE plan where exchange
-  // reuse already dedups the aggregate (probed: an eager checkpoint
-  // made graph_louvain_sync 1.12x). The graph_louvain caller passes its
-  // own checkpointed frame because ITS consumers are separate jobs.
   private def louvainSyncShared(s: SparkSession, d: String,
       und: Option[DataFrame] = None): DataFrame =
-    graft.core.QueryCache.df(s, s"louvain_sync:$d")(
-      Iterative.louvainSync(s, und.getOrElse(
-        GraphSource.canonicalUndirected(edges(s, d))), 8))
+    graft.core.QueryCache.df(s, s"louvain_sync:$d")(Iterative.louvainSync(s,
+      und.fold(transitions(s, d))(LocalGraph.fromEdges), 8))
 
   private def pprMultiSyncShared(s: SparkSession, d: String,
       e: Option[DataFrame] = None): DataFrame =
@@ -623,7 +614,7 @@ object GraphQueries {
     }),
     "graph_lpa_sync" -> ((s, d) => lpaSyncShared(s, d)),
     "graph_louvain_sync" -> ((s, d) => louvainSyncShared(s, d)),
-    "graph_kcore" -> ((s, d) => Iterative.kCore(s, ugraph(s, d), maxIter = 20)),
+    "graph_kcore" -> ((s, d) => Iterative.kCore(s, transitions(s, d))),
     "graph_modularity" -> ((s, d) => {
       // deterministic hash-partition assignment (node mod 16) so the
       // modularity aggregate itself is what the DuckDB oracle checks

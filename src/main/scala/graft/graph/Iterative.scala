@@ -1,13 +1,10 @@
 package graft.graph
 
-import scala.jdk.CollectionConverters._
+import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.graphx.{Graph, VertexRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-
-import graft.core.Hints
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Custom iterative graph algorithms (SURVEY §2.C C3–C6, C12–C13) —
   * the reference invokes closed-source kernels for these
@@ -17,19 +14,12 @@ import graft.core.Hints
   * these are independent re-derivations from the published algorithms.
   *
   * The damped-rank members ([[weightedPageRank]], [[trustRank]],
-  * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]])
-  * and [[bfs]] runs a frontier loop, each over a [[LocalGraph]] built in
-  * its one task: rank or distance state is one dense array over the
-  * sorted vertex ids, and the output is built on the driver in node
-  * order. None of the rank members normalizes its ranks.
-  *
-  * Iteration hygiene for the GraphX loops below (critical): each step
-  * caches the new graph and materializes its EDGES (which forces the
-  * replicated vertex view) before unpersisting the previous graph —
-  * materializing only the vertices leaves the next aggregateMessages
-  * depending on unpersisted state and the lineage re-executes from
-  * iteration 0 (observed: a 20-iteration loop went quadratic). Same
-  * discipline as GraphX's own PageRank implementation.
+  * [[incrementalPageRank]]) run the damped-rank kernel ([[DampedRank]]);
+  * [[bfs]], [[kCore]], [[labelPropagationSync]] and [[louvainSync]] run
+  * their loops over a [[LocalGraph]] built in their one task: vertex
+  * state is one dense array over the sorted vertex ids, and the output
+  * is built on the driver in node order. None of the rank members
+  * normalizes its ranks.
   */
 object Iterative {
 
@@ -75,225 +65,72 @@ object Iterative {
       g.ids.indices.filter(dist(_) != Int.MaxValue)
         .map(v => Row(g.ids(v), dist(v))).toArray
     }
-    // Rows against an explicit schema, not `toDF`, for the reason
-    // DampedRank.frame gives
-    spark.createDataFrame(reached.toSeq.asJava,
-      StructType(Seq(StructField("node", LongType, nullable = false),
-        StructField("dist", IntegerType, nullable = false))))
+    LocalGraph.frame(spark, reached.toSeq, "node" -> LongType,
+      "dist" -> IntegerType)
   }
 
-  /** K-core decomposition (C12) via the distributed h-operator fixpoint
-    * (Montresor et al., "Distributed k-core decomposition"): every vertex
-    * starts at its degree; repeatedly set core(v) = max k such that at
-    * least k neighbors have core ≥ k. Converges to exact core numbers.
-    *
-    * Delta-messaging: each vertex keeps a persistent histogram of its
-    * neighbors' (capped) estimates; after the first full exchange, only
-    * vertices whose estimate CHANGED last round send — a (old → −1,
-    * new → +1) count delta per incident edge. Per-round message volume
-    * is O(edges touching changed vertices), not O(E); the fixpoint
-    * trajectory is bit-identical to full resend (same per-round
-    * h-operator inputs), so results are unchanged. One materialization
-    * job per round (triplets forces the vertex program AND the shipped
-    * vertex view the next aggregateMessages needs). */
-  def kCore(spark: SparkSession, undirected: Graph[Double, Double],
-      maxIter: Int = 50): DataFrame = {
-    import spark.implicits._
-    // graph attr = (est, prevEst): prev ≠ est ⇒ "changed last round" ⇒
-    // incident edges carry a delta this round. prev = −1 seeds the full
-    // first exchange. The O(degree) histogram is deliberately NOT in the
-    // graph attr — it would be shipped to edge partitions on every
-    // replication; it lives in a co-partitioned VertexRDD instead.
-    var g: Graph[(Int, Int), Double] = undirected
-      .outerJoinVertices(undirected.degrees)((_, _, d) => (d.getOrElse(0), -1))
-      .cache()
-    g.edges.foreachPartition(_ => ())
-    // (est, neighbor-estimate histogram); keys capped at own est — when
-    // est drops, mass above the new cap collapses into the cap bucket,
-    // so a later delta from an unchanged neighbor u is addressable at
-    // min(u's old value, current est).
-    var state: VertexRDD[(Int, Array[Long])] =
-      g.vertices.mapValues(a => (a._1, Array.empty[Long])).cache()
-    // Delta messages travel as FLAT sorted (key, count) pair arrays —
-    // [k0, c0, k1, c1, …] — not LongMap: the message type crosses the
-    // aggregateMessages shuffle, and a generic Scala map rides the slow
-    // generic-object serializer while a primitive Array[Long] takes the
-    // fast primitive path. Round-10 profiling: the data-proportional
-    // part of kcore's per-round cost was message serialization, not
-    // peel work (×10 data, identical 17-round trajectory) — this is
-    // the term that scales with the corpus, so it is the one that must
-    // be cheap at 100 TB.
-    def mergePairs(a: Array[Long], b: Array[Long]): Array[Long] = {
-      val out = new Array[Long](a.length + b.length)
-      var ia = 0; var ib = 0; var io = 0
-      while (ia < a.length || ib < b.length) {
-        val ka = if (ia < a.length) a(ia) else Long.MaxValue
-        val kb = if (ib < b.length) b(ib) else Long.MaxValue
-        if (ka == kb) {
-          val c = a(ia + 1) + b(ib + 1)
-          if (c != 0L) { out(io) = ka; out(io + 1) = c; io += 2 }
-          ia += 2; ib += 2
-        } else if (ka < kb) {
-          out(io) = ka; out(io + 1) = a(ia + 1); io += 2; ia += 2
-        } else {
-          out(io) = kb; out(io + 1) = b(ib + 1); io += 2; ib += 2
+  /** K-core decomposition (C12): exact core numbers by bucket peeling
+    * (Batagelj & Zaversnik, "An O(m) Algorithm for Cores Decomposition
+    * of Networks", 2003) over each vertex's distinct neighbours in the
+    * undirected view, a self-loop counting once. Rows are (node, core)
+    * in node order. */
+  def kCore(spark: SparkSession, graph: LocalGraph.Reader): DataFrame = {
+    val (ids, core) = LocalGraph.run(graph) { g0 =>
+      val g = g0.undirected
+      // core(v): v's degree among the vertices not yet peeled, never
+      // below the level k being peeled, and v's core number once peeled.
+      // bucket(d) gets v each time core(v) becomes d, so at most once: v
+      // is peeled when popped from the bucket of its current core(v)
+      val core = Array.tabulate(g.numVertices)(g.outDegree)
+      val bucket =
+        Array.fill(core.foldLeft(0)(math.max) + 1)(ArrayBuffer.empty[Int])
+      core.indices.foreach(v => bucket(core(v)) += v)
+      for (k <- bucket.indices) {
+        val b = bucket(k)
+        while (b.nonEmpty) {
+          val v = b.remove(b.length - 1)
+          if (core(v) == k)
+            for (e <- g.outStart(v) until g.outStart(v + 1)) {
+              val u = g.dst(e)
+              if (core(u) > k) { core(u) -= 1; bucket(core(u)) += u }
+            }
         }
       }
-      if (io == out.length) out else java.util.Arrays.copyOf(out, io)
+      (g.ids, core)
     }
-    /** Collapse every key ≥ cap into the cap bucket (sorted input stays
-      * sorted; a zero collapsed sum drops the bucket). */
-    def capPairs(pairs: Array[Long], cap: Long): Array[Long] = {
-      var i = 0
-      while (i < pairs.length && pairs(i) < cap) i += 2
-      if (i >= pairs.length) pairs // nothing at or above the cap
-      else {
-        var capSum = 0L
-        var j = i
-        while (j < pairs.length) { capSum += pairs(j + 1); j += 2 }
-        if (capSum == 0L) java.util.Arrays.copyOf(pairs, i)
-        else {
-          val out = new Array[Long](i + 2)
-          System.arraycopy(pairs, 0, out, 0, i)
-          out(i) = cap
-          out(i + 1) = capSum
-          out
-        }
-      }
-    }
-    def delta(est: Int, prev: Int): Array[Long] =
-      if (prev < 0) Array(est.toLong, 1L)
-      else if (est.toLong < prev.toLong) // sorted by key; est < prev always
-        Array(est.toLong, 1L, prev.toLong, -1L)
-      else Array(prev.toLong, -1L, est.toLong, 1L)
-    var changed = true
-    var i = 0
-    while (changed && i < maxIter) {
-      // net count deltas keyed by the SENDER's uncapped estimate; the
-      // receiver caps at its own est on apply.
-      //
-      // MEASURED REJECTION (round 11, SCALE_r11 §4): the active-set
-      // aggregateMessages fork SCALE_r10 §3 named as the next rung was
-      // built (package shim over the private[graphx] API, active =
-      // est≠prev, direction Either — message set provably identical)
-      // and made things WORSE: interleaved KcoreProbe ×10 14.5→17.3 s,
-      // ratio 4.3→5.15. Mechanism: for EdgeDirection.Either GraphX
-      // never index-skips — it still scans every edge, only adding a
-      // per-edge activeness bitset check, and ships the active set to
-      // edge partitions every round; with the send gate already a two
-      // int compare, that is pure added cost. (Index skipping exists
-      // only for Src/Both directions, which would drop one-endpoint
-      // messages here.) The plain full-scan form below stays; vertex
-      // shipping is already incremental via outerJoinVertices'
-      // same-ClassTag diff path.
-      val msgs = g.aggregateMessages[Array[Long]](
-        ctx => {
-          val (se, sp) = ctx.srcAttr
-          val (de, dp) = ctx.dstAttr
-          if (se != sp) ctx.sendToDst(delta(se, sp))
-          if (de != dp) ctx.sendToSrc(delta(de, dp))
-        },
-        mergePairs)
-      // convergence signal rides an accumulator inside the vertex
-      // program, counted while the new state materializes anyway. Task
-      // retries can only inflate the value; only the ==0 test matters.
-      val moved = spark.sparkContext.longAccumulator(s"kcore-moved-$i")
-      val newState: VertexRDD[(Int, Array[Long])] =
-        state.leftZipJoin(msgs) { case (_, (est, hist0), dOpt) =>
-          dOpt match {
-            case None => (est, hist0) // no delta ⇒ h-operator input unchanged
-            case Some(pairs) =>
-              // no clone-on-write needed: capPairs/mergePairs allocate a
-              // fresh array, so the cached previous round's histogram is
-              // never mutated (retry/lineage-recompute safe). The
-              // histogram lives as the SAME flat sorted pair array shape
-              // as the messages — primitive cache footprint, array-copy
-              // instead of map-rehash per delta (the V-proportional GC
-              // churn the round-10 profile flagged).
-              val hist = mergePairs(hist0, capPairs(pairs, est.toLong))
-              // h-operator: largest k with ≥ k neighbors of (capped) core ≥ k
-              var k = est
-              def countGe(k0: Long): Int = {
-                var s = 0L
-                var j = hist.length - 2
-                while (j >= 0 && hist(j) >= k0) { s += hist(j + 1); j -= 2 }
-                s.toInt
-              }
-              while (k > 0 && countGe(k.toLong) < k) k -= 1
-              if (k != est) {
-                moved.add(1L)
-                // collapse mass above the new cap (keys ≥ k fold into k —
-                // the k bucket itself is unchanged by the fold)
-                (k, capPairs(hist, k.toLong))
-              } else (k, hist)
-          }
-        }.cache()
-      val next = g.outerJoinVertices(newState)((_, old, s) =>
-        (s.map(_._1).getOrElse(old._1), old._1)).cache()
-      // ONE job: shipping the (small) vertex attrs to edge partitions
-      // forces newState's vertex program (accumulator) and leaves the
-      // replicated view the next round's aggregateMessages reads.
-      next.triplets.foreachPartition(_ => ())
-      changed = moved.value > 0
-      // round-cost trace for the scale harness (SCALE_r10 directive #8
-      // profiling); env-gated so production runs stay silent
-      if (sys.env.contains("GRAFT_KCORE_TRACE"))
-        System.err.println(s"[kcore] round=$i moved=${moved.value}")
-      state.unpersist(blocking = false)
-      g.vertices.unpersist(blocking = false)
-      g.edges.unpersist(blocking = false)
-      state = newState
-      g = next
-      i += 1
-    }
-    g.vertices.mapValues(_._1).toDF("node", "core").orderBy("node")
+    LocalGraph.frame(spark, ids.indices.map(v => Row(ids(v), core(v))),
+      "node" -> LongType, "core" -> IntegerType)
   }
 
   /** Deterministic synchronous label propagation — the oracle-checkable
     * companion to the GraphX C10 wrapper (whose tie-break follows
     * hash-map iteration order and cannot be replayed externally): every
-    * vertex starts at its own id; each round all vertices simultaneously
-    * adopt the most frequent label among their deduplicated undirected
-    * neighbors, ties broken toward the SMALLEST label. Integer counts +
-    * total tiebreak ⇒ bit-exact across engines. Plan: one shuffle per
-    * round (join + partial-agg count + window rank), lineage truncated
-    * per round. */
-  def labelPropagationSync(spark: SparkSession, edges: DataFrame,
+    * vertex starts at its own id; each of the `iters` rounds all
+    * vertices simultaneously adopt the most frequent label among their
+    * distinct undirected neighbours, ties broken toward the SMALLEST
+    * label. Integer counts + total tiebreak ⇒ bit-exact across engines.
+    * Rows are (node, label) in node order. */
+  def labelPropagationSync(spark: SparkSession, graph: LocalGraph.Reader,
       iters: Int): DataFrame = {
-    // partitioned by src before caching: the per-round label join keys
-    // on src, so the big frame shuffles once, not once per round
-    val und = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("src")).cache()
-    var labels = und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
-      labels = und
-        .join(labels.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), col("label"))
-        // two pipelined exchanges, both fed by MAP-SIDE partials (count
-        // partials into the first, min-struct partials into the second)
-        // — collapsing them into one explicit repartition(node) was
-        // probed in the r14 opt round and rejected: it ships every raw
-        // message row, losing the partial aggregation (guide §2.3)
-        .groupBy("node", "label").agg(count(lit(1)).as("cnt"))
-        // most-frequent-label argmax with smallest-label tiebreak, as a
-        // partial-aggregating min(struct) — integer counts, bit-exact,
-        // same order the former row_number window sorted by
-        .groupBy("node")
-        .agg(min(struct((-col("cnt")).as("nc"), col("label"))).as("sel"))
-        .select(col("node"), col("sel.label").as("label"))
-        // localCheckpoint, NOT cache+count: cache would preserve the
-        // hash(node) partitioning (saving the next round's label-side
-        // exchange), but a cached Dataset's LOGICAL plan still embeds
-        // every prior round — analysis/optimization re-walks the whole
-        // growing tree each round, which probed 1.7x SLOWER over 5
-        // rounds (r14 opt round). Only the checkpoint's LogicalRDD
-        // truncates the plan.
-        .localCheckpoint()
+    val (ids, label) = LocalGraph.run(graph) { g0 =>
+      val g = g0.undirected
+      // labels are vertex indices, which order as the ids do
+      val n = g.numVertices
+      val count = new Array[Int](n)
+      val last = (1 to iters).foldLeft(Array.range(0, n)) { (label, _) =>
+        Array.tabulate(n) { v =>
+          val seen =
+            (g.outStart(v) until g.outStart(v + 1)).map(k => label(g.dst(k)))
+          seen.foreach(count(_) += 1)
+          val best = seen.minBy(l => (-count(l), l))
+          seen.foreach(count(_) = 0)
+          best
+        }
+      }
+      (g.ids, last)
     }
-    und.unpersist(blocking = false)
-    labels.orderBy("node")
+    LocalGraph.frame(spark, ids.indices.map(v => Row(ids(v), ids(label(v)))),
+      "node" -> LongType, "label" -> LongType)
   }
 
   /** Multi-source personalized PageRank, all sources in one pass — the
@@ -379,108 +216,54 @@ object Iterative {
 
   /** Deterministic synchronous Louvain-style community refinement — the
     * oracle-checkable companion to Community.louvain (whose sequential
-    * greedy argmax cascades float ties). Each round, EVERY node
-    * simultaneously moves to the candidate community (its own + its
-    * neighbors') maximizing the rounded modularity-gain score
-    * k_{v,c} − deg_v·Σtot_c / 2m, ties toward the smallest community id.
-    * Every sum in the score is a sum of integer-valued edge weights —
-    * exact in doubles regardless of order — so the unrolled SQL replica
-    * is bit-identical. One shuffle round per pass. */
-  def louvainSync(spark: SparkSession, undirected: DataFrame,
+    * greedy argmax cascades float ties). Over the undirected view, with
+    * deg(v) its weight sum and m2 = Σ deg, each round i scores, for
+    * every node, its own community and each neighbour's community c:
+    * k_{v,c} − deg_v·(Σtot_c − [c = own]·deg_v)/m2, rounded to 1e-6
+    * (excluding v's own degree, else staying is self-penalized and
+    * nodes churn). The best score wins, ties toward the smallest
+    * community id. Fully synchronous moves oscillate on symmetric ties
+    * (adjacent nodes swap communities forever, and no static
+    * 2-coloring exists on odd cycles), so a node moves only when a
+    * plain integer hash of (node, round) passes — replayable in any
+    * engine. Every sum is of integer-valued edge weights, exact in
+    * doubles in any order, so the unrolled SQL replica is bit-identical.
+    * Rows are (node, comm) in node order; a non-empty graph whose
+    * weights sum to 0 has no modularity and fails. */
+  def louvainSync(spark: SparkSession, graph: LocalGraph.Reader,
       iters: Int): DataFrame = {
-    // partitioned by SRC before caching: with the label side broadcast,
-    // every per-round operator — the kvc aggregate keyed (src, comm),
-    // the per-node window, the final argmax keyed node — inherits its
-    // distribution from this one cached partitioning, so a round runs
-    // as a single shuffle-free stage (the round-2 dst-partitioned
-    // formulation paid four broadcast builds and two exchanges per
-    // round). Zero-weight self-loops guarantee every node a
-    // (node, own-comm) row in the per-round kvc aggregate (+0.0 changes
-    // no sum), which also lets the window recover each node's current
-    // community without a second labels join.
-    val base = undirected.select(col("src"), col("dst"), col("weight"))
-    val sym = base
-      .union(base.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight")))
-      .union(base.select(col("src"), col("dst"))
-        .union(base.select(col("dst"), col("src")))
-        .select(col("src"), col("src").as("dst"), lit(0.0).as("weight"))
-        .distinct())
-      .repartition(col("src"))
-      .cache()
-    val m2 = sym.agg(sum("weight")).head().getDouble(0)
-    // labels carry the node degree, so the community-degree aggregate
-    // is a plain groupBy over this 1-row-per-node frame (no deg join).
-    // The O(V)-row broadcast of this frame is the replicated-vertex-view
-    // strategy (what GraphX does for vertex attrs) — size-gated: past
-    // graft.broadcast.maxRows the hint is dropped and AQE plans the
-    // label join (SMJ/shuffled-hash) from runtime stats.
-    var labels = sym.groupBy(col("src").as("node"))
-      .agg(sum("weight").as("deg"))
-      .select(col("node"), col("node").as("comm"), col("deg"))
-      .localCheckpoint()
-    val v = labels.count()
-    val byNode =
-      org.apache.spark.sql.expressions.Window.partitionBy("node")
-    for (i <- 1 to iters) {
-      val commDeg = labels.groupBy("comm").agg(sum("deg").as("cdeg"))
-      // community degree rides the label broadcast (pre-joined onto the
-      // per-node frame, recovered by max() in the aggregate below —
-      // cdeg is constant within a (node, comm) group, so max() IS the
-      // value): one broadcast build and one join per round instead of
-      // two of each (r14 opt round; values bit-identical)
-      val labelsE = labels
-        .join(Hints.broadcastIfSmall(commDeg, v), Seq("comm"))
-      // the self-loops planted in sym make kvc the complete candidate
-      // set — neighbor communities plus every node's own community —
-      // in this single aggregate; the self-loop row also tags its group
-      // with the node's CURRENT community (selfc)
-      val cand = sym
-        .join(Hints.broadcastIfSmall(
-          labelsE.select(col("node").as("dst"), col("comm"),
-            col("cdeg")), v), Seq("dst"))
-        .groupBy(col("src").as("node"), col("comm"))
-        .agg(sum("weight").as("kvc"),
-          max(when(col("dst") === col("src"), col("comm"))).as("selfc"),
-          max(col("cdeg")).as("cdeg"))
-      val scored = cand
-        // per-node degree and current community via an unordered window
-        // over the node partition the aggregate already produced —
-        // kvc sums are integer-valued, so re-summing them is exact
-        .withColumn("deg", sum("kvc").over(byNode))
-        .withColumn("curr", max("selfc").over(byNode))
-        // standard Louvain: Σtot of v's CURRENT community excludes v's
-        // own degree, else staying is self-penalized and nodes churn
-        .withColumn("cdeg_adj",
-          col("cdeg") - when(col("comm") === col("curr"), col("deg"))
-            .otherwise(lit(0.0)))
-        .withColumn("score",
-          floor((col("kvc") - col("deg") * col("cdeg_adj") / m2) * 1e6 + 0.5) / 1e6)
-      // argmax via partial-aggregating min(struct): the same
-      // (score desc, comm asc) order the former row_number window
-      // used (Spark's double ordering treats -0.0 = 0.0, like the
-      // sort), without sorting the whole candidate frame
-      val best = scored
-        .groupBy("node")
-        .agg(min(struct((-col("score")).as("ns"), col("comm"))).as("sel"),
-          max(col("curr")).as("curr"), max(col("deg")).as("deg"))
-      // semi-synchronous with a per-round hash gate: fully synchronous
-      // moves oscillate on symmetric ties (adjacent nodes swap
-      // communities forever, and no static 2-coloring exists on odd
-      // cycles). Gating each node's move on a deterministic integer
-      // hash of (node, round) breaks every local symmetry within a few
-      // rounds — and the gate is plain bigint arithmetic, replayable
-      // in any engine.
-      val gate = pmod(shiftright(
-        col("node") * lit(1103515245L) + lit(i * 12345L), 16), lit(2)) === 0
-      labels = best
-        .select(col("node"),
-          when(gate, col("sel.comm")).otherwise(col("curr")).as("comm"),
-          col("deg"))
-        .localCheckpoint()
+    val (ids, comm, m2) = LocalGraph.run(graph) { g0 =>
+      val g = g0.undirected
+      val n = g.numVertices
+      val nbrs = (v: Int) => g.outStart(v) until g.outStart(v + 1)
+      val deg = Array.tabulate(n)(v => nbrs(v).map(g.weight).sum)
+      val m2 = deg.sum
+      // communities are vertex indices, which order as the ids do
+      val kvc = new Array[Double](n)
+      val last = (1 to iters).foldLeft(Array.range(0, n)) { (comm, i) =>
+        val cdeg = new Array[Double](n)
+        for (v <- 0 until n) cdeg(comm(v)) += deg(v)
+        Array.tabulate(n) { v =>
+          val own = comm(v)
+          nbrs(v).foreach(k => kvc(comm(g.dst(k))) += g.weight(k))
+          def score(c: Int) = math.floor((kvc(c) - deg(v) *
+            (cdeg(c) - (if (c == own) deg(v) else 0.0)) / m2) * 1e6 + 0.5) / 1e6
+          var (best, top) = (own, score(own))
+          for (k <- nbrs(v)) {
+            val (c, sc) = (comm(g.dst(k)), score(comm(g.dst(k))))
+            if (sc > top || (sc == top && c < best)) { best = c; top = sc }
+          }
+          nbrs(v).foreach(k => kvc(comm(g.dst(k))) = 0.0)
+          val gate = (g.ids(v) * 1103515245L + i * 12345L) >> 16
+          if (Math.floorMod(gate, 2L) == 0) best else own
+        }
+      }
+      (g.ids, last, m2)
     }
-    sym.unpersist(blocking = false)
-    labels.select(col("node"), col("comm")).orderBy("node")
+    require(ids.isEmpty || m2 != 0,
+      "louvainSync needs a non-zero total edge weight, but the weights sum to 0")
+    LocalGraph.frame(spark, ids.indices.map(v => Row(ids(v), ids(comm(v)))),
+      "node" -> LongType, "comm" -> LongType)
   }
 
   /** Directed modularity (C13) of a community assignment:

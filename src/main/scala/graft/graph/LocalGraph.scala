@@ -1,11 +1,13 @@
 package graft.graph
 
 import scala.collection.mutable.ArrayBuilder
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** One graph held in a single task: a CSR over dense vertex indices.
   *
@@ -17,7 +19,8 @@ import org.apache.spark.sql.functions.col
   * A graph is built from rows by a [[LocalGraph.Reader]] and used by a
   * function inside the same task ([[LocalGraph.run]]): the rows are
   * coalesced into that one task, so a client (the damped-rank kernel,
-  * BFS) is one Spark job and ships only its own result to the driver.
+  * BFS, k-core, synchronous LPA and Louvain) is one Spark job and ships
+  * only its own result to the driver.
   * Sorting is primitive dense ranks plus stable counting-sort passes,
   * never a comparator over boxed values.
   */
@@ -47,6 +50,24 @@ final class LocalGraph(val ids: Array[Long],
       frontier = next.result()
     }
     dist
+  }
+
+  /** The same vertices with each edge in both directions, parallel
+    * entries merged into one whose weight is their sum: every
+    * neighbour appears once among a vertex's out-edges, and a self-loop
+    * of weight w becomes one entry of weight 2w. */
+  def undirected: LocalGraph = {
+    import LocalGraph.{byKey, csr}
+    val (s, d, w) = (src ++ dst, dst ++ src, weight ++ weight)
+    val order = byKey(byKey(Array.range(0, s.length), d, numVertices), s,
+      numVertices)
+    val (us, ud, uw) = (new Array[Int](s.length), new Array[Int](s.length),
+      new Array[Double](s.length))
+    var n = 0
+    for (k <- order)
+      if (n > 0 && us(n - 1) == s(k) && ud(n - 1) == d(k)) uw(n - 1) += w(k)
+      else { us(n) = s(k); ud(n) = d(k); uw(n) = w(k); n += 1 }
+    csr(ids, us.take(n), ud.take(n), uw.take(n))
   }
 }
 
@@ -105,6 +126,15 @@ object LocalGraph {
       .take(1).headOption
       .getOrElse(f(csr(Array.empty, Array.empty, Array.empty, Array.empty)))
   }
+
+  /** Rows against an explicit non-nullable schema, built on the driver
+    * (no Spark sort): a session's first `toDF` derives its encoder by
+    * reflection, measured at 0.23 s against 0.11 s this way in a fresh
+    * `local[4]` shell. */
+  private[graft] def frame(spark: SparkSession, rows: Seq[Row],
+      fields: (String, DataType)*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields.map { case (name, t) =>
+      StructField(name, t, nullable = false) }))
 
   private def buildEdges(rows: Iterator[InternalRow]): LocalGraph = {
     val (s, d, w) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long],

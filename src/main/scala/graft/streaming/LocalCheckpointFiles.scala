@@ -52,8 +52,12 @@ class LocalCheckpointFiles(path: Path, hadoopConf: Configuration)
         override def renameTempFile(src: Path, dst: Path,
             overwriteIfPossible: Boolean): Unit = {
           val to = local(dst)
-          if (!overwriteIfPossible && Files.exists(to))
+          // the losing writer's temp file goes too: Spark's stream
+          // rethrows without deleting it
+          if (!overwriteIfPossible && Files.exists(to)) {
+            Files.deleteIfExists(local(src))
             throw new FileAlreadyExistsException(s"$dst already exists")
+          }
           Files.deleteIfExists(to.resolveSibling(s".${to.getFileName}.crc"))
           Files.move(local(src), to, StandardCopyOption.ATOMIC_MOVE)
         }

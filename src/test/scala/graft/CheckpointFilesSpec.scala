@@ -49,10 +49,12 @@ class CheckpointFilesSpec extends AnyFunSuite {
       out.close()
       assert(fm.exists(target))
       assert(names(dir) == Set("0"), names(dir))
-      // a second writer of the same log entry fails and changes nothing
+      // a second writer of the same log entry fails and changes
+      // nothing, leaving no temp file behind
       val again = fm.createAtomic(target, overwriteIfPossible = false)
       write(again, "v1\n{}")
       intercept[FileAlreadyExistsException](again.close())
+      assert(names(dir) == Set("0"), names(dir))
       val in = fm.open(target)
       try assert(new String(in.readAllBytes(), UTF_8) ==
         "v1\n{\"batchWatermarkMs\":0}")

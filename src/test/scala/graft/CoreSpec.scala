@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Harness, VerifyUtils}
+import graft.core.{Harness, Json, VerifyUtils}
 import graft.sources.Tables
 
 class CoreSpec extends AnyFunSuite {
@@ -56,6 +56,15 @@ class CoreSpec extends AnyFunSuite {
     assert(j.contains("\"na\\\"me\\n\""))
     assert(j.contains("\"load_sec\":null") && j.contains("\"bad\":null"))
     assert(j.contains("\"ok\":2.0"))
+  }
+
+  test("json quote escapes quotes, backslashes and every control character") {
+    assert(Json.quote("a\"b\\c") == "\"a\\\"b\\\\c\"")
+    assert(Json.quote("\n\r\t") == "\"\\n\\r\\t\"")
+    for (c <- (0 until 0x20).map(_.toChar).filterNot("\n\r\t".contains(_)))
+      assert(Json.quote(c.toString) == "\"\\u" + f"${c.toInt}%04x" + "\"", c.toInt)
+    // nothing else changes, a control character's neighbours included
+    assert(Json.quote("x\u0001 é/ y") == "\"x\\u0001 é/ y\"")
   }
 
   test("scalar tolerance: the reference's 0.5% relative semantics") {

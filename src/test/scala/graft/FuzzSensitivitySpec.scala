@@ -35,9 +35,9 @@ class FuzzSensitivitySpec extends AnyFunSuite {
     ("llm", "groupsizes") ->
       "downstream histogram of the groups closure (same reason)",
     ("graph", "kcore") ->
-      ("the oracle is a CONVERGED peeling and the grid varies maxIter " +
-        "only above the longest cascade — landing on one fixpoint is " +
-        "the fixpoint-truncation contract"))
+      ("the oracle is a CONVERGED peeling, the kernel peels exactly " +
+        "and the grid varies only the reader (lineitem transitions or " +
+        "the canonical undirected frame) — both must land on one peeling"))
 
   private def expectations(resource: String): Map[String, String] = {
     val src = Source.fromInputStream(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.graphx.{EdgeDirection, Graph, VertexId}
 import org.apache.spark.graphx.lib.PageRank
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, min}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,11 +87,94 @@ class GraphSpec extends AnyFunSuite {
   test("k-core: triangles are 2-cores, a pendant vertex is core 1") {
     val withPendant = fixtureEdges
       .union(Seq((6L, 7L, 1.0), (7L, 6L, 1.0)).toDF("src", "dst", "weight"))
-    val u = GraphSource.toGraph(GraphSource.canonicalUndirected(withPendant))
-    val core = Iterative.kCore(spark, u).collect()
+    val core = Iterative.kCore(spark, LocalGraph.fromEdges(withPendant)).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(core(7L) == 1)
     assert((1L to 6L).forall(core(_) == 2))
+  }
+
+  test("the undirected view merges both directions and doubles a self-loop") {
+    val e = Seq((1L, 2L, 1.0), (2L, 1L, 2.0), (1L, 2L, 0.5), (3L, 3L, 1.5))
+      .toDF("src", "dst", "weight")
+    val entries = LocalGraph.run(LocalGraph.fromEdges(e)) { g =>
+      val u = g.undirected
+      (0 until u.numEdges).map(k =>
+        (u.ids(u.src(k)), u.ids(u.dst(k)), u.weight(k))).toArray
+    }
+    assert(entries.toSeq == Seq((1L, 2L, 3.5), (2L, 1L, 3.5), (3L, 3L, 3.0)))
+  }
+
+  // Fixtures of the one-task k-core, LPA and Louvain kernels. The
+  // expected rows are what the GraphX k-core loop and the per-round
+  // DataFrame LPA and Louvain loops they replaced gave on the same
+  // edges, with two exceptions: k-core counts a self-loop once, as
+  // GraphQueries.kcoreSql's DISTINCT edge set does (GraphX counted it
+  // twice and gave vertex 9 core 2), and Louvain on an edge-free frame
+  // is empty (the DataFrame loop failed on the null weight sum).
+  private val pendant = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 1.0),
+    (4L, 5L, 1.0), (5L, 6L, 1.0), (4L, 6L, 1.0), (3L, 4L, 1.0), (6L, 7L, 1.0))
+  private val kernelFixtures = Seq(
+    "pendant" -> pendant,
+    // duplicate and both-direction edges, some heavier
+    "dup" -> (pendant ++ Seq((1L, 2L, 1.0), (2L, 1L, 1.0), (7L, 6L, 2.0),
+      (5L, 4L, 3.0))),
+    // a self-loop on a triangle vertex and on a vertex of its own
+    "self" -> (pendant ++ Seq((5L, 5L, 1.0), (9L, 9L, 1.0))),
+    // a zero-weight edge to a new vertex
+    "zero" -> (pendant ++ Seq((7L, 8L, 0.0))),
+    "empty" -> Nil)
+
+  /** (node, value) of `kernel` on each fixture, as `node>value` words. */
+  private def onFixtures(kernel: LocalGraph.Reader => DataFrame) =
+    kernelFixtures.map { case (name, e) =>
+      val out = kernel(LocalGraph.fromEdges(e.toDF("src", "dst", "weight")))
+      assert(out.schema.forall(!_.nullable), name)
+      name -> out.collect().map(r => s"${r.get(0)}>${r.get(1)}").mkString(" ")
+    }.toMap
+
+  test("k-core kernel on the fixtures") {
+    val cores = "1>2 2>2 3>2 4>2 5>2 6>2 7>1"
+    assert(onFixtures(Iterative.kCore(spark, _)) == Map("pendant" -> cores,
+      "dup" -> cores, "self" -> s"$cores 9>1", "zero" -> s"$cores 8>1",
+      "empty" -> ""))
+  }
+
+  test("synchronous LPA kernel on the fixtures") {
+    val expected = Map(
+      1 -> Map("pendant" -> "1>2 2>1 3>1 4>3 5>4 6>4 7>6",
+        "self" -> "1>2 2>1 3>1 4>3 5>4 6>4 7>6 9>9",
+        "zero" -> "1>2 2>1 3>1 4>3 5>4 6>4 7>6 8>7"),
+      2 -> Map("pendant" -> "1>1 2>1 3>1 4>4 5>3 6>3 7>4",
+        "self" -> "1>1 2>1 3>1 4>4 5>4 6>3 7>4 9>9",
+        "zero" -> "1>1 2>1 3>1 4>4 5>3 6>3 7>4 8>6"),
+      5 -> Map("pendant" -> "1>1 2>1 3>1 4>3 5>1 6>1 7>3",
+        "self" -> "1>1 2>1 3>1 4>1 5>4 6>4 7>1 9>9",
+        "zero" -> "1>1 2>1 3>1 4>3 5>1 6>1 7>3 8>4"))
+    for ((iters, want) <- expected)
+      assert(onFixtures(Iterative.labelPropagationSync(spark, _, iters)) ==
+        want ++ Map("dup" -> want("pendant"), "empty" -> ""), s"iters $iters")
+  }
+
+  test("synchronous Louvain kernel on the fixtures; zero total weight fails") {
+    val first = "1>2 2>1 3>3 4>4 5>5 6>7 7>6"
+    val expected = Map(
+      1 -> Map("pendant" -> first, "dup" -> first, "self" -> s"$first 9>9",
+        "zero" -> s"$first 8>7"),
+      2 -> Map("pendant" -> "1>1 2>2 3>3 4>4 5>5 6>6 7>7",
+        "dup" -> "1>1 2>2 3>3 4>4 5>5 6>6 7>7",
+        "self" -> "1>1 2>2 3>3 4>4 5>5 6>6 7>7 9>9",
+        "zero" -> "1>1 2>2 3>3 4>4 5>5 6>6 7>7 8>6"),
+      8 -> Map("pendant" -> "1>2 2>2 3>2 4>4 5>4 6>4 7>7",
+        "dup" -> "1>2 2>2 3>2 4>4 5>4 6>7 7>7",
+        "self" -> "1>2 2>2 3>2 4>5 5>5 6>7 7>7 9>9",
+        "zero" -> "1>2 2>2 3>2 4>4 5>4 6>4 7>7 8>6"))
+    for ((iters, want) <- expected)
+      assert(onFixtures(Iterative.louvainSync(spark, _, iters)) ==
+        want + ("empty" -> ""), s"iters $iters")
+    val allZero = Seq((1L, 2L, 0.0), (2L, 3L, 0.0)).toDF("src", "dst", "weight")
+    val err = intercept[IllegalArgumentException](
+      Iterative.louvainSync(spark, LocalGraph.fromEdges(allZero), 2))
+    assert(err.getMessage.contains("louvainSync"))
   }
 
   test("modularity of the two-triangle split is 0.357143") {
@@ -145,11 +229,11 @@ class GraphSpec extends AnyFunSuite {
     // round 1 (simultaneous, neighbors' INITIAL labels): e.g. node 1 sees
     // {2,3} → 2; node 3 sees {1,2,4} → 1. Re-running must be bit-equal,
     // and one round from all-distinct labels is hand-checkable.
-    val one = Iterative.labelPropagationSync(spark, fixtureEdges, 1).collect()
+    val one = Iterative.labelPropagationSync(spark, fixture, 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(one == Map(1L -> 2, 2L -> 1, 3L -> 1, 4L -> 3, 5L -> 4, 6L -> 4))
-    val a = Iterative.labelPropagationSync(spark, fixtureEdges, 5).collect().toSeq
-    val b = Iterative.labelPropagationSync(spark, fixtureEdges, 5).collect().toSeq
+    val a = Iterative.labelPropagationSync(spark, fixture, 5).collect().toSeq
+    val b = Iterative.labelPropagationSync(spark, fixture, 5).collect().toSeq
     assert(a == b)
   }
 
@@ -470,7 +554,8 @@ class GraphSpec extends AnyFunSuite {
     Tables(spark, sf0001, "lineitem").limit(0)
       .write.parquet(s"$dir/lineitem.parquet")
     for (q <- Seq("graph_pagerank", "graph_ppr", "graph_wpr", "graph_trustrank",
-        "graph_incpr", "graph_bfs", "graph_ppr_conv")) {
+        "graph_incpr", "graph_bfs", "graph_ppr_conv", "graph_kcore",
+        "graph_lpa_sync", "graph_louvain_sync")) {
       val df = GraphQueries.all(q)(spark, dir)
       assert(df.collect().isEmpty, q)
       assert(df.columns.head == "node", q)

@@ -2,21 +2,16 @@ package graft.fuzz
 
 import java.nio.file.{Files, Paths}
 
+import graft.core.Json
+
 /** Regenerates the pinned fuzz corpus into a JSON file for
   * tools/fuzz_expected.py (the DuckDB side of the differential).
   * Run: sbt "Test/runMain graft.fuzz.FuzzDump <out.json>". */
 object FuzzDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/fuzz_queries.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = FuzzSeed.corpus
-      .map { case (id, sql) => s"${q(id)}: ${q(sql)}" }
+      .map { case (id, sql) => s"${Json.quote(id)}: ${Json.quote(sql)}" }
       .mkString("{\n", ",\n", "\n}")
     Files.writeString(Paths.get(out), json)
     println(s"wrote ${FuzzSeed.corpus.size} queries to $out")

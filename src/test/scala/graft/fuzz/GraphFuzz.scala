@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Json
 import graft.graph.{Builtins, Centrality, Community, GraphQueries,
   GraphSource, Iterative, LocalGraph, Motifs, Node2Vec}
 import graft.sources.Tables
@@ -32,9 +33,10 @@ import graft.sources.Tables
   *    same static loop. resetProb and damp literals interpolate the
   *    SAME Scala double the operator computes with, so cross-engine
   *    parse round-trips cannot diverge by an ulp.
-  *  - kcore's oracle is a CONVERGED peeling; the Spark h-operator
-  *    fixpoint reaches it for any maxIter past the longest cascade, so
-  *    the grid varies maxIter only above that bound.
+  *  - kcore's oracle is a CONVERGED peeling and the kernel peels
+  *    exactly, so the grid varies the reader instead: the lineitem
+  *    transitions and the canonical undirected edge frame must land on
+  *    one peeling.
   *  - conv cases replay GraphX's tolerance gating (delta > tol) in the
   *    unrolled active-set CTEs at any tol.
   */
@@ -49,11 +51,8 @@ object GraphFuzzSeed {
   private def graph(s: SparkSession, d: String) =
     GraphSource.toGraph(edges(s, d))
 
-  private def ugraph(s: SparkSession, d: String) =
-    GraphSource.toGraph(GraphSource.canonicalUndirected(edges(s, d)))
-
-  /** The part-transition graph the rank and BFS cases derive in their
-    * own task. */
+  /** The part-transition graph the rank, BFS, k-core, LPA and Louvain
+    * cases derive in their own task. */
   private def transitions(s: SparkSession, d: String) =
     LocalGraph.fromLineitem(Tables(s, d, "lineitem"))
 
@@ -166,12 +165,15 @@ object GraphFuzzSeed {
         })
     }
 
-    // oracle is a CONVERGED peeling — any maxIter past the longest
-    // cascade must land on it (the fixpoint-truncation contract)
-    val kcore = Seq(25, 30).map { maxIter =>
-      GraphCase(s"gfz_kcore_m$maxIter",
+    // the ids predate the readers: they once named a round cap
+    val kcore = Seq[(String, (SparkSession, String) => LocalGraph.Reader)](
+      "m25" -> transitions,
+      "m30" -> ((s, d) => LocalGraph.fromEdges(
+        GraphSource.canonicalUndirected(edges(s, d))))
+    ).map { case (tag, reader) =>
+      GraphCase(s"gfz_kcore_$tag",
         GraphQueries.kcoreSql(maxK = 36, rounds = 16),
-        (s, d) => Iterative.kCore(s, ugraph(s, d), maxIter = maxIter))
+        (s, d) => Iterative.kCore(s, reader(s, d)))
     }
 
     val mod = Seq(4, 8, 32).map { m =>
@@ -200,18 +202,24 @@ object GraphFuzzSeed {
 
     // i=1 is a PRE-convergence point (labels still moving — the i3/i8
     // pair hash identically because propagation converges by 3, which
-    // proves the fixpoint but not the trajectory; i1 pins the latter)
+    // proves the fixpoint but not the trajectory; i1 pins the latter).
+    // The last point reads the edge frame, as the graph_lpa verdict does
     val lpa = Seq(1, 3, 8).map { iters =>
       GraphCase(s"gfz_lpa_sync_i$iters",
         GraphQueries.lpaSyncSql(iters),
-        (s, d) => Iterative.labelPropagationSync(s, edges(s, d), iters))
+        (s, d) => Iterative.labelPropagationSync(s,
+          if (iters == 8) LocalGraph.fromEdges(edges(s, d)) else transitions(s, d),
+          iters))
     }
 
+    // i6 reads the canonical undirected frame, as graph_louvain does
     val louv = Seq(4, 6).map { iters =>
       GraphCase(s"gfz_louvain_sync_i$iters",
         GraphQueries.louvainSyncSql(iters),
         (s, d) => Iterative.louvainSync(s,
-          GraphSource.canonicalUndirected(edges(s, d)), iters))
+          if (iters == 6)
+            LocalGraph.fromEdges(GraphSource.canonicalUndirected(edges(s, d)))
+          else transitions(s, d), iters))
     }
 
     val pprMulti = Seq((5, 4), (10, 2), (8, 6)).map { case (iters, ns) =>
@@ -349,15 +357,8 @@ object GraphFuzzSeed {
 object GraphFuzzDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graph_fuzz.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = GraphFuzzSeed.cases
-      .map(c => s"${q(c.id)}: ${q(c.sql)}")
+      .map(c => s"${Json.quote(c.id)}: ${Json.quote(c.sql)}")
       .mkString("{\n", ",\n", "\n}")
     Files.writeString(Paths.get(out), json)
     println(s"wrote ${GraphFuzzSeed.cases.size} queries to $out")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Json
 import graft.llm.{CorpusOps, Dedup, LlmQueries, Similarity, TextOps}
 import graft.sources.Tables
 
@@ -598,15 +599,8 @@ object LlmFuzzSeed {
 object LlmFuzzDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/llm_fuzz.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = LlmFuzzSeed.cases
-      .map(c => s"${q(c.id)}: ${q(c.sql)}")
+      .map(c => s"${Json.quote(c.id)}: ${Json.quote(c.sql)}")
       .mkString("{\n", ",\n", "\n}")
     Files.writeString(Paths.get(out), json)
     println(s"wrote ${LlmFuzzSeed.cases.size} cases to $out")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Json
 import graft.ml.{MlQueries, SimRank, TextModels, Unsupervised, clustering, knn}
 import graft.sources.Tables
 
@@ -190,15 +191,8 @@ object MlFuzzSeed {
 object MlFuzzDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/ml_fuzz.json")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = MlFuzzSeed.cases
-      .map(c => s"${q(c.id)}: ${q(c.sql)}")
+      .map(c => s"${Json.quote(c.id)}: ${Json.quote(c.sql)}")
       .mkString("{\n", ",\n", "\n}")
     Files.writeString(Paths.get(out), json)
     println(s"wrote ${MlFuzzSeed.cases.size} cases to $out")

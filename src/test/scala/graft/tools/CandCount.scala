@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.llm.Similarity
 
 /** Deterministic scale evidence for the smooth sizing (round-10
@@ -14,15 +14,7 @@ object CandCount {
   def main(args: Array[String]): Unit = {
     val x10 = args.headOption.getOrElse("/tmp/stress/x10")
     val x30 = args.drop(1).headOption.getOrElse("/tmp/stress/x30")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     for ((tag, dir) <- Seq("x10" -> x10, "x30" -> x30)) {
       val e = graft.sources.Tables(spark, dir, "embeddings")
       val n = e.count()

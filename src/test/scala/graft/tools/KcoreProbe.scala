@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Interleaved base/x10 kcore probe (round-10 directive #8): alternates
   * the two corpora in one JVM so host drift cannot alias as a scale
@@ -11,30 +11,17 @@ object KcoreProbe {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val x10 = args.drop(1).headOption.getOrElse("/tmp/stress/x10")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val fn = graft.SparkEntry.queries("graph_kcore")
     fn(spark, base).count() // untimed warm-up (JIT + codegen)
-    def clear(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-    clear()
+    GraftSession.clearState(spark)
     val acc = scala.collection.mutable.Map("base" -> List.empty[Double],
       "x10" -> List.empty[Double])
     for (r <- 1 to reps; (tag, dir) <- Seq("base" -> base, "x10" -> x10)) {
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      clear()
+      GraftSession.clearState(spark)
       println(f"KCOREPROBE $tag%-5s rep$r $dt%8.3f s")
       acc(tag) ::= dt
     }

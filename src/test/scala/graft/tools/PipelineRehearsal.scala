@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** End-to-end curation-pipeline rehearsal (round-12 directive #4): one
   * job chaining the real pre-training data flow the per-operator
@@ -39,15 +39,7 @@ object PipelineRehearsal {
     val langs = (if (args.length > 3) args(3) else "en")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus.toInt)
 
     val docs = graft.sources.Tables(spark, corpusDir, "documents")
     val emb = graft.sources.Tables(spark, corpusDir, "embeddings")

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.llm.Similarity
 
 /** Stress measurement for the IVF residual split PAST the 4,096-cell
@@ -20,15 +20,7 @@ object ResidualProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/stress/x30")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val e = graft.sources.Tables(spark, dir, "embeddings")
     val n = e.count()
     val nlist = math.max(4, (n / 3000L).toInt) // past-cap geometry: 3k/cell
@@ -76,9 +68,7 @@ object ResidualProbe {
       println(f"RESIDUALPROBE rep$rep twolvl: rows=$n2%-7d build=$t2%7.2f s " +
         f"pairVol=$vol2%-12d maxCell=$max2%-6d probeRows=$p1rows probe=$tp2%6.2f s " +
         f"volRatio=${vol1.toDouble / vol2}%5.2f")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearState(spark)
     }
     spark.stop()
   }

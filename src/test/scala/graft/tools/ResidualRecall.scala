@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.llm.Similarity
 
 /** Recall@k of the two-level residual index at its DEPLOYMENT operating
@@ -30,15 +30,7 @@ object ResidualRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/stress/x30")
     val nQ = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val e =
       if (dir == "clustered") Corpora.clustered(spark)
       else graft.sources.Tables(spark, dir, "embeddings")

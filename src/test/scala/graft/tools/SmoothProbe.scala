@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.llm.Similarity
 
 /** Paired same-JVM A/B probe for the round-10 smooth deployment sizing:
@@ -20,15 +20,7 @@ object SmoothProbe {
     val x10 = args.headOption.getOrElse("/tmp/stress/x10")
     val x30 = args.drop(1).headOption.getOrElse("/tmp/stress/x30")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
 
     def emb(dir: String) = graft.sources.Tables(spark, dir, "embeddings")
     val families: Seq[(String, String => Long)] = Seq(
@@ -48,9 +40,7 @@ object SmoothProbe {
 
     // warm-up: one untimed pass of each family at x10 (JIT + footers)
     families.foreach { case (_, f) => f(x10) }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    GraftSession.clearState(spark)
 
     // INTERLEAVED A/B (round-10 lesson: a block design — all ladder
     // reps, then all smooth reps — let a host-drift window alias as a
@@ -66,9 +56,7 @@ object SmoothProbe {
       val t0 = System.nanoTime()
       val n = f(dir._2)
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearState(spark)
       println(f"SMOOTHPROBE $mode%-6s $name%-12s ${dir._1} rep$r rows=$n%-8d $dt%8.3f s")
       acc((mode, name, dir._1)) ::= dt
     }

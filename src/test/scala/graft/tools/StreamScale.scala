@@ -2,11 +2,11 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
+import graft.GraftSession
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.SessionEvent
 
@@ -33,15 +33,7 @@ object StreamScale {
 
   def main(args: Array[String]): Unit = {
     val stress = args.headOption.getOrElse("/tmp/stress/x10")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ts(min: Long): Timestamp = new Timestamp(1700000000000L + min * 60000L)

@@ -5,10 +5,15 @@ do not count, so deleting or rewording comments never moves the count.
 
     python3 tools/loc.py                 # every .scala file under src/main
     python3 tools/loc.py PATH [PATH ...] # files, or directories to walk
+    python3 tools/loc.py --against REV [PATH ...]
 
 Prints one `<code lines>  <path>` line per file, then `<total>  total`.
+With `--against REV` (a git revision; run from the repository root) each
+line is `<at REV>  <now>  <delta>  <path>`, over every file that exists
+at either, so a deleted file shows `now` 0 and a new one `at REV` 0.
 """
 import os
+import subprocess
 import sys
 
 
@@ -77,15 +82,41 @@ def scala_files(paths):
             yield p
 
 
+def files_at(rev, paths):
+    """The .scala files under `paths` at git revision `rev`."""
+    out = subprocess.run(["git", "ls-tree", "-r", "--name-only", rev, "--"]
+                         + paths, capture_output=True, text=True, check=True)
+    return [p for p in out.stdout.splitlines() if p.endswith(".scala")]
+
+
+def text_at(rev, path):
+    return subprocess.run(["git", "show", f"{rev}:{path}"], capture_output=True,
+                          text=True, check=True).stdout
+
+
 def main(argv):
+    rev = None
+    if argv[:1] == ["--against"]:
+        if len(argv) < 2:
+            sys.exit("usage: loc.py --against REV [PATH ...]")
+        rev, argv = argv[1], argv[2:]
     paths = argv or [os.path.join("src", "main", "scala")]
-    total = 0
-    for path in sorted(scala_files(paths)):
+    now = {}
+    for path in scala_files(paths):
         with open(path, encoding="utf-8") as f:
-            c = code_lines(f.read())
-        total += c
-        print(f"{c:7d}  {path}")
-    print(f"{total:7d}  total")
+            now[os.path.normpath(path)] = code_lines(f.read())
+    if rev is None:
+        for path in sorted(now):
+            print(f"{now[path]:7d}  {path}")
+        print(f"{sum(now.values()):7d}  total")
+        return
+    before = {os.path.normpath(p): code_lines(text_at(rev, p))
+              for p in files_at(rev, paths)}
+    for path in sorted(set(before) | set(now)):
+        a, b = before.get(path, 0), now.get(path, 0)
+        print(f"{a:7d}  {b:7d}  {b - a:+7d}  {path}")
+    a, b = sum(before.values()), sum(now.values())
+    print(f"{a:7d}  {b:7d}  {b - a:+7d}  total")
 
 
 if __name__ == "__main__":

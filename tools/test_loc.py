@@ -2,6 +2,7 @@
 import contextlib
 import io
 import os
+import subprocess
 import tempfile
 import unittest
 
@@ -49,6 +50,40 @@ class MainTest(unittest.TestCase):
         self.assertEqual([l.split()[0] for l in lines], ["1", "2", "3"])
         self.assertTrue(lines[0].endswith("A.scala"))
         self.assertTrue(lines[-1].endswith("total"))
+
+    def test_against_a_revision_prints_both_counts_and_the_delta(self):
+        def write(name, text):
+            with open(name, "w") as f:
+                f.write(text)
+
+        def git(*args):
+            subprocess.run(["git", *args], check=True, capture_output=True)
+
+        cwd = os.getcwd()
+        with tempfile.TemporaryDirectory() as d:
+            try:
+                os.chdir(d)
+                git("init", "-q")
+                os.mkdir("src")
+                write("src/Kept.scala", "val a = 1\nval b = 2\n")
+                write("src/Gone.scala", "// c\nval c = 3\n")
+                git("add", "-A")
+                git("-c", "user.name=t", "-c", "user.email=t@t", "commit",
+                    "-qm", "base")
+                write("src/Kept.scala", "val a = 1\n// b went\n")
+                os.remove("src/Gone.scala")
+                write("src/New.scala", "val x = 1\nval y = 2\nval z = 3\n")
+                out = io.StringIO()
+                with contextlib.redirect_stdout(out):
+                    loc.main(["--against", "HEAD", "src"])
+            finally:
+                os.chdir(cwd)
+        rows = [l.split() for l in out.getvalue().splitlines()]
+        self.assertEqual(rows, [
+            ["1", "0", "-1", os.path.join("src", "Gone.scala")],
+            ["2", "1", "-1", os.path.join("src", "Kept.scala")],
+            ["0", "3", "+3", os.path.join("src", "New.scala")],
+            ["3", "4", "+1", "total"]])
 
 
 if __name__ == "__main__":
